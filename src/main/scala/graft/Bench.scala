@@ -82,19 +82,7 @@ object Bench {
     // pipeline cost hides in an untimed prelude. Fixture rows run ONCE
     // (a second run would read the warm cache and time nothing);
     // dependency order means each row times only its own increment.
-    val fixtureBuilds: Seq[(String, (SparkSession, String) => Unit)] =
-      graft.operators.Sink.fixtureBuilds ++
-        graft.operators.SimSearch.fixtureBuilds ++
-        graft.operators.Relational.fixtureBuilds ++
-        // the q15 pair set BEFORE the cluster closure built over it,
-        // so each row times its own increment
-        graft.operators.Dedup.fixtureBuilds ++
-        graft.operators.DedupClusters.fixtureBuilds ++
-        graft.operators.Quality.fixtureBuilds ++
-        graft.operators.Retrieval.fixtureBuilds ++
-        graft.operators.Classifier.fixtureBuilds ++
-        graft.operators.StreamCurate.fixtureBuilds
-    val fixtureResults = fixtureBuilds.map { case (name, fn) =>
+    val fixtureResults = SparkEntry.fixtureBuilds.map { case (name, fn) =>
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir); true }
         catch { case e: Throwable =>

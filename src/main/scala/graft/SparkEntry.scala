@@ -31,6 +31,18 @@ object SparkEntry {
       Curation.queries ++ Compaction.queries ++ Layout.queries ++
       Tombstones.queries ++ Classifier.queries ++ Quarantine.queries
 
+  /** Every shared session fixture, in dependency order (the q15 pair
+    * set before the cluster closure built over it), named for Bench's
+    * timed `fixture:*` rows: each cold build then times only its own
+    * increment.
+    */
+  def fixtureBuilds: Seq[(String, (SparkSession, String) => Unit)] =
+    Sink.fixtureBuilds ++ SimSearch.fixtureBuilds ++
+      Relational.fixtureBuilds ++ Dedup.fixtureBuilds ++
+      DedupClusters.fixtureBuilds ++ Quality.fixtureBuilds ++
+      Retrieval.fixtureBuilds ++ Classifier.fixtureBuilds ++
+      StreamCurate.fixtureBuilds
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

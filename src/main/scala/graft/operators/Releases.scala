@@ -584,9 +584,8 @@ object Releases {
     * token counts are reconstructed from the touched files' own
     * membership fragments (fragments partition each doc's tokens), so
     * the repack never rescans the source corpus; the swap is the
-    * q148 protocol — stage invisibly, rename in, ONE
-    * [[graft.sources.GenManifest.replace]] commit, delete originals
-    * after. Returns (touched, untouched) file counts.
+    * [[SinkMaintain.stagedSwap]] every rewrite shares. Returns
+    * (touched, untouched) file counts.
     *
     * Scale: cost ∝ affected files + |erase list|, never the corpus or
     * even the release; a production erase request IS a bounded doc-id
@@ -598,8 +597,6 @@ object Releases {
     requirePackShape(streams)
     require(eraseIds.nonEmpty, "packErase without victims proves nothing")
     val conf = graft.sources.ProtoZstFiles.hadoopConf()
-    val dirPath = new org.apache.hadoop.fs.Path(relDir)
-    val fs = dirPath.getFileSystem(conf)
     val snap = graft.sources.GenManifest.read(relDir, conf).getOrElse(
       throw new IllegalStateException(
         s"packErase requires a manifested release: $relDir"))
@@ -617,8 +614,8 @@ object Releases {
     if (touched.isEmpty) return (0, untouched.length)
     val erased = eraseIds.toSet
     val survivors = spark.read.format("proto-zst")
-      .load(touched.map(e => new org.apache.hadoop.fs.Path(dirPath, e.name)
-        .toString).toIndexedSeq: _*)
+      .load(touched.map(e => new org.apache.hadoop.fs.Path(relDir, e.name)
+        .toString): _*)
       .select(decode(element_at(col("columns"), 1).getField("value"),
         "UTF-8").as("v"))
       .select(explode(split(split(col("v"), "\\|", 3).getItem(2), ","))
@@ -630,37 +627,11 @@ object Releases {
       .withColumn("k", graft.functions.Portable.hash60(
         concat_ws(":", lit("prel"), col("doc_id"))))
       .withColumn("stream", (col("k") % streams).cast("int"))
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = new org.apache.hadoop.fs.Path(dirPath,
-      ".pack-erase-" + runId)
-    writePackRel(packRelKeyed(packRelSeqs(survivors)), staging.toString,
-      math.max(prefixes.size, 1))
-    val stagedSnap = graft.sources.GenManifest.read(staging.toString, conf)
-      .getOrElse(throw new IllegalStateException(
-        s"staging write left no manifest under $staging"))
-    val kept = stagedSnap.entries.map { e =>
-      val newName = "pack-erased-" + runId + "-" + e.name
-      val src = new org.apache.hadoop.fs.Path(staging, e.name)
-      val dst = new org.apache.hadoop.fs.Path(dirPath, newName)
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(
-          s"packErase aborted: rename refused for $src -> $dst; release " +
-            "unchanged (manifest not committed)")
-      fs.rename(graft.sources.RangeSidecar.sidecar(src),
-        graft.sources.RangeSidecar.sidecar(dst))
-      graft.sources.SplitSidecar.move(fs, src, dst)
-      graft.sources.BloomSidecar.move(fs, src, dst)
-      e.copy(name = newName)
+    SinkMaintain.stagedSwap(relDir, conf, ".pack-erase-", "pack-erased-",
+        touched) { staging =>
+      writePackRel(packRelKeyed(packRelSeqs(survivors)), staging,
+        math.max(prefixes.size, 1))
     }
-    graft.sources.GenManifest.replace(relDir, conf,
-      touched.map(_.name).toSet, kept)
-    // post-commit GC of the replaced originals — the bytes actually go
-    touched.foreach { e =>
-      val p = new org.apache.hadoop.fs.Path(dirPath, e.name)
-      fs.delete(p, false)
-      graft.sources.RangeSidecar.delete(fs, p)
-    }
-    fs.delete(staging, true)
     (touched.length, untouched.length)
   }
 

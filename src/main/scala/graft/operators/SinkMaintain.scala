@@ -2,10 +2,12 @@ package graft.operators
 
 import java.io.File
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{GenManifest, ProtoZstFiles, Sidecars}
 
 /** MANIFEST-LIFECYCLE MAINTENANCE for the proto-zst sink — the
   * operations that rewrite or retire committed files behind ONE atomic
@@ -19,20 +21,24 @@ import graft.sources.Tables
   * commit.
   */
 /** Crash-injection points for the maintenance specs (the
-  * [[graft.sources.EpochCommitHooks]] pattern): [[SinkMaintain.promoteL0]]
-  * invokes these around its two-commit window — after the L1 replace
-  * lands, and again after the rewritten originals are unlinked but
-  * before the L0 drain commit. A spec arms one to throw, simulating a
-  * driver death INSIDE the promotion, and then proves the documented
-  * crash contract: the level-merged read stays bit-identical through
-  * the torn window (L0-wins suppresses the doubled rows) and a re-run
-  * converges. No-ops in production.
+  * [[graft.sources.EpochCommitHooks]] pattern). `afterReplace` fires
+  * inside [[SinkMaintain.retire]], between the manifest commit and the
+  * deletes, so every rewrite shares it: a death there leaves the
+  * retired originals (and a staged swap's staging directory) on disk
+  * as unreferenced garbage. In [[SinkMaintain.promoteL0]] its first
+  * firing is the L1 swap; `beforeL0Commit` fires later, once that swap
+  * has cleaned up, right before the L0 drain commit. A spec arms one
+  * to throw, simulating a driver death INSIDE the promotion, and then
+  * proves the documented crash contract: the level-merged read stays
+  * bit-identical through the torn window (L0-wins suppresses the
+  * doubled rows), a re-run converges and the sweep retires the
+  * residue. No-ops in production.
   */
 private[graft] object MaintainHooks {
-  @volatile var afterL1Commit: () => Unit = () => ()
+  @volatile var afterReplace: () => Unit = () => ()
   @volatile var beforeL0Commit: () => Unit = () => ()
   def reset(): Unit = {
-    afterL1Commit = () => (); beforeL0Commit = () => ()
+    afterReplace = () => (); beforeL0Commit = () => ()
   }
 }
 
@@ -40,141 +46,132 @@ object SinkMaintain {
 
   /** The engine's complete staging-name vocabulary — every maintenance
     * op that stages under the table directory does so under exactly
-    * one of these dot-prefixes. Vacuum deletes ONLY these (plus
-    * `._tmp` writer leftovers and uncommitted `.proto.zst` orphans);
-    * any other dot-file is foreign and spared. A new staging op MUST
-    * add its prefix here or its crash leftovers outlive every sweep.
+    * one of these dot-prefixes, and [[stagedSwap]] refuses any other.
+    * Vacuum deletes ONLY these (plus `._tmp` writer leftovers and
+    * uncommitted `.proto.zst` orphans); any other dot-file is foreign
+    * and spared.
     */
   private[graft] val StagingPrefixes: Seq[String] = Seq(
     ".optimize-", ".promote-", ".erase-", ".purge-", ".wmajor-",
     ".pack-erase-", ".tomb-")
+
+  /** THE copy-on-write commit every manifest rewrite shares (OPTIMIZE,
+    * LCS promotion, range erasure, window compaction, tombstone purge,
+    * release pack-erase). `write` lands the rewritten rows through the
+    * sink into a hidden `<stagingPrefix><run>` directory under `dir`;
+    * the staged files then move into `dir` under unreferenced
+    * `<namePrefix><run>-` names (with their sidecars), invisible to
+    * manifest readers, and ONE [[retire]] commit swaps `retired` out
+    * and the staged entries in. A reader sees the old file set or the
+    * new one, never a mix. A crash before the commit leaves the table
+    * intact plus unreferenced garbage [[vacuumUnreferenced]] sweeps; the
+    * originals and the staging directory go only AFTER the commit.
+    *
+    * The staged entries come from the staging write's own manifest
+    * (bytes, counts, key and time ranges), so no file metadata is
+    * re-read. A rewrite that kept ZERO rows leaves the staging
+    * directory governed but without a snapshot: that reads as "no
+    * survivors" and the commit just drops `retired`. A replace that
+    * lost to a concurrent maintenance commit throws
+    * [[graft.sources.GenManifest.ConcurrentMaintenanceException]];
+    * re-running the operation re-plans it. Returns the adopted entries.
+    */
+  private[graft] def stagedSwap(dir: String, conf: Configuration,
+      stagingPrefix: String, namePrefix: String,
+      retired: Seq[GenManifest.Entry])(
+      write: String => Unit): Vector[GenManifest.Entry] = {
+    require(StagingPrefixes.contains(stagingPrefix),
+      s"staging prefix $stagingPrefix is not in StagingPrefixes: its " +
+        "crash leftovers would outlive every vacuum")
+    val dirPath = new Path(dir)
+    val fs = dirPath.getFileSystem(conf)
+    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
+    val staging = new Path(dirPath, stagingPrefix + runId)
+    write(staging.toString)
+    val staged = GenManifest.read(staging.toString, conf) match {
+      case Some(snap) => snap.entries
+      case None if GenManifest.governed(staging.toString, conf) => Vector.empty
+      case None => throw new IllegalStateException(
+        s"staging write left no manifest under $staging")
+    }
+    val adopted = staged.map { e =>
+      val src = new Path(staging, e.name)
+      val dst = new Path(dirPath, namePrefix + runId + "-" + e.name)
+      if (!fs.rename(src, dst))
+        throw new java.io.IOException(
+          s"maintenance aborted: rename refused for $src -> $dst; table " +
+            "unchanged (manifest not committed), staged files retained " +
+            s"under $staging")
+      Sidecars.move(fs, src, dst)
+      e.copy(name = dst.getName)
+    }
+    retire(dir, conf, retired, adopted)
+    fs.delete(staging, true)
+    adopted
+  }
+
+  /** The retire-only half of [[stagedSwap]]: ONE atomic
+    * [[GenManifest.replace]] drops `retired` (and adds `adopted`), then
+    * the retired files and their sidecars are deleted — after the
+    * commit, so a crash in between leaves only sweepable garbage.
+    */
+  private[graft] def retire(dir: String, conf: Configuration,
+      retired: Seq[GenManifest.Entry],
+      adopted: Seq[GenManifest.Entry] = Vector.empty): Unit = {
+    val dirPath = new Path(dir)
+    val fs = dirPath.getFileSystem(conf)
+    GenManifest.replace(dir, conf, retired.map(_.name).toSet, adopted)
+    MaintainHooks.afterReplace()
+    retired.foreach { e =>
+      val p = new Path(dirPath, e.name)
+      fs.delete(p, false)
+      Sidecars.delete(fs, p)
+    }
+  }
+
   /** OPTIMIZE for the proto-zst format: bin-pack the directory's SMALL
     * files (< `targetBytes`) into ~`targetBytes` files, preserving the
     * key-clustered layout — the small-files compaction every streaming
     * ingest (q37 writes one file per micro-batch task) eventually
     * needs, and what Delta/Iceberg `OPTIMIZE` does for their formats.
     *
-    * The PLAN is metadata-only: one driver pass over the file listing
-    * picks the rewrite set and sizes the output (`ceil(Σsize/target)`
-    * bins) — no data is read to decide. The MOVE is one distributed
-    * job: the small files are read as an explicit multi-path proto-zst
-    * scan (one partition per file, never touching the already-packed
-    * files), `repartitionByRange(bins, key)` re-clusters them — each
-    * output file covers a contiguous key range, so the rewritten
-    * `.range` sidecars stay maximally selective for q60's plan-time
-    * skipping — and the DSv2 writer lands them (with fresh sidecars)
-    * in a hidden staging dir via the usual tmp+rename task commit.
+    * The PLAN reads no filesystem metadata at all: the manifest
+    * snapshot carries every file's size, so one driver pass picks the
+    * rewrite set and sizes the output (`ceil(Σsize/target)` bins). The
+    * MOVE is one distributed job: the small files are read as an
+    * explicit multi-path proto-zst scan (one partition per file, never
+    * touching the already-packed files), `repartitionByRange(bins,
+    * key)` re-clusters them — each output file covers a contiguous key
+    * range, so the rewritten `.range` sidecars stay maximally
+    * selective for q60's plan-time skipping — and the [[stagedSwap]]
+    * commits them under `packed-` names. Tombstone entries are small
+    * by nature but never packed (their rows are deleted KEYS).
     *
-    * The COMMIT depends on the directory's era. Manifest-backed
-    * directories (everything this sink writes) commit atomically by
-    * writing the next manifest version last ([[optimizeManifested]]):
-    * readers see the old or the new file set, never a mix, and a crash
-    * leaves only unreferenced garbage for [[vacuumUnreferenced]].
-    * Pre-manifest (foreign/legacy) directories fall back to the
-    * original three-phase `.swap` rename protocol
-    * ([[optimizeLegacy]]): staged files enter under hidden `.swap`
-    * names, originals are deleted (readers may briefly under-count,
-    * never double-count), the suffix comes off, and
-    * [[healPendingSwaps]] rolls a crashed phase C forward.
-    *
-    * Returns (files before, files after).
+    * Only manifest-governed directories are optimized: a directory
+    * without a manifest is refused, like every other maintenance op —
+    * import it through the sink first. Returns (files before, files
+    * after).
     */
-  /** Complete a half-finished phase-C swap left by a crashed or
-    * refused optimize: every `*.swap` file in the directory IS the
-    * durable record of its own intended final name, so healing is
-    * rename-by-suffix-strip — idempotent, safe to run any time, run
-    * automatically at the start of every optimize. Until healed,
-    * readers under-count (packed rows hidden) but never double-count.
-    */
-  private[graft] def healPendingSwaps(outDir: String): Int = {
-    val conf = graft.sources.ProtoZstFiles.hadoopConf()
-    val dirPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = dirPath.getFileSystem(conf)
-    val swaps = fs.listStatus(dirPath)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".swap"))
-    swaps.count { s =>
-      val fin = new org.apache.hadoop.fs.Path(dirPath,
-        s.getPath.getName.stripSuffix(".swap"))
-      fs.rename(s.getPath, fin)
-    }
-  }
-
   def optimizeSink(spark: SparkSession, outDir: String,
-      targetBytes: Long = Sink.OptTargetBytes): (Int, Int) =
-    graft.sources.GenManifest.read(outDir,
-        graft.sources.ProtoZstFiles.hadoopConf()) match {
-      case Some(snap) => optimizeManifested(spark, outDir, snap, targetBytes)
-      case None => optimizeLegacy(spark, outDir, targetBytes)
-    }
-
-  /** The manifest-era OPTIMIZE: the plan reads NO filesystem metadata
-    * at all (the manifest snapshot carries every file's size), the
-    * packed files land in the directory under unreferenced
-    * `packed-<run>-` names — invisible to manifest readers — and the
-    * COMMIT is one atomic manifest version bump that drops the small
-    * entries and adds the packed ones ([[graft.sources.GenManifest]]
-    * `replace`). A reader concurrent with the whole operation sees
-    * either the old file set or the new one, never both and never a
-    * partial mix — the `.swap` rename dance, its self-heal path, and
-    * the brief under-count window are all gone. A crash before the
-    * commit leaves unreferenced packed files (garbage
-    * [[vacuumUnreferenced]] sweeps after its grace window) and a fully
-    * intact table; the original files are deleted only AFTER the
-    * commit, so the only post-crash cost is re-running the pack.
-    */
-  private def optimizeManifested(spark: SparkSession, outDir: String,
-      snap: graft.sources.GenManifest.Snapshot,
-      targetBytes: Long): (Int, Int) = {
-    val conf = graft.sources.ProtoZstFiles.hadoopConf()
-    val dirPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = dirPath.getFileSystem(conf)
-    // DATA files only: a tombstone entry is small by nature but must
-    // never be packed into a data file (its rows are deleted KEYS)
+      targetBytes: Long = Sink.OptTargetBytes): (Int, Int) = {
+    val conf = ProtoZstFiles.hadoopConf()
+    val snap = GenManifest.read(outDir, conf)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$outDir has no manifest: OPTIMIZE commits through the " +
+          "manifest; import the directory through the sink first"))
     val nBefore = snap.dataEntries.length
     val small = snap.dataEntries.filter(_.bytes < targetBytes)
     if (small.length < 2) return (nBefore, nBefore)
     val bins = math.max(1,
       math.ceil(small.map(_.bytes).sum.toDouble / targetBytes).toInt)
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = new org.apache.hadoop.fs.Path(dirPath, ".optimize-" + runId)
-    spark.read.format("proto-zst")
-      .load(small.map(e => new org.apache.hadoop.fs.Path(dirPath, e.name)
-        .toString).toIndexedSeq: _*)
-      .repartitionByRange(bins, col("key"))
-      .sortWithinPartitions(col("key"))
-      .write.format("proto-zst").mode("append").save(staging.toString)
-    // the staging write produced its own manifest — reuse its entries
-    // (bytes/counts/ranges) instead of re-reading any file metadata
-    val stagedSnap = graft.sources.GenManifest.read(staging.toString, conf)
-      .getOrElse(throw new IllegalStateException(
-        s"staging write left no manifest under $staging"))
-    val packed = stagedSnap.entries.map { e =>
-      val newName = "packed-" + runId + "-" + e.name
-      val src = new org.apache.hadoop.fs.Path(staging, e.name)
-      val dst = new org.apache.hadoop.fs.Path(dirPath, newName)
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(
-          s"optimize aborted: rename refused for $src -> $dst; table " +
-            "unchanged (manifest not committed), packed files retained " +
-            s"under $staging")
-      // keep the per-file sidecar beside the packed file for foreign
-      // readers; failure to move it is benign (manifest carries stats)
-      fs.rename(graft.sources.RangeSidecar.sidecar(src),
-        graft.sources.RangeSidecar.sidecar(dst))
-      graft.sources.SplitSidecar.move(fs, src, dst)
-      graft.sources.BloomSidecar.move(fs, src, dst)
-      e.copy(name = newName)
+    val packed = stagedSwap(outDir, conf, ".optimize-", "packed-", small) {
+      staging =>
+        spark.read.format("proto-zst")
+          .load(small.map(e => new Path(outDir, e.name).toString): _*)
+          .repartitionByRange(bins, col("key"))
+          .sortWithinPartitions(col("key"))
+          .write.format("proto-zst").mode("append").save(staging)
     }
-    // THE commit: one atomic manifest rename swaps small -> packed
-    graft.sources.GenManifest.replace(outDir, conf,
-      small.map(_.name).toSet, packed)
-    // post-commit GC: the replaced originals and the empty staging dir
-    small.foreach { e =>
-      val p = new org.apache.hadoop.fs.Path(dirPath, e.name)
-      fs.delete(p, false)
-      graft.sources.RangeSidecar.delete(fs, p)
-    }
-    fs.delete(staging, true)
     (nBefore, nBefore - small.length + packed.length)
   }
 
@@ -224,8 +221,7 @@ object SinkMaintain {
     */
   def promoteL0(spark: SparkSession, l0Dir: String, l1Dir: String,
       targetFiles: Int = 0, maxL0Files: Int = 64): (Int, Int, Int) = {
-    import graft.sources.GenManifest
-    val conf = graft.sources.ProtoZstFiles.hadoopConf()
+    val conf = ProtoZstFiles.hadoopConf()
     def snap(d: String) = GenManifest.read(d, conf).getOrElse(
       throw new IllegalArgumentException(
         s"promoteL0: no manifest under $d — levels must be sink-governed"))
@@ -262,12 +258,6 @@ object SinkMaintain {
         if (cmp(e.max, hi) > 0) hi = e.max
       }
     }
-    val l0Path = new org.apache.hadoop.fs.Path(l0Dir)
-    val l1Path = new org.apache.hadoop.fs.Path(l1Dir)
-    val fs = l1Path.getFileSystem(conf)
-    def paths(root: org.apache.hadoop.fs.Path,
-        es: Seq[GenManifest.Entry]) =
-      es.map(e => new org.apache.hadoop.fs.Path(root, e.name).toString)
     // L0 flushes can overlap EACH OTHER too (that is what makes them
     // L0): collisions within the level resolve by FLUSH RECENCY —
     // manifest entry order is commit order, so a later file's row
@@ -277,7 +267,7 @@ object SinkMaintain {
     // promoted, never the level below).
     val l0Df = l0.zipWithIndex.map { case (e, i) =>
         spark.read.format("proto-zst")
-          .load(new org.apache.hadoop.fs.Path(l0Path, e.name).toString)
+          .load(new Path(l0Dir, e.name).toString)
           .withColumn("gen", lit(i.toLong))
       }.reduce(_ unionByName _)
       .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
@@ -288,7 +278,7 @@ object SinkMaintain {
       if (rewrite.isEmpty) l0Df
       else {
         val l1Df = spark.read.format("proto-zst")
-          .load(paths(l1Path, rewrite): _*)
+          .load(rewrite.map(e => new Path(l1Dir, e.name).toString): _*)
         // L0-wins partition-grain merge: L1 rows whose key an L0 flush
         // rewrote drop out (anti join on the binary key)
         l0Df.unionByName(
@@ -297,45 +287,15 @@ object SinkMaintain {
     }
     val bins = if (targetFiles > 0) targetFiles
       else math.max(1, rewrite.length)
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = new org.apache.hadoop.fs.Path(l1Path, ".promote-" + runId)
-    merged.repartitionByRange(bins, col("key"))
-      .sortWithinPartitions(col("key"))
-      .write.format("proto-zst").mode("append").save(staging.toString)
-    val stagedSnap = graft.sources.GenManifest.read(staging.toString, conf)
-      .getOrElse(throw new IllegalStateException(
-        s"staging write left no manifest under $staging"))
-    val runs = stagedSnap.entries.map { e =>
-      val newName = "l1run-" + runId + "-" + e.name
-      val src = new org.apache.hadoop.fs.Path(staging, e.name)
-      val dst = new org.apache.hadoop.fs.Path(l1Path, newName)
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(
-          s"promoteL0 aborted: rename refused for $src -> $dst; levels " +
-            "unchanged (no manifest committed), runs retained under " +
-            s"$staging")
-      fs.rename(graft.sources.RangeSidecar.sidecar(src),
-        graft.sources.RangeSidecar.sidecar(dst))
-      graft.sources.SplitSidecar.move(fs, src, dst)
-      graft.sources.BloomSidecar.move(fs, src, dst)
-      e.copy(name = newName)
-    }
     // commit L1 first (see crash ordering above), then drain L0
-    GenManifest.replace(l1Dir, conf, rewrite.map(_.name).toSet, runs)
-    MaintainHooks.afterL1Commit()
-    rewrite.foreach { e =>
-      val p = new org.apache.hadoop.fs.Path(l1Path, e.name)
-      fs.delete(p, false)
-      graft.sources.RangeSidecar.delete(fs, p)
+    val runs = stagedSwap(l1Dir, conf, ".promote-", "l1run-", rewrite) {
+      staging =>
+        merged.repartitionByRange(bins, col("key"))
+          .sortWithinPartitions(col("key"))
+          .write.format("proto-zst").mode("append").save(staging)
     }
     MaintainHooks.beforeL0Commit()
-    GenManifest.replace(l0Dir, conf, l0.map(_.name).toSet, Seq.empty)
-    l0.foreach { e =>
-      val p = new org.apache.hadoop.fs.Path(l0Path, e.name)
-      fs.delete(p, false)
-      graft.sources.RangeSidecar.delete(fs, p)
-    }
-    fs.delete(staging, true)
+    retire(l0Dir, conf, l0)
     (l0.length, rewrite.length, runs.length)
   }
 
@@ -366,7 +326,7 @@ object SinkMaintain {
             !committed(n) && s.getModificationTime < cutoff
           if (orphanData) {
             fs.delete(s.getPath, false)
-            graft.sources.RangeSidecar.delete(fs, s.getPath)
+            Sidecars.delete(fs, s.getPath)
           }
           // every maintenance op stages under one of the ENGINE'S
           // dot-prefixes below and every writer task under a `._tmp`
@@ -408,23 +368,19 @@ object SinkMaintain {
     * are read, filtered, and re-staged; every other file is untouched
     * (not read, not copied — at 100 TB with range-clustered keys,
     * that is the difference between rewriting a few files and
-    * rewriting the table). Commit is the q77 discipline: staged files
-    * land under unreferenced `erased-*` names, one atomic manifest
-    * `replace` swaps them in, originals are deleted only after the
-    * commit — a reader sees the old table or the new one, never a
-    * partial erase; a crash before commit leaves the table intact
-    * plus sweepable garbage.
+    * rewriting the table). Commit is the [[stagedSwap]] under
+    * `erased-` names: a reader sees the old table or the new one, never
+    * a partial erase. A touched file whose every row falls in the range
+    * simply leaves the manifest with no replacement.
     *
     * Returns (files rewritten, files untouched).
     */
   private[graft] def eraseRange(spark: SparkSession, outDir: String,
       lo: Array[Byte], hi: Array[Byte]): (Int, Int) = {
     import java.util.Arrays.compareUnsigned
-    val conf = graft.sources.ProtoZstFiles.hadoopConf()
-    val dirPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = dirPath.getFileSystem(conf)
-    val snap = graft.sources.GenManifest.read(outDir, conf).getOrElse(
-      throw new IllegalStateException(
+    val conf = ProtoZstFiles.hadoopConf()
+    val snap = GenManifest.read(outDir, conf)
+      .getOrElse(throw new IllegalStateException(
         s"eraseRange requires a manifested directory: $outDir"))
     // DATA entries only: tombstone files hold deleted keys, not rows —
     // rewriting one as data would resurrect its keys as empty rows
@@ -434,39 +390,12 @@ object SinkMaintain {
         (compareUnsigned(e.max, lo) >= 0 && compareUnsigned(e.min, hi) < 0)
     }
     if (touched.isEmpty) return (0, untouched.length)
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = new org.apache.hadoop.fs.Path(dirPath, ".erase-" + runId)
-    spark.read.format("proto-zst")
-      .load(touched.map(e => new org.apache.hadoop.fs.Path(dirPath, e.name)
-        .toString).toIndexedSeq: _*)
-      .filter(!(col("key") >= lit(lo) && col("key") < lit(hi)))
-      .write.format("proto-zst").mode("append").save(staging.toString)
-    val stagedSnap = graft.sources.GenManifest.read(staging.toString, conf)
-      .getOrElse(throw new IllegalStateException(
-        s"staging write left no manifest under $staging"))
-    val kept = stagedSnap.entries.map { e =>
-      val newName = "erased-" + runId + "-" + e.name
-      val src = new org.apache.hadoop.fs.Path(staging, e.name)
-      val dst = new org.apache.hadoop.fs.Path(dirPath, newName)
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(
-          s"erase aborted: rename refused for $src -> $dst; table " +
-            "unchanged (manifest not committed)")
-      fs.rename(graft.sources.RangeSidecar.sidecar(src),
-        graft.sources.RangeSidecar.sidecar(dst))
-      graft.sources.SplitSidecar.move(fs, src, dst)
-      graft.sources.BloomSidecar.move(fs, src, dst)
-      e.copy(name = newName)
+    stagedSwap(outDir, conf, ".erase-", "erased-", touched) { staging =>
+      spark.read.format("proto-zst")
+        .load(touched.map(e => new Path(outDir, e.name).toString): _*)
+        .filter(!(col("key") >= lit(lo) && col("key") < lit(hi)))
+        .write.format("proto-zst").mode("append").save(staging)
     }
-    graft.sources.GenManifest.replace(outDir, conf,
-      touched.map(_.name).toSet, kept)
-    // post-commit GC of the erased originals — the bytes actually go
-    touched.foreach { e =>
-      val p = new org.apache.hadoop.fs.Path(dirPath, e.name)
-      fs.delete(p, false)
-      graft.sources.RangeSidecar.delete(fs, p)
-    }
-    fs.delete(staging, true)
     (touched.length, untouched.length)
   }
 
@@ -501,71 +430,6 @@ object SinkMaintain {
     spark.read.format("proto-zst").load(out)
       .select(decode(col("key"), "UTF-8").as("key"),
         size(col("columns")).cast("long").as("n_cells"))
-  }
-
-  /** Pre-manifest directories (foreign/legacy writers): the original
-    * three-phase `.swap` rename protocol, kept so maintenance still
-    * works where no manifest exists.
-    */
-  private def optimizeLegacy(spark: SparkSession, outDir: String,
-      targetBytes: Long): (Int, Int) = {
-    val conf = graft.sources.ProtoZstFiles.hadoopConf()
-    val dirPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = dirPath.getFileSystem(conf)
-    healPendingSwaps(outDir)
-    val files = graft.sources.ProtoZstFiles.list(outDir, conf)
-    val small = files.filter(f =>
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen < targetBytes)
-    if (small.length < 2) return (files.length, files.length)
-    val totalBytes = small.map(f =>
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
-    val bins = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = new org.apache.hadoop.fs.Path(dirPath, ".optimize-" + runId)
-    spark.read.format("proto-zst").load(small.toIndexedSeq: _*)
-      .repartitionByRange(bins, col("key"))
-      .sortWithinPartitions(col("key"))
-      .write.format("proto-zst").mode("append").save(staging.toString)
-    // phase A: staged files (data + sidecars) into the directory under
-    // hidden `.swap` names; verified renames, abort = originals intact
-    val moved = fs.listStatus(staging).filter(_.isFile).map { s =>
-      val finalPath = new org.apache.hadoop.fs.Path(dirPath,
-        "packed-" + runId + "-" + s.getPath.getName)
-      val hidden = new org.apache.hadoop.fs.Path(dirPath,
-        finalPath.getName + ".swap")
-      if (!fs.rename(s.getPath, hidden))
-        throw new java.io.IOException(
-          s"optimize aborted: rename refused for ${s.getPath} -> $hidden; " +
-            s"originals untouched, packed files retained under $staging " +
-            "and *.swap names")
-      (hidden, finalPath)
-    }
-    // phase B: originals (and sidecars) out — readers may briefly
-    // under-count, never double-count
-    small.foreach { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      if (!fs.delete(p, false))
-        throw new java.io.IOException(
-          s"optimize aborted: delete refused for $p; packed rows retained " +
-            "under *.swap names")
-      graft.sources.RangeSidecar.delete(fs, p)
-    }
-    // phase C: unhide — same-directory metadata renames. A refusal is
-    // retried once, then rolled FORWARD as far as possible (every
-    // completed rename makes rows visible again); only then throw,
-    // listing the stragglers — which the next optimize (or any caller
-    // of healPendingSwaps) completes from their self-describing names
-    val stuck = moved.filter { case (hidden, finalPath) =>
-      !fs.rename(hidden, finalPath) &&
-        fs.exists(hidden) && !fs.rename(hidden, finalPath)
-    }
-    if (stuck.nonEmpty)
-      throw new java.io.IOException(
-        s"optimize incomplete: ${stuck.length} of ${moved.length} swap " +
-          s"renames refused (${stuck.map(_._1).mkString(", ")}); rows " +
-          "present but hidden until healPendingSwaps/next optimize runs")
-    fs.delete(staging, true)
-    (files.length, graft.sources.ProtoZstFiles.list(outDir, conf).length)
   }
 
   /** The q77 fixture: a deliberately fragmented sink directory (16
@@ -734,22 +598,14 @@ object SinkMaintain {
     * Returns the number of files expired.
     */
   def expireByTime(outDir: String, cutoffUs: Long): Int = {
-    val conf = graft.sources.ProtoZstFiles.hadoopConf()
-    val snap = graft.sources.GenManifest.read(outDir, conf).getOrElse(
-      throw new IllegalArgumentException(
+    val conf = ProtoZstFiles.hadoopConf()
+    val snap = GenManifest.read(outDir, conf)
+      .getOrElse(throw new IllegalArgumentException(
         s"$outDir has no manifest: whole-file expiry needs attested " +
           "write-time ranges; use a row-level filter + rewrite instead"))
     val expired = snap.dataEntries.filter(_.times.exists(_._2 < cutoffUs))
     if (expired.isEmpty) return 0
-    graft.sources.GenManifest.replace(outDir, conf,
-      expired.map(_.name).toSet, Vector.empty)
-    val dirPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = dirPath.getFileSystem(conf)
-    expired.foreach { e =>
-      val p = new org.apache.hadoop.fs.Path(dirPath, e.name)
-      fs.delete(p, false)
-      graft.sources.RangeSidecar.delete(fs, p)
-    }
+    retire(outDir, conf, expired)
     expired.length
   }
 
@@ -818,14 +674,12 @@ object SinkMaintain {
   def compactWindows(spark: SparkSession, outDir: String,
       windowUs: Long, cutoffUs: Long): (Int, Int) = {
     require(windowUs > 0, s"windowUs must be positive, got $windowUs")
-    val conf = graft.sources.ProtoZstFiles.hadoopConf()
-    val snap = graft.sources.GenManifest.read(outDir, conf).getOrElse(
-      throw new IllegalArgumentException(
+    val conf = ProtoZstFiles.hadoopConf()
+    val snap = GenManifest.read(outDir, conf)
+      .getOrElse(throw new IllegalArgumentException(
         s"$outDir has no manifest: window compaction plans from " +
-          "attested write-time ranges; use OPTIMIZE for listing-era " +
-          "directories"))
-    val dirPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = dirPath.getFileSystem(conf)
+          "attested write-time ranges; import the directory through the " +
+          "sink first"))
     val closed = snap.dataEntries
       .filter(_.times.isDefined)
       .groupBy(e => e.times.get._2 / windowUs)
@@ -833,48 +687,17 @@ object SinkMaintain {
         (w + 1) * windowUs <= cutoffUs && es.length > 1 }
       .toSeq.sortBy(_._1)
     if (closed.isEmpty) return (0, 0)
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = new org.apache.hadoop.fs.Path(dirPath, ".wmajor-" + runId)
-    val packed = closed.flatMap { case (w, es) =>
-      val winDir = new org.apache.hadoop.fs.Path(staging, "w" + w)
-      spark.read.format("proto-zst")
-        .load(es.map(e =>
-          new org.apache.hadoop.fs.Path(dirPath, e.name).toString): _*)
-        .coalesce(1).sortWithinPartitions(col("key"))
-        .write.format("proto-zst").mode("append").save(winDir.toString)
-      // the staging write produced its own manifest — reuse its entries
-      // (bytes/counts/key ranges/TIME ranges) instead of re-reading
-      // any file metadata
-      val staged = graft.sources.GenManifest.read(winDir.toString, conf)
-        .getOrElse(throw new IllegalStateException(
-          s"staging write left no manifest under $winDir"))
-      staged.entries.map { e =>
-        val newName = s"wmajor-$runId-w$w-${e.name}"
-        val src = new org.apache.hadoop.fs.Path(winDir, e.name)
-        val dst = new org.apache.hadoop.fs.Path(dirPath, newName)
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(
-            s"window compaction aborted: rename refused for $src -> " +
-              s"$dst; table unchanged (manifest not committed), staged " +
-              s"files retained under $staging")
-        fs.rename(graft.sources.RangeSidecar.sidecar(src),
-          graft.sources.RangeSidecar.sidecar(dst))
-        graft.sources.SplitSidecar.move(fs, src, dst)
-        graft.sources.BloomSidecar.move(fs, src, dst)
-        e.copy(name = newName)
+    // THE commit: one staged swap covers every closed window, each
+    // window written as its own one-file job into the shared staging
+    val replaced = closed.flatMap(_._2)
+    stagedSwap(outDir, conf, ".wmajor-", "wmajor-", replaced) { staging =>
+      closed.foreach { case (_, es) =>
+        spark.read.format("proto-zst")
+          .load(es.map(e => new Path(outDir, e.name).toString): _*)
+          .coalesce(1).sortWithinPartitions(col("key"))
+          .write.format("proto-zst").mode("append").save(staging)
       }
     }
-    // THE commit: one atomic manifest swap covers every closed window
-    val replaced = closed.flatMap(_._2)
-    graft.sources.GenManifest.replace(outDir, conf,
-      replaced.map(_.name).toSet, packed.toVector)
-    // post-commit GC: the replaced originals and the staging tree
-    replaced.foreach { e =>
-      val p = new org.apache.hadoop.fs.Path(dirPath, e.name)
-      fs.delete(p, false)
-      graft.sources.RangeSidecar.delete(fs, p)
-    }
-    fs.delete(staging, true)
     (closed.length, replaced.length)
   }
 

@@ -1,11 +1,12 @@
 package graft.operators
 
 import com.github.luben.zstd.{ZstdInputStream, ZstdOutputStream}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ProtoWire
-import graft.sources.{BloomSidecar, GenManifest, ProtoZstFiles, RangeSidecar, SplitSidecar}
+import graft.sources.{BloomSidecar, GenManifest, ProtoZstFiles}
 
 /** EQUALITY-DELETE TOMBSTONES — the reference domain's deletion model
   * (Cassandra writes a tombstone cell and lets compaction purge it
@@ -116,7 +117,7 @@ object Tombstones {
   def purge(spark: SparkSession, dir: String,
       olderThanUs: Long = Long.MaxValue): (Int, Int) = {
     val conf = ProtoZstFiles.hadoopConf()
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
+    val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(conf)
     val snap = GenManifest.read(dir, conf).getOrElse(
       throw new IllegalStateException(
@@ -127,8 +128,7 @@ object Tombstones {
     // the shared format reader (scan anti-set and purge can never
     // drift); UNCAPPED — purge is the remedy for an over-cap backlog
     val deleted: Array[Array[Byte]] = graft.sources.TombstoneKeys.read(
-      tombs.map(e => (new org.apache.hadoop.fs.Path(dirPath, e.name)
-        .toString, e.bytes)),
+      tombs.map(e => (new Path(dirPath, e.name).toString, e.bytes)),
       conf, cap = None)
     import java.util.Arrays.compareUnsigned
     val ranged = snap.dataEntries.filter { e =>
@@ -138,15 +138,17 @@ object Tombstones {
     }
     val touched = ranged.filter { e =>
       val bloom =
-        try BloomSidecar.read(fs, new org.apache.hadoop.fs.Path(dirPath, e.name))
+        try BloomSidecar.read(fs, new Path(dirPath, e.name))
         catch { case _: Exception => None }
       bloom.forall(b => deleted.exists(BloomSidecar.mightContain(b, _)))
     }
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val kept: Vector[GenManifest.Entry] =
-      if (touched.isEmpty) Vector.empty
-      else {
-        val staging = new org.apache.hadoop.fs.Path(dirPath, ".purge-" + runId)
+    // the rewritten originals AND the tombstone files retire in one
+    // commit: after it, neither the erased rows' bytes nor the erased
+    // KEYS themselves (also personal data) remain on disk
+    val retired = touched ++ tombs
+    if (touched.isEmpty) SinkMaintain.retire(dir, conf, retired)
+    else SinkMaintain.stagedSwap(dir, conf, ".purge-", "purged-", retired) {
+      staging =>
         // survivor filter as a broadcast LEFT ANTI join against the
         // tombstone files themselves (they are proto-zst rows with
         // empty columns) — NOT an In-list of per-key Literals. purge
@@ -158,53 +160,12 @@ object Tombstones {
         // broadcasts the deduped key column once (bytes, not
         // expression nodes) and probes it hash-wise inside codegen.
         val anti = spark.read.format("proto-zst")
-          .load(tombs.map(e =>
-            new org.apache.hadoop.fs.Path(dirPath, e.name).toString)
-            .toIndexedSeq: _*)
+          .load(tombs.map(e => new Path(dirPath, e.name).toString): _*)
           .select(col("key").as("tomb_key")).distinct()
         spark.read.format("proto-zst")
-          .load(touched.map(e =>
-            new org.apache.hadoop.fs.Path(dirPath, e.name).toString)
-            .toIndexedSeq: _*)
+          .load(touched.map(e => new Path(dirPath, e.name).toString): _*)
           .join(broadcast(anti), col("key") === col("tomb_key"), "left_anti")
-          .write.format("proto-zst").mode("append").save(staging.toString)
-        // a fully-erased rewrite legitimately lands ZERO rows: the
-        // writer marks the staging dir governed but commits no
-        // snapshot (no entries to publish) — that reads as "no
-        // survivors", not as a crashed write, and the swap below just
-        // drops the touched files
-        val stagedSnap = GenManifest.read(staging.toString, conf) match {
-          case Some(s) => s
-          case None if GenManifest.governed(staging.toString, conf) =>
-            GenManifest.Snapshot(0L, Vector.empty)
-          case None => throw new IllegalStateException(
-            s"staging write left no manifest under $staging")
-        }
-        val out = stagedSnap.entries.map { e =>
-          val newName = "purged-" + runId + "-" + e.name
-          val src = new org.apache.hadoop.fs.Path(staging, e.name)
-          val dst = new org.apache.hadoop.fs.Path(dirPath, newName)
-          if (!fs.rename(src, dst))
-            throw new java.io.IOException(
-              s"purge aborted: rename refused for $src -> $dst; table " +
-                "unchanged (manifest not committed)")
-          fs.rename(RangeSidecar.sidecar(src), RangeSidecar.sidecar(dst))
-          SplitSidecar.move(fs, src, dst)
-          BloomSidecar.move(fs, src, dst)
-          e.copy(name = newName)
-        }
-        fs.delete(staging, true)
-        out
-      }
-    GenManifest.replace(dir, conf,
-      (touched.map(_.name) ++ tombs.map(_.name)).toSet, kept)
-    // post-commit GC: the rewritten originals AND the tombstone files
-    // go — after this, neither the erased rows' bytes nor the erased
-    // KEYS themselves (also personal data) remain on disk
-    (touched ++ tombs).foreach { e =>
-      val p = new org.apache.hadoop.fs.Path(dirPath, e.name)
-      fs.delete(p, false)
-      RangeSidecar.delete(fs, p) // retires .range/.split/.bloom together
+          .write.format("proto-zst").mode("append").save(staging)
     }
     (touched.length, tombs.length)
   }

@@ -769,10 +769,10 @@ object GenManifest {
     * packed erasure would RESURRECT the erased victim from its
     * pre-erasure staged bytes. Append-vs-replace stays retryable as
     * before: an append landing mid-race removes nothing, so the retry
-    * re-applies cleanly. All eight maintenance call sites (OPTIMIZE,
-    * LCS promote/drain, range erase, TTL expiry, window compaction,
-    * tombstone purge, release pack-erase) surface the refusal — each
-    * is a re-runnable operation whose re-plan IS a fresh invocation.
+    * re-applies cleanly. Every maintenance rewrite commits through
+    * [[graft.operators.SinkMaintain.stagedSwap]] or its retire-only
+    * half, which surface the refusal — each is a re-runnable operation
+    * whose re-plan IS a fresh invocation.
     */
   def replace(dir: String, conf: org.apache.hadoop.conf.Configuration,
       remove: Set[String], add: Seq[Entry]): Snapshot =

@@ -298,7 +298,7 @@ class ProtoZstWriterFactory(dir: String, buckets: Option[Int] = None,
             if (cuts.nonEmpty)
               SplitSidecar.write(fs, st.finalFile, cuts.toSeq)
             if (!fs.rename(st.tmpFile, st.finalFile)) {
-              RangeSidecar.delete(fs, st.finalFile)
+              Sidecars.delete(fs, st.finalFile)
               throw new java.io.IOException(s"rename failed: ${st.tmpFile}")
             }
             GenManifest.Entry(st.name,
@@ -317,7 +317,7 @@ class ProtoZstWriterFactory(dir: String, buckets: Option[Int] = None,
         fs.delete(st.tmpFile, false)
         // an orphan sidecar (commit failed between sidecar write and
         // rename) must not describe a future file of the same name
-        if (!fs.exists(st.finalFile)) RangeSidecar.delete(fs, st.finalFile)
+        if (!fs.exists(st.finalFile)) Sidecars.delete(fs, st.finalFile)
       }
     }
 }

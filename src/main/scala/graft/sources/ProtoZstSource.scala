@@ -135,7 +135,7 @@ class ProtoZstTable(paths: Seq[String], buckets: Option[Int] = None,
         case c: ProtoZstCommit => c.files.filterNot(published).foreach { f =>
           val data = new org.apache.hadoop.fs.Path(dirPath, f)
           fs.delete(data, false)
-          RangeSidecar.delete(fs, data)
+          Sidecars.delete(fs, data)
         }
         case _ => ()
       }

@@ -5,10 +5,33 @@ package graft.sources
   * (Summary/Statistics key bounds + sortedness + count), `.split`
   * (deliberate zstd-frame checkpoints for parallel slicing), and
   * `.bloom` (Filter.db — the point-lookup key filter). All three are
-  * written by the sink at task commit, moved by maintenance renames,
-  * and retired together through [[RangeSidecar.delete]]. Split from
-  * `ProtoZstSource.scala` along the metadata/scan seam.
+  * written by the sink at task commit, then moved and retired together
+  * through [[Sidecars]]. Split from `ProtoZstSource.scala` along the
+  * metadata/scan seam.
   */
+/** The sidecar SET as one unit: every per-file sidecar lives and dies
+  * with its data file, so every maintenance rename and every GC path
+  * goes through this one move/delete pair.
+  */
+object Sidecars {
+  import org.apache.hadoop.fs.{FileSystem, Path}
+
+  private def all(data: Path): Seq[Path] = Seq(RangeSidecar.sidecar(data),
+    SplitSidecar.sidecar(data), BloomSidecar.sidecar(data))
+
+  /** Best-effort move beside a data-file rename: a missing or refused
+    * sidecar only costs its skip/slice power (the manifest carries the
+    * stats), never correctness.
+    */
+  def move(fs: FileSystem, src: Path, dst: Path): Unit =
+    all(src).zip(all(dst)).foreach { case (s, d) =>
+      try fs.rename(s, d) catch { case _: Exception => () }
+    }
+
+  def delete(fs: FileSystem, data: Path): Unit =
+    all(data).foreach(fs.delete(_, false))
+}
+
 /** Per-file key-range sidecar (`<file>.range`): the min and max key the
   * file contains, hex-encoded. The engine analog of the reference's
   * index summary (`SSTableReaderPatched.java:221-233` — the structure
@@ -91,17 +114,6 @@ object RangeSidecar {
         else None
       }
     } catch { case _: Exception => None }
-
-  /** Deletes ALL per-file sidecars (`.range`, `.split`, `.bloom`):
-    * they live and die with the data file, and every maintenance/GC
-    * path already routes through here — one place instead of twelve.
-    */
-  def delete(fs: FileSystem, data: Path): Unit = {
-    fs.delete(sidecar(data), false)
-    fs.delete(SplitSidecar.sidecar(data), false)
-    fs.delete(BloomSidecar.sidecar(data), false)
-    ()
-  }
 }
 
 /** Per-file zstd-frame checkpoint sidecar (`<file>.split`): compressed
@@ -185,16 +197,6 @@ object SplitSidecar {
         })
       }
     } catch { case _: Exception => None }
-
-  /** Best-effort move beside a data-file rename (maintenance rewrites)
-    * so compacted big files — exactly the splittable ones — keep their
-    * slice boundaries.
-    */
-  def move(fs: FileSystem, src: Path, dst: Path): Unit = {
-    try fs.rename(sidecar(src), sidecar(dst))
-    catch { case _: Exception => () }
-    ()
-  }
 }
 
 /** Per-file KEY BLOOM FILTER sidecar (`<file>.bloom`) — the engine's
@@ -311,13 +313,4 @@ object BloomSidecar {
         }
       }
     } catch { case _: Exception => None }
-
-  /** Best-effort move beside a data-file rename, the [[SplitSidecar]]
-    * discipline: maintenance rewrites keep their point-skip power.
-    */
-  def move(fs: FileSystem, src: Path, dst: Path): Unit = {
-    try fs.rename(sidecar(src), sidecar(dst))
-    catch { case _: Exception => () }
-    ()
-  }
 }

@@ -27,15 +27,8 @@ object Probe {
     spark.read.parquet(s"$dir/region.parquet")
       .withColumn("h", graft.functions.HashOps.md5_prefix60(col("r_name")))
       .groupBy(col("r_regionkey")).agg(count(lit(1))).count()
-    try {
-      graft.operators.Sink.warmFixtures(spark, dir)
-      graft.operators.SimSearch.warmFixtures(spark, dir)
-      graft.operators.Relational.warmFixtures(spark, dir)
-      graft.operators.DedupClusters.warmFixtures(spark, dir)
-      graft.operators.Quality.warmFixtures(spark, dir)
-      graft.operators.Retrieval.warmFixtures(spark, dir)
-      graft.operators.Classifier.warmFixtures(spark, dir)
-    } catch { case e: Throwable =>
+    try graft.SparkEntry.fixtureBuilds.foreach(_._2(spark, dir))
+    catch { case e: Throwable =>
       System.err.println(s"[probe] fixture warm failed: ${e.getMessage}") }
 
     @volatile var jobs = 0

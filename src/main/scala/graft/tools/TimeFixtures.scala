@@ -22,19 +22,9 @@ object TimeFixtures {
     spark.read.parquet(s"$dir/region.parquet")
       .withColumn("h", graft.functions.HashOps.md5_prefix60(col("r_name")))
       .groupBy(col("r_regionkey")).agg(count(lit(1))).count()
-    val builds =
-      graft.operators.Sink.fixtureBuilds ++
-        graft.operators.SimSearch.fixtureBuilds ++
-        graft.operators.Relational.fixtureBuilds ++
-        graft.operators.Dedup.fixtureBuilds ++
-        graft.operators.DedupClusters.fixtureBuilds ++
-        graft.operators.Quality.fixtureBuilds ++
-        graft.operators.Retrieval.fixtureBuilds ++
-        graft.operators.Classifier.fixtureBuilds ++
-        graft.operators.StreamCurate.fixtureBuilds
     val wanted: Option[Set[String]] = if (args.isEmpty) None
       else Some(args.toSet)
-    builds.foreach { case (name, fn) =>
+    graft.SparkEntry.fixtureBuilds.foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       fn(spark, dir)
       val dt = (System.nanoTime() - t0) / 1e9

@@ -193,6 +193,9 @@ class CompactionSpec extends AnyFunSuite {
     * copies; after the unlinks, the L1 manifest already carries the
     * runs), a re-run converges to the uninterrupted result, and the
     * crash's only residue is unreferenced garbage the sweep retires.
+    * "afterL1" dies between the L1 commit and its cleanup, so that
+    * residue is really on disk: the rewritten originals and the
+    * `.promote-` staging directory.
     */
   private def promoteCrash(point: String): Unit = {
     import graft.operators.{MaintainHooks, SinkMaintain}
@@ -208,10 +211,11 @@ class CompactionSpec extends AnyFunSuite {
     }
     val before = merged()
     val l0V = GenManifest.read(l0, conf).get.version
+    val l1Before = GenManifest.read(l1, conf).get.entries.map(_.name)
     val killer: () => Unit =
       () => throw new RuntimeException(s"injected promotion crash $point")
     try {
-      if (point == "afterL1") MaintainHooks.afterL1Commit = killer
+      if (point == "afterL1") MaintainHooks.afterReplace = killer
       else MaintainHooks.beforeL0Commit = killer
       val e = intercept[RuntimeException] {
         SinkMaintain.promoteL0(spark, l0, l1)
@@ -228,6 +232,15 @@ class CompactionSpec extends AnyFunSuite {
     assert(GenManifest.read(l0, conf).get.entries.nonEmpty)
     assert(merged() === before,
       s"read diverged inside the $point torn window")
+    val l1Files = new java.io.File(l1).list().toSeq
+    val rewritten = l1Before.filterNot(l1Mid.entries.map(_.name).toSet)
+    val leftovers = rewritten.filter(l1Files.contains) ++
+      l1Files.filter(_.startsWith(".promote-"))
+    if (point == "afterL1")
+      assert(rewritten.nonEmpty && leftovers.length === rewritten.length + 1,
+        s"a death between commit and cleanup must leave the originals " +
+          s"and the staging dir: $leftovers")
+    else assert(leftovers.isEmpty, s"the L1 swap did not clean up: $leftovers")
     // recovery IS a re-run: the rewrite set re-derives from the two
     // committed manifests, L0 drains, the level stays disjoint
     SinkMaintain.promoteL0(spark, l0, l1)

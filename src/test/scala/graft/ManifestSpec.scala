@@ -8,8 +8,8 @@ import graft.sources.{GenManifest, MetaIO, ProtoZstFiles}
 
 /** The generation manifest: commit protocol, manifest-backed planning
   * (zero data-dir listings, zero per-file sidecar reads — the O(files)
-  * driver work the manifest exists to kill), and the atomic
-  * OPTIMIZE commit that replaced the `.swap` rename dance.
+  * driver work the manifest exists to kill), and the atomic staged
+  * swap every maintenance rewrite commits through.
   */
 class ManifestSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sf0001}
@@ -158,15 +158,19 @@ class ManifestSpec extends AnyFunSuite {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(new java.net.URI(
         if (src.startsWith("file:")) src else "file://" + src)), orphan)
-    new java.io.File(dir, ".optimize-dead").mkdir()
+    // one stale staging dir per prefix of the engine's vocabulary
+    val staging = SinkMaintain.StagingPrefixes.map(p =>
+      new java.io.File(dir, p + "dead"))
+    staging.foreach(_.mkdir())
     // inside the grace window nothing moves (could be an in-flight job)
     assert(SinkMaintain.vacuumUnreferenced(dir) === 0)
     assert(java.nio.file.Files.exists(orphan))
-    // past the grace window the orphan and staging dir go; committed
+    assert(staging.forall(_.exists()))
+    // past the grace window the orphan and staging dirs go; committed
     // files and the readable table are untouched
     assert(SinkMaintain.vacuumUnreferenced(dir, graceMs = 0L) === 1)
     assert(!java.nio.file.Files.exists(orphan))
-    assert(!new java.io.File(dir, ".optimize-dead").exists())
+    staging.foreach(d => assert(!d.exists(), s"${d.getName} survived"))
     assert(ProtoZstFiles.list(dir, conf).length === committed)
     assert(spark.read.format("proto-zst").load(dir).count() === n0)
   }
@@ -274,6 +278,30 @@ class ManifestSpec extends AnyFunSuite {
     assert(postFrame.filter(
       col("key") >= lit(lo) && col("key") < lit(hi)).count() === 0L)
     assert(postFrame.count() === preTotal - inRange)
+  }
+
+  test("q148 erasure of a whole file's range commits the file away with no survivors") {
+    val dir = freshDir("graft_man_erase0")
+    Sink.writeNested(CellModel.nestRows(spark, sf0001)
+      .repartitionByRange(8, col("key")), dir)
+    val before = GenManifest.read(dir, conf).getOrElse(fail("no manifest"))
+    assert(before.entries.length === 8)
+    val e = before.entries.find(_.hasRange).get
+    val preTotal = spark.read.format("proto-zst").load(dir).count()
+    // [e.min, e.max ++ 0x00) covers every key of e and, the files
+    // being range-disjoint, touches no other file
+    val (touched, untouched) =
+      SinkMaintain.eraseRange(spark, dir, e.min, e.max :+ 0.toByte)
+    assert((touched, untouched) === ((1, 7)))
+    val after = GenManifest.read(dir, conf).getOrElse(fail("no manifest v2"))
+    assert(after.version === before.version + 1)
+    assert(!after.entries.exists(_.name == e.name))
+    assert(after.entries.length === 7)
+    assert(!new java.io.File(dir, e.name).exists(), s"${e.name} not GC'd")
+    assert(!new java.io.File(dir).list().exists(_.startsWith(".erase-")),
+      "staging directory left behind")
+    assert(spark.read.format("proto-zst").load(dir).count() ===
+      preTotal - e.count)
   }
 
   test("q174 streaming export: files split by group content, manifest complete") {

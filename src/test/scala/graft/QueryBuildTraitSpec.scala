@@ -164,9 +164,10 @@ class QueryBuildTraitSpec extends AnyFunSuite {
     // manifest exists to kill. Whole-pass ceiling (not per-query: a
     // shared fixture's build attributes to whichever consumer runs
     // first), pinned to the measured totals with zero slack — every
-    // count in them is a FIXTURE BUILD's own write/verify listing or a
-    // deliberate legacy-mode path (q77's manifest-less optimize, q233's
-    // sidecar-planned L0 seed), never a scan planning a read. The
+    // count in them is a FIXTURE BUILD's own write/verify listing
+    // (q77's optimize fixture is sink-written, hence manifested) or a
+    // deliberate legacy-mode path (q233's sidecar-planned L0 seed),
+    // never a scan planning a read. The
     // failure message prints the per-query attribution to re-pin from.
     val (totL, totS) = (listedBy.values.map(_._1).sum,
       listedBy.values.map(_._2).sum)
