@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Machine-load telemetry: 1/5/15-min loadavg and cumulative steal
     * ticks (field 8 of /proc/stat's cpu line). Sampled before and
@@ -24,7 +23,6 @@ object Bench {
     val load0 = loadavg()
     val steal0 = stealTicks()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Route Spark's spill/temp dirs (shuffle blocks, temp streaming
     // checkpoints — java.io.tmpdir is where forceDeleteTempCheckpoint
     // locations are created) to the memory-backed scratch fs when one
@@ -42,36 +40,9 @@ object Bench {
           gib * 1024 * 1024 * 1024)
         .map(_.toString)
     shmWithHeadroom(16).foreach(System.setProperty("java.io.tmpdir", _))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", shmWithHeadroom(64).getOrElse(diskTmp))
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pin the session timezone in code (not only via sbt javaOptions)
-      // so date predicates select the same rows under any launcher
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: initialize codegen/JIT, shuffle machinery and the
-    // parquet reader once, so the first timed query measures the query,
-    // not session bring-up (it was absorbing 7-20s of one-time cost).
-    try {
-      import org.apache.spark.sql.functions._
-      spark.read.parquet(s"$sfDir/region.parquet")
-        .withColumn("h", graft.functions.HashOps.md5_prefix60(col("r_name")))
-        .groupBy(col("r_regionkey")).agg(count(lit(1))).count()
-      // and the streaming stack (state store, offset/commit logs)
-      val schema = spark.read.parquet(s"$sfDir/region.parquet").schema
-      val wq = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "region.parquet").parquet(sfDir)
-        .groupBy(col("r_regionkey")).agg(count(lit(1)))
-        .writeStream.format("memory").queryName("bench_warmup")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      wq.awaitTermination()
-    } catch { case _: Throwable => () }
+    val spark = Harness.session(Harness.cpus,
+      "spark.local.dir" -> shmWithHeadroom(64).getOrElse(diskTmp))
+    Harness.warm(spark, sfDir)
     // TIMED fixture rows: every SHARED derived artifact (sink files,
     // generations, trained centroids/codebooks, the 2i index, the
     // session-cached derived tables) builds before any query is timed
@@ -82,9 +53,10 @@ object Bench {
     // pipeline cost hides in an untimed prelude. Fixture rows run ONCE
     // (a second run would read the warm cache and time nothing);
     // dependency order means each row times only its own increment.
-    val fixtureResults = SparkEntry.fixtureBuilds.map { case (name, fn) =>
+    val fixtureResults = SparkEntry.fixtureBuilds.map { f =>
+      val name = "fixture:" + f.name
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir); true }
+      val ok = try { f(spark, sfDir); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
       name -> ((Seq((System.nanoTime() - t0) / 1e9), ok))
@@ -101,10 +73,13 @@ object Bench {
     // between sweeps at local[32] — they get a third run so the min is
     // a steadier floor and round-over-round tails stop showing phantom
     // streaming regressions.
-    // Optional comma-separated name filter for local iteration on one
-    // query's steady-state time; the driver never sets it (full sweep).
+    // Optional comma-separated row-name filter for local iteration on
+    // one query's steady-state time or one fixture's cold build
+    // (`fixture:<name>`; every fixture still builds first). Unset, the
+    // sweep reports every row.
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
+    def wanted(name: String) = only.forall(_.contains(name))
     // Sweep hygiene: every shared fixture is checkpointed by the warm
     // prelude above, so any persistent RDD that appears DURING a timed
     // query is that query's private localCheckpoint blocks — garbage
@@ -131,7 +106,7 @@ object Bench {
         }
     }
     val queryResults = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => wanted(name) }
       .map { case (name, fn) =>
       def once(): (Double, Boolean) = {
         val t0 = System.nanoTime()
@@ -145,11 +120,7 @@ object Bench {
       dropPrivateBlocks()
       name -> (outcomes.map(_._1), outcomes.forall(_._2))
     }
-    // fixture rows are reported only on a full sweep — a filtered
-    // local iteration compares one query's steady state, and 24 rows
-    // of fixture-build noise would drown it
-    val results =
-      (if (only.isEmpty) fixtureResults else Seq.empty) ++ queryResults
+    val results = fixtureResults.filter(r => wanted(r._1)) ++ queryResults
     val qs = results.map { case (k, (ts, _)) => s"\"" + k + "\":" + ts.min }
       .mkString("{", ",", "}")
     // raw per-run times alongside the min: a cold first run (plan

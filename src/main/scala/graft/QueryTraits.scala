@@ -23,14 +23,16 @@ package graft
   * membership ⟺ jobs-ran-at-build in BOTH directions. The prelude
   * (what construction work does NOT count) is the shared-artifact
   * boundary: testdata schema inference, the trained
-  * centroid/codebook fixtures (`SimSearch.warmFixtures`), and the
-  * derived-table fixtures (`DedupClusters`/`Quality`/`Retrieval`/
-  * `Classifier.warmFixtures` — cluster closure, eval slate, fusion
-  * pools, trained classifier weights) — the
-  * amortized session inputs Bench also warms untimed (warming them
-  * there is REQUIRED: Bench drops private checkpoint blocks after
-  * each timed query, and a shared fixture built lazily during one
-  * would be unpersisted under every later consumer). Editing this
+  * centroid/codebook fixtures (`SimSearch`/`AnnPq`), and the
+  * derived-table fixtures (`Dedup`/`DedupClusters`/`Quality`/
+  * `Retrieval`/`Classifier`/`StreamCurate` — pair set, cluster
+  * closure, eval slate, fusion pools, trained classifier weights,
+  * ingest side inputs): the amortized session inputs in
+  * `SparkEntry.fixtureBuilds`, which Bench builds before its timed
+  * sweep (building them there is REQUIRED: Bench drops private
+  * checkpoint blocks after each timed query, and a shared fixture
+  * built lazily during one would be unpersisted under every later
+  * consumer). Editing this
   * list without measurement fails that spec; so does shipping a new
   * on-build query without listing it.
   */

@@ -89,19 +89,10 @@ object AnnPq {
   /** PQ codebooks share the same once-per-session discipline as
     * [[SimSearch.centroidFixture]]: q78 and q45's PQ leg train identically.
     */
-  private val pqBookFixtures =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  SessionCaches.registerMap(SimSearch.centLock, pqBookFixtures)
-
-  private[operators] def pqBookFixture(spark: SparkSession, dir: String): DataFrame =
-    SimSearch.centLock.synchronized {
-      val app = spark.sparkContext.applicationId
-      SimSearch.evictStale(pqBookFixtures, (k: (String, String)) => k._1, app)
-      pqBookFixtures.getOrElseUpdate((app, dir),
-        pqCodebooks(subsOf(SimSearch.featurized(spark, dir)))
-          .cp(eager = true))
-    }
+  private[graft] val pqBookFixture = SessionFixture("pq_codebooks") {
+    (spark, dir) =>
+      pqCodebooks(subsOf(SimSearch.featurized(spark, dir))).cp(eager = true)
+  }
 
   def annPq(spark: SparkSession, dir: String): DataFrame = {
     val e = SimSearch.base(spark, dir).cp()
@@ -147,11 +138,6 @@ object AnnPq {
     * q34 coarse quantizer — deterministic, so shared across q97 and
     * q45's ivfpq leg.
     */
-  private val ivfPqBookFixtures =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  SessionCaches.registerMap(SimSearch.centLock, ivfPqBookFixtures)
-
   private[operators] def ivfPqBooksPlan(spark: SparkSession, dir: String): DataFrame = {
     val e = SimSearch.featurized(spark, dir)
     val cent = SimSearch.centroidFixture(spark, dir, SimSearch.NCells)
@@ -166,13 +152,9 @@ object AnnPq {
     pqCodebooks(subsOf(resid))
   }
 
-  private[operators] def ivfPqBooks(spark: SparkSession, dir: String): DataFrame =
-    SimSearch.centLock.synchronized {
-      val app = spark.sparkContext.applicationId
-      SimSearch.evictStale(ivfPqBookFixtures, (k: (String, String)) => k._1, app)
-      ivfPqBookFixtures.getOrElseUpdate((app, dir),
-        ivfPqBooksPlan(spark, dir).cp(eager = true))
-    }
+  private[graft] val ivfPqBooks = SessionFixture("ivfpq_residual_books") {
+    (spark, dir) => ivfPqBooksPlan(spark, dir).cp(eager = true)
+  }
 
   /** q97: IVF-PQ with RESIDUAL codebooks — the production ANN shape
     * (FAISS `IVFx,PQy`): vectors assign to a trained coarse cell

@@ -159,33 +159,11 @@ object Classifier {
     * bit-identical to inline training, so both oracles hash
     * unchanged.
     */
-  private val weightFixtures =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private val weightLock = new Object
-
-  SessionCaches.registerMap(weightLock, weightFixtures)
-
-  private[graft] def trainedWeightsCached(spark: SparkSession,
-      dir: String): DataFrame =
-    weightLock.synchronized {
+  private[graft] val trainedWeightsCached = SessionFixture("classifier_train") {
+    (spark, dir) =>
       import graft.operators.Checkpoints.CpOps
-      val app = spark.sparkContext.applicationId
-      SimSearch.evictStale(weightFixtures, (k: (String, String)) => k._1, app)
-      weightFixtures.getOrElseUpdate((app, dir),
-        trainedWeights(spark, dir).cp(eager = true))
-    }
-
-  /** Named fixture builds for the bench's timed `fixture:*` rows
-    * (see [[DedupClusters.fixtureBuilds]] for why pre-sweep building
-    * is required, not optional).
-    */
-  private[graft] val fixtureBuilds:
-      Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "fixture:classifier_train" ->
-      ((s: SparkSession, d: String) => { trainedWeightsCached(s, d); () }))
-
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
+      trainedWeights(spark, dir).cp(eager = true)
+  }
 
   /** Audit hook (see [[SimSearch.fixturePlans]]): the un-cached
     * training chain for SCALE.md's `fixture:*` rows — per-round

@@ -129,8 +129,8 @@ object Compaction {
     * every file's ROW COUNT is a pure function of the data and the
     * DuckDB oracle can replay the planner without reading the sink.
     */
-  private[graft] def tieredFixture(spark: SparkSession, dir: String): String =
-    Sink.fixture("tiered:" + dir) {
+  private[graft] val tieredFixture = SessionFixture("tiered") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_tiered")
       val nested = CellModel.nestRows(spark, dir)
         .withColumn("g", col("key").cast("string").cast("long") % 32)
@@ -141,7 +141,7 @@ object Compaction {
       Sink.writeNested(part(col("g") >= 12 && col("g") <= 15), out)
       Sink.writeNested(part(col("g") >= 16), out)
       out
-    }
+  }
 
   /** q153: SIZE-TIERED COMPACTION PLANNING from the generation
     * MANIFEST — Cassandra's STCS decision ("bucket files of similar
@@ -201,9 +201,9 @@ object Compaction {
     (out0, out1)
   }
 
-  private[graft] def leveledFixture(spark: SparkSession,
-      dir: String): (String, String) =
-    Sink.fixture2("leveled:" + dir)(buildLeveled(spark, dir))
+  private[graft] val leveledFixture = SessionFixture("leveled")(buildLeveled)
+  // the same two levels, a copy that leveledCompact promotes in place
+  private val leveledExecFixture = SessionFixture("leveledexec")(buildLeveled)
 
   /** q156: LEVELED COMPACTION PLANNING from manifest KEY RANGES — the
     * other half of Cassandra's compaction strategy menu (LCS; q153 is
@@ -261,8 +261,8 @@ object Compaction {
     * every file's row count and time range are pure functions of the
     * data and the oracle replays the planner without reading the sink.
     */
-  private[graft] def twcsFixture(spark: SparkSession, dir: String): String =
-    Sink.fixture("twcs:" + dir) {
+  private[graft] val twcsFixture = SessionFixture("twcs") {
+    (spark, dir) =>
       import graft.operators.Checkpoints._
       val out = Scratch.dir("graft_twcs")
       val cells = CellModel.cells(spark, dir)
@@ -289,7 +289,7 @@ object Compaction {
         }
       }
       out
-    }
+  }
 
   /** q181: TIME-WINDOW COMPACTION PLANNING from manifest TIME RANGES —
     * the third strategy in Cassandra's menu (TWCS; q153 is STCS, q156
@@ -434,8 +434,7 @@ object Compaction {
     * idempotence); this query pins the end-to-end content.
     */
   def leveledCompact(spark: SparkSession, dir: String): DataFrame = {
-    val (l0Dir, l1Dir) = Sink.fixture2("leveledexec:" + dir)(
-      buildLeveled(spark, dir))
+    val (l0Dir, l1Dir) = leveledExecFixture(spark, dir)
     // idempotent under Bench's repeat runs: the second call finds L0
     // already drained and commits nothing
     SinkMaintain.promoteL0(spark, l0Dir, l1Dir)

@@ -114,10 +114,10 @@ object Core {
   /** The SECONDARY INDEX artifact: (cell type, µs day) → partition keys
     * with per-key cell counts, written as parquet partitioned by cell
     * type. One corpus shuffle at build time (like any index build);
-    * built once per (JVM, sf dir) and reused by every lookup.
+    * built once per (context, sf dir) and reused by every lookup.
     */
-  private[graft] def indexFixture(spark: SparkSession, dir: String): String =
-    Sink.fixture("2i:" + dir) {
+  private[graft] val indexFixture = SessionFixture("index_2i") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_2i")
       CellModel.liveCellStrings(spark, dir)
         .select(split(col("name"), ":").getItem(1).as("ctype"),
@@ -126,7 +126,7 @@ object Core {
         .agg(count(lit(1)).as("n_cells"))
         .write.partitionBy("ctype").mode("overwrite").parquet(out)
       out
-    }
+  }
 
   /** q79: SECONDARY-INDEX lookup — the engine's answer to Cassandra's
     * 2i over the reference's cell model: "which partitions contain a

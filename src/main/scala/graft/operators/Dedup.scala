@@ -150,19 +150,9 @@ object Dedup {
     * warmed untimed in the bench prelude); (applicationId, dir)-keyed
     * so a fresh JVM recomputes from the parquet inputs.
     */
-  private val pairFixtures = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
-  private val pairLock = new Object
-  SessionCaches.registerMap(pairLock, pairFixtures)
-
-  private[graft] def minhashPairsCached(spark: SparkSession,
-      dir: String): DataFrame =
-    pairLock.synchronized {
-      val app = spark.sparkContext.applicationId
-      SimSearch.evictStale(pairFixtures, (k: (String, String)) => k._1, app)
-      pairFixtures.getOrElseUpdate((app, dir),
-        dedupMinhash(spark, dir).cp(eager = true))
-    }
+  private[graft] val minhashPairsCached = SessionFixture("minhash_pairs") {
+    (spark, dir) => dedupMinhash(spark, dir).cp(eager = true)
+  }
 
   /** Audit hook (see [[SimSearch.fixturePlans]]): the un-cached pair
     * pipeline for SCALE.md's `fixture:*` rows — q15's own row shows
@@ -171,15 +161,6 @@ object Dedup {
   private[graft] def auditPlans(spark: SparkSession,
       dir: String): Seq[(String, DataFrame)] =
     Seq("fixture:minhash_pairs" -> dedupMinhash(spark, dir))
-
-  private[graft] val fixtureBuilds:
-      Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "fixture:minhash_pairs" ->
-      ((s: SparkSession, d: String) => { minhashPairsCached(s, d); () }))
-
-  /** Bench prelude hook (see [[DedupClusters.warmFixtures]]). */
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
 
   def dedupMinhash(spark: SparkSession, dir: String): DataFrame = {
     // the signature table feeds 4 plan branches (band self-join + both
@@ -998,9 +979,8 @@ object Dedup {
     * first 23 bytes ARE the LSH bucket and a probe is a plain
     * equi-join against the read-back.
     */
-  private[graft] def lshIndexFixture(spark: SparkSession,
-      dir: String): String =
-    Sink.fixture("lshidx:" + dir) {
+  private[graft] val lshIndexFixture = SessionFixture("lshidx") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_lshidx")
       val d = docShingleHashes(spark, dir)
       bandsOf(d.filter(col("doc_id") % 10 =!= 7))
@@ -1028,7 +1008,7 @@ object Dedup {
         .option("splitKeyPrefix", "2")
         .mode("append").save(out)
       out
-    }
+  }
 
   /** q217: PERSISTED LSH NEAR-DUP INDEX + incremental probe — the
     * MinHash analog of q215's vector-index ingest, and the piece that

@@ -112,37 +112,9 @@ object DedupClusters {
     * the applicationId because checkpoint blocks die with the context
     * that built them.
     */
-  private val clusterFixtures =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private val clusterLock = new Object
-
-  SessionCaches.registerMap(clusterLock, clusterFixtures)
-
-  /** The shared cluster closure, named for the bench's timed
-    * `fixture:*` row (see [[Sink.fixtureBuilds]]). Building every
-    * fixture BEFORE the query sweep is REQUIRED for bench correctness,
-    * not just accounting — Bench unpersists private checkpoint blocks
-    * after each timed query, and a shared fixture built lazily during
-    * one looks private (its blocks would be dropped under every later
-    * consumer).
-    */
-  private[graft] val fixtureBuilds:
-      Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "fixture:dup_clusters" ->
-      ((s: SparkSession, d: String) => { dupClustersCached(s, d); () }))
-
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
-
-  private[graft] def dupClustersCached(spark: SparkSession,
-      dir: String): DataFrame =
-    clusterLock.synchronized {
-      import graft.operators.Checkpoints.CpOps
-      val app = spark.sparkContext.applicationId
-      SimSearch.evictStale(clusterFixtures, (k: (String, String)) => k._1, app)
-      clusterFixtures.getOrElseUpdate((app, dir),
-        dupClusters(spark, dir).cp(eager = true))
-    }
+  private[graft] val dupClustersCached = SessionFixture("dup_clusters") {
+    (spark, dir) => dupClusters(spark, dir).cp(eager = true)
+  }
 
   def dupClusters(spark: SparkSession, dir: String): DataFrame = {
     val edges = pairGraph(spark, dir)

@@ -42,20 +42,11 @@ object Quality {
     * every consumer's every run. (applicationId, dir)-keyed: a fresh
     * JVM recomputes from the parquet inputs.
     */
-  private val bucketFixtures = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
-  private val bucketLock = new Object
-  SessionCaches.registerMap(bucketLock, bucketFixtures)
-
-  private[graft] def ccnetBucketsCached(spark: SparkSession,
-      dir: String): DataFrame =
-    bucketLock.synchronized {
+  private[graft] val ccnetBucketsCached = SessionFixture("ccnet_buckets") {
+    (spark, dir) =>
       import graft.operators.Checkpoints.CpOps
-      val app = spark.sparkContext.applicationId
-      SimSearch.evictStale(bucketFixtures, (k: (String, String)) => k._1, app)
-      bucketFixtures.getOrElseUpdate((app, dir),
-        ccnetBuckets(spark, dir).cp(eager = true))
-    }
+      ccnetBuckets(spark, dir).cp(eager = true)
+  }
 
   /** The q224 value-histogram tercile machinery, factored so the q229
     * bigram stratifier cuts with the IDENTICAL rule: t1/t2 are the
@@ -237,20 +228,9 @@ object Quality {
       bi2, tri3, quad4)
   }
 
-  private val ngramFixtures =
-    scala.collection.concurrent.TrieMap.empty[(String, String), NgramTables]
-  private val ngramLock = new Object
-
-  SessionCaches.registerMap(ngramLock, ngramFixtures)
-
-  private[graft] def ngramTablesCached(spark: SparkSession,
-      dir: String): NgramTables =
-    ngramLock.synchronized {
-      val app = spark.sparkContext.applicationId
-      SimSearch.evictStale(ngramFixtures, (k: (String, String)) => k._1, app)
-      ngramFixtures.getOrElseUpdate((app, dir),
-        ngramTables(spark, dir, eager = true))
-    }
+  private[graft] val ngramTablesCached = SessionFixture("ngram_tables") {
+    (spark, dir) => ngramTables(spark, dir, eager = true)
+  }
 
   /** q229: INTERPOLATED BIGRAM-LM QUALITY — the fidelity upgrade the
     * q94 unigram score approximates (CCNet's actual filter is an
@@ -647,11 +627,11 @@ object Quality {
     * (application, sf dir), eagerly checkpointed, bit-identical to
     * the per-query carve so every oracle hash is unchanged.
     */
-  private val slateFixtures =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private val slateLock = new Object
-
-  SessionCaches.registerMap(slateLock, slateFixtures)
+  private[graft] val evalSlateCached = SessionFixture("eval_slate") {
+    (spark, dir) =>
+      import graft.operators.Checkpoints.CpOps
+      evalSlate(spark, dir).cp(eager = true)
+  }
 
   /** Audit hook (see [[SimSearch.fixturePlans]]): the un-cached slate
     * carve for SCALE.md's `fixture:*` rows — q226's own row shows the
@@ -665,32 +645,6 @@ object Quality {
       // counts); the bigram/trigram chains are shape-prefixes of it
       // and the remaining tables are vocab-grain folds
       "fixture:ngram_tables" -> ngramTables(spark, dir, eager = false).c4)
-
-  /** Named fixture builds for the bench's timed `fixture:*` rows
-    * (see [[DedupClusters.fixtureBuilds]] for why pre-sweep building
-    * is required, not optional).
-    */
-  private[graft] val fixtureBuilds:
-      Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "fixture:ccnet_buckets" ->
-      ((s: SparkSession, d: String) => { ccnetBucketsCached(s, d); () }),
-    "fixture:eval_slate" ->
-      ((s: SparkSession, d: String) => { evalSlateCached(s, d); () }),
-    "fixture:ngram_tables" ->
-      ((s: SparkSession, d: String) => { ngramTablesCached(s, d); () }))
-
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
-
-  private[graft] def evalSlateCached(spark: SparkSession,
-      dir: String): DataFrame =
-    slateLock.synchronized {
-      import graft.operators.Checkpoints.CpOps
-      val app = spark.sparkContext.applicationId
-      SimSearch.evictStale(slateFixtures, (k: (String, String)) => k._1, app)
-      slateFixtures.getOrElseUpdate((app, dir),
-        evalSlate(spark, dir).cp(eager = true))
-    }
 
   def evalSlate(spark: SparkSession, dir: String): DataFrame = {
     val d = graft.sources.Tables.documents(spark, dir)

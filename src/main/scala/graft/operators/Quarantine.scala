@@ -192,8 +192,8 @@ object Quarantine {
     * with non-zstd garbage in place — manifest, sidecars and every
     * other file untouched.
     */
-  private def quarantineFixture(spark: SparkSession, dir: String): String =
-    Sink.fixture("quarantine:" + dir) {
+  private val quarantineFixture = SessionFixture("quarantine") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_quar")
       CellModel.nestRows(spark, dir).repartition(1)
         .write.format("proto-zst").option("splitKeyPrefix", "1")
@@ -211,7 +211,7 @@ object Quarantine {
         ("ROT " * 64).getBytes("UTF-8")) // not a zstd frame header
       finally os.close()
       out
-    }
+  }
 
   /** Spec hook: the (cached) corrupted-generation directory. */
   private[graft] def fixtureDir(spark: SparkSession, dir: String): String =

@@ -247,20 +247,10 @@ object Relational {
         col("c_name"), col("n_orders"), col("spend_1995"))
   }
 
-  /** q44: BUCKETED co-located join — both sides written `bucketBy` the
-    * join key, so the sort-merge join needs NO exchange on either side
-    * (PlanSpec asserts it): the join-key shuffle is paid once at write
-    * time and amortised over every later join, the bucketing strategy
-    * the 100 TB fact⋈fact case calls for. The only exchange left in
-    * the plan is the final 5-group rollup of the join output.
-    */
   /** Drop `name` and its warehouse location: a fresh in-memory catalog
     * doesn't know tables a previous JVM wrote, but their directories
     * persist — CREATE would fail with LOCATION_ALREADY_EXISTS.
     */
-  private val bucketedTables =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
   private def resetTable(spark: SparkSession, name: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $name")
     val wh = spark.conf.get("spark.sql.warehouse.dir")
@@ -270,31 +260,18 @@ object Relational {
     Scratch.delete(new java.io.File(root, name))
   }
 
-  /** Named fixture builds for the bench's timed `fixture:*` rows
-    * (see [[Sink.fixtureBuilds]]).
+  /** The q44 tables: deterministic per-sf names, written once per
+    * (context, sf dir) — bench runs each query twice — and overwritten
+    * on first use, so stale warehouse content from a previous run
+    * can't leak in and nothing accumulates. The context scoping
+    * matters here: a fresh context's in-memory catalog does not know
+    * the tables an earlier one wrote, so it must rebuild them. Names
+    * derive from dir.hashCode — two dirs colliding would rebuild each
+    * other's tables, acceptable for the single-warehouse bench this
+    * fixture exists for.
     */
-  private[graft] val fixtureBuilds:
-      Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "fixture:bucketed_tables" ->
-      ((s: SparkSession, d: String) => { bucketedFixture(s, d); () }),
-    "fixture:copurchase_edges" ->
-      ((s: SparkSession, d: String) => { coPurchaseFixture(s, d); () }))
-
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
-
-  private def bucketedFixture(spark: SparkSession,
-      dir: String): (String, String) =
-    // deterministic per-sf names, written ONCE per JVM (then reused by
-    // later invocations — bench runs each query twice) and overwritten
-    // on first use, so stale warehouse content from a previous run
-    // can't leak in and nothing accumulates. First build is serialized
-    // (TrieMap.getOrElseUpdate may run the builder twice concurrently,
-    // and two builders would DROP/overwrite the same table names);
-    // names derive from dir.hashCode — two dirs colliding would rebuild
-    // each other's tables, acceptable for the single-warehouse bench
-    // this fixture exists for
-    Relational.synchronized(bucketedTables.getOrElseUpdate(dir, {
+  private[graft] val bucketedFixture = SessionFixture("bucketed_tables") {
+    (spark, dir) =>
       val tag = (dir.hashCode & 0x7fffffff).toString
       val lt = s"lineitem_bkt_$tag"
       val ot = s"orders_bkt_$tag"
@@ -309,8 +286,15 @@ object Relational {
         .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
         .mode("overwrite").saveAsTable(ot)
       (lt, ot)
-    }))
+  }
 
+  /** q44: BUCKETED co-located join — both sides written `bucketBy` the
+    * join key, so the sort-merge join needs NO exchange on either side
+    * (PlanSpec asserts it): the join-key shuffle is paid once at write
+    * time and amortised over every later join, the bucketing strategy
+    * the 100 TB fact⋈fact case calls for. The only exchange left in
+    * the plan is the final 5-group rollup of the join output.
+    */
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
     val (lt, ot) = bucketedFixture(spark, dir)
     spark.table(lt)
@@ -771,15 +755,8 @@ object Relational {
     * the right on-disk shape — the multi-edge list is
     * Σ basket² rows, the consolidated one is bounded by the distinct
     * co-purchase pairs (catalog², typically far smaller and the thing
-    * you'd actually persist). Keyed by applicationId because
-    * localCheckpoint blocks die with the context that built them.
+    * you'd actually persist).
     */
-  private val edgeFixtures =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private val edgeLock = new Object
-
-  SessionCaches.registerMap(Relational, bucketedTables)
-  SessionCaches.registerMap(edgeLock, edgeFixtures)
   private def coPurchaseEdgesPlan(spark: SparkSession,
       dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
@@ -787,10 +764,9 @@ object Relational {
     coPurchaseEdges(li)
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("mult"))
   }
-  private def coPurchaseFixture(spark: SparkSession, dir: String): DataFrame =
-    edgeLock.synchronized(edgeFixtures.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
-      coPurchaseEdgesPlan(spark, dir).cp(eager = true)))
+  private[graft] val coPurchaseFixture = SessionFixture("copurchase_edges") {
+    (spark, dir) => coPurchaseEdgesPlan(spark, dir).cp(eager = true)
+  }
 
   /** Audit hook (see [[SimSearch.fixturePlans]]): the un-checkpointed
     * consolidated-edge build for SCALE.md's `fixture:*` rows.

@@ -144,12 +144,12 @@ object Releases {
       dir: String): Seq[(String, DataFrame)] =
     Seq("q171:release_build" -> exportKeyed(spark, dir))
 
-  private[graft] def exportFixture(spark: SparkSession, dir: String): String =
-    Sink.fixture("export:" + dir) {
+  private[graft] val exportFixture = SessionFixture("release_export") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_export")
       writeExport(exportKeyed(spark, dir), out)
       out
-    }
+  }
 
   private[graft] def writeExport(keyed: DataFrame, out: String,
       epochs: Int = ExportEpochs, shards: Int = ExportShards): Unit = {
@@ -168,13 +168,10 @@ object Releases {
     * DuckDB oracle reproduces the cut bit-for-bit) — a two-release
     * export history. Returns (dir, v1, v2): the manifest versions the
     * two commits landed as, captured from the manifest itself rather
-    * than assumed. (The versions ride the fixture as "v1,v2" — unlike
-    * the comma-joined PATHS a past review rejected, both fields are
-    * decimal longs, so the join is unambiguous by construction.)
+    * than assumed.
     */
-  private[graft] def versionPinFixture(spark: SparkSession,
-      dir: String): (String, String) =
-    Sink.fixture2("vpin:" + dir) {
+  private[graft] val versionPinFixture = SessionFixture("vpin") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_vpin")
       val conf = graft.sources.ProtoZstFiles.hadoopConf()
       val cells = CellModel.liveCells(spark, dir)
@@ -189,8 +186,8 @@ object Releases {
       Sink.writeNested(nest(cells.filter(col("write_time") < t)), out)
       val v1 = version()
       Sink.writeNested(nest(cells.filter(col("write_time") >= t)), out)
-      (out, s"$v1,${version()}")
-    }
+      (out, v1, version())
+  }
 
   /** q196: PINNED-VERSION (time-travel) READ — the reproducibility
     * primitive a training release needs: "re-read exactly release N"
@@ -210,13 +207,12 @@ object Releases {
     * pins across maintenance fail loudly at scan, never resurrect.
     */
   def versionPin(spark: SparkSession, dir: String): DataFrame = {
-    val (out, vs) = versionPinFixture(spark, dir)
-    val Array(v1, v2) = vs.split(',')
+    val (out, v1, v2) = versionPinFixture(spark, dir)
     def stats(df: DataFrame, side: String) = df
       .agg(count(lit(1)).as("n_rows"),
         coalesce(sum(size(col("columns"))), lit(0L)).as("n_cells"))
       .select(lit(side).as("side"), col("n_rows"), col("n_cells"))
-    def pinned(v: String) = spark.read.format("proto-zst")
+    def pinned(v: Long) = spark.read.format("proto-zst")
       .option("manifestVersion", v).load(out)
     stats(pinned(v1), "v1")
       .unionByName(stats(pinned(v2), "v2"))
@@ -238,8 +234,7 @@ object Releases {
     * the spec pins that refusal surface via q196's machinery.
     */
   def versionDelta(spark: SparkSession, dir: String): DataFrame = {
-    val (out, vs) = versionPinFixture(spark, dir)
-    val Array(v1, v2) = vs.split(',').map(_.toLong)
+    val (out, v1, v2) = versionPinFixture(spark, dir)
     val conf = graft.sources.ProtoZstFiles.hadoopConf()
     val before = graft.sources.GenManifest.readAt(out, conf, v1)
       .dataEntries.map(_.name).toSet
@@ -446,14 +441,13 @@ object Releases {
       .option("splitKeyPrefix", "3")
       .mode("append").save(out)
 
-  private[graft] def packRelFixture(spark: SparkSession,
-      dir: String): String =
-    Sink.fixture("packrel:" + dir) {
+  private[graft] val packRelFixture = SessionFixture("packrel") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_packrel")
       writePackRel(packRelKeyed(packRelSeqs(
         packRelDocs(spark, dir, PackRelStreams))), out, PackRelStreams)
       out
-    }
+  }
 
   /** Release read-back → (stream, seq_id, n_docs, n_tokens, members);
     * parse offsets are pinned by the fixed-width key/member formats.
@@ -509,14 +503,14 @@ object Releases {
       .join(VectorOps.icpKeys(spark, dir), Seq("doc_id"), "left")
       .withColumn("okey", coalesce(col("key60"), col("k")))
 
-  private def icpRelFixture(spark: SparkSession, dir: String): String =
-    Sink.fixture("icprel:" + dir) {
+  private val icpRelFixture = SessionFixture("icprel") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_icprel")
       writePackRel(packRelKeyed(packRelSeqs(
         icpRelDocs(spark, dir, PackRelStreams), orderCol = "okey")),
         out, PackRelStreams)
       out
-    }
+  }
 
   def icpRelease(spark: SparkSession, dir: String): DataFrame =
     packRelParse(spark, icpRelFixture(spark, dir))
@@ -639,8 +633,8 @@ object Releases {
     * erasure mutates the directory) with the hash-predicate victim
     * sweep erased through [[packErase]].
     */
-  private def packEraseFixture(spark: SparkSession, dir: String): String =
-    Sink.fixture("packerase:" + dir) {
+  private val packEraseFixture = SessionFixture("packerase") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_packerase")
       val docs = packRelDocs(spark, dir, PackRelStreams)
       writePackRel(packRelKeyed(packRelSeqs(docs)), out, PackRelStreams)
@@ -653,7 +647,7 @@ object Releases {
       val (t, _) = packErase(spark, out, eraseIds, PackRelStreams)
       require(t >= 1, "erase fixture rewrote no files — it proves nothing")
       out
-    }
+  }
 
   /** q213: SURGICAL ERASURE THROUGH A PACKED RELEASE — q148 at
     * release grain: erase a document set from the shipped q212
@@ -969,13 +963,7 @@ object Releases {
   def releaseDecontam(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Portable.withScalar
     val slateIds = Quality.evalSlateCached(spark, dir).select(col("doc_id"))
-    val out = Sink.fixture("reldecon:" + dir) {
-      val o = Scratch.dir("graft_reldecon")
-      val train = packRelDocs(spark, dir, PackRelStreams)
-        .join(broadcast(slateIds), Seq("doc_id"), "left_anti")
-      writePackRel(packRelKeyed(packRelSeqs(train)), o, PackRelStreams)
-      o
-    }
+    val out = relDecontamFixture(spark, dir)
     // member fragments are "tOFFSET:dDOCID+FILL" — lift the doc id
     val members = packRelParse(spark, out)
       .select(explode(split(col("members"), ",")).as("m"))
@@ -988,6 +976,16 @@ object Releases {
         members.join(broadcast(slateIds), "doc_id")
           .agg(count(lit(1)).as("n_leaked")))
       .select(col("n_eval"), col("n_train_members"), col("n_leaked"))
+  }
+
+  private val relDecontamFixture = SessionFixture("reldecon") {
+    (spark, dir) =>
+      val o = Scratch.dir("graft_reldecon")
+      val slateIds = Quality.evalSlateCached(spark, dir).select(col("doc_id"))
+      val train = packRelDocs(spark, dir, PackRelStreams)
+        .join(broadcast(slateIds), Seq("doc_id"), "left_anti")
+      writePackRel(packRelKeyed(packRelSeqs(train)), o, PackRelStreams)
+      o
   }
 
   // q235 replay: slate count from the q226 chain; members = every

@@ -115,11 +115,9 @@ object Retrieval {
     * checkpointed, bit-identical to the inline chain so both oracles
     * hash unchanged.
     */
-  private val hybridFixtures =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private val hybridLock = new Object
-
-  SessionCaches.registerMap(hybridLock, hybridFixtures)
+  private[graft] val hybridRrfCached = SessionFixture("hybrid_rrf") {
+    (spark, dir) => hybridRrf(spark, dir).cp(eager = true)
+  }
 
   /** Audit hook (see [[SimSearch.fixturePlans]]): the un-cached fusion
     * chain for SCALE.md's `fixture:*` rows — q210's own row shows the
@@ -128,28 +126,6 @@ object Retrieval {
   private[graft] def auditPlans(spark: SparkSession,
       dir: String): Seq[(String, DataFrame)] =
     Seq("fixture:hybrid_rrf" -> hybridRrf(spark, dir))
-
-  /** Named fixture builds for the bench's timed `fixture:*` rows
-    * (see [[DedupClusters.fixtureBuilds]] for why pre-sweep building
-    * is required, not optional).
-    */
-  private[graft] val fixtureBuilds:
-      Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "fixture:hybrid_rrf" ->
-      ((s: SparkSession, d: String) => { hybridRrfCached(s, d); () }))
-
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
-
-  private[graft] def hybridRrfCached(spark: SparkSession,
-      dir: String): DataFrame =
-    hybridLock.synchronized {
-      import graft.operators.Checkpoints.CpOps
-      val app = spark.sparkContext.applicationId
-      SimSearch.evictStale(hybridFixtures, (k: (String, String)) => k._1, app)
-      hybridFixtures.getOrElseUpdate((app, dir),
-        hybridRrf(spark, dir).cp(eager = true))
-    }
 
   /** q247: RRF LEG ATTRIBUTION — the observability table behind q210's
     * fusion: for every fused top-K row (and separately the top-1s),

@@ -1,50 +1,88 @@
 package graft.operators
 
-/** Registry of every per-JVM memoization cache (session fixtures,
-  * trained-artifact checkpoints, bucketed-table names). Each caching
-  * module registers its cache handle at object initialization — an
-  * untouched module holds an empty cache and needs no handling, so
-  * init-time registration covers exactly the populated set.
+import org.apache.spark.sql.SparkSession
+
+/** One session-scoped memo of a derived artifact: an on-disk sink
+  * fixture, a trained centroid table or codebook, a checkpointed
+  * derived table. `build` runs at most once per (SparkContext, sf dir)
+  * and every later `apply` returns its value.
   *
-  * The ONE consumer is `QueryBuildTraitSpec`'s construction sweep:
-  * the `QueryTraits.executesOnBuild` invariant is defined against
+  * - Keys carry the context's applicationId: localCheckpoint blocks
+  *   and catalog tables die with the context that made them, so a
+  *   value must never outlive it. Every call first evicts entries of
+  *   any other (dead) context, so a JVM that cycles sessions holds at
+  *   most one application's worth of values.
+  * - First builds are serialized on the instance's own lock: two
+  *   threads racing the first use would otherwise both run `build`
+  *   and race the same on-disk directory or table names. One lock per
+  *   instance, so a build that reads other fixtures takes their locks
+  *   in dependency order and unrelated fixtures never wait on each
+  *   other.
+  * - Every instance registers with [[SessionCaches]] when its owning
+  *   module initializes.
+  */
+final class SessionFixture[V](val name: String)(
+    build: (SparkSession, String) => V) {
+  private val entries = scala.collection.mutable.HashMap.empty[(String, String), V]
+
+  def apply(spark: SparkSession, dir: String): V = synchronized {
+    val app = spark.sparkContext.applicationId
+    entries.filterInPlace { case ((a, _), _) => a == app }
+    entries.get((app, dir)) match {
+      case Some(v) => v
+      case None =>
+        val v = build(spark, dir)
+        entries((app, dir)) = v
+        v
+    }
+  }
+
+  private[operators] def clear(): Unit = synchronized(entries.clear())
+
+  /** Capture the current entries; the returned thunk resets the
+    * instance to exactly them (dropping anything added since).
+    */
+  private[operators] def snapshot(): () => Unit = {
+    val copy = synchronized(entries.toMap)
+    () => synchronized { entries.clear(); entries ++= copy; () }
+  }
+
+  SessionCaches.add(this)
+}
+
+object SessionFixture {
+  def apply[V](name: String)(
+      build: (SparkSession, String) => V): SessionFixture[V] =
+    new SessionFixture(name)(build)
+}
+
+/** Registry of every [[SessionFixture]].
+  *
+  * Only specs call it. `QueryBuildTraitSpec`'s construction sweep
+  * needs it: the `QueryTraits.executesOnBuild` invariant is defined against
   * construction from a known cache state, which is only observable
   * with the ability to clear every cache (cold start) and to restore
   * a snapshot (per-query isolation). Both are always safe — every
-  * builder is idempotent and rebuilds into the same map — just
-  * wasteful, which is why nothing else calls them.
+  * build is deterministic and rebuilds the same value — just
+  * wasteful, which is why no program code calls them.
+  * `SessionFixtureSpec` checks both on counting instances.
   */
 private[graft] object SessionCaches {
-  final case class Handle(clear: () => Unit, snapshot: () => () => Unit)
+  private val fixtures = scala.collection.mutable.ArrayBuffer.empty[SessionFixture[_]]
 
-  private val handles = scala.collection.mutable.ArrayBuffer.empty[Handle]
+  private[operators] def add(f: SessionFixture[_]): Unit =
+    synchronized { fixtures += f; () }
 
-  /** `clear` empties the cache; `snapshot` captures current contents
-    * and returns a restorer that resets the cache to exactly that
-    * state (dropping anything added since). Both must take the
-    * module's own lock if the cache has one.
-    */
-  def register(clear: () => Unit, snapshot: () => () => Unit): Unit =
-    synchronized { handles += Handle(clear, snapshot) }
+  // iterate a copy: a fixture's lock is never taken under the registry's
+  private def all: List[SessionFixture[_]] = synchronized(fixtures.toList)
 
-  private[graft] def clearAll(): Unit =
-    synchronized { handles.foreach(_.clear()) }
+  private[graft] def clearAll(): Unit = all.foreach(_.clear())
 
-  /** Capture every registered cache; the returned thunk restores all
+  /** Capture every registered fixture; the returned thunk restores all
     * of them to the captured state.
     */
-  private[graft] def snapshotAll(): () => Unit = synchronized {
-    val restorers = handles.map(_.snapshot()).toList
+  private[graft] def snapshotAll(): () => Unit = {
+    val restorers = all.map(_.snapshot())
     () => restorers.foreach(_.apply())
   }
-
-  /** The common case: a TrieMap guarded by `lock`. */
-  def registerMap[K, V](lock: AnyRef,
-      m: scala.collection.concurrent.TrieMap[K, V]): Unit =
-    register(
-      () => lock.synchronized { m.clear(); () },
-      () => {
-        val copy = lock.synchronized(m.readOnlySnapshot().toMap)
-        () => lock.synchronized { m.clear(); m ++= copy; () }
-      })
 }

@@ -238,7 +238,7 @@ object SimSearch {
   private[operators] def trainCentroids(e: DataFrame, k: Int): DataFrame =
     trainedAfter(e, k, KmIters)
 
-  /** One TRAINED centroid table per (JVM, sf dir, k), eagerly
+  /** One TRAINED centroid table per (context, sf dir, k), eagerly
     * checkpointed at first use: q34, q59, q68, q85 (and q45 through
     * the q34 path) all consume the IDENTICAL deterministic training
     * (seeds + [[KmIters]] exact integer Lloyd rounds over the same
@@ -246,54 +246,20 @@ object SimSearch {
     * instead of once per query invocation — the Sink fixture pattern
     * applied to a derived K-row artifact. Results are bit-identical to
     * per-query training by construction, so every oracle hash is
-    * unchanged. Keys include the SparkContext's applicationId:
-    * localCheckpoint blocks are BOUND to the context that built them,
-    * so a cached plan must never outlive its context (a same-JVM
-    * session restart would otherwise serve dangling checkpoints).
+    * unchanged. One [[SessionFixture]] per k.
     */
-  private val centFixtures =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), DataFrame]
-  private[operators] val centLock = new Object
+  private val centroids: Map[Int, SessionFixture[DataFrame]] =
+    Seq(KmK, NCells).map(k => k -> SessionFixture(s"centroids_k$k") {
+      (spark, dir) => trainCentroids(featurized(spark, dir), k).cp(eager = true)
+    }).toMap
 
-  SessionCaches.registerMap(centLock, centFixtures)
-
-  /** Drop cache entries built by a DEAD SparkContext (their plans
-    * reference checkpoint blocks that died with it) — called under
-    * [[centLock]] on every fixture insert, so a JVM that cycles
-    * sessions holds at most one application's worth of cached plans
-    * instead of accumulating stranded plan trees forever.
+  /** q59's k = [[KmK]] clustering, the benched one; the [[NCells]]
+    * quantizer builds inside the IVF-PQ codebook fixture.
     */
-  private[operators] def evictStale[K, V](m: scala.collection.concurrent.TrieMap[K, V],
-      appOf: K => String, liveApp: String): Unit =
-    m.keysIterator.filter(appOf(_) != liveApp).toList.foreach(m.remove)
+  private[graft] val kmCentroids: SessionFixture[DataFrame] = centroids(KmK)
 
   private[graft] def centroidFixture(spark: SparkSession, dir: String,
-      k: Int): DataFrame =
-    centLock.synchronized {
-      val app = spark.sparkContext.applicationId
-      evictStale(centFixtures, (k: (String, String, Int)) => k._1, app)
-      centFixtures.getOrElseUpdate((app, dir, k),
-        trainCentroids(featurized(spark, dir), k)
-          .cp(eager = true))
-    }
-
-  /** Shared trained artifacts (centroids at both K's, PQ codebooks,
-    * IVF-PQ residual codebooks), named for the bench's timed
-    * `fixture:*` rows (see [[Sink.fixtureBuilds]]).
-    */
-  private[graft] val fixtureBuilds:
-      Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "fixture:centroids_k8" ->
-      ((s: SparkSession, d: String) => { centroidFixture(s, d, KmK); () }),
-    "fixture:pq_codebooks" ->
-      ((s: SparkSession, d: String) => { AnnPq.pqBookFixture(s, d); () }),
-    // builds the NCells (k=16) centroids too
-    "fixture:ivfpq_residual_books" ->
-      ((s: SparkSession, d: String) => { AnnPq.ivfPqBooks(s, d); () }))
-
-  /** Build every shared trained artifact eagerly (test preludes). */
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
+      k: Int): DataFrame = centroids(k)(spark, dir)
 
   /** Seeds + exactly `rounds` Lloyd rounds — the unroll at a given
     * depth (spec hook for proving loop ≡ unroll). */

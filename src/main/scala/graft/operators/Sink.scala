@@ -84,40 +84,19 @@ object Sink {
   def writeNested(nested: DataFrame, outDir: String): Unit =
     nested.write.format("proto-zst").mode("append").save(outDir)
 
-  /** One shared nested-rows sink fixture per (JVM, sf dir). The write
-    * path itself is measured by q29 (which always writes fresh); the
-    * read-path queries (q30/q36/q46, streaming q48) are about the READ
-    * and reuse one on-disk fixture instead of re-writing identical
-    * files on every invocation (Bench runs every query twice).
+  /** One shared nested-rows sink fixture per (context, sf dir). The
+    * write path itself is measured by q29 (which always writes fresh);
+    * the read-path queries (q30/q36/q46, streaming q48) are about the
+    * READ and reuse one on-disk fixture instead of re-writing identical
+    * files on every invocation (Bench runs every query twice). Every
+    * on-disk fixture is a [[SessionFixture]] like this one.
     */
-  private val fixtures =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  // TrieMap.getOrElseUpdate may evaluate the builder twice under a
-  // concurrent first use — two threads would then race the same
-  // on-disk fixture; serialize first-build (reads after that hit the
-  // map without contention in practice: fixture use is per-query)
-  private val fixtureLock = new Object
-  private[operators] def fixture(key: String)(build: => String): String =
-    fixtureLock.synchronized(fixtures.getOrElseUpdate(key, build))
-
-  /** Two-directory fixtures keep a real tuple — joining paths with a
-    * separator character would break on any temp root containing it.
-    */
-  private val fixtures2 =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-  private[operators] def fixture2(key: String)(
-      build: => (String, String)): (String, String) =
-    fixtureLock.synchronized(fixtures2.getOrElseUpdate(key, build))
-
-  SessionCaches.registerMap(fixtureLock, fixtures)
-  SessionCaches.registerMap(fixtureLock, fixtures2)
-
-  def nestedFixture(spark: SparkSession, dir: String): String =
-    fixture("nested:" + dir) {
+  val nestedFixture = SessionFixture("sink_nested") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_fix")
       writeNested(CellModel.nestRows(spark, dir), out)
       out
-    }
+  }
 
   /** q29: full sink round trip — encode (nest + proto3 + varint frame),
     * write zstd files, read them back with the binaryFile source,
@@ -207,13 +186,13 @@ object Sink {
     * key-range workload would write (the reference's files are
     * key-sorted for the same reason).
     */
-  def rangedFixture(spark: SparkSession, dir: String): String =
-    fixture("ranged:" + dir) {
+  val rangedFixture = SessionFixture("sink_ranged") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_rngfix")
       writeNested(CellModel.nestRows(spark, dir)
         .repartitionByRange(8, col("key")), out)
       out
-    }
+  }
 
   /** q60: the file-SKIPPING key-range scan — q46 proves frames are
     * dropped cheaply at decode time; this proves whole FILES are
@@ -242,8 +221,8 @@ object Sink {
     * per-file bloom can prove a file key-free. The q208 export and the
     * q214 history screen produce exactly this shape in production.
     */
-  private def bloomFixture(spark: SparkSession, dir: String): String =
-    fixture("bloomget:" + dir) {
+  private val bloomFixture = SessionFixture("bloomget") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_bloomfix")
       val rows = Tables.documents(spark, dir)
         .select(col("doc_id"), encode(md5(col("text")), "UTF-8").as("key"),
@@ -256,7 +235,7 @@ object Sink {
           .select(col("key"), col("columns")).repartition(1), out)
       }
       out
-    }
+  }
 
   /** q230: BLOOM POINT-GET — Cassandra's per-SSTable bloom-filter read
     * path (Filter.db: probe the bloom before touching the file) on the
@@ -299,15 +278,15 @@ object Sink {
     * (the key IS present), and only the `.split` v2 frame-key index
     * stands between a point-get and decoding the entire file.
     */
-  private def seekFixture(spark: SparkSession, dir: String): String =
-    fixture("frameseek:" + dir) {
+  private val seekFixture = SessionFixture("frameseek") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_seekfix")
       CellModel.nestRows(spark, dir)
         .repartitionByRange(1, col("key")).sortWithinPartitions(col("key"))
         .write.format("proto-zst").option("splitFrameRows", "64")
         .mode("append").save(out)
       out
-    }
+  }
 
   /** q239: FRAME-INDEX POINT-GET — the reference's Index.db seek
     * (`SSTableReaderPatched.java:54-97` walks `(key, position)` pairs
@@ -351,18 +330,7 @@ object Sink {
     */
   def perFileMetrics(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // the bucketed layout is a fixture too: deterministic content, so
-    // one write per (JVM, sf dir) serves every invocation
-    val outDir = fixture("pfm:" + dir) {
-      val out = Scratch.dir("graft_pfm")
-      val nested = CellModel.nestRows(spark, dir)
-        .withColumn("bucket", expr("CAST(decode(key, 'UTF-8') AS BIGINT) % 4"))
-      (0 until 4).foreach { b =>
-        writeNested(nested.filter(col("bucket") === b).drop("bucket")
-          .repartition(1), s"$out/bucket=$b")
-      }
-      out
-    }
+    val outDir = pfmFixture(spark, dir)
     spark.read.format("binaryFile").load(outDir + "/bucket=*/*.proto.zst")
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
@@ -373,6 +341,20 @@ object Sink {
         val bucket = path.split("bucket=")(1).split("/")(0).toLong
         (bucket, rows, cols, all.length.toLong)
       }.toDF("bucket", "n_rows", "n_columns", "wire_bytes")
+  }
+
+  // the q47 bucketed layout is a fixture too: deterministic content, so
+  // one write per (context, sf dir) serves every invocation
+  private val pfmFixture = SessionFixture("pfm") {
+    (spark, dir) =>
+      val out = Scratch.dir("graft_pfm")
+      val nested = CellModel.nestRows(spark, dir)
+        .withColumn("bucket", expr("CAST(decode(key, 'UTF-8') AS BIGINT) % 4"))
+      (0 until 4).foreach { b =>
+        writeNested(nested.filter(col("bucket") === b).drop("bucket")
+          .repartition(1), s"$out/bucket=$b")
+      }
+      out
   }
 
   private val HourUs = 3600000000L
@@ -390,8 +372,7 @@ object Sink {
     * carries no cell kind, so empty-value is the layout's deletion
     * marker, shadowing then dropping on merge).
     */
-  def bucketedGens(spark: SparkSession, dir: String): (String, String) =
-    fixture2("gens:" + dir)(buildGens(spark, dir))
+  val bucketedGens = SessionFixture("sink_generations")(buildGens)
 
   /** Build a FRESH gen0/gen1 pair (not the shared fixture) — the
     * vacuum path (q103, spec) deletes generations, so it must never
@@ -588,13 +569,13 @@ object Sink {
     * liveCells oracle as q30/q37/q48 — the sort-free rewrite is
     * provably lossless.
     */
-  private[graft] def reexportFixture(spark: SparkSession, dir: String): String =
-    fixture("reexport:" + dir) {
+  private[graft] val reexportFixture = SessionFixture("sink_reexport") {
+    (spark, dir) =>
       val o = Scratch.dir("graft_reexp")
       orderedReexportFrame(spark, dir)
         .write.format("proto-zst").mode("append").save(o)
       o
-    }
+  }
 
   def orderedReexport(spark: SparkSession, dir: String): DataFrame = {
     val out = reexportFixture(spark, dir)
@@ -697,41 +678,6 @@ object Sink {
 
   // ---- q103: generation VACUUM ------------------------------------
 
-  /** Every shared on-disk fixture, in dependency order, named for the
-    * bench's timed `fixture:*` rows: Bench times each COLD build as
-    * its own row so no fixture cost hides in an untimed prelude (each
-    * row's time covers exactly its own increment — dependencies
-    * already cached by earlier rows).
-    */
-  private[graft] val fixtureBuilds:
-      Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "fixture:sink_nested" ->
-      ((s: SparkSession, d: String) => { nestedFixture(s, d); () }),
-    "fixture:sink_ranged" ->
-      ((s: SparkSession, d: String) => { rangedFixture(s, d); () }),
-    "fixture:sink_generations" ->
-      ((s: SparkSession, d: String) => { bucketedGens(s, d); () }),
-    "fixture:sink_optimized" ->
-      ((s: SparkSession, d: String) =>
-        { SinkMaintain.optimizedFixture(s, d); () }),
-    "fixture:sink_reexport" ->
-      ((s: SparkSession, d: String) => { reexportFixture(s, d); () }),
-    "fixture:sink_vacuumed" ->
-      ((s: SparkSession, d: String) =>
-        { SinkMaintain.vacuumedFixture(s, d); () }),
-    "fixture:sink_evolved" ->
-      ((s: SparkSession, d: String) => { evolvedFixture(s, d); () }),
-    "fixture:sink_layout" ->
-      ((s: SparkSession, d: String) => { layoutFixture(s, d); () }),
-    "fixture:release_export" ->
-      ((s: SparkSession, d: String) => { Releases.exportFixture(s, d); () }),
-    "fixture:index_2i" ->
-      ((s: SparkSession, d: String) => { Core.indexFixture(s, d); () }))
-
-  /** Build every shared on-disk fixture eagerly (test preludes). */
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
-
   /** q109 fixture: the documents table written as two parquet
     * "generations" with EVOLVED schemas under one root — gen=1 holds
     * the even doc_ids with the ORIGINAL narrow schema (doc_id, lang);
@@ -739,8 +685,8 @@ object Sink {
     * n_chars). Neither generation is rewritten when the schema grows —
     * exactly how a 100 TB table evolves in place.
     */
-  private[operators] def evolvedFixture(spark: SparkSession, dir: String): String =
-    fixture("evolved:" + dir) {
+  private[graft] val evolvedFixture = SessionFixture("sink_evolved") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_evo")
       val docs = Tables.documents(spark, dir)
       docs.filter(col("doc_id") % 2 === 0)
@@ -750,7 +696,7 @@ object Sink {
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .write.mode("overwrite").parquet(out + "/gen=2")
       out
-    }
+  }
 
   /** q109: SCHEMA-EVOLUTION READ — one scan over both generations with
     * `mergeSchema`: the unified schema is the union of the per-file
@@ -778,8 +724,8 @@ object Sink {
     * selective reader wants). Evolution rewrites nothing: new data
     * simply lands partitioned.
     */
-  private[operators] def layoutFixture(spark: SparkSession, dir: String): String =
-    fixture("layout:" + dir) {
+  private[graft] val layoutFixture = SessionFixture("sink_layout") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_layout")
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
@@ -788,7 +734,7 @@ object Sink {
       docs.filter(col("doc_id") % 2 === 1)
         .write.partitionBy("lang").mode("overwrite").parquet(out + "/bylang")
       out
-    }
+  }
 
   /** q111: PARTITION-EVOLUTION READ — one logical query over both
     * layouts: a `lang = 'en'` predicate reaches the evolved generation
@@ -816,16 +762,15 @@ object Sink {
     * several frame checkpoints — the shape a multi-GB production file
     * has at the default 4096.
     */
-  private[graft] def slicedFixture(spark: SparkSession,
-      dir: String): String =
-    fixture("sliced:" + dir) {
+  private[graft] val slicedFixture = SessionFixture("sliced") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_sliced")
       CellModel.nestRows(spark, dir).repartition(1)
         .write.format("proto-zst")
         .option("splitFrameRows", "4")
         .mode("append").save(out)
       out
-    }
+  }
 
   /** q223: SLICED PARALLEL READ of one oversized file — the writer
     * ends its zstd frame every `splitFrameRows` rows and records the

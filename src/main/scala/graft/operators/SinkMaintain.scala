@@ -404,8 +404,8 @@ object SinkMaintain {
     * shared with q60's [[Sink.rangedFixture]] — erasure mutates the
     * directory.
     */
-  private def erasedFixture(spark: SparkSession, dir: String): String =
-    Sink.fixture("erased:" + dir) {
+  private val erasedFixture = SessionFixture("erased") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_erase")
       Sink.writeNested(CellModel.nestRows(spark, dir)
         .repartitionByRange(8, col("key")), out)
@@ -413,7 +413,7 @@ object SinkMaintain {
       require(t >= 1 && u >= 1, "erasure fixture must rewrite some files " +
         s"and spare others (touched=$t untouched=$u) or it proves nothing")
       out
-    }
+  }
 
   /** q148: ERASURE READBACK — the full post-erase corpus through the
     * manifest scan. The oracle rebuilds the same table from the raw
@@ -435,22 +435,17 @@ object SinkMaintain {
   /** The q77 fixture: a deliberately fragmented sink directory (16
     * range-partitioned small files — a stand-in for many streaming
     * epochs' worth of per-task files), then [[optimizeSink]] packs it.
-    * Built once per (JVM, sf dir); the recorded counts let the spec
-    * assert the pack actually happened.
+    * Built once per (context, sf dir); the value is the directory with
+    * the pack's (filesBefore, filesAfter), so the spec can assert the
+    * pack actually happened.
     */
-  private[graft] val optCounts =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Int)]
-
-  SessionCaches.registerMap(optCounts, optCounts)
-
-  def optimizedFixture(spark: SparkSession, dir: String): String =
-    Sink.fixture("opt:" + dir) {
+  val optimizedFixture = SessionFixture("sink_optimized") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_optfix")
       Sink.writeNested(CellModel.nestRows(spark, dir)
         .repartitionByRange(16, col("key")), out)
-      optCounts(dir) = optimizeSink(spark, out)
-      out
-    }
+      (out, optimizeSink(spark, out))
+  }
 
   /** q77: read-back over the OPTIMIZED directory — the proof the pack
     * is lossless: the flattened cells from the packed files must
@@ -461,7 +456,7 @@ object SinkMaintain {
     * maintenance).
     */
   def optimizedRead(spark: SparkSession, dir: String): DataFrame = {
-    val outDir = optimizedFixture(spark, dir)
+    val (outDir, _) = optimizedFixture(spark, dir)
     spark.read.format("proto-zst").load(outDir)
       .select(col("key"), explode(col("columns")).as("c"))
       .select(decode(col("key"), "UTF-8").as("key"),
@@ -573,13 +568,13 @@ object SinkMaintain {
   def vacuumedRead(spark: SparkSession, dir: String): DataFrame =
     asofReadRetained(spark, vacuumedFixture(spark, dir), Long.MaxValue)
 
-  private[operators] def vacuumedFixture(spark: SparkSession, dir: String): String =
-    Sink.fixture("vacuumed:" + dir) {
+  private[graft] val vacuumedFixture = SessionFixture("sink_vacuumed") {
+    (spark, dir) =>
       val (g0, g1) = Sink.buildGens(spark, dir)
       val (gen2, cutUs) = compactGeneration(spark, g0, g1)
       vacuumGenerations(spark, Seq(g0, g1), gen2, cutUs)
       gen2
-    }
+  }
 
   /** q206: WHOLE-FILE TTL EXPIRY — the payoff move of time-window
     * layouts (Cassandra's TWCS drops entire expired SSTables; Delta
@@ -615,9 +610,8 @@ object SinkMaintain {
     * surviving cells must be exactly the post-cutoff slice, proven by
     * the DuckDB oracle. The expiry itself runs once (fixture-cached).
     */
-  private[graft] def ttlExpireFixture(spark: SparkSession,
-      dir: String): String =
-    Sink.fixture("ttl:" + dir) {
+  private[graft] val ttlExpireFixture = SessionFixture("ttl") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_ttl")
       val cells = CellModel.liveCells(spark, dir)
       val b = cells.agg(min(col("write_time")), max(col("write_time"))).head()
@@ -630,7 +624,7 @@ object SinkMaintain {
       val n = expireByTime(out, t)
       require(n > 0, s"TTL fixture expired no files under $out")
       out
-    }
+  }
 
   def ttlExpiredRead(spark: SparkSession, dir: String): DataFrame = {
     val out = ttlExpireFixture(spark, dir)
@@ -711,9 +705,8 @@ object SinkMaintain {
     * re-layout changed nothing a reader can see. The compaction runs
     * once (fixture-cached).
     */
-  private[graft] def wmajorFixture(spark: SparkSession,
-      dir: String): String =
-    Sink.fixture("wmajor:" + dir) {
+  private[graft] val wmajorFixture = SessionFixture("wmajor") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_wmajor")
       val cells = CellModel.liveCells(spark, dir)
       val b = cells.agg(min(col("write_time")), max(col("write_time"))).head()
@@ -737,7 +730,7 @@ object SinkMaintain {
         s"wmajor fixture compacted ($nw windows, $nf files), expected " +
           s"(${wins.length - 1}, ${2 * (wins.length - 1)})")
       out
-    }
+  }
 
   def windowCompactedRead(spark: SparkSession, dir: String): DataFrame = {
     val out = wmajorFixture(spark, dir)

@@ -200,8 +200,8 @@ object Tombstones {
     * commit, zero data files rewritten (the builder asserts the data
     * file set is untouched by name).
     */
-  private def tombFixture(spark: SparkSession, dir: String): String =
-    Sink.fixture("tomb:" + dir) {
+  private val tombFixture = SessionFixture("tomb") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_tomb")
       Sink.writeNested(CellModel.nestRows(spark, dir)
         .repartitionByRange(8, col("key")), out)
@@ -214,15 +214,15 @@ object Tombstones {
       require(after.tombEntries.length == 1,
         "logical erase must commit exactly one tombstone entry")
       out
-    }
+  }
 
   /** q238 fixture: an independent generation taken through the FULL
     * tombstone lifecycle — logical erase, then physical purge. The
     * builder asserts the purge was surgical (some files rewritten,
     * some spared) and left no tombstone entries.
     */
-  private def purgedFixture(spark: SparkSession, dir: String): String =
-    Sink.fixture("tombpurge:" + dir) {
+  private val purgedFixture = SessionFixture("tombpurge") {
+    (spark, dir) =>
       val out = Scratch.dir("graft_tombpurge")
       Sink.writeNested(CellModel.nestRows(spark, dir)
         .repartitionByRange(8, col("key")), out)
@@ -234,7 +234,7 @@ object Tombstones {
         s"purge fixture must rewrite some files and spare others " +
           s"(rewritten=$rewritten dropped=$dropped) or it proves nothing")
       out
-    }
+  }
 
   /** q237: LOGICAL-ERASURE READBACK — the corpus through the manifest
     * scan with a live tombstone. The oracle rebuilds the table minus

@@ -1,16 +1,12 @@
 package graft.tools
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 /** Writes the concatenated length-delimited proto stream for sf0.001 —
   * the reference's exact output shape (`Runner.java:118`) — for
   * external round-trip validation.
   */
 object ProtoDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session(graft.Harness.cpus)
     val rows = graft.operators.CellModel
       .encodeProto(spark, "/root/testdata/sf0.001")
       .select("framed").collect()

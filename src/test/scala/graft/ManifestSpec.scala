@@ -679,8 +679,7 @@ class ManifestSpec extends AnyFunSuite {
       df.select(explode(col("columns")).as("c"))
         .select(col("c.name"), col("c.write_time")).collect()
         .map(r => (r.getAs[Array[Byte]](0).toSeq, r.getLong(1))).toSet
-    val (out, vs) = Releases.versionPinFixture(spark, sf0001)
-    val v1 = vs.split(',').head
+    val (out, v1, _) = Releases.versionPinFixture(spark, sf0001)
     val pin1 = cells(spark.read.format("proto-zst")
       .option("manifestVersion", v1).load(out))
     val head = cells(spark.read.format("proto-zst").load(out))

@@ -17,10 +17,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * query happens to share cannot hide a query's own build work. The
   * prelude is the SHARED-ARTIFACT boundary: the testdata table
   * schemas (immutable; re-inferring them is a metadata job every
-  * query would otherwise count) and the trained
-  * centroid/codebook artifacts ([[graft.operators.SimSearch
-  * .warmFixtures]] — amortized session inputs whose training cost no
-  * consumer query owns). Everything else a construction runs —
+  * query would otherwise count) and the trained and derived
+  * artifacts of `SparkEntry.fixtureBuilds` outside Sink and
+  * Relational (centroids, codebooks, pair set, cluster closure, eval
+  * slate, fusion pools, classifier weights, ingest side inputs —
+  * amortized session inputs whose training cost no consumer query
+  * owns). Everything else a construction runs —
   * streaming executions, sink/generation fixture builds, calibration
   * collects, convergence loops — counts.
   *
@@ -95,16 +97,19 @@ class QueryBuildTraitSpec extends AnyFunSuite {
     graft.operators.SessionCaches.clearAll()
     graft.sources.Tables.all.foreach(t =>
       graft.sources.Tables(spark, sf0001, t))
-    graft.operators.SimSearch.warmFixtures(spark, sf0001)
-    // the derived-table fixtures Bench also warms untimed (cluster
-    // closure, eval slate, fusion pools): amortized session inputs —
-    // consuming them is not "executing on build", training them is
-    graft.operators.DedupClusters.warmFixtures(spark, sf0001)
-    graft.operators.Quality.warmFixtures(spark, sf0001)
-    graft.operators.Retrieval.warmFixtures(spark, sf0001)
-    graft.operators.Classifier.warmFixtures(spark, sf0001)
-    graft.operators.StreamCurate.warmFixtures(spark, sf0001)
-    graft.operators.Dedup.warmFixtures(spark, sf0001)
+    // the trained and derived fixtures Bench builds before its sweep
+    // (centroids, codebooks, cluster closure, eval slate, fusion
+    // pools): amortized session inputs — consuming them is not
+    // "executing on build", training them is
+    locally {
+      import graft.operators._
+      Seq[SessionFixture[_]](SimSearch.kmCentroids, AnnPq.pqBookFixture,
+        AnnPq.ivfPqBooks, DedupClusters.dupClustersCached,
+        Quality.ccnetBucketsCached, Quality.evalSlateCached,
+        Quality.ngramTablesCached, Retrieval.hybridRrfCached,
+        Classifier.trainedWeightsCached, StreamCurate.boilerInventoryCached,
+        StreamCurate.mixtureRatesCached, Dedup.minhashPairsCached)
+    }.foreach(_(spark, sf0001))
     settle()
     val restorePrelude = graft.operators.SessionCaches.snapshotAll()
 

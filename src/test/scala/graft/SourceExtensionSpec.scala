@@ -534,7 +534,8 @@ class SourceExtensionSpec extends AnyFunSuite {
     val before = spark.read.format("proto-zst")
       .load(Sink.nestedFixture(spark, sf0001))
       .select(decode(col("key"), "UTF-8").as("key"), col("columns"))
-    val optDir = SinkMaintain.optimizedFixture(spark, sf0001)
+    val (optDir, (nBefore, nAfter)) =
+      SinkMaintain.optimizedFixture(spark, sf0001)
     val after = spark.read.format("proto-zst").load(optDir)
       .select(decode(col("key"), "UTF-8").as("key"), col("columns"))
     assert(after.exceptAll(before).count() === 0)
@@ -542,7 +543,6 @@ class SourceExtensionSpec extends AnyFunSuite {
     // range partitioning to 16 may leave a few empty partitions (no
     // file written) — what matters is genuine fragmentation going in
     // and a strictly smaller file count coming out
-    val (nBefore, nAfter) = SinkMaintain.optCounts(sf0001)
     assert(nBefore >= 8 && nAfter < nBefore,
       s"optimize did not pack: $nBefore -> $nAfter")
     // every packed file keeps a .range sidecar (plan-time skipping

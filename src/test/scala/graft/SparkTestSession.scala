@@ -4,18 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (sbt forks a single test JVM). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // 4 cores whatever SPARK_GRAFT_CPUS says: specs pin partition-count
+  // dependent shapes
+  lazy val spark: SparkSession = Harness.session(4)
   val sf0001 = "/root/testdata/sf0.001"
   /** Same 500-document corpus size, different content — the dir for
     * specs whose subject only manifests there (the trained classifier
