@@ -105,12 +105,43 @@ object ProtoWire {
 
   /** Decode a stream of varint-framed Row messages (the sink's on-disk
     * layout, == repeated `parseDelimitedFrom`): returns (row count,
-    * total Column-message count). Used by the sink round-trip check.
+    * total Column-message count), throwing the validated
+    * IllegalArgumentException on the first bad byte. Used by the sink
+    * round-trip check.
     */
   def decodeStats(buf: Array[Byte]): (Long, Long) = {
+    val (rows, cols, _, err) = walkFrames(buf)
+    err.foreach(throw _)
+    (rows, cols)
+  }
+
+  /** SALVAGE decode of a varint-framed Row stream: like [[decodeStats]]
+    * but never throws on corruption — counts the COMPLETE frames before
+    * the first bad byte and reports where the good data ends. Returns
+    * (rows, columns, byte offset in the decoded stream after the last
+    * complete frame, clean): `clean` ⟺ the whole buffer parsed as
+    * complete frames; a partial/garbled tail yields the counts of
+    * everything before it. The reference's read path marks a file it
+    * cannot parse SUSPECT and keeps serving the rest
+    * (`SSTableReaderPatched.java:248-253` markSuspect) — this is that
+    * verdict's parsing half.
+    */
+  def salvageStats(buf: Array[Byte]): (Long, Long, Long, Boolean) = {
+    val (rows, cols, lastGood, err) = walkFrames(buf)
+    (rows, cols, lastGood, err.isEmpty)
+  }
+
+  /** The one validated frame walk behind [[decodeStats]] and
+    * [[salvageStats]]: (complete frames, their Column messages, byte
+    * offset after the last complete frame, the error that stopped the
+    * walk if any). Only a frame that parses COMPLETELY counts.
+    */
+  private def walkFrames(
+      buf: Array[Byte]): (Long, Long, Long, Option[RuntimeException]) = {
     var pos = 0
     var rows = 0L
     var cols = 0L
+    var lastGood = 0L
     // every varint read is bounded by its enclosing scope (`limit`):
     // a corrupt frame must never consume bytes of the NEXT frame, and
     // truncation surfaces as the validated IllegalArgumentException,
@@ -136,64 +167,9 @@ object ProtoWire {
       if (pos + n > end)
         throw new IllegalArgumentException(s"overrun at $pos")
       else pos += n
-    while (pos < buf.length) {
-      val frameLen = chk(varint(buf.length), buf.length) // len BEFORE pos
-      val end = pos + frameLen
-      rows += 1
-      while (pos < end) {
-        val tag = varint(end)
-        (tag & 7).toInt match {
-          case 2 =>
-            val l = chk(varint(end), end)
-            if ((tag >> 3).toInt == 2) cols += 1
-            pos += l
-          case 0 => varint(end)
-          case 1 => skip(8, end)
-          case 5 => skip(4, end)
-          case wt => throw new IllegalArgumentException(s"wire type $wt")
-        }
-      }
-    }
-    (rows, cols)
-  }
-
-  /** SALVAGE decode of a varint-framed Row stream: like [[decodeStats]]
-    * but never throws on corruption — counts the COMPLETE frames before
-    * the first bad byte and reports where the good data ends. Returns
-    * (rows, columns, byte offset in the decoded stream after the last
-    * complete frame, clean): `clean` ⟺ the whole buffer parsed as
-    * complete frames; a partial/garbled tail yields the counts of
-    * everything before it. The reference's read path marks a file it
-    * cannot parse SUSPECT and keeps serving the rest
-    * (`SSTableReaderPatched.java:248-253` markSuspect) — this is that
-    * verdict's parsing half.
-    */
-  def salvageStats(buf: Array[Byte]): (Long, Long, Long, Boolean) = {
-    var pos = 0
-    var rows = 0L
-    var cols = 0L
-    var lastGood = 0L
-    def varint(limit: Long): Long = {
-      var v = 0L; var sh = 0; var b = 0
-      do {
-        if (pos >= limit)
-          throw new IllegalArgumentException(s"overrun at $pos")
-        b = buf(pos) & 0xFF; pos += 1; v |= (b & 0x7FL) << sh; sh += 7
-        if (sh > 70) throw new IllegalArgumentException(s"varint too long at $pos")
-      } while ((b & 0x80) != 0)
-      v
-    }
-    def chk(l: Long, end: Long): Int =
-      if (l < 0 || l > end - pos)
-        throw new IllegalArgumentException(s"bad LEN $l at $pos")
-      else l.toInt
-    def skip(n: Int, end: Long): Unit =
-      if (pos + n > end)
-        throw new IllegalArgumentException(s"overrun at $pos")
-      else pos += n
     try {
       while (pos < buf.length) {
-        val frameLen = chk(varint(buf.length), buf.length)
+        val frameLen = chk(varint(buf.length), buf.length) // len BEFORE pos
         val end = pos + frameLen
         var frameCols = 0L
         while (pos < end) {
@@ -209,15 +185,14 @@ object ProtoWire {
             case wt => throw new IllegalArgumentException(s"wire type $wt")
           }
         }
-        // the frame parsed COMPLETELY — only now does it count
         rows += 1
         cols += frameCols
         lastGood = pos
       }
-      (rows, cols, lastGood, true)
+      (rows, cols, lastGood, None)
     } catch {
-      case _: IllegalArgumentException | _: ArrayIndexOutOfBoundsException =>
-        (rows, cols, lastGood, false)
+      case e: IllegalArgumentException => (rows, cols, lastGood, Some(e))
+      case e: ArrayIndexOutOfBoundsException => (rows, cols, lastGood, Some(e))
     }
   }
 

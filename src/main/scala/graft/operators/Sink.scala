@@ -1,10 +1,9 @@
 package graft.operators
 
-import java.io.{ByteArrayInputStream, File, FileOutputStream}
+import java.io.{ByteArrayInputStream, File}
 
-import com.github.luben.zstd.{ZstdInputStream, ZstdOutputStream}
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import com.github.luben.zstd.ZstdInputStream
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ProtoWire
@@ -60,22 +59,6 @@ private[graft] object Scratch {
   * zstd via zstd-jni, which ships with the Spark runtime.
   */
 object Sink {
-
-  /** Write each partition of framed messages as one .proto.zst file.
-    * The low-level fallback path (pre-encoded bytes in, foreachPartition
-    * out); the queries below use the DSv2 write ([[writeNested]]), which
-    * adds the task-commit protocol.
-    */
-  def writeFramed(framed: DataFrame, outDir: String): Unit =
-    framed.foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) {
-        val pid = TaskContext.getPartitionId()
-        val f = new File(outDir, f"part-$pid%05d.proto.zst")
-        val os = new ZstdOutputStream(new FileOutputStream(f))
-        try it.foreach(r => os.write(r.getAs[Array[Byte]](0)))
-        finally os.close()
-      }
-    }
 
   /** The main sink path: nested (key, columns) rows through the DSv2
     * proto-zst writer — encode in the writer, one file per task,
@@ -196,9 +179,10 @@ object Sink {
 
   /** q60: the file-SKIPPING key-range scan — q46 proves frames are
     * dropped cheaply at decode time; this proves whole FILES are
-    * dropped at plan time. The sink records each file's key min/max in
-    * a `.range` sidecar at commit; `ProtoZstScan.planInputPartitions`
-    * drops files whose range provably misses the pushed predicate, so
+    * dropped at plan time. The sink records each file's key min/max at
+    * commit (manifest entry and `.range` sidecar); the scan plans from
+    * those [[graft.sources.FileMeta]] and drops files whose range
+    * provably misses the pushed predicate, so
     * a selective scan over a range-partitioned corpus never lists,
     * opens, or decompresses the irrelevant files at all — the true
     * analog of the reference's index-summary seek
@@ -481,15 +465,16 @@ object Sink {
     * ungrouped COUNT(*)/MIN(key)/MAX(key) over the sink directory is
     * completely pushed into the proto-zst source
     * ([[graft.sources.ProtoZstScanBuilder]] `pushAggregation`), which
-    * answers it from the per-file `.range` sidecars at plan time: the
+    * answers it from the per-file stats at plan time (the manifest, or
+    * the `.range` sidecars of a directory without one): the
     * whole query collapses to one precomputed row; zero files opened,
     * zero frames decompressed, zero aggregation executed. The analog
     * of parquet-footer `count()` and of the reference keeping row
     * counts and key bounds in Statistics.db beside the data
     * (`SSTableReaderPatched.java:221-233`). At 100 TB this is the
     * difference between a monitoring query that reads a few KB of
-    * sidecars and one that decompresses the corpus; any file missing a
-    * counted sidecar vetoes the pushdown, so the same query stays
+    * metadata and one that decompresses the corpus; any file without a
+    * count vetoes the pushdown, so the same query stays
     * correct (just slower) over foreign-written directories. PlanSpec
     * asserts the plan carries the pushed aggregation and no aggregate
     * operator over data.

@@ -14,7 +14,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 object MetaIO {
   /** `ProtoZstFiles.list` calls (one per data-directory listStatus). */
   val dataListings = new AtomicLong
-  /** `RangeSidecar.read` calls (one per per-file metadata open). */
+  /** `.range` sidecar opens: the listing view's one read per listed
+    * file that no manifest commits ([[ManifestIndex.fromSidecars]]).
+    * A governed read opens none.
+    */
   val sidecarReads = new AtomicLong
   /** `GenManifest.read` calls (one tiny-dir listing + O(1) small opens). */
   val manifestReads = new AtomicLong
@@ -97,8 +100,9 @@ object MetaIO {
   * readers — which is what makes maintenance commits atomic: OPTIMIZE
   * stages its packed files under unreferenced names and "commits" by
   * publishing the next delta LAST. Directories WITHOUT a manifest
-  * (foreign or legacy writers) keep the listing + per-file sidecar
-  * path — absence degrades, never lies.
+  * (foreign or legacy writers, explicit-file loads) plan from the
+  * listing view, which rebuilds the same [[FileMeta]] from one listing
+  * and the per-file `.range` sidecars — absence degrades, never lies.
   */
 object GenManifest {
   val DirName = "_graft_manifest"
@@ -873,23 +877,41 @@ object TombstoneKeys {
   }
 }
 
-/** Planning-time view of one committed data file: [[GenManifest.Entry]]
-  * resolved to a full path. What the scan's planner consumes in place
-  * of (listStatus + per-file sidecar) pairs.
+/** Planning-time view of one data file — the ONE thing every
+  * proto-zst read plans from: the batch scan, the aggregate pushdown,
+  * the micro-batch stream and the task reader (whole-file partitions
+  * carry their file's entry, so the truncation guard and the frame seek
+  * read `count`/`sorted` from it). Governed roots resolve
+  * [[GenManifest.Entry]] to a full path; every other read gets the
+  * entry the writer would have committed from [[ManifestIndex.listing]].
+  * `count` is −1 when unknown; `min`/`max` are absent when the file has
+  * no trusted key range.
   */
 final case class FileMeta(path: String, bytes: Long, count: Long,
     sorted: Boolean, min: Option[Array[Byte]], max: Option[Array[Byte]],
     times: Option[(Long, Long)] = None, tomb: Boolean = false)
 
 object ManifestIndex {
+  /** The planning view of a scan's roots: the pinned snapshot when
+    * `version` is set (strict, see [[loadAt]]), else every root's
+    * manifest, else — when ANY root has none — the [[listing]] view of
+    * all of them.
+    */
+  def plan(paths: Seq[String], conf: org.apache.hadoop.conf.Configuration,
+      version: Option[Long]): Array[FileMeta] = version match {
+    case Some(v) => loadAt(paths.head, conf, v)
+    case None => load(paths, conf).getOrElse(listing(paths, conf))
+  }
+
   /** Metas for ALL roots, or None if ANY root lacks a manifest (an
     * explicit-file path or a foreign directory makes the whole scan
-    * fall back to the listing path — a partial mix would double-read).
+    * plan from the [[listing]] view — a partial mix would double-read).
     * A root with the bare [[GenManifest.mark]] marker but no snapshot
     * yet (a sink write in flight before its first commit) contributes
     * ZERO files — governed means the snapshot set is authoritative,
     * and nothing is committed. Sorted by full path, matching the
-    * listing path's global order.
+    * listing view's global order. No data-directory listing, no
+    * sidecar open.
     */
   def load(paths: Seq[String],
       conf: org.apache.hadoop.conf.Configuration): Option[Array[FileMeta]] = {
@@ -901,8 +923,8 @@ object ManifestIndex {
     else Some(per.flatMap(_.get).toArray.distinctBy(_.path).sortBy(_.path))
   }
 
-  private def metas(root: String,
-      s: GenManifest.Snapshot): Vector[FileMeta] =
+  /** One snapshot's entries as metas, in manifest (append) order. */
+  def metas(root: String, s: GenManifest.Snapshot): Vector[FileMeta] =
     s.entries.map(e =>
       FileMeta(new Path(root, e.name).toString, e.bytes, e.count, e.sorted,
         if (e.hasRange) Some(e.min) else None,
@@ -919,9 +941,52 @@ object ManifestIndex {
     metas(root, GenManifest.readAt(root, conf, version))
       .toArray.sortBy(_.path)
 
+  /** The LISTING view, for reads whose roots are not all governed
+    * directories (foreign dirs, explicit-file loads): one listing per
+    * root, de-duplicated and sorted by full path. A listed file that
+    * its own directory's manifest commits takes that entry, read as
+    * plain data (no tombstone anti-set, no time skip — an explicit
+    * load reads exactly the named files), so maintenance reading
+    * governed files by path opens one manifest per directory instead
+    * of a sidecar per file. Every other file goes through
+    * [[fromSidecars]].
+    */
+  def listing(paths: Seq[String],
+      conf: org.apache.hadoop.conf.Configuration): Array[FileMeta] = {
+    val files = paths.flatMap(ProtoZstFiles.listWithSizes(_, conf))
+      .distinctBy(_._1)
+    val committed = files.map(f => new Path(f._1).getParent.toString)
+      .distinct.flatMap(d => GenManifest.read(d, conf).toSeq.flatMap(metas(d, _)))
+      .map(m => m.path -> m.copy(times = None, tomb = false)).toMap
+    val (known, rest) = files.partition(f => committed.contains(f._1))
+    (known.map(f => committed(f._1)) ++ fromSidecars(rest, conf))
+      .toArray.sortBy(_.path)
+  }
+
+  /** The entry the writer would have committed for each listed
+    * `(path, bytes)`, from one `.range` sidecar read per file. No
+    * sidecar: count −1. A key range and `sorted` come only from a
+    * NORMALIZED sidecar with a non-empty min — the manifest's
+    * [[GenManifest.Entry.hasRange]] convention; a v1 range may exclude
+    * null-key rows that read back as empty keys (see
+    * [[RangeSidecar.Range]]), so only its count is trusted. No times,
+    * no tombstones.
+    */
+  def fromSidecars(files: Seq[(String, Long)],
+      conf: org.apache.hadoop.conf.Configuration): Array[FileMeta] =
+    files.map { case (f, bytes) =>
+      val p = new Path(f)
+      RangeSidecar.read(p.getFileSystem(conf), p) match {
+        case Some(r) =>
+          val ranged = r.normalized && r.min.nonEmpty
+          FileMeta(f, bytes, r.count, ranged && r.sorted,
+            Option.when(ranged)(r.min), Option.when(ranged)(r.max))
+        case None => FileMeta(f, bytes, -1L, sorted = false, None, None)
+      }
+    }.toArray
+
   /** Drop metas whose recorded key range provably misses the pushed
-    * predicate — the manifest-backed version of
-    * [[ProtoZstScan.skipByRange]]; range-less files always scan.
+    * predicate; range-less files always scan.
     */
   def skipByRange(metas: Array[FileMeta],
       filters: Array[org.apache.spark.sql.sources.Filter]): Array[FileMeta] =
@@ -939,8 +1004,8 @@ object ManifestIndex {
     * [[skipByRange]], and the move Cassandra makes when a read carries
     * a timestamp bound (skip whole SSTables from the Statistics
     * sidecar's min/max timestamp). Metas without time stats (legacy
-    * manifests; files holding only cell-less rows) always scan —
-    * absence degrades to reading, never to skipping.
+    * manifests; files holding only cell-less rows; the listing view)
+    * always scan — absence degrades to reading, never to skipping.
     */
   def skipByTime(metas: Array[FileMeta], lo: Long, hi: Long): Array[FileMeta] =
     metas.filter(_.times.forall { case (mn, mx) => mx >= lo && mn <= hi })

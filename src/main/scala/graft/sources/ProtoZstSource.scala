@@ -278,8 +278,8 @@ class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
       n
     }
   // files larger than this split into parallel slices at recorded
-  // zstd-frame boundaries (see SplitSidecar); manifest-governed scans
-  // only, since the decision needs attested sizes
+  // zstd-frame boundaries (see SplitSidecar), judged by the view's
+  // per-file bytes
   private val splitFileBytes: Long =
     Option(options.get("splitFileBytes")).map { v =>
       val n = v.toLong
@@ -356,6 +356,9 @@ class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
   private var required: StructType = ProtoZstTable.Schema
   private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   private var aggregated: Option[(StructType, Array[Any], String)] = None
+  // the pushdown and the scan plan from the same view, loaded at most
+  // once per builder
+  private val view = new FileView(paths, manifestVersion)
 
   override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
       : Array[org.apache.spark.sql.sources.Filter] = {
@@ -369,18 +372,17 @@ class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** Statistics pushdown from the `.range` sidecars: an ungrouped,
+  /** Statistics pushdown from the [[FileView]]: an ungrouped,
     * unfiltered COUNT(*)/MIN(key)/MAX(key) is answered at PLAN time
     * from metadata every sink task already wrote at commit — the whole
     * scan collapses to one precomputed row; no file is opened, no
     * frame decompressed. The engine analog of answering `count()` from
     * parquet footers, and of the reference's Statistics.db (row counts
     * and key bounds kept beside the data,
-    * `SSTableReaderPatched.java:221-233`). Any file without a counted
-    * sidecar (foreign writer, all-null keys, pre-count format) vetoes
-    * the pushdown and the scan proceeds normally — metadata absence
-    * degrades, never lies. The driver reads one tiny sidecar per file,
-    * the same I/O the range-skip planner already does.
+    * `SSTableReaderPatched.java:221-233`). Any file without a count
+    * (a listed file with no sidecar, or one predating the count line)
+    * vetoes the pushdown and the scan proceeds normally — metadata
+    * absence degrades, never lies.
     */
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
@@ -398,26 +400,9 @@ class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
     }
 
   // Spark calls supportCompletePushDown then pushAggregation with the
-  // same Aggregation; translating costs a manifest read (or a listing
-  // plus one sidecar read PER FILE on legacy dirs), so the result is
-  // memoized per builder — plan-time metadata I/O is paid once.
-  private var translated:
-      Option[(String, Option[(StructType, Array[Any], String)])] = None
-
+  // same Aggregation; both read the builder's one view, so translating
+  // twice costs no metadata I/O
   private def translate(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Option[(StructType, Array[Any], String)] = {
-    val sig = agg.toString
-    translated match {
-      case Some((s, v)) if s == sig => v
-      case _ =>
-        val v = translateUncached(agg)
-        translated = Some((sig, v))
-        v
-    }
-  }
-
-  private def translateUncached(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Option[(StructType, Array[Any], String)] = {
     import org.apache.spark.sql.connector.expressions.NamedReference
@@ -435,85 +420,42 @@ class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
         case m: Max => isKey(m.column)
         case _ => false
       }
-    if (!describable) None
+    // MIN/MAX need every file's range: a range-less meta (no trusted
+    // range, or a file whose true min is the EMPTY key, which
+    // hex-encodes to the no-range sentinel) could hold the global
+    // minimum, so its presence vetoes min/max pushdown; COUNT(*) only
+    // needs counts and survives.
+    val needRange = funcs.exists {
+      case _: Min | _: Max => true
+      case _ => false
+    }
+    // live equality-delete tombstones veto EVERY complete pushdown: the
+    // recorded per-file stats count rows the tombstones logically
+    // deleted (and how many they matched is unknowable without reading
+    // — keys may be absent or repeat), so an answered COUNT/MIN/MAX
+    // could be wrong. Purge restores the pushdown. A pinned version
+    // answers from THAT snapshot's stats.
+    lazy val metas = view.metas
+    if (!describable || metas.exists(m => m.tomb || m.count < 0L) ||
+        (needRange && metas.exists(_.min.isEmpty))) None
     else {
-      val conf = ProtoZstFiles.hadoopConf()
-      // (count, ranged mins, ranged maxs) per file: from the manifest
-      // when every root has one (ONE tiny read, no listing, no sidecar
-      // opens); else from the legacy listing + per-file sidecars, where
-      // any file without a counted sidecar vetoes the pushdown
-      // MIN/MAX need every file's range: a range-less entry (minHex ""
-      // — either a legacy all-null file, or a file whose true min is
-      // the EMPTY key, which hex-encodes to the same sentinel) could
-      // hold the global minimum, so its presence vetoes min/max
-      // pushdown; COUNT(*) only needs counts and survives.
-      val needRange = funcs.exists {
-        case _: Min | _: Max => true
-        case _ => false
+      val ord = (a: Array[Byte], b: Array[Byte]) =>
+        java.util.Arrays.compareUnsigned(a, b)
+      val mins = metas.flatMap(_.min)
+      val maxs = metas.flatMap(_.max)
+      val mn = if (mins.isEmpty) null else mins.reduce((a, b) => if (ord(a, b) <= 0) a else b)
+      val mx = if (maxs.isEmpty) null else maxs.reduce((a, b) => if (ord(a, b) >= 0) a else b)
+      val fields = funcs.map {
+        case _: CountStar => StructField("count(*)", LongType, nullable = false)
+        case _: Min => StructField("min(key)", BinaryType)
+        case _: Max => StructField("max(key)", BinaryType)
       }
-      // a pinned version answers from THAT snapshot's stats (strict:
-      // loadAt throws on a gc'd version, so the legacy sidecar
-      // fallback below — which reads HEAD-era files — stays unreachable
-      // under a pin)
-      val metaView = manifestVersion match {
-        case Some(v) => Some(ManifestIndex.loadAt(paths.head, conf, v))
-        case None => ManifestIndex.load(paths, conf)
+      val values = funcs.map[Any] {
+        case _: CountStar => metas.map(_.count).sum
+        case _: Min => mn
+        case _: Max => mx
       }
-      val stats: Option[(Long, Seq[Array[Byte]], Seq[Array[Byte]])] =
-        metaView match {
-          // live equality-delete tombstones veto EVERY complete
-          // pushdown: the recorded per-file stats count rows the
-          // tombstones logically deleted (and how many they matched is
-          // unknowable without reading — keys may be absent or repeat),
-          // so an answered COUNT/MIN/MAX could be wrong. Purge restores
-          // the pushdown.
-          case Some(metas) if metas.exists(_.tomb) => None
-          case Some(metas) if needRange && metas.exists(_.min.isEmpty) =>
-            None
-          case Some(metas) =>
-            Some((metas.map(_.count).sum,
-              metas.flatMap(_.min).toSeq, metas.flatMap(_.max).toSeq))
-          case None =>
-            val files = ProtoZstFiles.listAll(paths, conf)
-            val fs = new org.apache.hadoop.fs.Path(paths.head).getFileSystem(conf)
-            val sides = files.map(f =>
-              RangeSidecar.read(fs, new org.apache.hadoop.fs.Path(f)))
-            // a sidecar predating the count line (count < 0) vetoes
-            // everything; MIN/MAX additionally demand NORMALIZED (v2)
-            // sidecars with a non-empty min, mirroring the manifest-
-            // path veto above: a v1 sidecar may come from a writer
-            // that excluded null-key rows from min/max while counting
-            // them — those rows read back as EMPTY keys today, so its
-            // recorded range can be wrong even when non-empty — and
-            // an empty-sentinel min is ambiguous at any version
-            // (all-null legacy file vs a true empty-key minimum).
-            if (sides.exists(s => s.isEmpty || s.get.count < 0L) ||
-                (needRange && sides.exists(s =>
-                  !s.get.normalized || s.get.min.isEmpty))) None
-            else {
-              val ranges = sides.map(_.get)
-              Some((ranges.map(_.count).sum,
-                ranges.map(_.min).toSeq, ranges.map(_.max).toSeq))
-            }
-        }
-      stats.map { case (total, mins, maxs) =>
-        val ord = (a: Array[Byte], b: Array[Byte]) =>
-          java.util.Arrays.compareUnsigned(a, b)
-        val mn = if (mins.isEmpty) null else mins.reduce((a, b) => if (ord(a, b) <= 0) a else b)
-        val mx = if (maxs.isEmpty) null else maxs.reduce((a, b) => if (ord(a, b) >= 0) a else b)
-        val fields = funcs.map {
-          case _: CountStar => StructField("count(*)", LongType, nullable = false)
-          case _: Min => StructField("min(key)", BinaryType)
-          case _: Max => StructField("max(key)", BinaryType)
-        }
-        val values = funcs.map[Any] {
-          case _: CountStar => total
-          case _: Min => mn
-          case _: Max => mx
-        }
-        (StructType(fields), values,
-          funcs.map(_.toString).mkString(", "))
-      }
+      Some((StructType(fields), values, funcs.map(_.toString).mkString(", ")))
     }
   }
 
@@ -521,17 +463,16 @@ class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
     case Some((schema, values, desc)) =>
       new ProtoZstAggScan(paths.mkString(","), schema, values, desc)
     case None =>
-      new ProtoZstScan(paths, ignoreCorrupt, required, pushed, buckets,
+      new ProtoZstScan(view, ignoreCorrupt, required, pushed, buckets,
         viaCatalog, maxFilesPerTrigger, timeBounds, startingWriteTimeUs,
-        manifestVersion, maxBytesPerTrigger, splitFileBytes,
-        maxTombstoneBytes)
+        maxBytesPerTrigger, splitFileBytes, maxTombstoneBytes)
   }
 }
 
 /** The collapsed scan a completely-pushed aggregation builds: one
   * partition, one row, values precomputed on the driver from the
-  * `.range` sidecars. readSchema fields are positional per the pushed
-  * `Aggregation`'s function list.
+  * builder's [[FileView]]. readSchema fields are positional per the
+  * pushed `Aggregation`'s function list.
   */
 class ProtoZstAggScan(path: String, schema: StructType,
     values: Array[Any], pushedDesc: String) extends Scan with Batch {
@@ -596,9 +537,10 @@ object ProtoZstFiles {
     listWithSizes(path, conf).map(_._1)
 
   /** As [[list]] but keeping each file's length from the SAME
-    * listStatus (no extra round-trips) — the streaming byte-budget
-    * admission's listing-mode source; manifest mode reads bytes from
-    * the snapshot and never stats a file.
+    * listStatus (no extra round-trips) — the listing view's sizes
+    * ([[ManifestIndex.listing]]) and the listing-mode stream's byte
+    * budget; governed reads take bytes from the snapshot and never
+    * stat a file.
     */
   def listWithSizes(path: String,
       conf: org.apache.hadoop.conf.Configuration): Array[(String, Long)] = {
@@ -616,21 +558,23 @@ object ProtoZstFiles {
         .map(s => (s.getPath.toString, s.getLen))
     }
   }
+}
 
-  /** Union listing over several roots (directories and/or explicit
-    * files), de-duplicated and sorted by full path for a stable global
-    * partition order.
-    */
-  def listAll(paths: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration): Array[String] =
-    paths.toArray.flatMap(list(_, conf)).distinct.sorted
+/** The one planning view of a proto-zst read's roots: the
+  * [[FileMeta]] of every file, from [[ManifestIndex.plan]] — loaded at
+  * most once, on first use, and shared by the scan builder's aggregate
+  * pushdown and the scan it builds.
+  */
+final class FileView(val paths: Seq[String], val version: Option[Long]) {
+  lazy val metas: Array[FileMeta] =
+    ManifestIndex.plan(paths, ProtoZstFiles.hadoopConf(), version)
 }
 
 object ProtoZstScan {
   /** Files above this split into frame-boundary slices (scan option
     * `splitFileBytes` overrides). 128 MB ≈ one parquet row-group's
     * worth of work per task; toy-scale files never cross it, so
-    * default scans keep their zero-sidecar-read planning.
+    * default scans open no `.split` sidecar while planning.
     */
   val DefaultSplitFileBytes: Long = 128L << 20
 
@@ -649,39 +593,15 @@ object ProtoZstScan {
     case BucketTag(b) => Some(b.toInt)
     case _ => None
   }
-
-  /** Drop files whose `.range` sidecar proves the pushed key predicate
-    * can't match; files without a readable sidecar always scan. Only
-    * NORMALIZED (v2) sidecars may skip: a v1 range can exclude
-    * null-key rows that read back as empty keys, so trusting it could
-    * drop a file an empty-key predicate actually matches
-    * ([[RangeSidecar.Range]]'s vintage contract).
-    */
-  def skipByRange(files: Array[String],
-      filters: Array[org.apache.spark.sql.sources.Filter],
-      conf: SerializableHadoopConf): Array[String] =
-    if (filters.isEmpty || files.isEmpty) files
-    else {
-      val fs = new org.apache.hadoop.fs.Path(files.head)
-        .getFileSystem(conf.value)
-      val couldMatch = KeyPredicate.compileRange(filters)
-      files.filter { f =>
-        RangeSidecar.read(fs, new org.apache.hadoop.fs.Path(f)) match {
-          case Some(r) if r.normalized => couldMatch(r.min, r.max)
-          case _ => true
-        }
-      }
-    }
 }
 
-class ProtoZstScan(paths: Seq[String], ignoreCorrupt: Boolean,
+class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
     override val readSchema: StructType,
     filters: Array[org.apache.spark.sql.sources.Filter],
     buckets: Option[Int] = None, viaCatalog: Boolean = false,
     maxFilesPerTrigger: Option[Int] = None,
     timeBounds: Option[(Long, Long)] = None,
     startingWriteTimeUs: Option[Long] = None,
-    manifestVersion: Option[Long] = None,
     maxBytesPerTrigger: Option[Long] = None,
     splitFileBytes: Long = ProtoZstScan.DefaultSplitFileBytes,
     maxTombstoneBytes: Long = ProtoZstScan.DefaultMaxTombstoneBytes)
@@ -698,7 +618,7 @@ class ProtoZstScan(paths: Seq[String], ignoreCorrupt: Boolean,
   /** Runtime (DPP-style) file pruning: the scan advertises `key` as
     * runtime-filterable, so a selective join against a small dimension
     * hands the build side's actual key set to [[filter]] AFTER it is
-    * known — and whole files whose sidecar range misses every key are
+    * known — and whole files whose recorded range misses every key are
     * dropped before a byte is read. Static pushdown can't see these
     * keys (they come from another table's data); this is the dynamic
     * half of the index-summary seek, and at 100 TB it's what makes
@@ -719,47 +639,24 @@ class ProtoZstScan(paths: Seq[String], ignoreCorrupt: Boolean,
       buckets.map(n => s", Buckets: $n").getOrElse("") +
       timeBounds.map { case (lo, hi) =>
         s", WriteTimeWindowUs: [$lo, $hi]" }.getOrElse("") +
-      manifestVersion.map(v => s", ManifestVersion: $v").getOrElse("")
-
-  /** The generation manifest's view of the roots, when EVERY root has
-    * one: file set + per-file stats from ONE tiny read per root — no
-    * data-directory listing, no per-file sidecar opens, ever (PlanSpec
-    * asserts both counters stay at zero). None (foreign/legacy dirs,
-    * explicit-file loads) falls back to listing + sidecars below.
-    */
-  private lazy val manifestMeta: Option[Array[FileMeta]] =
-    manifestVersion match {
-      // pinned: plan from exactly that snapshot — loadAt throws on a
-      // missing/gc'd version or a non-governed root, so the listing
-      // fallback below can never quietly answer a pinned read from HEAD
-      case Some(v) => Some(ManifestIndex.loadAt(paths.head, conf.value, v))
-      case None => ManifestIndex.load(paths, conf.value)
-    }
+      view.version.map(v => s", ManifestVersion: $v").getOrElse("")
 
   /** Live equality-delete tombstone files in the planned snapshot —
     * loaded driver-side (bounded by [[maxTombstoneBytes]]) and shipped
-    * to every task as the scan's anti-set. Listing-path scans have no
-    * manifest and therefore no tombstone semantics.
+    * to every task as the scan's anti-set. The listing view has no
+    * tombstones, so listed reads carry none.
     */
-  private lazy val tombMeta: Array[FileMeta] =
-    manifestMeta.map(_.filter(_.tomb)).getOrElse(Array.empty)
+  private lazy val tombMeta: Array[FileMeta] = view.metas.filter(_.tomb)
 
   // the post-skip metadata, fixed once so outputPartitioning() and
-  // planInputPartitions() describe the same file set. Manifest-backed:
-  // range skip evaluates against the in-memory entries. DATA files
-  // only: tombstone entries are the scan's anti-set, never its input.
-  private lazy val plannedMeta: Option[Array[FileMeta]] =
-    manifestMeta.map { m =>
-      val ranged = ManifestIndex.skipByRange(m.filterNot(_.tomb), filters)
-      timeBounds.fold(ranged) { case (lo, hi) =>
-        ManifestIndex.skipByTime(ranged, lo, hi)
-      }
+  // planInputPartitions() describe the same file set; range and time
+  // skip evaluate against the in-memory view. DATA files only:
+  // tombstone entries are the scan's anti-set, never its input.
+  private lazy val plannedMeta: Array[FileMeta] = {
+    val ranged = ManifestIndex.skipByRange(view.metas.filterNot(_.tomb), filters)
+    timeBounds.fold(ranged) { case (lo, hi) =>
+      ManifestIndex.skipByTime(ranged, lo, hi)
     }
-
-  private lazy val plannedFiles: Array[String] = plannedMeta match {
-    case Some(metas) => metas.map(_.path)
-    case None =>
-      ProtoZstScan.skipByRange(ProtoZstFiles.listAll(paths, conf.value), filters, conf)
   }
 
   /** bucket id → that bucket's files, when EVERY planned file carries a
@@ -768,9 +665,9 @@ class ProtoZstScan(paths: Seq[String], ignoreCorrupt: Boolean,
     * scan silently degrades to per-file partitions, never lies to the
     * planner.
     */
-  private lazy val grouped: Option[Array[(Int, Array[String])]] =
-    buckets.filter(_ => viaCatalog && plannedFiles.nonEmpty).flatMap { _ =>
-      val tagged = plannedFiles.map(f => ProtoZstScan.bucketOf(f).map(_ -> f))
+  private lazy val grouped: Option[Array[(Int, Array[FileMeta])]] =
+    buckets.filter(_ => viaCatalog && plannedMeta.nonEmpty).flatMap { _ =>
+      val tagged = plannedMeta.map(m => ProtoZstScan.bucketOf(m.path).map(_ -> m))
       if (tagged.exists(_.isEmpty)) None
       else Some(tagged.flatten.groupBy(_._1).view
         .mapValues(_.map(_._2)).toArray.sortBy(_._1))
@@ -791,39 +688,24 @@ class ProtoZstScan(paths: Seq[String], ignoreCorrupt: Boolean,
             .bucket(buckets.get, "key")), g.length)
       case None =>
         new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(
-          plannedFiles.length)
+          plannedMeta.length)
     }
 
   /** §4.3's `SupportsReportOrdering`, guarded by RECORDED sortedness:
     * each split is key-ASC iff every bucket group is a single file
-    * whose sidecar attests its rows were written key-sorted (the
-    * catalog write's required ordering produces exactly this). Catalyst
-    * then elides the per-partition Sort under sort-merge plans over
-    * sink generations — the last piece of "pay the layout cost at
-    * write time, every later pass is narrow". Multi-file groups or
+    * whose meta attests its rows were written key-sorted (the catalog
+    * write's required ordering produces exactly this). Catalyst then
+    * elides the per-partition Sort under sort-merge plans over sink
+    * generations — the last piece of "pay the layout cost at write
+    * time, every later pass is narrow". Multi-file groups or
     * unattested files report no ordering; never a wrong one.
     */
   override def outputOrdering()
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
     import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
-    // sortedness attestation: from the manifest entries when present
-    // (no I/O), else from each file's sidecar
-    def attested(file: String): Boolean = plannedMeta match {
-      case Some(metas) => metas.exists(m => m.path == file && m.sorted)
-      case None =>
-        val fs = new org.apache.hadoop.fs.Path(paths.head)
-          .getFileSystem(conf.value)
-        // v1 sortedness was tracked over non-null keys only; empty
-        // keys interleaved among them would break a sort-assuming
-        // merge, so only normalized sidecars may attest order
-        RangeSidecar.read(fs, new org.apache.hadoop.fs.Path(file))
-          .exists(r => r.normalized && r.sorted)
-    }
-    val ok = grouped.exists { g =>
-      g.forall { case (_, files) =>
-        files.length == 1 && attested(files.head)
-      }
-    }
+    val ok = grouped.exists(_.forall { case (_, metas) =>
+      metas.length == 1 && metas.head.sorted
+    })
     if (ok)
       Array(Expressions.sort(Expressions.column("key"),
         SortDirection.ASCENDING))
@@ -838,50 +720,31 @@ class ProtoZstScan(paths: Seq[String], ignoreCorrupt: Boolean,
   private val DecodeExpansion = 4L
 
   /** Plan-time table statistics from metadata the sink already wrote:
-    * row count = the sum of per-file sidecar counts (absent if ANY
-    * planned file lacks a counted sidecar — absence degrades to
-    * unknown, never lies), size = on-disk bytes × [[DecodeExpansion]].
-    * Without this a DSv2 relation defaults to "unknown = huge", so a
-    * SMALL sink directory joined to a big fact table is never chosen
-    * as the broadcast side at plan time — at 100 TB that's the
-    * difference between shipping a dimension-sized corpus slice to
-    * every executor task's hash table and shuffling the fact table.
-    * Stats are computed over [[plannedFiles]], i.e. AFTER plan-time
-    * sidecar range skipping, so a selective key predicate shrinks the
-    * estimate the same way partition pruning shrinks parquet's.
+    * row count = the sum of per-file counts (absent if ANY planned file
+    * has no count — absence degrades to unknown, never lies), size =
+    * on-disk bytes × [[DecodeExpansion]]. Without this a DSv2 relation
+    * defaults to "unknown = huge", so a SMALL sink directory joined to
+    * a big fact table is never chosen as the broadcast side at plan
+    * time — at 100 TB that's the difference between shipping a
+    * dimension-sized corpus slice to every executor task's hash table
+    * and shuffling the fact table. Stats are computed over
+    * [[plannedMeta]], i.e. AFTER plan-time range skipping, so a
+    * selective key predicate shrinks the estimate the same way
+    * partition pruning shrinks parquet's. Live tombstones subtract
+    * their key counts: an upper bound on rows actually removed (keys
+    * may be absent), so the estimate errs low — fine for an ESTIMATE,
+    * and the complete-agg pushdown (which must be exact) is vetoed
+    * separately while tombstones live.
     */
   // memoized: Catalyst may call estimateStatistics repeatedly during
-  // planning, and plannedFiles is fixed once filters are pushed — one
-  // getFileStatus + sidecar read per file TOTAL, not per call, so plan
-  // time stays flat in file count exactly where the stats matter
+  // planning; the view is in memory, so this is arithmetic only
   private lazy val computedStatistics
       : org.apache.spark.sql.connector.read.Statistics = {
-    val (bytes, rows) = plannedMeta match {
-      // manifest-backed: bytes and counts were recorded at commit —
-      // zero getFileStatus, zero sidecar reads, O(1) I/O in file count.
-      // Live tombstones subtract their key counts from the estimate:
-      // an upper bound on rows actually removed (keys may be absent),
-      // so the estimate errs low — fine for an ESTIMATE, and the
-      // complete-agg pushdown (which must be exact) is vetoed
-      // separately while tombstones live.
-      case Some(metas) =>
-        (metas.map(_.bytes).sum,
-          java.util.OptionalLong.of(math.max(0L,
-            metas.map(_.count).sum - tombMeta.map(_.count).sum)))
-      case None =>
-        val fs = new org.apache.hadoop.fs.Path(paths.head)
-          .getFileSystem(conf.value)
-        val b = plannedFiles.map(f =>
-          fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
-        val sides = plannedFiles.map(f =>
-          RangeSidecar.read(fs, new org.apache.hadoop.fs.Path(f)))
-        val r =
-          if (sides.forall(s => s.isDefined && s.get.count >= 0L))
-            java.util.OptionalLong.of(sides.map(_.get.count).sum)
-          else java.util.OptionalLong.empty()
-        (b, r)
-    }
-    val size = math.max(1L, bytes * DecodeExpansion)
+    val rows =
+      if (plannedMeta.exists(_.count < 0L)) java.util.OptionalLong.empty()
+      else java.util.OptionalLong.of(math.max(0L,
+        plannedMeta.map(_.count).sum - tombMeta.map(_.count).sum))
+    val size = math.max(1L, plannedMeta.map(_.bytes).sum * DecodeExpansion)
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(size)
@@ -893,25 +756,14 @@ class ProtoZstScan(paths: Seq[String], ignoreCorrupt: Boolean,
       : org.apache.spark.sql.connector.read.Statistics = computedStatistics
 
   // one partition per file == the reference's per-file unit of work;
-  // under a pushed key predicate, files whose sidecar range provably
-  // misses are dropped HERE — never listed as work, never opened (the
-  // index-summary seek, `SSTableReaderPatched.java:221-233`, at the
-  // granularity that matters on a 1000-executor cluster: whole files).
-  // When bucket-grouping is active, the unit is one BUCKET (all its
-  // files), keyed for the planner via HasPartitionKey.
-  /** Runtime (DPP-style) prune of an already-planned file list: from
-    * the manifest's in-memory ranges when present, else per-file
-    * sidecar reads.
-    */
-  private def runtimeSkip(files: Array[String]): Array[String] =
-    plannedMeta match {
-      case Some(metas) =>
-        val byPath = metas.map(m => m.path -> m).toMap
-        ManifestIndex.skipByRange(files.flatMap(byPath.get), runtimeFilters)
-          .map(_.path)
-      case None => ProtoZstScan.skipByRange(files, runtimeFilters, conf)
-    }
-
+  // under a pushed key predicate, files whose recorded range provably
+  // misses were dropped from [[plannedMeta]] — never listed as work,
+  // never opened (the index-summary seek,
+  // `SSTableReaderPatched.java:221-233`, at the granularity that
+  // matters on a 1000-executor cluster: whole files). Runtime
+  // (DPP-style) filters prune the same way here. When bucket-grouping
+  // is active, the unit is one BUCKET (all its files), keyed for the
+  // planner via HasPartitionKey.
   override def planInputPartitions(): Array[InputPartition] =
     grouped match {
       case Some(g) =>
@@ -919,25 +771,18 @@ class ProtoZstScan(paths: Seq[String], ignoreCorrupt: Boolean,
         // the bucket itself: the reported KeyGroupedPartitioning must
         // keep describing the same groups (an empty bucket just reads
         // nothing)
-        g.map { case (b, fs) =>
-          ProtoZstBucketPartition(runtimeSkip(fs), b): InputPartition
+        g.map { case (b, metas) =>
+          ProtoZstBucketPartition(
+            ManifestIndex.skipByRange(metas, runtimeFilters), b): InputPartition
         }
       case None =>
-        val files = runtimeSkip(plannedFiles)
-        plannedMeta match {
-          case Some(metas) =>
-            // manifest sizes are already in memory: large files slice
-            // at recorded frame boundaries (one .split sidecar read
-            // per OVERSIZED file only — a straggler saved per RPC)
-            val bytesOf = metas.map(m => m.path -> m.bytes).toMap
-            files.flatMap { f =>
-              val sz = bytesOf.getOrElse(f, 0L)
-              if (sz <= splitFileBytes)
-                Array(ProtoZstInputPartition(f): InputPartition)
-              else sliced(f, sz)
-            }
-          case None =>
-            files.map(ProtoZstInputPartition(_): InputPartition)
+        // large files slice at recorded frame boundaries (one .split
+        // sidecar read per OVERSIZED file only — a straggler saved per
+        // RPC)
+        ManifestIndex.skipByRange(plannedMeta, runtimeFilters).flatMap { m =>
+          if (m.bytes <= splitFileBytes)
+            Array(ProtoZstInputPartition(m): InputPartition)
+          else sliced(m)
         }
     }
 
@@ -945,22 +790,22 @@ class ProtoZstScan(paths: Seq[String], ignoreCorrupt: Boolean,
     * `splitFileBytes` each; no/unreadable sidecar degrades to a single
     * partition.
     */
-  private def sliced(file: String, size: Long): Array[InputPartition] = {
-    val p = new org.apache.hadoop.fs.Path(file)
+  private def sliced(m: FileMeta): Array[InputPartition] = {
+    val p = new org.apache.hadoop.fs.Path(m.path)
     val cuts = SplitSidecar.read(p.getFileSystem(conf.value), p)
-      .map(_.map(_._1).filter(o => o > 0 && o < size))
+      .map(_.map(_._1).filter(o => o > 0 && o < m.bytes))
       .getOrElse(Array.empty[Long])
     if (cuts.isEmpty)
-      return Array(ProtoZstInputPartition(file))
+      return Array(ProtoZstInputPartition(m))
     val slices = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     var start = 0L
     cuts.foreach { c =>
       if (c - start >= splitFileBytes) { slices += ((start, c)); start = c }
     }
-    slices += ((start, size))
-    if (slices.length == 1) Array(ProtoZstInputPartition(file))
+    slices += ((start, m.bytes))
+    if (slices.length == 1) Array(ProtoZstInputPartition(m))
     else slices.map { case (s, e) =>
-      ProtoZstSlicePartition(file, s, e): InputPartition
+      ProtoZstSlicePartition(m, s, e): InputPartition
     }.toArray
   }
   /** The scan's ANTI-SET: every key named by a live tombstone file,
@@ -980,15 +825,16 @@ class ProtoZstScan(paths: Seq[String], ignoreCorrupt: Boolean,
       deletedKeys)
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    if (paths.length != 1)
+    if (view.paths.length != 1)
       throw new UnsupportedOperationException(
-        "proto-zst streaming read monitors exactly one directory, got " + paths)
-    if (manifestVersion.isDefined)
+        "proto-zst streaming read monitors exactly one directory, got " +
+          view.paths)
+    if (view.version.isDefined)
       throw new UnsupportedOperationException(
         "manifestVersion pins a frozen snapshot — it cannot tail new " +
           "commits; use a batch read for a pinned version, or " +
           "startingWriteTimeUs to start a stream at an instant")
-    new ProtoZstMicroBatchStream(paths.head, ignoreCorrupt, readSchema,
+    new ProtoZstMicroBatchStream(view.paths.head, ignoreCorrupt, readSchema,
       filters, maxFilesPerTrigger, startingWriteTimeUs, maxBytesPerTrigger)
   }
 }
@@ -1106,7 +952,13 @@ object KeyPredicate {
   }
 }
 
-case class ProtoZstInputPartition(file: String) extends InputPartition
+/** One whole file, with the [[FileMeta]] it was planned from: the
+  * task reader arms its truncation guard with `count` and gates the
+  * frame seek on `sorted`, opening no `.range` sidecar.
+  */
+case class ProtoZstInputPartition(meta: FileMeta) extends InputPartition {
+  def file: String = meta.path
+}
 
 /** One frame-aligned byte range [start, end) of an oversized file —
   * the parallel-read unit for files a single task shouldn't own. The
@@ -1115,7 +967,7 @@ case class ProtoZstInputPartition(file: String) extends InputPartition
   * partition its rows exactly; a slice of a key-sorted file is itself
   * key-sorted, so per-partition ordering attestation survives slicing.
   */
-case class ProtoZstSlicePartition(file: String, start: Long, end: Long)
+case class ProtoZstSlicePartition(meta: FileMeta, start: Long, end: Long)
     extends InputPartition
 
 /** One BUCKET of a bucketed directory: all its files, plus the bucket
@@ -1123,7 +975,7 @@ case class ProtoZstSlicePartition(file: String, start: Long, end: Long)
   * with the same bucket of another generation in a storage-partitioned
   * join without any exchange.
   */
-case class ProtoZstBucketPartition(files: Array[String], bucket: Int)
+case class ProtoZstBucketPartition(files: Array[FileMeta], bucket: Int)
     extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
@@ -1198,9 +1050,9 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
-      case ProtoZstInputPartition(file) => single(file)
-      case ProtoZstSlicePartition(file, start, end) =>
-        single(file, start, end)
+      case ProtoZstInputPartition(meta) => single(meta)
+      case ProtoZstSlicePartition(meta, start, end) =>
+        single(meta, start, end)
       case ProtoZstBucketPartition(files, _) =>
         // one bucket = several files, read back-to-back in one split
         new PartitionReader[InternalRow] {
@@ -1248,34 +1100,28 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
     * reference's two-level read path (Filter.db bloom, then the index
     * summary's `(key, position)` seek, `SSTableReaderPatched.java:54-97`)
     * completed at the granularity a zstd stream can restart at. None =
-    * no usable index (v1 sidecar, unsorted or unattested file, a
-    * null-key boundary) — degrade to the full-file scan, never to a
-    * wrong subset. Segment arithmetic is duplicate-safe: a key equal
-    * to a boundary's first key also selects the PREVIOUS segment,
-    * because duplicates of that key can straddle the boundary.
+    * no usable index (v1 split sidecar, a file its meta does not attest
+    * sorted, a null-key boundary) — degrade to the full-file scan,
+    * never to a wrong subset. Segment arithmetic is duplicate-safe: a
+    * key equal to a boundary's first key also selects the PREVIOUS
+    * segment, because duplicates of that key can straddle the boundary.
     */
-  private def seekPlan(file: String): Option[Seq[(Long, Long)]] = {
-    val p = new org.apache.hadoop.fs.Path(file)
+  private def seekPlan(meta: FileMeta): Option[Seq[(Long, Long)]] = {
+    if (!meta.sorted) return None
+    val p = new org.apache.hadoop.fs.Path(meta.path)
     val fs = p.getFileSystem(conf.value)
-    // uncounted reads: these are per-task DATA-path opens (like the
-    // bloom probe), not the plan-time metadata cost sidecarReads guards
-    val range =
-      try RangeSidecar.readUncounted(fs, p)
-      catch { case _: Exception => None }
-    if (!range.exists(r => r.normalized && r.sorted)) return None
-    val cuts0 = try SplitSidecar.readKeyedUncounted(fs, p).getOrElse(Array.empty)
-      catch { case _: Exception => Array.empty[(Long, Long, String)] }
+    val cuts0 = SplitSidecar.readKeyed(fs, p).getOrElse(Array.empty)
     // Files written before the sink learned to trim it may carry one
     // trailing keyless boundary (row count an exact multiple of
     // splitFrameRows: the frame flushed, the stream closed, no row
-    // followed). The range sidecar's row count proves it is a
-    // zero-row tail (rows-before == file rows), so it can be dropped
-    // instead of disabling the whole file's seek index; a MID-file ""
-    // (null-key row) still falls through to the all-keyed check below
-    // and degrades to the full scan.
+    // followed). The meta's row count proves it is a zero-row tail
+    // (rows-before == file rows), so it can be dropped instead of
+    // disabling the whole file's seek index; a MID-file "" (null-key
+    // row) still falls through to the all-keyed check below and
+    // degrades to the full scan.
     val cuts =
       if (cuts0.nonEmpty && cuts0.last._3.isEmpty &&
-          range.exists(r => r.count >= 0 && r.count == cuts0.last._2))
+          meta.count >= 0 && meta.count == cuts0.last._2)
         cuts0.dropRight(1)
       else cuts0
     if (cuts.isEmpty || cuts.exists(_._3.isEmpty)) return None
@@ -1320,8 +1166,9 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
   }
 
   /** `start`/`end` bound a frame-aligned slice; (0, -1) = whole file. */
-  private def single(file: String, start: Long = 0L,
+  private def single(meta: FileMeta, start: Long = 0L,
       end: Long = -1L): PartitionReader[InternalRow] = {
+    val file = meta.path
     // The Filter.db gate: a POINT lookup (pushed `key =`/`IN`) probes
     // the file's bloom sidecar before opening the data stream — one
     // ~16 KB task-side read against decompressing the file. A miss on
@@ -1344,13 +1191,13 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
       // the bloom said "maybe": seek to the frames that can hold the
       // candidates instead of decoding the file (whole-file partitions
       // only — slices are already narrow)
-      if (start == 0L && end < 0L) seekPlan(file) match {
+      if (start == 0L && end < 0L) seekPlan(meta) match {
         case Some(ranges) =>
           MetaIO.frameSeeks.incrementAndGet()
           MetaIO.seekBytes.addAndGet(ranges.map(r => r._2 - r._1).sum)
           if (ranges.isEmpty) return emptyReader
           if (ranges.length == 1)
-            return raw(file, ranges.head._1, ranges.head._2)
+            return raw(file, ranges.head._1, ranges.head._2, -1L)
           return new PartitionReader[InternalRow] {
             private var idx = 0
             private var cur: PartitionReader[InternalRow] = _
@@ -1358,7 +1205,7 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
               while (true) {
                 if (cur == null) {
                   if (idx >= ranges.length) return false
-                  cur = raw(file, ranges(idx)._1, ranges(idx)._2)
+                  cur = raw(file, ranges(idx)._1, ranges(idx)._2, -1L)
                   idx += 1
                 }
                 if (cur.next()) return true
@@ -1373,12 +1220,20 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
         case None => ()
       }
     }
-    raw(file, start, end)
+    // strict whole-file reads arm the truncation guard with the
+    // planned row count: a frame-aligned truncation ends the zstd
+    // stream cleanly and would otherwise LOSE rows silently. Slices
+    // skip it (their byte range is the contract) and salvage mode
+    // keeps every recoverable row.
+    raw(file, start, end,
+      if (ignoreCorrupt || start > 0 || end >= 0) -1L else meta.count)
   }
 
-  /** The plain range reader: decode [start, end) (end = -1 ⇒ EOF). */
-  private def raw(file: String, start: Long,
-      end: Long): PartitionReader[InternalRow] = {
+  /** The plain range reader: decode [start, end) (end = -1 ⇒ EOF);
+    * `expect ≥ 0` is the truncation guard's attested row count.
+    */
+  private def raw(file: String, start: Long, end: Long,
+      expect: Long): PartitionReader[InternalRow] = {
     // compiled once per partition; pruning decides whether Column
     // messages are decoded at all. The tombstone anti-set composes
     // into the same gate: a deleted row is dropped before its columns
@@ -1438,18 +1293,6 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
               if (end >= 0) new BoundedIn(raw, end - start) else raw
             in = new java.io.BufferedInputStream(
               new ZstdInputStream(src), 64 << 10)
-            // strict whole-file reads arm the truncation guard with
-            // the attested row count (one tiny sidecar open per task,
-            // the bloom-probe discipline): a frame-aligned truncation
-            // ends the zstd stream cleanly and would otherwise LOSE
-            // rows silently. Slices skip it (their byte range is the
-            // contract) and salvage mode keeps every recoverable row.
-            val expect =
-              if (ignoreCorrupt || start > 0 || end >= 0) -1L
-              else try RangeSidecar
-                .readUncounted(p.getFileSystem(conf.value), p)
-                .map(_.count).getOrElse(-1L)
-              catch { case _: Exception => -1L }
             ProtoWire.decodeStream(in, wantColumns, keep, expect)
           } catch {
             case e: Exception if ignoreCorrupt =>

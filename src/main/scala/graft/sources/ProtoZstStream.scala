@@ -24,7 +24,10 @@ import graft.functions.ProtoWire
   * manifest (or listing) order, parquet-file-source-parity admission
   * control (`maxFilesPerTrigger`, soft-max `maxBytesPerTrigger`,
   * `startingWriteTimeUs`), and the shrank-directory guards that refuse
-  * loudly when maintenance rewrites a tailed source. Split from
+  * loudly when maintenance rewrites a tailed source. Each batch plans
+  * from [[FileMeta]] like the batch scan — snapshot entries in
+  * manifest mode, the listing view of the batch's slice otherwise —
+  * and hands the same partitions to the same task reader. Split from
   * `ProtoZstSource.scala` along the batch/stream seam; the scan,
   * predicate, and reader machinery stay there.
   */
@@ -103,20 +106,21 @@ class ProtoZstMicroBatchStream(path: String, ignoreCorrupt: Boolean,
   // an anomaly (gc never removes the newest); before the first commit
   // an empty snapshot set is the normal in-flight-write state
   @volatile private var sawSnapshot = false
-  private def currentFiles(): Seq[String] = currentMetas().map(_._1)
-
-  /** (path, bytes, tomb) per file in offset order. Bytes come FREE in
-    * both modes — manifest entries attest them at commit, and the
-    * listing already holds FileStatus — so byte-budget admission never
-    * adds a metadata round-trip. Tombstone entries KEEP their offset
-    * positions (an appended tombstone must not renumber the feed) but
-    * are never delivered as data — see [[planInputPartitions]]. The
-    * stream is the append LOG of the directory: logical deletes do not
-    * retract already-appended rows (Delta-CDF semantics); a physical
-    * purge on a tailed source trips the shrank-directory guard, as all
-    * file-rewriting maintenance does.
+  /** One [[FileMeta]] per file in offset order. Manifest mode: the
+    * snapshot's entries, with their ranges and times. Listing mode:
+    * path and bytes from the listing's own FileStatus, nothing else —
+    * a poll opens no sidecar; [[planInputPartitions]] builds the
+    * listing view for the planned slice only. Bytes come FREE in both
+    * modes, so byte-budget admission never adds a metadata round-trip.
+    * Tombstone entries KEEP their offset positions (an appended
+    * tombstone must not renumber the feed) but are never delivered as
+    * data — see [[planInputPartitions]]. The stream is the append LOG
+    * of the directory: logical deletes do not retract already-appended
+    * rows (Delta-CDF semantics); a physical purge on a tailed source
+    * trips the shrank-directory guard, as all file-rewriting
+    * maintenance does.
     */
-  private def currentMetas(): Seq[(String, Long, Boolean)] = {
+  private def currentMetas(): Seq[FileMeta] = {
     mode match {
       // governed() is ONE exists() probe — the listing-mode poll never
       // pays a manifest read until the directory actually becomes
@@ -139,15 +143,14 @@ class ProtoZstMicroBatchStream(path: String, ignoreCorrupt: Boolean,
     if (mode == Mode.Manifest) GenManifest.read(path, conf.value) match {
       case Some(s) =>
         sawSnapshot = true
-        s.entries.map(e =>
-          (new org.apache.hadoop.fs.Path(path, e.name).toString, e.bytes,
-            e.tomb))
+        ManifestIndex.metas(path, s)
       case None if !sawSnapshot => Seq.empty // governed, nothing committed yet
       case None => throw new IllegalStateException(
         s"manifest for $path vanished mid-stream")
     }
-    else ProtoZstFiles.listWithSizes(path, conf.value)
-      .map { case (p, b) => (p, b, false) }.toSeq
+    else ProtoZstFiles.listWithSizes(path, conf.value).toSeq.map {
+      case (p, b) => FileMeta(p, b, -1L, sorted = false, None, None)
+    }
   }
 
   /** Admission control (parquet file-source parity): with
@@ -161,9 +164,9 @@ class ProtoZstMicroBatchStream(path: String, ignoreCorrupt: Boolean,
     */
   @volatile private var fixedEnd: Option[Int] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    fixedEnd = Some(currentFiles().length)
+    fixedEnd = Some(currentMetas().length)
   private def available(): Int =
-    fixedEnd.getOrElse(currentFiles().length)
+    fixedEnd.getOrElse(currentMetas().length)
 
   override def getDefaultReadLimit: ReadLimit =
     maxFilesPerTrigger.map(n => ReadLimit.maxFiles(n))
@@ -209,7 +212,7 @@ class ProtoZstMicroBatchStream(path: String, ignoreCorrupt: Boolean,
         var e = s
         var acc = 0L
         while (e < byCount && acc < budget) {
-          acc += sizes(e)._2
+          acc += sizes(e).bytes
           e += 1
         }
         e
@@ -229,18 +232,16 @@ class ProtoZstMicroBatchStream(path: String, ignoreCorrupt: Boolean,
     * cannot prove old (time-less entry, or a range reaching T), so it
     * is conservative: it may replay extra, never skip live data. The
     * prefix cut keeps offset arithmetic untouched — later polls still
-    * count every file. Only called when no checkpointed offset exists;
-    * restarts resume from the checkpoint, as they must.
+    * count every file. Listing-mode metas carry no times, so a foreign
+    * directory starts at 0. Only called when no checkpointed offset
+    * exists; restarts resume from the checkpoint, as they must.
     */
   override def initialOffset(): Offset = ProtoZstOffset(
     startingWriteTimeUs.fold(0) { t =>
-      currentFiles() // resolves the offset mode by governance
-      if (mode != Mode.Manifest) 0
-      else GenManifest.read(path, conf.value).fold(0)(
-        _.entries.iterator.takeWhile(_.times.exists(_._2 < t)).length)
+      currentMetas().iterator.takeWhile(_.times.exists(_._2 < t)).length
     })
   override def latestOffset(): Offset = {
-    val n = currentFiles().length
+    val n = currentMetas().length
     if (mode == Mode.Listing && n > listedIssued) listedIssued = n
     ProtoZstOffset(n)
   }
@@ -249,7 +250,9 @@ class ProtoZstMicroBatchStream(path: String, ignoreCorrupt: Boolean,
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
   // range skip applies AFTER the positional slice, so offsets keep
-  // counting every file regardless of the predicate
+  // counting every file regardless of the predicate; listing mode
+  // builds the listing view for the slice alone (one sidecar read per
+  // planned file, none per poll)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val endN = end.asInstanceOf[ProtoZstOffset].n
     val metas = currentMetas()
@@ -264,8 +267,12 @@ class ProtoZstMicroBatchStream(path: String, ignoreCorrupt: Boolean,
     // positional slot (offset arithmetic counts every entry) but plan
     // no partition — the feed stays an append log of data files
     val slice = metas.slice(start.asInstanceOf[ProtoZstOffset].n, endN)
-      .collect { case (f, _, tomb) if !tomb => f }
-    ProtoZstScan.skipByRange(slice.toArray, filters, conf)
+      .filterNot(_.tomb)
+    val planned =
+      if (mode == Mode.Listing)
+        ManifestIndex.fromSidecars(slice.map(m => (m.path, m.bytes)), conf.value)
+      else slice.toArray
+    ManifestIndex.skipByRange(planned, filters)
       .map(ProtoZstInputPartition(_): InputPartition)
   }
   override def createReaderFactory(): PartitionReaderFactory =

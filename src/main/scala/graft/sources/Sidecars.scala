@@ -36,10 +36,11 @@ object Sidecars {
   * file contains, hex-encoded. The engine analog of the reference's
   * index summary (`SSTableReaderPatched.java:221-233` — the structure
   * that lets it SEEK to a key range instead of scanning): written by
-  * every sink task at commit time, consulted at PLAN time so a pushed
-  * key predicate drops whole files before anything is opened. Files
-  * without a sidecar (foreign writers, older sinks) are simply never
-  * skipped — absence degrades to a full scan, not an error.
+  * every sink task at commit time beside the manifest entry carrying
+  * the same stats. Only the listing view reads it
+  * ([[ManifestIndex.fromSidecars]]), for reads without a manifest.
+  * Files without a sidecar (foreign writers, older sinks) are simply
+  * never skipped — absence degrades to a full scan, not an error.
   */
 object RangeSidecar {
   import org.apache.hadoop.fs.{FileSystem, Path}
@@ -90,15 +91,6 @@ object RangeSidecar {
     */
   def read(fs: FileSystem, data: Path): Option[Range] = {
     MetaIO.sidecarReads.incrementAndGet()
-    readUncounted(fs, data)
-  }
-
-  /** As [[read]] but outside the plan-time [[MetaIO.sidecarReads]]
-    * accounting — for EXECUTOR-side opens (the frame-seek's sortedness
-    * check), which are per-task data-path reads, not the O(files)
-    * driver planning cost that counter guards.
-    */
-  private[sources] def readUncounted(fs: FileSystem, data: Path): Option[Range] =
     try {
       val p = sidecar(data)
       if (!fs.exists(p)) None
@@ -114,6 +106,7 @@ object RangeSidecar {
         else None
       }
     } catch { case _: Exception => None }
+  }
 }
 
 /** Per-file zstd-frame checkpoint sidecar (`<file>.split`): compressed
@@ -173,16 +166,7 @@ object SplitSidecar {
     * the hex is "" for every v1 boundary and for null-key rows, which
     * disables seeking but never slicing.
     */
-  def readKeyed(fs: FileSystem, data: Path): Option[Array[(Long, Long, String)]] = {
-    MetaIO.sidecarReads.incrementAndGet()
-    readKeyedUncounted(fs, data)
-  }
-
-  /** As [[readKeyed]] but outside the plan-time sidecar accounting —
-    * the executor-side seek's index open (see RangeSidecar.readUncounted).
-    */
-  private[sources] def readKeyedUncounted(fs: FileSystem,
-      data: Path): Option[Array[(Long, Long, String)]] =
+  def readKeyed(fs: FileSystem, data: Path): Option[Array[(Long, Long, String)]] =
     try {
       val p = sidecar(data)
       if (!fs.exists(p)) None

@@ -756,8 +756,11 @@ class ManifestSpec extends AnyFunSuite {
     org.apache.hadoop.fs.FileUtil.copy(fs,
       new org.apache.hadoop.fs.Path(src._1), fs,
       new org.apache.hadoop.fs.Path(dir, "legacy.proto.zst"), false, conf0)
+    // the copy's real row count: strict reads check it against the rows
+    val srcRows = GenManifest.read(dir, conf0).get.entries
+      .find(e => src._1.endsWith("/" + e.name)).get.count
     GenManifest.commit(dir, conf0)(es => es :+ GenManifest.Entry(
-      "legacy.proto.zst", src._2, 2L, sorted = false, "", "", None))
+      "legacy.proto.zst", src._2, srcRows, sorted = false, "", "", None))
     val before = spark.read.format("proto-zst").load(dir)
       .select(col("key"), explode(col("columns")).as("c"))
       .select(decode(col("key"), "UTF-8").as("k"),

@@ -275,6 +275,38 @@ class QuarantineSpec extends AnyFunSuite {
       s"the surviving prefix must still salvage, got ${v2.getAs[Long]("n_rows")}")
   }
 
+  test("a frame-aligned truncation of a sidecar-less governed file fails a strict read") {
+    import graft.sources.{RangeSidecar, SplitSidecar}
+    val dir = java.nio.file.Files.createTempDirectory("graft_quar_cut")
+      .toFile.getAbsolutePath
+    writeOneFile(dir, 1000)
+    val dirPath = new org.apache.hadoop.fs.Path(dir)
+    val fs = dirPath.getFileSystem(conf)
+    val data = fs.listStatus(dirPath).map(_.getPath)
+      .filter(_.getName.endsWith(".proto.zst")).head
+    // cut at a recorded frame boundary: the zstd stream ends cleanly
+    // and the decoded prefix ends at a wire-frame boundary
+    val cuts = SplitSidecar.read(fs, data).get
+    val (cutAt, rowsBefore) = cuts(cuts.length / 2)
+    val keep = new Array[Byte](cutAt.toInt)
+    val in = fs.open(data)
+    try in.readFully(keep) finally in.close()
+    val os = fs.create(data, true)
+    try os.write(keep) finally os.close()
+    // the .range sidecar is lost: only the manifest attests the count
+    assert(fs.delete(RangeSidecar.sidecar(data), false))
+    val e = intercept[Exception] {
+      spark.read.format("proto-zst").load(dir)
+        .agg(sum(size(col("columns")))).collect()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("truncated stream")),
+      s"strict read must refuse the cut file: $e")
+    val salvaged = spark.read.format("proto-zst")
+      .option("ignoreCorrupt", "true").load(dir).select(col("key")).collect()
+    assert(salvaged.length.toLong === rowsBefore)
+  }
+
   test("a truncated file salvages its complete-frame prefix and is suspect") {
     val dir = java.nio.file.Files.createTempDirectory("graft_quar_trunc")
       .toFile.getAbsolutePath

@@ -18,10 +18,20 @@ class SourceExtensionSpec extends AnyFunSuite {
   }
 
   test("proto-zst source plans one partition per file") {
+    import com.github.luben.zstd.ZstdOutputStream
+    import graft.functions.ProtoWire
     val outDir = java.nio.file.Files.createTempDirectory("graft_src_t")
       .toFile.getAbsolutePath
-    Sink.writeFramed(
-      CellModel.encodeProto(spark, sf0001).select(col("framed")), outDir)
+    // manifest-less files: the listing view plans them
+    (1 to 3).foreach { f =>
+      val os = new ZstdOutputStream(
+        new java.io.FileOutputStream(s"$outDir/part-$f.proto.zst"))
+      (1 to 5).foreach { i =>
+        os.write(ProtoWire.delimit(ProtoWire.encodeRow(s"k$f-$i".getBytes,
+          new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any]))))
+      }
+      os.close()
+    }
     val nFiles = new java.io.File(outDir)
       .listFiles((_, n) => n.endsWith(".proto.zst")).length
     val df = spark.read.format("proto-zst").load(outDir)
@@ -284,8 +294,11 @@ class SourceExtensionSpec extends AnyFunSuite {
     import graft.functions.ProtoWire
     val dir = java.nio.file.Files.createTempDirectory("graft_aggpush")
       .toFile.getAbsolutePath
-    Sink.writeNested(CellModel.nestRows(spark, sf0001)
-      .repartitionByRange(4, col("key")), dir)
+    // small frames: a splitFileBytes=1 read slices every file at its
+    // recorded frame boundaries
+    CellModel.nestRows(spark, sf0001).repartitionByRange(4, col("key"))
+      .write.format("proto-zst").option("splitFrameRows", "2")
+      .mode("append").save(dir)
     def stats() = spark.read.format("proto-zst").load(dir)
       .agg(count("*").as("n"), min(col("key")).as("mn"), max(col("key")).as("mx"))
     // 1) manifest-backed: the pushdown plans from ONE manifest read —
@@ -302,6 +315,34 @@ class SourceExtensionSpec extends AnyFunSuite {
     assert(pushedRow.getLong(0) === keys.length.toLong)
     assert(new String(pushedRow.getAs[Array[Byte]](1)) === keys.min)
     assert(new String(pushedRow.getAs[Array[Byte]](2)) === keys.max)
+    // a sliced, range-filtered read: its partitions (file name, byte
+    // range), its reported row count and its rows
+    val sortedKeys = keys.sorted
+    val (lo, hi) = (sortedKeys(keys.length / 4), sortedKeys(keys.length * 3 / 4))
+    def slicedPlan() = {
+      val df = spark.read.format("proto-zst").option("splitFileBytes", "1")
+        .load(dir)
+        .filter(col("key") >= lit(lo.getBytes) && col("key") < lit(hi.getBytes))
+      val scan = df.queryExecution.executedPlan.collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+      }.get
+      val parts = scan.inputPartitions.map {
+        case graft.sources.ProtoZstInputPartition(m) =>
+          (new org.apache.hadoop.fs.Path(m.path).getName, 0L, -1L)
+        case graft.sources.ProtoZstSlicePartition(m, s, e) =>
+          (new org.apache.hadoop.fs.Path(m.path).getName, s, e)
+      }
+      val numRows = scan.scan.asInstanceOf[
+        org.apache.spark.sql.connector.read.SupportsReportStatistics]
+        .estimateStatistics().numRows()
+      val rows = df.select(decode(col("key"), "UTF-8"), size(col("columns")))
+        .collect().map(r => (r.getString(0), r.getInt(1))).sorted.toSeq
+      (parts, numRows, rows)
+    }
+    val governed = slicedPlan()
+    assert(governed._1.exists(_._3 >= 0L),
+      s"no file sliced among ${keys.length} keys: ${governed._1}")
+    assert(governed._2.isPresent && governed._3.nonEmpty)
     // 2) a legacy directory (no manifest) still pushes down, now from
     // the per-file sidecars
     val conf = graft.sources.ProtoZstFiles.hadoopConf()
@@ -311,6 +352,12 @@ class SourceExtensionSpec extends AnyFunSuite {
     assert(sidecarPlan.contains("PushedAggregation"), sidecarPlan.take(2000))
     val Array(scRow) = stats().collect()
     assert(scRow.getLong(0) === keys.length.toLong)
+    // the listing view plans the sliced read exactly like the manifest:
+    // same partitions, same numRows, same rows
+    val listed = slicedPlan()
+    assert(listed._1 === governed._1)
+    assert(listed._2 === governed._2)
+    assert(listed._3 === governed._3)
     // 3) a sidecar-less foreign file flips the SAME query back to a
     // real scan-and-aggregate — degraded, never wrong
     val os = new ZstdOutputStream(
@@ -479,17 +526,18 @@ class SourceExtensionSpec extends AnyFunSuite {
     val probe = Array[org.apache.spark.sql.sources.Filter](
       GreaterThanOrEqual("key", old.max :+ 0xff.toByte),
       LessThan("key", old.max :+ 0xff.toByte :+ 0xff.toByte))
-    val kept = graft.sources.ProtoZstScan.skipByRange(
+    import graft.sources.ManifestIndex
+    val kept = ManifestIndex.skipByRange(ManifestIndex.fromSidecars(
       new java.io.File(dir).listFiles((_, n) => n.endsWith(".proto.zst"))
-        .map(_.getAbsolutePath).sorted,
-      probe, new graft.sources.SerializableHadoopConf(conf))
+        .map(x => (x.getAbsolutePath, x.length)).sorted.toSeq, conf),
+      probe).map(_.path)
     assert(kept.contains(f), "a v1 sidecar was trusted for range skip")
   }
 
   test("runtime In-filter drops whole files by sidecar range, keeps matches") {
-    import graft.sources.{ProtoZstScan, ProtoZstTable, ProtoZstInputPartition}
+    import graft.sources.{FileView, ProtoZstScan, ProtoZstTable, ProtoZstInputPartition}
     val outDir = Sink.rangedFixture(spark, sf0001)
-    val scan = new ProtoZstScan(Seq(outDir), ignoreCorrupt = false,
+    val scan = new ProtoZstScan(new FileView(Seq(outDir), None), ignoreCorrupt = false,
       ProtoZstTable.Schema, Array.empty)
     val before = scan.planInputPartitions().length
     assert(before >= 3, s"fixture has only $before files")
