@@ -226,16 +226,16 @@ object Sink {
     * engine's own format: a single-key lookup in a content-addressed
     * multi-epoch corpus. Every sink file carries a `.bloom` sidecar
     * (fixed 2^17-bit, 3-probe, filled for free at write); a pushed
-    * `key =` predicate probes it per task BEFORE decompressing, so the
+    * `key =` predicate probes it on the driver while planning, so the
     * epochs that provably lack the key cost one ~16 KB sidecar read
-    * instead of a file decode. Hash keys make every file's range cover
+    * instead of a task and a file decode. Hash keys make every file's range cover
     * the whole keyspace — the regime where the manifest's range skip
     * cannot prune and the bloom is the only thing standing between a
     * point-get and a full corpus decode (the "does this content hash
     * already exist" read q208/q214 pipelines issue constantly).
     *
-    * Scale: planning stays O(manifest); execution probes one bloom per
-    * surviving file task-side and decodes only bloom-passing files
+    * Scale: planning reads the manifest and one bloom per
+    * range-surviving file; execution decodes only bloom-passing files
     * (expected: the one file holding the key, plus ~0.1% false
     * positives at epoch file sizes). SourceExtensionSpec pins the skip
     * mechanics (probe/skip counters, absence degradation); this query

@@ -30,17 +30,19 @@ object MetaIO {
     * [[GenManifest.CheckpointEvery]] commits, zstd-compressed).
     */
   val checkpointBytes = new AtomicLong
-  /** Per-task `.bloom` sidecar probes on point-lookup scans (EXECUTOR
-    * side — one tiny read per planned partition, never the O(files)
-    * driver planning cost the other counters guard), and how many of
-    * those probes proved the file key-free and skipped its decode.
+  /** `.bloom` sidecar probes on point-lookup scans — made on the
+    * DRIVER while planning, one per range- and time-surviving file
+    * (never on a range scan, never by a manifest-only plan) — and how
+    * many of those probes proved the file key-free and dropped it from
+    * the plan.
     */
   val bloomProbes = new AtomicLong
   val bloomSkips = new AtomicLong
-  /** Point lookups that seeked via the `.split` v2 frame-key index
-    * instead of decoding the whole file, and the compressed bytes those
-    * seeks actually read — the spec's witness that a point read of an
-    * N-frame file costs O(matching frames), not O(file).
+  /** Files a point lookup's plan seeked via the `.split` v2 frame-key
+    * index instead of decoding them whole (counted on the driver, once
+    * per planned file), and the compressed bytes those seeks name for
+    * reading — the spec's witness that a point read of an N-frame file
+    * costs O(matching frames), not O(file).
     */
   val frameSeeks = new AtomicLong
   val seekBytes = new AtomicLong
@@ -942,25 +944,35 @@ object ManifestIndex {
       .toArray.sortBy(_.path)
 
   /** The LISTING view, for reads whose roots are not all governed
-    * directories (foreign dirs, explicit-file loads): one listing per
-    * root, de-duplicated and sorted by full path. A listed file that
-    * its own directory's manifest commits takes that entry, read as
-    * plain data (no tombstone anti-set, no time skip — an explicit
-    * load reads exactly the named files), so maintenance reading
-    * governed files by path opens one manifest per directory instead
-    * of a sidecar per file. Every other file goes through
-    * [[fromSidecars]].
+    * directories (foreign dirs, explicit-file loads), de-duplicated and
+    * sorted by full path. A file its own directory's manifest commits
+    * takes that entry, read as plain data (no tombstone anti-set, no
+    * time skip — an explicit load reads exactly the named files), and
+    * each directory's manifest is read at most once. A named data file
+    * its directory's manifest commits is not even statted — the entry
+    * attests its bytes — so maintenance reading governed files by path
+    * costs one manifest read per directory, not a listing per file.
+    * Every other root is listed once, and every listed file no
+    * manifest commits goes through [[fromSidecars]].
     */
   def listing(paths: Seq[String],
       conf: org.apache.hadoop.conf.Configuration): Array[FileMeta] = {
-    val files = paths.flatMap(ProtoZstFiles.listWithSizes(_, conf))
-      .distinctBy(_._1)
-    val committed = files.map(f => new Path(f._1).getParent.toString)
-      .distinct.flatMap(d => GenManifest.read(d, conf).toSeq.flatMap(metas(d, _)))
-      .map(m => m.path -> m.copy(times = None, tomb = false)).toMap
-    val (known, rest) = files.partition(f => committed.contains(f._1))
-    (known.map(f => committed(f._1)) ++ fromSidecars(rest, conf))
-      .toArray.sortBy(_.path)
+    val manifests = scala.collection.mutable.Map.empty[String, Map[String, FileMeta]]
+    def committed(dir: String): Map[String, FileMeta] =
+      manifests.getOrElseUpdate(dir, GenManifest.read(dir, conf).toSeq
+        .flatMap(metas(dir, _))
+        .map(m => m.path -> m.copy(times = None, tomb = false)).toMap)
+    def parent(f: String): String = new Path(f).getParent.toString
+    val qualified = paths.map { p =>
+      val path = new Path(p)
+      path.getFileSystem(conf).makeQualified(path).toString
+    }.distinct
+    val (named, roots) = qualified.partition(p =>
+      p.endsWith(".proto.zst") && committed(parent(p)).contains(p))
+    val (known, rest) = roots.flatMap(ProtoZstFiles.listWithSizes(_, conf))
+      .distinctBy(_._1).partition(f => committed(parent(f._1)).contains(f._1))
+    ((named ++ known.map(_._1)).map(f => committed(parent(f))(f)) ++
+      fromSidecars(rest, conf)).toArray.distinctBy(_.path).sortBy(_.path)
   }
 
   /** The entry the writer would have committed for each listed

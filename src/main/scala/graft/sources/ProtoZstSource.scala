@@ -363,10 +363,10 @@ class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
   override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
       : Array[org.apache.spark.sql.sources.Filter] = {
     pushed = filters.filter(KeyPredicate.supported)
-    // conservative contract (same as the parquet source): the scan uses
-    // the pushed predicates to SKIP frames, Spark still re-evaluates
-    // every filter post-scan
-    filters
+    // every reader applies the pushed predicates EXACTLY in its keep
+    // gate (`KeyPredicate.compile`), so only the rest are re-evaluated
+    // post-scan — a Filter above a local scan would launch a job again
+    filters.filterNot(KeyPredicate.supported)
   }
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -463,9 +463,37 @@ class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
     case Some((schema, values, desc)) =>
       new ProtoZstAggScan(paths.mkString(","), schema, values, desc)
     case None =>
-      new ProtoZstScan(view, ignoreCorrupt, required, pushed, buckets,
-        viaCatalog, maxFilesPerTrigger, timeBounds, startingWriteTimeUs,
-        maxBytesPerTrigger, splitFileBytes, maxTombstoneBytes)
+      val scan = new ProtoZstScan(view, ignoreCorrupt, required, pushed,
+        buckets, viaCatalog, maxFilesPerTrigger, timeBounds,
+        startingWriteTimeUs, maxBytesPerTrigger, splitFileBytes,
+        maxTombstoneBytes)
+      // a point lookup that reads at most one frame is answered on the
+      // driver: Catalyst plans a LocalTableScanExec and runs no job
+      scan.localRead.fold[Scan](scan)(new ProtoZstLocalScan(scan, _))
+  }
+}
+
+/** A point lookup small enough to answer without a Spark job: the
+  * scan's planned partitions (nothing, or one frame of a sorted file)
+  * decoded on the driver by the same reader a task would run — same
+  * tombstone anti-set, pinned snapshot, write-time window and
+  * `ignoreCorrupt` handling.
+  */
+final class ProtoZstLocalScan(scan: ProtoZstScan, parts: Array[InputPartition])
+    extends org.apache.spark.sql.connector.read.LocalScan
+    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+  override def readSchema(): StructType = scan.readSchema
+  override def description(): String = s"${scan.description()}, Local"
+  override def estimateStatistics()
+      : org.apache.spark.sql.connector.read.Statistics = scan.estimateStatistics()
+  override def rows(): Array[InternalRow] = {
+    val factory = scan.createReaderFactory()
+    parts.flatMap { p =>
+      val r = factory.createReader(p)
+      try Iterator.continually(r.next()).takeWhile(identity)
+        .map(_ => r.get().copy()).toArray
+      finally r.close()
+    }
   }
 }
 
@@ -760,7 +788,8 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
   // misses were dropped from [[plannedMeta]] — never listed as work,
   // never opened (the index-summary seek,
   // `SSTableReaderPatched.java:221-233`, at the granularity that
-  // matters on a 1000-executor cluster: whole files). Runtime
+  // matters on a 1000-executor cluster: whole files). A point lookup
+  // reads only what [[seeks]] planned of each file. Runtime
   // (DPP-style) filters prune the same way here. When bucket-grouping
   // is active, the unit is one BUCKET (all its files), keyed for the
   // planner via HasPartitionKey.
@@ -772,19 +801,139 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
         // keep describing the same groups (an empty bucket just reads
         // nothing)
         g.map { case (b, metas) =>
-          ProtoZstBucketPartition(
-            ManifestIndex.skipByRange(metas, runtimeFilters), b): InputPartition
+          ProtoZstBucketPartition(ManifestIndex.skipByRange(metas, runtimeFilters)
+            .flatMap(m => seeks.get(m.path).fold(
+              Array(ProtoZstInputPartition(m): InputPartition))(_._1)), b): InputPartition
         }
       case None =>
         // large files slice at recorded frame boundaries (one .split
         // sidecar read per OVERSIZED file only — a straggler saved per
         // RPC)
         ManifestIndex.skipByRange(plannedMeta, runtimeFilters).flatMap { m =>
-          if (m.bytes <= splitFileBytes)
-            Array(ProtoZstInputPartition(m): InputPartition)
-          else sliced(m)
+          seeks.get(m.path).fold(
+            if (m.bytes <= splitFileBytes)
+              Array(ProtoZstInputPartition(m): InputPartition)
+            else sliced(m))(_._1)
         }
     }
+
+  /** The candidate keys of a pushed point lookup (`key =`/`IN`), if the
+    * scan is one.
+    */
+  private val pointKeys: Option[Seq[Array[Byte]]] = KeyPredicate.pointKeys(filters)
+
+  /** A point lookup's read of each planned file, decided on the driver
+    * once per scan: the reference's bloom → index → chunk path
+    * (Filter.db, then the index summary's `(key, position)` seek,
+    * `SSTableReaderPatched.java:54-97`). A file whose `.bloom` misses
+    * every candidate reads nothing; a sorted file with a frame-key
+    * index reads the frame-aligned ranges [[seekPlan]] picks, as one
+    * partition. The value is those partitions and the number of frame
+    * segments they span. A file absent from the map (no bloom hit
+    * proof, no usable index) is read whole, as without a lookup.
+    */
+  private lazy val seeks: Map[String, (Array[InputPartition], Int)] =
+    pointKeys.fold(Map.empty[String, (Array[InputPartition], Int)]) { keys =>
+      plannedMeta.iterator.flatMap { m =>
+        val p = new org.apache.hadoop.fs.Path(m.path)
+        val fs = p.getFileSystem(conf.value)
+        val bloom = BloomSidecar.read(fs, p)
+        bloom.foreach(_ => MetaIO.bloomProbes.incrementAndGet())
+        if (bloom.exists(b => !keys.exists(BloomSidecar.mightContain(b, _)))) {
+          MetaIO.bloomSkips.incrementAndGet()
+          Some(m.path -> (Array.empty[InputPartition], 0))
+        } else seekPlan(m, keys, fs).map { case (ranges, segments) =>
+          MetaIO.frameSeeks.incrementAndGet()
+          MetaIO.seekBytes.addAndGet(ranges.map(r => r._2 - r._1).sum)
+          m.path -> (
+            if (ranges.isEmpty) Array.empty[InputPartition]
+            else Array(ProtoZstSlicePartition(m, ranges): InputPartition),
+            segments)
+        }
+      }.toMap
+    }
+
+  /** The partitions of a point lookup small enough to decode on the
+    * driver: every planned file was either proven key-free or seeked,
+    * and together they read nothing or one frame segment. None for
+    * every other scan, and for bucket-grouped scans, whose reported
+    * partitioning only a batch scan can carry.
+    */
+  def localRead: Option[Array[InputPartition]] =
+    if (pointKeys.isEmpty || grouped.isDefined) None
+    else if (plannedMeta.forall(m => seeks.contains(m.path)) &&
+        seeks.valuesIterator.map(_._2).sum <= 1)
+      Some(planInputPartitions())
+    else None
+
+  /** The Index.db seek plan for a point lookup over ONE whole sorted
+    * file: the minimal set of frame-aligned byte ranges that can hold
+    * the candidate keys, from the `.split` v2 boundary index, and the
+    * number of frame segments they span — the reference's two-level
+    * read path completed at the granularity a zstd stream can restart
+    * at. None = no usable index (v1 split sidecar, a file its meta does
+    * not attest sorted, a null-key boundary) — degrade to the
+    * full-file scan, never to a wrong subset. Segment arithmetic is
+    * duplicate-safe: a key equal to a boundary's first key also
+    * selects the PREVIOUS segment, because duplicates of that key can
+    * straddle the boundary. EOF is the file's attested `bytes`.
+    */
+  private def seekPlan(meta: FileMeta, keys: Seq[Array[Byte]],
+      fs: org.apache.hadoop.fs.FileSystem): Option[(Seq[(Long, Long)], Int)] = {
+    if (!meta.sorted) return None
+    val cuts0 = SplitSidecar.readKeyed(fs, new org.apache.hadoop.fs.Path(meta.path))
+      .getOrElse(Array.empty)
+    // Files written before the sink learned to trim it may carry one
+    // trailing keyless boundary (row count an exact multiple of
+    // splitFrameRows: the frame flushed, the stream closed, no row
+    // followed). The meta's row count proves it is a zero-row tail
+    // (rows-before == file rows), so it can be dropped instead of
+    // disabling the whole file's seek index; a MID-file "" (null-key
+    // row) still falls through to the all-keyed check below and
+    // degrades to the full scan.
+    val cuts =
+      if (cuts0.nonEmpty && cuts0.last._3.isEmpty &&
+          meta.count >= 0 && meta.count == cuts0.last._2)
+        cuts0.dropRight(1)
+      else cuts0
+    if (cuts.isEmpty || cuts.exists(_._3.isEmpty)) return None
+    val firsts: Array[Array[Byte]] = cuts.map(c => GenManifest.unhex(c._3))
+    val m = firsts.length
+    // segment j ∈ [0, m] spans bytes [off(j-1), off(j)) and keys
+    // [first(j-1), first(j)] — both ends inclusive (duplicates may
+    // cross boundaries); a candidate k selects segments [a, b] where
+    // a = #first < k, b = #first <= k
+    def cmp(x: Array[Byte], y: Array[Byte]) =
+      java.util.Arrays.compareUnsigned(x, y)
+    val segs = scala.collection.mutable.SortedSet.empty[Int]
+    keys.foreach { k =>
+      var lo = 0; var hi = m
+      while (lo < hi) { // a = insertion point among strictly-smaller
+        val mid = (lo + hi) >>> 1
+        if (cmp(firsts(mid), k) < 0) lo = mid + 1 else hi = mid
+      }
+      val a = lo
+      var lo2 = a; var hi2 = m
+      while (lo2 < hi2) { // b = insertion point among smaller-or-equal
+        val mid = (lo2 + hi2) >>> 1
+        if (cmp(firsts(mid), k) <= 0) lo2 = mid + 1 else hi2 = mid
+      }
+      (a to lo2).foreach(segs += _)
+    }
+    def off(j: Int): Long = if (j < 0) 0L else if (j >= m) meta.bytes else cuts(j)._1
+    // merge adjacent segments into maximal byte ranges
+    val ranges = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    var runStart = -2
+    var prev = -2
+    (segs.toSeq :+ Int.MinValue).foreach { j =>
+      if (j != prev + 1) {
+        if (runStart >= -1) ranges += ((off(runStart - 1), off(prev)))
+        runStart = j
+      }
+      prev = j
+    }
+    Some((ranges.toSeq.filter(r => r._2 > r._1), segs.size))
+  }
 
   /** Slice one oversized file into frame-aligned byte ranges of about
     * `splitFileBytes` each; no/unreadable sidecar degrades to a single
@@ -804,8 +953,8 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
     }
     slices += ((start, m.bytes))
     if (slices.length == 1) Array(ProtoZstInputPartition(m))
-    else slices.map { case (s, e) =>
-      ProtoZstSlicePartition(m, s, e): InputPartition
+    else slices.map { r =>
+      ProtoZstSlicePartition(m, Seq(r)): InputPartition
     }.toArray
   }
   /** The scan's ANTI-SET: every key named by a live tombstone file,
@@ -904,7 +1053,8 @@ object KeyPredicate {
   }
 
   /** The finite CANDIDATE KEY SET a pushed conjunction confines `key`
-    * to, if any — what gates the per-task bloom probe: Some(keys) is
+    * to, if any — what gates the scan's driver-side bloom probe and
+    * frame seek: Some(keys) is
     * returned only when at least one conjunct is an equality/IN (or an
     * Or-tree of them), so every row that can pass the filters has
     * key ∈ keys. Conjuncts with no finite form (ranges, IsNotNull)
@@ -960,28 +1110,30 @@ case class ProtoZstInputPartition(meta: FileMeta) extends InputPartition {
   def file: String = meta.path
 }
 
-/** One frame-aligned byte range [start, end) of an oversized file —
-  * the parallel-read unit for files a single task shouldn't own. The
-  * boundaries come from the writer's recorded frame checkpoints, so
-  * every slice decodes independently and the slices of a file
-  * partition its rows exactly; a slice of a key-sorted file is itself
-  * key-sorted, so per-partition ordering attestation survives slicing.
+/** Frame-aligned byte ranges [start, end) of one file, read in order:
+  * one range per slice of an oversized file (the parallel-read unit for
+  * files a single task shouldn't own), or the ranges a point lookup
+  * seeked to. The boundaries come from the writer's recorded frame
+  * checkpoints, so every range decodes independently and the slices of
+  * a file partition its rows exactly; a slice of a key-sorted file is
+  * itself key-sorted, so per-partition ordering attestation survives
+  * slicing.
   */
-case class ProtoZstSlicePartition(meta: FileMeta, start: Long, end: Long)
+case class ProtoZstSlicePartition(meta: FileMeta, ranges: Seq[(Long, Long)])
     extends InputPartition
 
-/** One BUCKET of a bucketed directory: all its files, plus the bucket
-  * id as the split's partition key — what lets Spark line this split up
-  * with the same bucket of another generation in a storage-partitioned
-  * join without any exchange.
+/** One BUCKET of a bucketed directory: all its files' reads (whole
+  * files, or a point lookup's seeks), plus the bucket id as the split's
+  * partition key — what lets Spark line this split up with the same
+  * bucket of another generation in a storage-partitioned join without
+  * any exchange.
   */
-case class ProtoZstBucketPartition(files: Array[FileMeta], bucket: Int)
+case class ProtoZstBucketPartition(parts: Array[InputPartition], bucket: Int)
     extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](bucket))
 }
-
 
 /** Task commit: the manifest entries (name + stats) of every file this
   * task landed — what the driver-side job/epoch commit folds into the
@@ -1050,184 +1202,43 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
-      case ProtoZstInputPartition(meta) => single(meta)
-      case ProtoZstSlicePartition(meta, start, end) =>
-        single(meta, start, end)
-      case ProtoZstBucketPartition(files, _) =>
-        // one bucket = several files, read back-to-back in one split
-        new PartitionReader[InternalRow] {
-          private var idx = 0
-          private var cur: PartitionReader[InternalRow] = _
-          override def next(): Boolean = {
-            while (true) {
-              if (cur == null) {
-                if (idx >= files.length) return false
-                cur = single(files(idx))
-                idx += 1
-              }
-              if (cur.next()) return true
-              cur.close()
-              cur = null
-            }
-            false
-          }
-          override def get(): InternalRow = cur.get()
-          override def close(): Unit = if (cur != null) cur.close()
-        }
+      // strict whole-file reads arm the truncation guard with the
+      // planned row count: a frame-aligned truncation ends the zstd
+      // stream cleanly and would otherwise LOSE rows silently. Ranges
+      // skip it (their byte range is the contract) and salvage mode
+      // keeps every recoverable row.
+      case ProtoZstInputPartition(meta) =>
+        raw(meta.path, 0L, -1L, if (ignoreCorrupt) -1L else meta.count)
+      case ProtoZstSlicePartition(meta, ranges) =>
+        chain(ranges.iterator.map { case (s, e) => raw(meta.path, s, e, -1L) })
+      case ProtoZstBucketPartition(parts, _) =>
+        chain(parts.iterator.map(createReader))
       case other =>
         throw new IllegalArgumentException(s"unexpected partition: $other")
     }
 
-  /** The finite candidate-key set of a pushed point lookup, if this
-    * scan is one — computed once per factory (it is a pure function of
-    * the pushed filters) and serialized to every task as the gate for
-    * the per-file bloom probe.
+  /** Several readers back to back, each opened only when the previous
+    * one is drained.
     */
-  private lazy val pointLookup: Option[Seq[Array[Byte]]] =
-    KeyPredicate.pointKeys(filters)
-
-  private def emptyReader: PartitionReader[InternalRow] =
+  private def chain(readers: Iterator[PartitionReader[InternalRow]])
+      : PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      override def next(): Boolean = false
-      override def get(): InternalRow =
-        throw new NoSuchElementException("empty bloom-skipped partition")
-      override def close(): Unit = ()
-    }
-
-  /** The Index.db seek plan for a point lookup over ONE whole sorted
-    * file: the minimal set of frame-aligned byte ranges that can hold
-    * the candidate keys, from the `.split` v2 boundary index — the
-    * reference's two-level read path (Filter.db bloom, then the index
-    * summary's `(key, position)` seek, `SSTableReaderPatched.java:54-97`)
-    * completed at the granularity a zstd stream can restart at. None =
-    * no usable index (v1 split sidecar, a file its meta does not attest
-    * sorted, a null-key boundary) — degrade to the full-file scan,
-    * never to a wrong subset. Segment arithmetic is duplicate-safe: a
-    * key equal to a boundary's first key also selects the PREVIOUS
-    * segment, because duplicates of that key can straddle the boundary.
-    */
-  private def seekPlan(meta: FileMeta): Option[Seq[(Long, Long)]] = {
-    if (!meta.sorted) return None
-    val p = new org.apache.hadoop.fs.Path(meta.path)
-    val fs = p.getFileSystem(conf.value)
-    val cuts0 = SplitSidecar.readKeyed(fs, p).getOrElse(Array.empty)
-    // Files written before the sink learned to trim it may carry one
-    // trailing keyless boundary (row count an exact multiple of
-    // splitFrameRows: the frame flushed, the stream closed, no row
-    // followed). The meta's row count proves it is a zero-row tail
-    // (rows-before == file rows), so it can be dropped instead of
-    // disabling the whole file's seek index; a MID-file "" (null-key
-    // row) still falls through to the all-keyed check below and
-    // degrades to the full scan.
-    val cuts =
-      if (cuts0.nonEmpty && cuts0.last._3.isEmpty &&
-          meta.count >= 0 && meta.count == cuts0.last._2)
-        cuts0.dropRight(1)
-      else cuts0
-    if (cuts.isEmpty || cuts.exists(_._3.isEmpty)) return None
-    val eof = try fs.getFileStatus(p).getLen
-      catch { case _: Exception => return None }
-    val firsts: Array[Array[Byte]] = cuts.map(c => GenManifest.unhex(c._3))
-    val m = firsts.length
-    // segment j ∈ [0, m] spans bytes [off(j-1), off(j)) and keys
-    // [first(j-1), first(j)] — both ends inclusive (duplicates may
-    // cross boundaries); a candidate k selects segments [a, b] where
-    // a = #first < k, b = #first <= k
-    def cmp(x: Array[Byte], y: Array[Byte]) =
-      java.util.Arrays.compareUnsigned(x, y)
-    val segs = scala.collection.mutable.SortedSet.empty[Int]
-    pointLookup.get.foreach { k =>
-      var lo = 0; var hi = m
-      while (lo < hi) { // a = insertion point among strictly-smaller
-        val mid = (lo + hi) >>> 1
-        if (cmp(firsts(mid), k) < 0) lo = mid + 1 else hi = mid
-      }
-      val a = lo
-      var lo2 = a; var hi2 = m
-      while (lo2 < hi2) { // b = insertion point among smaller-or-equal
-        val mid = (lo2 + hi2) >>> 1
-        if (cmp(firsts(mid), k) <= 0) lo2 = mid + 1 else hi2 = mid
-      }
-      (a to lo2).foreach(segs += _)
-    }
-    def off(j: Int): Long = if (j < 0) 0L else if (j >= m) eof else cuts(j)._1
-    // merge adjacent segments into maximal byte ranges
-    val ranges = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var runStart = -2
-    var prev = -2
-    (segs.toSeq :+ Int.MinValue).foreach { j =>
-      if (j != prev + 1) {
-        if (runStart >= -1) ranges += ((off(runStart - 1), off(prev)))
-        runStart = j
-      }
-      prev = j
-    }
-    Some(ranges.toSeq.filter(r => r._2 > r._1))
-  }
-
-  /** `start`/`end` bound a frame-aligned slice; (0, -1) = whole file. */
-  private def single(meta: FileMeta, start: Long = 0L,
-      end: Long = -1L): PartitionReader[InternalRow] = {
-    val file = meta.path
-    // The Filter.db gate: a POINT lookup (pushed `key =`/`IN`) probes
-    // the file's bloom sidecar before opening the data stream — one
-    // ~16 KB task-side read against decompressing the file. A miss on
-    // every candidate key proves the file key-free (blooms have no
-    // false negatives) and skips the decode outright; absence or a
-    // foreign geometry degrades to scanning. Slices of one file each
-    // probe the same sidecar — still one tiny read per task.
-    if (pointLookup.isDefined) {
-      val p = new org.apache.hadoop.fs.Path(file)
-      val bloom =
-        try BloomSidecar.read(p.getFileSystem(conf.value), p)
-        catch { case _: Exception => None }
-      if (bloom.isDefined) {
-        MetaIO.bloomProbes.incrementAndGet()
-        if (!pointLookup.get.exists(BloomSidecar.mightContain(bloom.get, _))) {
-          MetaIO.bloomSkips.incrementAndGet()
-          return emptyReader
-        }
-      }
-      // the bloom said "maybe": seek to the frames that can hold the
-      // candidates instead of decoding the file (whole-file partitions
-      // only — slices are already narrow)
-      if (start == 0L && end < 0L) seekPlan(meta) match {
-        case Some(ranges) =>
-          MetaIO.frameSeeks.incrementAndGet()
-          MetaIO.seekBytes.addAndGet(ranges.map(r => r._2 - r._1).sum)
-          if (ranges.isEmpty) return emptyReader
-          if (ranges.length == 1)
-            return raw(file, ranges.head._1, ranges.head._2, -1L)
-          return new PartitionReader[InternalRow] {
-            private var idx = 0
-            private var cur: PartitionReader[InternalRow] = _
-            override def next(): Boolean = {
-              while (true) {
-                if (cur == null) {
-                  if (idx >= ranges.length) return false
-                  cur = raw(file, ranges(idx)._1, ranges(idx)._2, -1L)
-                  idx += 1
-                }
-                if (cur.next()) return true
-                cur.close()
-                cur = null
-              }
-              false
-            }
-            override def get(): InternalRow = cur.get()
-            override def close(): Unit = if (cur != null) cur.close()
+      private var cur: PartitionReader[InternalRow] = _
+      override def next(): Boolean = {
+        while (true) {
+          if (cur == null) {
+            if (!readers.hasNext) return false
+            cur = readers.next()
           }
-        case None => ()
+          if (cur.next()) return true
+          cur.close()
+          cur = null
+        }
+        false
       }
+      override def get(): InternalRow = cur.get()
+      override def close(): Unit = if (cur != null) cur.close()
     }
-    // strict whole-file reads arm the truncation guard with the
-    // planned row count: a frame-aligned truncation ends the zstd
-    // stream cleanly and would otherwise LOSE rows silently. Slices
-    // skip it (their byte range is the contract) and salvage mode
-    // keeps every recoverable row.
-    raw(file, start, end,
-      if (ignoreCorrupt || start > 0 || end >= 0) -1L else meta.count)
-  }
 
   /** The plain range reader: decode [start, end) (end = -1 ⇒ EOF);
     * `expect ≥ 0` is the truncation guard's attested row count.

@@ -132,7 +132,7 @@ object SplitSidecar {
     * (`SSTableReaderPatched.java:54-97` walks exactly that file to
     * seek), at the granularity the zstd stream can actually restart
     * at. Point lookups then decode ONE frame instead of the file (see
-    * `ProtoZstReaderFactory`); v1 sidecars (and boundaries whose next
+    * `ProtoZstScan.seekPlan`); v1 sidecars (and boundaries whose next
     * row had a null key, hex "") keep slicing and fall back to a full
     * scan for seeks. Write-time cost: one key reference per
     * `splitFrameRows` rows.
@@ -193,19 +193,23 @@ object SplitSidecar {
   * do, constantly.) The sink sets [[K]] bits per key into a
   * fixed-[[Bits]] filter while writing (observed free — the key bytes
   * are already in hand); a point-lookup scan (a pushed `key =` / `IN`
-  * predicate, see [[KeyPredicate.pointKeys]]) probes the sidecar in
-  * the TASK before opening the data stream and skips the whole
-  * decompress+decode when no candidate key can be present.
+  * predicate, see [[KeyPredicate.pointKeys]]) probes the sidecar on
+  * the DRIVER while planning and drops every file for which no
+  * candidate key can be present — no partition, no decode.
   *
-  * Why task-side, not plan-side: the manifest keeps planning at one
-  * tiny read regardless of file count, and folding 16 KB of bloom per
-  * entry into it would trade that away (every delta and checkpoint
-  * would carry megabytes). Range skip already prunes most files at
-  * plan time for SORTED layouts; the bloom earns its keep exactly
-  * where ranges cannot — content-addressed (hash-keyed) exports whose
-  * per-epoch files all span the full key space. One ~16 KB sidecar
-  * read per surviving task vs decompressing the file: the Cassandra
-  * trade, made in the executor where it scales with tasks.
+  * Why driver-side, beside the manifest rather than in it: folding
+  * 16 KB of bloom per entry into the manifest would trade away its
+  * one-tiny-read planning (every delta and checkpoint would carry
+  * megabytes), so the probe reads the sidecar — but only for files
+  * the manifest's range and time skip kept, and only for point
+  * lookups. The trade is one ~16 KB `.bloom` read per range-surviving
+  * file at planning, against one task per such file at execution:
+  * a point get the blooms rule out plans zero partitions and runs no
+  * Spark job at all. Range skip already prunes most files for SORTED
+  * layouts; the bloom earns its keep exactly where ranges cannot —
+  * content-addressed (hash-keyed) exports whose per-epoch files all
+  * span the full key space, where every file pays the probe (the
+  * O(files) driver read is the cost of such a layout's point get).
   *
   * Geometry is FIXED (2^17 bits, 3 probes) rather than sized per
   * file: the writer streams rows and cannot size a bloom it has

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +11,8 @@ import graft.sources.{MetaIO, ProtoZstFiles}
   * decoding the file — the reference's Index.db `(key, position)` walk
   * at zstd-frame grain. Pins the seek counters, duplicate keys
   * straddling frame boundaries, multi-key range merging, and the
-  * unsorted/unindexed fallbacks.
+  * unsorted/unindexed fallbacks, and the driver-local answer: a point
+  * get that reads nothing or one frame runs no Spark job.
   */
 class FrameSeekSpec extends AnyFunSuite {
   import SparkTestSession.spark
@@ -174,5 +176,156 @@ class FrameSeekSpec extends AnyFunSuite {
     assert(get(dir, "k042").isEmpty)
     assert(get(dir, "k043").length === 10)
     assert(MetaIO.frameSeeks.get() === 2L)
+  }
+
+  /** `f`'s result with the Spark jobs and tasks it started. */
+  private def counted[T](f: => T): (T, Int, Int) = {
+    val sc = spark.sparkContext
+    val jobs, tasks = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onTaskStart(e: SparkListenerTaskStart): Unit = { tasks.incrementAndGet(); () }
+    }
+    org.apache.spark.GraftBusAccess.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = f
+      org.apache.spark.GraftBusAccess.drain(sc)
+      (r, jobs.get, tasks.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** 1000 DISTINCT keys u0000..u0999, key-sorted into one file with
+    * 50-row frames: a key that is not a frame's first key lies in
+    * exactly one frame segment.
+    */
+  private def uniqDir(prefix: String): String = {
+    val dir = freshDir(prefix)
+    writeSorted(dir, 1000, i => f"u$i%04d", frameRows = 50)
+    dir
+  }
+  private lazy val uniq: String = uniqDir("graft_seek_uniq")
+
+  /** A point get as convbench issues it: the source's rows collected
+    * as they are (a computed projection would plan a codegen stage over
+    * the local scan, which runs a job), as (key, first cell's write
+    * time) pairs.
+    */
+  private def point(dir: String, opts: (String, String)*)(ks: String*) = {
+    val r = opts.foldLeft(spark.read.format("proto-zst")) { case (r, (k, v)) => r.option(k, v) }
+      .load(dir)
+    r.filter(if (ks.length == 1) col("key") === lit(ks.head.getBytes("UTF-8"))
+      else col("key").isin(ks.map(_.getBytes("UTF-8")): _*))
+  }
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (new String(r.getAs[Array[Byte]](0), "UTF-8"),
+      r.getSeq[org.apache.spark.sql.Row](1).head.getLong(2))).sorted.toSeq
+
+  private def plan(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.toString
+
+  test("point gets run no job: absent keys plan nothing, a one-frame get decodes on the driver") {
+    val dir = uniq
+    // absent inside the file's range: the driver-side bloom probe
+    // proves the file key-free; absent past its range: range skip
+    MetaIO.reset()
+    assert(counted(rows(point(dir)("u0123x"))) === ((Seq.empty, 0, 0)))
+    assert(MetaIO.bloomProbes.get() === 1L && MetaIO.bloomSkips.get() === 1L)
+    assert(counted(rows(point(dir)("zzz"))) === ((Seq.empty, 0, 0)))
+    // present: one frame seeked and decoded on the driver
+    MetaIO.reset()
+    assert(counted(rows(point(dir)("u0123"))) === ((Seq(("u0123", 123L)), 0, 0)))
+    assert(MetaIO.frameSeeks.get() === 1L && MetaIO.seekBytes.get() > 0L)
+    val p = plan(point(dir)("u0123"))
+    // and no Filter re-evaluates the exact pushed key predicate
+    assert(p.contains("LocalTableScan") && !p.contains("BatchScan") &&
+      !p.contains("Filter"), p)
+    // a frame's first key may have duplicates across the boundary, so
+    // it reads two segments: a distributed scan, same answer
+    assert(counted(rows(point(dir)("u0150"))) === ((Seq(("u0150", 150L)), 1, 1)))
+    assert(plan(point(dir)("u0150")).contains("BatchScan"))
+  }
+
+  test("an IN over distant frames stays a BatchScan and seeks exactly as before") {
+    val dir = uniq
+    def seekBytes(ks: String*): Long = { MetaIO.reset(); get(dir, ks: _*); MetaIO.seekBytes.get() }
+    val (got, jobs, tasks) = counted(get(dir, "u0003", "u0997"))
+    assert(got === Seq(("u0003", 1), ("u0997", 1)))
+    // one file, one seek, one partition naming both frames
+    assert(jobs === 1 && tasks === 1)
+    assert(plan(point(dir)("u0003", "u0997")).contains("BatchScan"))
+    MetaIO.reset()
+    get(dir, "u0003", "u0997")
+    assert(MetaIO.frameSeeks.get() === 1L)
+    assert(MetaIO.seekBytes.get() === seekBytes("u0003") + seekBytes("u0997"))
+  }
+
+  test("the local path keeps tombstones, version pins, write-time windows and ignoreCorrupt") {
+    // an erased key reads nothing; its frame neighbour still reads
+    val erased = uniqDir("graft_seek_local_tomb")
+    graft.operators.Tombstones.eraseKeys(erased, Seq("u0123".getBytes("UTF-8")))
+    assert(counted(rows(point(erased)("u0123"))) === ((Seq.empty, 0, 0)))
+    assert(counted(rows(point(erased)("u0124"))) === ((Seq(("u0124", 124L)), 0, 0)))
+
+    // a pinned version answers from its own snapshot: a second commit
+    // of u0123 makes HEAD read two files, the pin reads one frame
+    val pinned = uniqDir("graft_seek_local_pin")
+    val v1 = graft.sources.GenManifest.read(pinned, conf).get.version
+    writeSorted(pinned, 1, _ => "u0123")
+    assert(rows(point(pinned)("u0123")) === Seq(("u0123", 0L), ("u0123", 123L)))
+    assert(counted(rows(point(pinned, "manifestVersion" -> v1.toString)("u0123"))) ===
+      ((Seq(("u0123", 123L)), 0, 0)))
+
+    // a write-time window that misses the file plans nothing; one that
+    // covers it returns the row (write_time = the key's index)
+    def window(lo: Long, hi: Long) =
+      point(uniq, "minWriteTimeUs" -> lo.toString, "maxWriteTimeUs" -> hi.toString)("u0123")
+    assert(counted(rows(window(5000L, 6000L))) === ((Seq.empty, 0, 0)))
+    assert(counted(rows(window(100L, 200L))) === ((Seq(("u0123", 123L)), 0, 0)))
+
+    // a corrupt frame: a get through it fails strict and salvages to
+    // nothing, as a distributed scan of the key does; a get of an
+    // intact frame never touches it
+    val bad = uniqDir("graft_seek_local_bad")
+    val fs = new org.apache.hadoop.fs.Path(bad).getFileSystem(conf)
+    val data = fs.listStatus(new org.apache.hadoop.fs.Path(bad))
+      .map(_.getPath).filter(_.getName.endsWith(".proto.zst")).head
+    // u0100..u0149 is the frame after the boundary with 100 rows before
+    // it; zero its zstd magic number
+    val off = graft.sources.SplitSidecar.readKeyed(fs, data).get
+      .find(_._2 == 100L).get._1
+    val raf = new java.io.RandomAccessFile(data.toUri.getPath, "rw")
+    try { raf.seek(off); raf.write(new Array[Byte](4)) } finally raf.close()
+    def scanned(k: String) = rows(spark.read.format("proto-zst")
+      .option("ignoreCorrupt", "true").load(bad)
+      .filter(col("key") >= lit(k.getBytes("UTF-8")) && col("key") <= lit(k.getBytes("UTF-8"))))
+    val salvage = "ignoreCorrupt" -> "true"
+    intercept[Exception](rows(point(bad)("u0123")))
+    intercept[org.apache.spark.SparkException](rows(spark.read.format("proto-zst")
+      .load(bad).filter(col("key") >= lit("u0123".getBytes("UTF-8")))))
+    assert(counted(rows(point(bad, salvage)("u0123"))) === ((Seq.empty, 0, 0)))
+    assert(scanned("u0123").isEmpty)
+    Seq(Seq.empty[(String, String)], Seq(salvage)).foreach { opts =>
+      assert(counted(rows(point(bad, opts: _*)("u0042"))) === ((Seq(("u0042", 42L)), 0, 0)))
+    }
+  }
+
+  test("a key-filtered stream never takes the local path and returns the batch rows") {
+    val dir = uniq
+    val name = s"seek_stream_${System.nanoTime()}"
+    val q = spark.readStream.format("proto-zst").load(dir)
+      .filter(col("key").isin("u0123".getBytes("UTF-8"), "u0777".getBytes("UTF-8")))
+      .select(decode(col("key"), "UTF-8").as("k"), size(col("columns")).as("n"))
+      .writeStream.format("memory").queryName(name).outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try {
+      q.awaitTermination()
+      val got = spark.table(name).collect().map(r => (r.getString(0), r.getInt(1))).sorted.toSeq
+      assert(got === get(dir, "u0123", "u0777"))
+      assert(got === Seq(("u0123", 1), ("u0777", 1)))
+      val p = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan.toString
+      assert(!p.contains("LocalTableScan") && p.contains("Filter"), p)
+    } finally q.stop()
   }
 }

@@ -176,8 +176,8 @@ class QueryBuildTraitSpec extends AnyFunSuite {
     // failure message prints the per-query attribution to re-pin from.
     val (totL, totS) = (listedBy.values.map(_._1).sum,
       listedBy.values.map(_._2).sum)
-    assert(totL <= 85L && totS <= 11L,
-      s"construction-time metadata I/O grew: listings=$totL (ceiling 85)" +
+    assert(totL <= 48L && totS <= 11L,
+      s"construction-time metadata I/O grew: listings=$totL (ceiling 48)" +
         s" sidecarReads=$totS (ceiling 11) — a manifest-planned read " +
         "regressed to listing/sidecar planning somewhere.\n  by query: " +
         listedBy.toSeq.sorted.mkString(", "))

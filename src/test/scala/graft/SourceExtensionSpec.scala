@@ -329,7 +329,7 @@ class SourceExtensionSpec extends AnyFunSuite {
       val parts = scan.inputPartitions.map {
         case graft.sources.ProtoZstInputPartition(m) =>
           (new org.apache.hadoop.fs.Path(m.path).getName, 0L, -1L)
-        case graft.sources.ProtoZstSlicePartition(m, s, e) =>
+        case graft.sources.ProtoZstSlicePartition(m, Seq((s, e))) =>
           (new org.apache.hadoop.fs.Path(m.path).getName, s, e)
       }
       val numRows = scan.scan.asInstanceOf[
@@ -799,7 +799,7 @@ class SourceExtensionSpec extends AnyFunSuite {
     assert(BloomSidecar.read(fs, data).isEmpty)
   }
 
-  test("bloom point-get skips key-free files task-side; absence degrades; ranges never probe") {
+  test("bloom point-get skips key-free files driver-side; absence degrades; ranges never probe") {
     import graft.sources.{BloomSidecar, MetaIO, ProtoZstFiles}
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_bloom")
@@ -833,8 +833,8 @@ class SourceExtensionSpec extends AnyFunSuite {
       s"every planned file must probe (${MetaIO.bloomProbes.get()})")
     assert(MetaIO.bloomSkips.get() === 3,
       s"the three key-free epochs must skip (${MetaIO.bloomSkips.get()})")
-    // planning untouched: governed scans still list nothing and read
-    // no plan-time sidecars — the probe is an executor-side read
+    // governed scans still list nothing and open no `.range` sidecar
+    // — the driver-side probe reads only the `.bloom` sidecars
     assert(MetaIO.dataListings.get() === 0L)
     assert(MetaIO.sidecarReads.get() === 0L)
     // an absent key: zero rows, every file skipped without a decode
