@@ -1,0 +1,156 @@
+#!/usr/bin/env python3
+"""Interleaved parent/change A/B of one convbench workload.
+
+    python3 scripts/convbench_ab.py --parent REV --workload export \
+        --seeds 201-210 [--seconds 10] [--parent-dir DIR] [--json OUT]
+
+Run from the repository root. The change arm is this checkout (its
+working tree, uncommitted edits included); the parent arm is REV,
+checked out as a detached `git worktree` in a temporary directory that
+is removed afterwards, or an existing checkout named with --parent-dir.
+For every seed the two arms run `convbench/run.py` back to back, the
+arm order alternating by seed (even seeds run the parent first), so a
+drift in machine load lands on both arms alike. Each checkout builds
+its own engine on its first run.
+
+For each end-to-end metric of BENCHMARK.json the script prints both
+arms' medians, the change in the median, the parent's IQR / median, the
+pairs the change won, and whether the median moved by more than the
+parent's IQR; then each arm's failed operations and failed runs.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+import tempfile
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def seeds_of(spec):
+    out = []
+    for part in spec.split(","):
+        if "-" in part:
+            lo, hi = part.split("-")
+            out.extend(range(int(lo), int(hi) + 1))
+        else:
+            out.append(int(part))
+    return out
+
+
+def run_arm(root, workload, seed, seconds):
+    """One convbench run in checkout `root`: its result object, or None."""
+    cmd = [sys.executable, os.path.join("convbench", "run.py"),
+           "--workload", workload, "--seed", str(seed),
+           "--seconds", str(seconds), "--trace", "0"]
+    proc = subprocess.run(cmd, cwd=root, stdout=subprocess.PIPE,
+                          stderr=subprocess.PIPE, text=True)
+    lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
+    if proc.returncode != 0 or not lines:
+        sys.stderr.write(proc.stderr[-2000:])
+        return None
+    try:
+        return json.loads(lines[-1])
+    except ValueError:
+        return None
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0]
+    q = statistics.quantiles(xs, n=4, method="inclusive")
+    return q[0], q[2]
+
+
+def table(metrics, results):
+    """Rows of the summary for the metrics both arms reported."""
+    rows = []
+    for m in metrics:
+        pairs = [(p["metrics"][m["name"]]["value"], c["metrics"][m["name"]]["value"])
+                 for p, c in results
+                 if p and c and m["name"] in p["metrics"] and m["name"] in c["metrics"]]
+        if not pairs:
+            continue
+        par = [p for p, _ in pairs]
+        chg = [c for _, c in pairs]
+        pm, cm = statistics.median(par), statistics.median(chg)
+        q1, q3 = quartiles(par)
+        lower = m["better"] == "lower"
+        won = sum(1 for p, c in pairs if (c < p if lower else c > p))
+        rows.append({
+            "metric": m["name"], "parent": pm, "change": cm,
+            "delta": (cm - pm) / pm if pm else 0.0,
+            "parent_iqr_over_median": (q3 - q1) / pm if pm else 0.0,
+            "won": won, "pairs": len(pairs), "bound": m["bound"],
+            "beyond_parent_iqr": abs(cm - pm) > (q3 - q1)})
+    return rows
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--parent", help="parent revision, checked out as a worktree")
+    ap.add_argument("--parent-dir", help="an existing checkout of the parent")
+    ap.add_argument("--workload", required=True, choices=("export", "read", "ingest"))
+    ap.add_argument("--seeds", required=True, help="e.g. 201-210 or 1,2,5")
+    ap.add_argument("--seconds", type=int)
+    ap.add_argument("--json", help="also write every run's result here")
+    args = ap.parse_args()
+    if bool(args.parent) == bool(args.parent_dir):
+        ap.error("name exactly one of --parent and --parent-dir")
+
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
+    seconds = args.seconds or bench["run_seconds"]
+
+    worktree = None
+    if args.parent:
+        worktree = tempfile.mkdtemp(prefix="convbench-parent-")
+        os.rmdir(worktree)
+        subprocess.run(["git", "worktree", "add", "--detach", worktree, args.parent],
+                       cwd=ROOT, check=True, stdout=subprocess.DEVNULL)
+    parent = worktree or os.path.abspath(args.parent_dir)
+    results = []
+    try:
+        for seed in seeds_of(args.seeds):
+            arms = {}
+            order = ("parent", "change") if seed % 2 == 0 else ("change", "parent")
+            for arm in order:
+                arms[arm] = run_arm(parent if arm == "parent" else ROOT,
+                                    args.workload, seed, seconds)
+                status = "crashed" if arms[arm] is None else \
+                    f"correct={arms[arm]['correct']} failed={arms[arm]['failed']}"
+                print(f"seed {seed} {arm}: {status}", file=sys.stderr, flush=True)
+            results.append((arms["parent"], arms["change"]))
+    finally:
+        if worktree:
+            subprocess.run(["git", "worktree", "remove", "--force", worktree],
+                           cwd=ROOT, check=False)
+
+    rows = table(bench["end_to_end"], results)
+    print(f"{args.workload}: {len(results)} pairs, seeds {args.seeds}, {seconds} s per run")
+    print(f"{'metric':26} {'parent':>12} {'change':>12} {'delta':>8} "
+          f"{'p.IQR/med':>9} {'won':>6} {'bound':>6}  >IQR")
+    for r in rows:
+        print(f"{r['metric']:26} {r['parent']:12.4g} {r['change']:12.4g} "
+              f"{r['delta']:+8.1%} {r['parent_iqr_over_median']:9.1%} "
+              f"{r['won']:>3}/{r['pairs']:<2} {r['bound']:6.2f}  "
+              f"{'yes' if r['beyond_parent_iqr'] else 'no'}")
+    for i, arm in enumerate(("parent", "change")):
+        runs = [pair[i] for pair in results]
+        crashed = sum(1 for r in runs if r is None)
+        wrong = sum(1 for r in runs if r is not None and not r["correct"])
+        failed = sum(r["failed"] for r in runs if r is not None)
+        attempted = sum(r["attempted"] for r in runs if r is not None)
+        print(f"{arm}: failed {failed} of {attempted} operations, "
+              f"{wrong} incorrect runs, {crashed} crashed runs")
+    if args.json:
+        with open(args.json, "w") as fh:
+            json.dump({"workload": args.workload, "seeds": seeds_of(args.seeds),
+                       "pairs": [{"parent": p, "change": c} for p, c in results],
+                       "summary": rows}, fh, indent=1)
+
+
+if __name__ == "__main__":
+    main()

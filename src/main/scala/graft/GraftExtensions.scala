@@ -16,7 +16,8 @@ import graft.functions.{CdcChunks60Expr, DotLongExpr, GramHash60Expr, Md5Prefix6
   *
   * The registered functions are the custom codegen'd Catalyst
   * expressions (not UDFs), so SQL callers get the same whole-stage
-  * codegen path as the Scala API.
+  * codegen path as the Scala API. It also installs the planner
+  * strategy of the sorted-run nest ([[graft.operators.SortedNest]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -49,6 +50,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPlannerStrategy(_ => graft.operators.NestStrategy)
     ext.injectFunction((FunctionIdentifier("proto_row"),
       info("proto_row", classOf[ProtoEncodeRowExpr]),
       (es: Seq[Expression]) => { val a = arity("proto_row", 2, es)

@@ -46,61 +46,111 @@ object ProtoWire {
     n
   }
 
-  private def writeLenField(out: ByteArrayOutputStream, field: Int, bytes: Array[Byte]): Unit =
-    if (bytes != null && bytes.length > 0) {
-      out.write((field << 3) | 2)
-      writeVarint(out, bytes.length.toLong)
-      out.write(bytes, 0, bytes.length)
+  /** Size of a LEN field (tag, length varint, bytes); 0 when proto3
+    * skips it (null or empty).
+    */
+  private def lenFieldSize(bytes: Array[Byte]): Int =
+    if (bytes == null || bytes.length == 0) 0
+    else 1 + varintSize(bytes.length.toLong) + bytes.length
+
+  private def putVarint(out: Array[Byte], at: Int, v0: Long): Int = {
+    var v = v0
+    var p = at
+    while ((v & ~0x7FL) != 0L) {
+      out(p) = ((v & 0x7F) | 0x80).toByte
+      v >>>= 7
+      p += 1
+    }
+    out(p) = v.toByte
+    p + 1
+  }
+
+  private def putLenField(out: Array[Byte], at: Int, field: Int, bytes: Array[Byte]): Int =
+    if (bytes == null || bytes.length == 0) at
+    else {
+      out(at) = ((field << 3) | 2).toByte
+      val p = putVarint(out, at + 1, bytes.length.toLong)
+      System.arraycopy(bytes, 0, out, p, bytes.length)
+      p + bytes.length
     }
 
-  private def writeFixed64(out: ByteArrayOutputStream, field: Int, v: Long): Unit =
-    if (v != 0L) {
-      out.write((field << 3) | 1)
+  private def putFixed64(out: Array[Byte], at: Int, field: Int, v: Long): Int =
+    if (v == 0L) at
+    else {
+      out(at) = ((field << 3) | 1).toByte
       var i = 0
-      while (i < 8) { out.write(((v >>> (8 * i)) & 0xFF).toInt); i += 1 }
+      while (i < 8) { out(at + 1 + i) = (v >>> (8 * i)).toByte; i += 1 }
+      at + 9
     }
+
+  private def columnSize(name: Array[Byte], value: Array[Byte], writeTime: Long): Int =
+    lenFieldSize(name) + lenFieldSize(value) + (if (writeTime != 0L) 9 else 0)
+
+  private def putColumn(out: Array[Byte], at: Int, name: Array[Byte],
+      value: Array[Byte], writeTime: Long): Int =
+    putFixed64(out, putLenField(out, putLenField(out, at, 1, name), 2, value), 3, writeTime)
 
   /** Encode one Column message body. */
   def encodeColumn(name: Array[Byte], value: Array[Byte], writeTime: Long): Array[Byte] = {
-    val out = new ByteArrayOutputStream(32)
-    writeLenField(out, 1, name)
-    writeLenField(out, 2, value)
-    writeFixed64(out, 3, writeTime)
-    out.toByteArray
+    val out = new Array[Byte](columnSize(name, value, writeTime))
+    putColumn(out, 0, name, value, writeTime)
+    out
   }
 
   /** Encode one Row message body from a key and an ArrayData of
     * struct&lt;name:binary, value:binary, writeTime:long&gt;. Invoked both
     * from interpreted eval and from whole-stage-generated code.
     */
-  def encodeRow(key: Array[Byte], columns: ArrayData): Array[Byte] = {
-    val out = new ByteArrayOutputStream(64)
-    writeLenField(out, 1, key)
-    if (columns != null) {
-      var i = 0
-      val n = columns.numElements()
-      while (i < n) {
-        val r = columns.getStruct(i, 3)
-        val col = encodeColumn(
-          if (r.isNullAt(0)) null else r.getBinary(0),
-          if (r.isNullAt(1)) null else r.getBinary(1),
-          if (r.isNullAt(2)) 0L else r.getLong(2))
-        // repeated message field: always emitted, even when empty
-        out.write((2 << 3) | 2)
-        writeVarint(out, col.length.toLong)
-        out.write(col, 0, col.length)
-        i += 1
-      }
+  def encodeRow(key: Array[Byte], columns: ArrayData): Array[Byte] =
+    encode(key, columns, delimited = false)
+
+  /** `delimit(encodeRow(key, columns))` without the intermediate array:
+    * the sink's per-row encode.
+    */
+  def encodeDelimited(key: Array[Byte], columns: ArrayData): Array[Byte] =
+    encode(key, columns, delimited = true)
+
+  /** The one row encoder: a pass over `columns` reads each cell once and
+    * sizes it, then the message is written into an array of exactly its
+    * size (with its varint length prefix when `delimited`).
+    */
+  private def encode(key: Array[Byte], columns: ArrayData,
+      delimited: Boolean): Array[Byte] = {
+    val n = if (columns == null) 0 else columns.numElements()
+    val names = new Array[Array[Byte]](n)
+    val values = new Array[Array[Byte]](n)
+    val times = new Array[Long](n)
+    val sizes = new Array[Int](n)
+    var body = lenFieldSize(key)
+    var i = 0
+    while (i < n) {
+      val r = columns.getStruct(i, 3)
+      names(i) = if (r.isNullAt(0)) null else r.getBinary(0)
+      values(i) = if (r.isNullAt(1)) null else r.getBinary(1)
+      times(i) = if (r.isNullAt(2)) 0L else r.getLong(2)
+      sizes(i) = columnSize(names(i), values(i), times(i))
+      // repeated message field: always emitted, even when empty
+      body += 1 + varintSize(sizes(i).toLong) + sizes(i)
+      i += 1
     }
-    out.toByteArray
+    val out = new Array[Byte]((if (delimited) varintSize(body.toLong) else 0) + body)
+    var p = if (delimited) putVarint(out, 0, body.toLong) else 0
+    p = putLenField(out, p, 1, key)
+    i = 0
+    while (i < n) {
+      out(p) = ((2 << 3) | 2).toByte
+      p = putColumn(out, putVarint(out, p + 1, sizes(i).toLong), names(i), values(i), times(i))
+      i += 1
+    }
+    out
   }
 
   /** varint-length-prefix a message (== protobuf writeDelimitedTo). */
   def delimit(msg: Array[Byte]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(msg.length + 5)
-    writeVarint(out, msg.length.toLong)
-    out.write(msg, 0, msg.length)
-    out.toByteArray
+    val out = new Array[Byte](varintSize(msg.length.toLong) + msg.length)
+    val p = putVarint(out, 0, msg.length.toLong)
+    System.arraycopy(msg, 0, out, p, msg.length)
+    out
   }
 
   /** Decode a stream of varint-framed Row messages (the sink's on-disk

@@ -25,10 +25,11 @@ import graft.sources.Tables
   * long (see [[graft.sources.Tables]]); writeTime is `ts DIV 1000` µs.
   *
   * Scale note: the cell projection is narrow (no shuffle); the only wide
-  * stage in the whole pipeline is the per-key nest (O10), which at 100 TB
-  * is a single hash aggregation shuffled on `key` — the same key the
-  * storage is sorted by, so with a key-ordered DSv2 source it degenerates
-  * to a shuffle-free `mapPartitions` (SURVEY.md §4.3).
+  * stage in the whole pipeline is the per-key nest (O10). It folds each
+  * run of adjacent same-key cells map-side, then merges runs after ONE
+  * hash exchange on `key` that moves nested rows, not cells, and sorts
+  * them by key ([[SortedNest]]). A child that is already key-clustered
+  * and key-sorted (a key-ordered source) plans no exchange and no sort.
   */
 object CellModel {
 
@@ -84,24 +85,25 @@ object CellModel {
       .drop("kind", "partition_deleted")
 
   /** O10: per-key ordered nest — the signature aggregation of the
-    * reference (`rowMapper`, `service/SSTableReader.java:87-109`).
-    * `sort_array` reproduces comparator order; `collect_list` is the
-    * grouped collect. One shuffle on `key`.
+    * reference (`rowMapper`, `service/SSTableReader.java:87-109`): one
+    * row per key with its live cells in comparator order (name, value,
+    * write_time). Planned as [[SortedNest]]'s run fold → one exchange on
+    * `key` → run merge, which folds cells the way the reference's
+    * scanner does instead of regrouping them.
     *
     * Matches the reference exactly for partitions with zero live cells:
     * `rowMapper` runs after only the partition-tombstone filter
     * (`service/SSTableReader.java:79-80`), so a live partition whose
     * cells are all deleted/expiring/counter still yields a key-only
-    * `Row` with an empty `columns` list. We reproduce that by grouping
-    * ALL non-tombstoned partitions and collecting live cells
-    * conditionally (`collect_list` drops the nulls from the `when`).
+    * `Row` with an empty `columns` list. Every non-tombstoned cell
+    * therefore reaches the fold, and `live` decides whether it joins
+    * its row's cells (a null kind is not live).
     */
   def nestCells(cellsDf: DataFrame): DataFrame =
-    cellsDf
+    SortedNest(cellsDf
       .filter(!col("partition_deleted"))
-      .groupBy(col("key"))
-      .agg(sort_array(collect_list(when(col("kind") === "live", struct(
-        col("name"), col("value"), col("write_time"))))).as("columns"))
+      .select(col("key"), col("name"), col("value"), col("write_time"),
+        coalesce(col("kind") === "live", lit(false)).as("live")))
 
   def nestRows(spark: SparkSession, dir: String): DataFrame =
     nestCells(cells(spark, dir))

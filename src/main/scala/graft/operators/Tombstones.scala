@@ -80,7 +80,7 @@ object Tombstones {
       val empty = new org.apache.spark.sql.catalyst.util.GenericArrayData(
         Array.empty[Any])
       sorted.foreach(k =>
-        os.write(ProtoWire.delimit(ProtoWire.encodeRow(k, empty))))
+        os.write(ProtoWire.encodeDelimited(k, empty)))
     } finally os.close()
     val dst = new org.apache.hadoop.fs.Path(dirPath, name)
     if (!fs.rename(tmp, dst))

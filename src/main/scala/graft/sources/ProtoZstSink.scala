@@ -244,7 +244,7 @@ class ProtoZstWriterFactory(dir: String, buckets: Option[Int] = None,
         BloomSidecar.add(st.bloom, key)
         if (cols != null) {
           // per-file cell write-time range, observed free (the same
-          // walk encodeRow is about to make). A null write time
+          // walk the encoder is about to make). A null write time
           // encodes as the proto3 default 0 and READS BACK as 0, so 0
           // is what the range must cover — the write-time twin of the
           // null-key normalization above.
@@ -258,7 +258,7 @@ class ProtoZstWriterFactory(dir: String, buckets: Option[Int] = None,
             i += 1
           }
         }
-        val framed = ProtoWire.delimit(ProtoWire.encodeRow(key, cols))
+        val framed = ProtoWire.encodeDelimited(key, cols)
         os.write(framed, 0, framed.length)
         st.n += 1
         st.checkpoint()

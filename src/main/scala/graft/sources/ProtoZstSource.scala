@@ -1183,34 +1183,23 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
       false
     }
 
-  /** Salvage iterator: stop at the first undecodable message instead of
-    * propagating (the per-record analog of the reference's per-file
-    * suspect marking — everything before the corruption is kept).
-    */
-  private def salvaging(it: Iterator[ProtoWire.DecodedRow]) =
-    new Iterator[ProtoWire.DecodedRow] {
-      private var pending: ProtoWire.DecodedRow = _
-      private var ok = fetch()
-      private def fetch(): Boolean =
-        try { if (it.hasNext) { pending = it.next(); true } else false }
-        catch { case _: Exception => false }
-      override def hasNext: Boolean = ok
-      override def next(): ProtoWire.DecodedRow = {
-        val r = pending; ok = fetch(); r
-      }
-    }
-
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
       // strict whole-file reads arm the truncation guard with the
       // planned row count: a frame-aligned truncation ends the zstd
       // stream cleanly and would otherwise LOSE rows silently. Ranges
-      // skip it (their byte range is the contract) and salvage mode
-      // keeps every recoverable row.
+      // skip it (their byte range is the contract). Salvage mode keeps
+      // every recoverable row, and reads a whole file frame range by
+      // frame range, so damage in one frame cannot cost the frames
+      // before it.
       case ProtoZstInputPartition(meta) =>
-        raw(meta.path, 0L, -1L, if (ignoreCorrupt) -1L else meta.count)
+        if (ignoreCorrupt) reader(salvaged(meta.path, frameRanges(meta)))
+        else reader(new Decoded(meta.path, 0L, -1L, meta.count))
       case ProtoZstSlicePartition(meta, ranges) =>
-        chain(ranges.iterator.map { case (s, e) => raw(meta.path, s, e, -1L) })
+        chain(ranges.iterator.map { case (s, e) =>
+          reader(if (ignoreCorrupt) salvaged(meta.path, Iterator((s, e)))
+            else new Decoded(meta.path, s, e, -1L))
+        })
       case ProtoZstBucketPartition(parts, _) =>
         chain(parts.iterator.map(createReader))
       case other =>
@@ -1240,20 +1229,95 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
       override def close(): Unit = if (cur != null) cur.close()
     }
 
-  /** The plain range reader: decode [start, end) (end = -1 ⇒ EOF);
-    * `expect ≥ 0` is the truncation guard's attested row count.
+  /** The [start, end) frame ranges of a whole file from its `.split`
+    * index (the last range ends at EOF); one range when it has none.
     */
-  private def raw(file: String, start: Long, end: Long,
-      expect: Long): PartitionReader[InternalRow] = {
-    // compiled once per partition; pruning decides whether Column
-    // messages are decoded at all. The tombstone anti-set composes
-    // into the same gate: a deleted row is dropped before its columns
-    // decode, exactly like a pushed-filter miss.
+  private def frameRanges(meta: FileMeta): Iterator[(Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(meta.path)
+    val cuts = SplitSidecar.read(p.getFileSystem(conf.value), p)
+      .fold(Array.empty[Long])(_.map(_._1).filter(_ > 0L))
+    (0L +: cuts).iterator.zip(cuts.iterator ++ Iterator(-1L))
+  }
+
+  // compiled once per reader factory; pruning decides whether Column
+  // messages are decoded at all. The tombstone anti-set composes into
+  // the same gate: a deleted row is dropped before its columns decode,
+  // exactly like a pushed-filter miss.
+  @transient private lazy val keep: Array[Byte] => Boolean = {
     val pushedKeep = KeyPredicate.compile(filters)
-    val keep: Array[Byte] => Boolean =
-      if (deletedKeys.isEmpty) pushedKeep
-      else k => pushedKeep(k) && !isDeleted(k)
-    val wantColumns = readSchema.fieldNames.contains("columns")
+    if (deletedKeys.isEmpty) pushedKeep
+    else k => pushedKeep(k) && !isDeleted(k)
+  }
+
+  /** Rows decoded from one stream, and how to close it. */
+  private trait Rows extends Iterator[ProtoWire.DecodedRow] with java.io.Closeable
+
+  /** Rows of [start, end) of `file` (end = -1 ⇒ EOF) off their own
+    * decompressor; `expect ≥ 0` is the truncation guard's attested row
+    * count. Frames stream straight off the decompressor: memory is
+    * bounded by one message, never the decompressed file (the
+    * reference reads partitions lazily the same way,
+    * `SSTableIdentityIteratorPatched.java:88-109`).
+    */
+  private final class Decoded(file: String, start: Long, end: Long,
+      expect: Long) extends Rows {
+    private val in: java.io.InputStream = {
+      val p = new org.apache.hadoop.fs.Path(file)
+      val raw = p.getFileSystem(conf.value).open(p)
+      try {
+        if (start > 0) raw.seek(start)
+        // a range reads exactly its bytes: the cut points are frame
+        // boundaries, so EOF of the bounded stream is a clean frame end
+        // and the decoder stops naturally
+        val src: java.io.InputStream =
+          if (end >= 0) new BoundedIn(raw, end - start) else raw
+        new java.io.BufferedInputStream(new ZstdInputStream(src), 64 << 10)
+      } catch { case e: Exception => raw.close(); throw e }
+    }
+    private val rows = ProtoWire.decodeStream(in,
+      readSchema.fieldNames.contains("columns"), keep, expect)
+    override def hasNext: Boolean = rows.hasNext
+    override def next(): ProtoWire.DecodedRow = rows.next()
+    override def close(): Unit = in.close()
+  }
+
+  /** Salvage read of `ranges` in order, each off its own decompressor:
+    * the first range that fails to open or decode ends the read, and
+    * every row before the failure is kept (the per-record analog of the
+    * reference's per-file suspect marking). A file gone by read time
+    * yields no rows.
+    */
+  private def salvaged(file: String, ranges: Iterator[(Long, Long)]): Rows =
+    new Rows {
+      private var cur: Rows = _
+      private var pending: ProtoWire.DecodedRow = _
+      private var failed = false
+      private def fetch(): Unit =
+        while (pending == null && !failed)
+          try {
+            if (cur != null && cur.hasNext) pending = cur.next()
+            else if (ranges.hasNext) {
+              close()
+              val (s, e) = ranges.next()
+              cur = new Decoded(file, s, e, -1L)
+            } else return
+          } catch { case _: Exception => failed = true; close() }
+      override def hasNext: Boolean = { fetch(); pending != null }
+      override def next(): ProtoWire.DecodedRow = {
+        if (!hasNext) throw new NoSuchElementException("end of rows")
+        val r = pending
+        pending = null
+        r
+      }
+      override def close(): Unit =
+        if (cur != null) {
+          try cur.close() catch { case _: Exception => () }
+          cur = null
+        }
+    }
+
+  /** Projects decoded rows onto the pruned read schema. */
+  private def reader(rows: => Rows): PartitionReader[InternalRow] = {
     // Spark prunes NESTED fields too (e.g. count() asks for
     // array<struct<>>): emit exactly the struct shape the read schema
     // declares, in its field order
@@ -1282,40 +1346,11 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
           }.toArray[Any]): Any
       }
     new PartitionReader[InternalRow] {
-      // frames stream straight off the decompressor: memory is bounded
-      // by one message, never the decompressed file (the reference
-      // reads partitions lazily the same way,
-      // `SSTableIdentityIteratorPatched.java:88-109`)
-      private var in: java.io.InputStream = _
-      private val rows = {
-        // an unopenable file under ignoreCorrupt yields no rows (open
-        // INSIDE the guard — a file listed at plan time may be gone by
-        // read time); decode errors mid-stream surface lazily and are
-        // handled by the salvage wrapper
-        val all =
-          try {
-            val p = new org.apache.hadoop.fs.Path(file)
-            val raw = p.getFileSystem(conf.value).open(p)
-            if (start > 0) raw.seek(start)
-            // a slice reads exactly its byte range: the cut points are
-            // frame boundaries, so EOF of the bounded stream is a
-            // clean frame end and the decoder stops naturally
-            val src: java.io.InputStream =
-              if (end >= 0) new BoundedIn(raw, end - start) else raw
-            in = new java.io.BufferedInputStream(
-              new ZstdInputStream(src), 64 << 10)
-            ProtoWire.decodeStream(in, wantColumns, keep, expect)
-          } catch {
-            case e: Exception if ignoreCorrupt =>
-              Iterator.empty[ProtoWire.DecodedRow]
-          }
-        if (ignoreCorrupt) salvaging(all) else all
-      }
+      private val it = rows
       private var cur: InternalRow = _
       override def next(): Boolean =
-        if (rows.hasNext) {
-          val r = rows.next()
-          // project onto the pruned read schema, in its field order
+        if (it.hasNext) {
+          val r = it.next()
           val vals = new Array[Any](topProj.length)
           var i = 0
           while (i < topProj.length) { vals(i) = topProj(i)(r); i += 1 }
@@ -1323,7 +1358,7 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
           true
         } else false
       override def get(): InternalRow = cur
-      override def close(): Unit = if (in != null) in.close()
+      override def close(): Unit = it.close()
     }
   }
 }

@@ -2,6 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge between the public `Column` API (which in Spark 4.x wraps a
@@ -36,4 +37,20 @@ object Shim {
   def confExplicitlySet(spark: org.apache.spark.sql.SparkSession, key: String): Boolean =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf.contains(key)
+
+  /** The analyzed logical plan behind a DataFrame, and a DataFrame over
+    * a logical plan — how an operator outside `org.apache.spark.sql`
+    * wraps a custom logical node.
+    */
+  def logicalPlan(df: org.apache.spark.sql.DataFrame): LogicalPlan =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan
+
+  def frame(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Whether the session's planner runs `strategy`. */
+  def plansWith(spark: org.apache.spark.sql.SparkSession, strategy: AnyRef): Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.planner.strategies.contains(strategy)
 }

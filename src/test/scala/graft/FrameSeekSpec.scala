@@ -305,9 +305,26 @@ class FrameSeekSpec extends AnyFunSuite {
       .load(bad).filter(col("key") >= lit("u0123".getBytes("UTF-8")))))
     assert(counted(rows(point(bad, salvage)("u0123"))) === ((Seq.empty, 0, 0)))
     assert(scanned("u0123").isEmpty)
+    // a salvaging whole-file read decodes frame range by frame range:
+    // it keeps every frame whose bytes still verify. The local
+    // filesystem checksums 512-byte chunks, so a frame sharing the
+    // damaged chunk is lost with it
+    assert(scanned("u0042") === Seq(("u0042", 42L)))
+    def salvagedAll = rows(spark.read.format("proto-zst")
+      .option("ignoreCorrupt", "true").load(bad))
+    val bytesPerSum = fs.getConf.getInt("file.bytes-per-checksum", 512)
+    val verified = graft.sources.SplitSidecar.read(fs, data).get
+      .filter(_._1 <= off / bytesPerSum * bytesPerSum).map(_._2).max
+    assert(verified >= 50L)
+    assert(salvagedAll === (0L until verified).map(i => (f"u$i%04d", i)))
     Seq(Seq.empty[(String, String)], Seq(salvage)).foreach { opts =>
       assert(counted(rows(point(bad, opts: _*)("u0042"))) === ((Seq(("u0042", 42L)), 0, 0)))
     }
+    // on a store that does not checksum reads, zstd alone finds the
+    // damage, and every row before the damaged frame is kept
+    val crc = new org.apache.hadoop.fs.Path(data.getParent, s".${data.getName}.crc")
+    assert(fs.delete(crc, false))
+    assert(salvagedAll === (0 until 100).map(i => (f"u$i%04d", i.toLong)))
   }
 
   test("a key-filtered stream never takes the local path and returns the batch rows") {

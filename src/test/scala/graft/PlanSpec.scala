@@ -39,6 +39,22 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges === 1, s"expected 1 Exchange, plan:\n$plan")
   }
 
+  test("nestCells executes with ONE exchange and no object or sort aggregate") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val nested = graft.operators.CellModel.nestRows(spark, sf0001)
+    nested.collect()
+    val plan = nested.queryExecution.executedPlan
+    val walk = new AdaptiveSparkPlanHelper {}
+    assert(walk.collect(plan) { case e: ShuffleExchangeExec => e }.length === 1, plan)
+    assert(walk.collect(plan) {
+      case a: ObjectHashAggregateExec => a
+      case a: SortAggregateExec => a
+    }.isEmpty, plan)
+    assert(walk.collect(plan) { case m: graft.operators.NestMergeExec => m }.length === 1, plan)
+  }
+
   test("q36 per-key stats over the sink files plan ZERO exchanges") {
     val plan = physical(graft.operators.Sink.noShuffleStats(spark, sf0001))
     assert(!plan.contains("Exchange"),

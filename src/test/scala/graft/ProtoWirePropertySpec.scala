@@ -11,7 +11,8 @@ import graft.functions.ProtoWire
 /** Property-based round trip: encode → frame → decode must be the
   * identity for arbitrary rows, including the edge cases proto3
   * default-skipping creates (empty keys/names/values, zero timestamps,
-  * zero columns, >127-byte frames that need multi-byte varints).
+  * zero columns, >127-byte frames that need multi-byte varints), and
+  * the encoder's bytes against the encoder it replaced.
   */
 class ProtoWirePropertySpec extends AnyFunSuite {
 
@@ -105,6 +106,92 @@ class ProtoWirePropertySpec extends AnyFunSuite {
         (nc == rows.take(keep).map(_._2.length).sum.toLong) :| "cols" &&
         (lastGood == spans(keep).toLong) :| s"watermark $lastGood != ${spans(keep)}" &&
         (clean == (spans(keep) == cut)) :| s"clean $clean at cut $cut"
+    })
+  }
+
+  /** The encoder before the single-pass rewrite, verbatim in behaviour:
+    * per-byte `ByteArrayOutputStream` writes, one temporary array per
+    * column, and `delimit` as a copy.
+    */
+  private object Legacy {
+    import java.io.ByteArrayOutputStream
+    def writeVarint(out: ByteArrayOutputStream, v0: Long): Unit = {
+      var v = v0
+      while ((v & ~0x7FL) != 0L) { out.write(((v & 0x7F) | 0x80).toInt); v >>>= 7 }
+      out.write(v.toInt)
+    }
+    private def writeLenField(out: ByteArrayOutputStream, field: Int, bytes: Array[Byte]): Unit =
+      if (bytes != null && bytes.length > 0) {
+        out.write((field << 3) | 2)
+        writeVarint(out, bytes.length.toLong)
+        out.write(bytes, 0, bytes.length)
+      }
+    private def writeFixed64(out: ByteArrayOutputStream, field: Int, v: Long): Unit =
+      if (v != 0L) {
+        out.write((field << 3) | 1)
+        var i = 0
+        while (i < 8) { out.write(((v >>> (8 * i)) & 0xFF).toInt); i += 1 }
+      }
+    def encodeColumn(name: Array[Byte], value: Array[Byte], writeTime: Long): Array[Byte] = {
+      val out = new ByteArrayOutputStream(32)
+      writeLenField(out, 1, name)
+      writeLenField(out, 2, value)
+      writeFixed64(out, 3, writeTime)
+      out.toByteArray
+    }
+    def encodeRow(key: Array[Byte], columns: org.apache.spark.sql.catalyst.util.ArrayData): Array[Byte] = {
+      val out = new ByteArrayOutputStream(64)
+      writeLenField(out, 1, key)
+      if (columns != null) {
+        var i = 0
+        while (i < columns.numElements()) {
+          val r = columns.getStruct(i, 3)
+          val col = encodeColumn(
+            if (r.isNullAt(0)) null else r.getBinary(0),
+            if (r.isNullAt(1)) null else r.getBinary(1),
+            if (r.isNullAt(2)) 0L else r.getLong(2))
+          out.write((2 << 3) | 2)
+          writeVarint(out, col.length.toLong)
+          out.write(col, 0, col.length)
+          i += 1
+        }
+      }
+      out.toByteArray
+    }
+    def delimit(msg: Array[Byte]): Array[Byte] = {
+      val out = new ByteArrayOutputStream(msg.length + 5)
+      writeVarint(out, msg.length.toLong)
+      out.write(msg, 0, msg.length)
+      out.toByteArray
+    }
+  }
+
+  test("the single-pass encoder writes the legacy encoder's bytes") {
+    // lengths on both sides of the 1/2/3-byte varint boundaries, for
+    // fields, Column messages and whole frames; null and empty fields;
+    // zero, negative and null write times; null keys and column lists
+    val genLen: Gen[Int] = Gen.frequency(
+      4 -> Gen.chooseNum(0, 8),
+      2 -> Gen.oneOf(125, 126, 127, 128, 129),
+      1 -> Gen.oneOf(16380, 16381, 16382, 16383, 16384, 16385))
+    val genField: Gen[Array[Byte]] = Gen.frequency(
+      1 -> Gen.const(null),
+      1 -> Gen.const(Array.emptyByteArray),
+      6 -> genLen.map(n => Array.tabulate(n)(i => (i * 31).toByte)))
+    val genTime: Gen[Any] = Gen.oneOf(Gen.const(null), Gen.const(0L),
+      Gen.chooseNum(Long.MinValue, -1L), Gen.chooseNum(1L, Long.MaxValue))
+    val genCell = for { n <- genField; v <- genField; t <- genTime }
+      yield new GenericInternalRow(Array[Any](n, v, t))
+    val gen = for {
+      k <- genField
+      cells <- Gen.chooseNum(0, 6).flatMap(Gen.listOfN(_, genCell))
+      nullCols <- Gen.frequency(9 -> false, 1 -> true)
+    } yield (k, if (nullCols) null else new GenericArrayData(cells.toArray[Any]))
+    check(Prop.forAll(gen) { case (k, cols) =>
+      val legacy = Legacy.encodeRow(k, cols)
+      (ProtoWire.encodeRow(k, cols) sameElements legacy) :| "encodeRow" &&
+        (ProtoWire.delimit(legacy) sameElements Legacy.delimit(legacy)) :| "delimit" &&
+        (ProtoWire.encodeDelimited(k, cols) sameElements Legacy.delimit(legacy)) :| "encodeDelimited"
     })
   }
 }
