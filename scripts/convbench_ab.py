@@ -16,7 +16,10 @@ its own engine on its first run.
 For each end-to-end metric of BENCHMARK.json the script prints both
 arms' medians, the change in the median, the parent's IQR / median, the
 pairs the change won, and whether the median moved by more than the
-parent's IQR; then each arm's failed operations and failed runs.
+parent's IQR; then the same for the numeric latencies and rates of
+run.py's `detail` line that the workload reports (erase, get and range
+latencies have no end-to-end metric); then each arm's failed operations
+and failed runs.
 """
 import argparse
 import json
@@ -27,6 +30,11 @@ import sys
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# numeric fields of the `detail` line tabulated next to the metrics
+DETAIL = [{"name": n, "better": "higher" if n.endswith("_per_s") else "lower"}
+          for n in ("append_p50_ms", "erase_p50_ms", "get_p50_ms",
+                    "range_p50_ms", "scan_rows_per_s")]
 
 
 def seeds_of(spec):
@@ -41,7 +49,8 @@ def seeds_of(spec):
 
 
 def run_arm(root, workload, seed, seconds):
-    """One convbench run in checkout `root`: its result object, or None."""
+    """One convbench run in checkout `root`: its result object, with the
+    `detail` line's fields under "detail", or None."""
     cmd = [sys.executable, os.path.join("convbench", "run.py"),
            "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", "0"]
@@ -52,9 +61,18 @@ def run_arm(root, workload, seed, seconds):
         sys.stderr.write(proc.stderr[-2000:])
         return None
     try:
-        return json.loads(lines[-1])
+        result = json.loads(lines[-1])
     except ValueError:
         return None
+    result["detail"] = {}
+    for ln in lines[:-1]:
+        try:
+            obj = json.loads(ln)
+        except ValueError:
+            continue
+        if isinstance(obj, dict) and isinstance(obj.get("detail"), dict):
+            result["detail"] = obj["detail"]
+    return result
 
 
 def quartiles(xs):
@@ -64,13 +82,23 @@ def quartiles(xs):
     return q[0], q[2]
 
 
-def table(metrics, results):
+def metric_value(run, name):
+    m = run["metrics"].get(name)
+    return m["value"] if m else None
+
+
+def detail_value(run, name):
+    v = run["detail"].get(name)
+    return v if isinstance(v, (int, float)) and not isinstance(v, bool) else None
+
+
+def table(metrics, results, value=metric_value):
     """Rows of the summary for the metrics both arms reported."""
     rows = []
     for m in metrics:
-        pairs = [(p["metrics"][m["name"]]["value"], c["metrics"][m["name"]]["value"])
-                 for p, c in results
-                 if p and c and m["name"] in p["metrics"] and m["name"] in c["metrics"]]
+        pairs = [(value(p, m["name"]), value(c, m["name"]))
+                 for p, c in results if p and c]
+        pairs = [(a, b) for a, b in pairs if a is not None and b is not None]
         if not pairs:
             continue
         par = [p for p, _ in pairs]
@@ -83,7 +111,7 @@ def table(metrics, results):
             "metric": m["name"], "parent": pm, "change": cm,
             "delta": (cm - pm) / pm if pm else 0.0,
             "parent_iqr_over_median": (q3 - q1) / pm if pm else 0.0,
-            "won": won, "pairs": len(pairs), "bound": m["bound"],
+            "won": won, "pairs": len(pairs), "bound": m.get("bound"),
             "beyond_parent_iqr": abs(cm - pm) > (q3 - q1)})
     return rows
 
@@ -129,13 +157,15 @@ def main():
                            cwd=ROOT, check=False)
 
     rows = table(bench["end_to_end"], results)
+    detail_rows = table(DETAIL, results, detail_value)
     print(f"{args.workload}: {len(results)} pairs, seeds {args.seeds}, {seconds} s per run")
     print(f"{'metric':26} {'parent':>12} {'change':>12} {'delta':>8} "
           f"{'p.IQR/med':>9} {'won':>6} {'bound':>6}  >IQR")
-    for r in rows:
+    for r in rows + detail_rows:
+        bound = f"{r['bound']:6.2f}" if r["bound"] is not None else f"{'-':>6}"
         print(f"{r['metric']:26} {r['parent']:12.4g} {r['change']:12.4g} "
               f"{r['delta']:+8.1%} {r['parent_iqr_over_median']:9.1%} "
-              f"{r['won']:>3}/{r['pairs']:<2} {r['bound']:6.2f}  "
+              f"{r['won']:>3}/{r['pairs']:<2} {bound}  "
               f"{'yes' if r['beyond_parent_iqr'] else 'no'}")
     for i, arm in enumerate(("parent", "change")):
         runs = [pair[i] for pair in results]
@@ -149,7 +179,7 @@ def main():
         with open(args.json, "w") as fh:
             json.dump({"workload": args.workload, "seeds": seeds_of(args.seeds),
                        "pairs": [{"parent": p, "change": c} for p, c in results],
-                       "summary": rows}, fh, indent=1)
+                       "summary": rows, "detail_summary": detail_rows}, fh, indent=1)
 
 
 if __name__ == "__main__":

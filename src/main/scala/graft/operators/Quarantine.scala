@@ -87,7 +87,7 @@ object Quarantine {
         else {
           val p = new org.apache.hadoop.fs.Path(out, e.name)
           val cuts = graft.sources.SplitSidecar
-            .read(p.getFileSystem(conf), p)
+            .read(ProtoZstFiles.fs(p, conf), p)
             .map(_.map(_._1).filter(o => o > 0 && o < e.bytes))
             .getOrElse(Array.empty[Long])
           if (cuts.isEmpty) Seq((0L, -1L))
@@ -145,7 +145,7 @@ object Quarantine {
           val (rows, cells, good, broken) =
             try {
               val p = new org.apache.hadoop.fs.Path(out, name)
-              val fs = p.getFileSystem(conf)
+              val fs = ProtoZstFiles.fs(p, conf)
               val st = fs.open(p)
               try {
                 if (start > 0L) st.seek(start)
@@ -200,7 +200,7 @@ object Quarantine {
         .mode("append").save(out)
       val conf = ProtoZstFiles.hadoopConf()
       val dirPath = new org.apache.hadoop.fs.Path(out)
-      val fs = dirPath.getFileSystem(conf)
+      val fs = ProtoZstFiles.fs(dirPath, conf)
       val tag = "-k" + RotPrefix.getBytes("UTF-8")
         .map(b => f"${b & 0xff}%02x").mkString
       val victim = GenManifest.read(out, conf).get.dataEntries

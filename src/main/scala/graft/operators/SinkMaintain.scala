@@ -84,7 +84,7 @@ object SinkMaintain {
       s"staging prefix $stagingPrefix is not in StagingPrefixes: its " +
         "crash leftovers would outlive every vacuum")
     val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf)
+    val fs = ProtoZstFiles.fs(dirPath, conf)
     val runId = java.util.UUID.randomUUID().toString.replace("-", "")
     val staging = new Path(dirPath, stagingPrefix + runId)
     write(staging.toString)
@@ -119,7 +119,7 @@ object SinkMaintain {
       retired: Seq[GenManifest.Entry],
       adopted: Seq[GenManifest.Entry] = Vector.empty): Unit = {
     val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf)
+    val fs = ProtoZstFiles.fs(dirPath, conf)
     GenManifest.replace(dir, conf, retired.map(_.name).toSet, adopted)
     MaintainHooks.afterReplace()
     retired.foreach { e =>
@@ -314,7 +314,7 @@ object SinkMaintain {
       graceMs: Long = 24L * 3600 * 1000): Int = {
     val conf = graft.sources.ProtoZstFiles.hadoopConf()
     val dirPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = dirPath.getFileSystem(conf)
+    val fs = ProtoZstFiles.fs(dirPath, conf)
     graft.sources.GenManifest.read(outDir, conf) match {
       case None => 0 // no manifest — listing IS the table; nothing is garbage
       case Some(snap) =>

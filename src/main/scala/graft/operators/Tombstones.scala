@@ -65,7 +65,7 @@ object Tombstones {
       s"eraseKeys requires a manifest-governed directory with a " +
         s"committed snapshot: $dir")
     val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirPath.getFileSystem(conf)
+    val fs = ProtoZstFiles.fs(dirPath, conf)
     // dedupe + unsigned sort: the file doubles as the scan's anti-set,
     // and sorted keys give the entry a true min/max range for free —
     // purge then range-prunes data files against it like any other
@@ -118,7 +118,7 @@ object Tombstones {
       olderThanUs: Long = Long.MaxValue): (Int, Int) = {
     val conf = ProtoZstFiles.hadoopConf()
     val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf)
+    val fs = ProtoZstFiles.fs(dirPath, conf)
     val snap = GenManifest.read(dir, conf).getOrElse(
       throw new IllegalStateException(
         s"purge requires a manifested directory: $dir"))

@@ -34,7 +34,7 @@ object GraftBucket {
   def readSpec(path: String, conf: org.apache.hadoop.conf.Configuration): Option[Int] =
     try {
       val p = new Path(path, BucketsFile)
-      val fs = p.getFileSystem(conf)
+      val fs = ProtoZstFiles.fs(p, conf)
       if (!fs.exists(p)) None
       else {
         val in = fs.open(p)
@@ -46,7 +46,7 @@ object GraftBucket {
   def writeSpec(path: String, n: Int, conf: org.apache.hadoop.conf.Configuration): Unit = {
     require(n > 0, s"bucket count must be positive: $n")
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
+    val fs = ProtoZstFiles.fs(dir, conf)
     fs.mkdirs(dir)
     val os = fs.create(new Path(dir, BucketsFile), true)
     try os.write(s"$n\n".getBytes("UTF-8")) finally os.close()
@@ -114,7 +114,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog {
     val dir = path(ident)
     val conf = ProtoZstFiles.hadoopConf()
     val p = new Path(dir)
-    if (!p.getFileSystem(conf).exists(p))
+    if (!ProtoZstFiles.fs(p, conf).exists(p))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         Seq(catName, ident.name()))
     new ProtoZstTable(dir, GraftBucket.readSpec(dir, conf), viaCatalog = true)
@@ -128,7 +128,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog {
     val conf = ProtoZstFiles.hadoopConf()
     partitions.toSeq match {
       case Seq() =>
-        new Path(dir).getFileSystem(conf).mkdirs(new Path(dir))
+        val p = new Path(dir)
+        ProtoZstFiles.fs(p, conf).mkdirs(p)
       case Seq(t) if t.name() == "bucket" =>
         val n = t.arguments().collectFirst {
           case l: org.apache.spark.sql.connector.expressions.Literal[_] =>

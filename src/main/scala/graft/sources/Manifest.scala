@@ -203,7 +203,7 @@ object GenManifest {
     */
   def mark(dir: String, conf: org.apache.hadoop.conf.Configuration): Unit = {
     val md = manifestDir(dir)
-    val fs = md.getFileSystem(conf)
+    val fs = ProtoZstFiles.fs(md, conf)
     if (!fs.exists(md)) {
       // Refuse to take governance over a directory that already holds
       // UNTRACKED data files: the first snapshot starts from an empty
@@ -232,7 +232,7 @@ object GenManifest {
   def governed(dir: String,
       conf: org.apache.hadoop.conf.Configuration): Boolean = {
     val md = manifestDir(dir)
-    try md.getFileSystem(conf).exists(md)
+    try ProtoZstFiles.fs(md, conf).exists(md)
     catch { case _: java.io.FileNotFoundException => false }
   }
 
@@ -417,7 +417,7 @@ object GenManifest {
     var attempts = 0
     while (attempts < 5) {
       attempts += 1
-      val fs = md.getFileSystem(conf)
+      val fs = ProtoZstFiles.fs(md, conf)
       listLog(fs, md) match {
         case None => return None
         case Some(lv) if lv.isEmpty => return None
@@ -453,7 +453,7 @@ object GenManifest {
       version: Long): Snapshot = {
     MetaIO.manifestReads.incrementAndGet()
     val md = manifestDir(dir)
-    val fs = md.getFileSystem(conf)
+    val fs = ProtoZstFiles.fs(md, conf)
     var attempts = 0
     while (attempts < 5) {
       attempts += 1
@@ -586,10 +586,7 @@ object GenManifest {
     * stores arbitrate the final link/rename themselves.
     */
   private def withDirLock[T](fs: FileSystem, md: Path)(f: => T): T = {
-    val local = "file" == md.toUri.getScheme ||
-      fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-      fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-    if (!local) f
+    if (!ProtoZstFiles.isLocal(fs.getUri)) f
     else {
       // monitor key is the REAL path: two spellings of one directory
       // (a symlinked working dir) must share the JVM monitor, or both
@@ -651,9 +648,7 @@ object GenManifest {
     * the winner of version v ever writes checkpoint v).
     */
   private def publish(fs: FileSystem, tmp: Path, target: Path): Boolean =
-    if ("file" == target.toUri.getScheme ||
-        fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-        fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem])
+    if (ProtoZstFiles.isLocal(fs.getUri))
       try {
         java.nio.file.Files.createLink(
           java.nio.file.Paths.get(target.toUri.getPath),
@@ -688,7 +683,7 @@ object GenManifest {
       conf: org.apache.hadoop.conf.Configuration)(
       step: Snapshot => Option[(Snapshot, Delta)]): Option[Snapshot] = {
     val md = manifestDir(dir)
-    val fs = md.getFileSystem(conf)
+    val fs = ProtoZstFiles.fs(md, conf)
     fs.mkdirs(md)
     var attempts = 0
     while (true) {
@@ -868,7 +863,7 @@ object TombstoneKeys {
     files.foreach { case (f, _) =>
       val p = new Path(f)
       val in = new java.io.BufferedInputStream(new ZstdInputStream(
-        p.getFileSystem(conf).open(p)), 64 << 10)
+        ProtoZstFiles.fs(p, conf).open(p)), 64 << 10)
       try graft.functions.ProtoWire
         .decodeStream(in, wantColumns = false, _ => true)
         .foreach(r => keys += r.key)
@@ -965,7 +960,7 @@ object ManifestIndex {
     def parent(f: String): String = new Path(f).getParent.toString
     val qualified = paths.map { p =>
       val path = new Path(p)
-      path.getFileSystem(conf).makeQualified(path).toString
+      ProtoZstFiles.fs(path, conf).makeQualified(path).toString
     }.distinct
     val (named, roots) = qualified.partition(p =>
       p.endsWith(".proto.zst") && committed(parent(p)).contains(p))
@@ -988,7 +983,7 @@ object ManifestIndex {
       conf: org.apache.hadoop.conf.Configuration): Array[FileMeta] =
     files.map { case (f, bytes) =>
       val p = new Path(f)
-      RangeSidecar.read(p.getFileSystem(conf), p) match {
+      RangeSidecar.read(ProtoZstFiles.fs(p, conf), p) match {
         case Some(r) =>
           val ranged = r.normalized && r.min.nonEmpty
           FileMeta(f, bytes, r.count, ranged && r.sorted,

@@ -91,7 +91,7 @@ class ProtoZstWriterFactory(dir: String, buckets: Option[Int] = None,
     new DataWriter[InternalRow] {
       import org.apache.hadoop.fs.Path
       private val dirPath = new Path(dir)
-      private lazy val fs = dirPath.getFileSystem(conf.value)
+      private lazy val fs = ProtoZstFiles.fs(dirPath, conf.value)
 
       /** One output file: lazily opened stream + running key min/max
         * (unsigned lexicographic — BinaryType's order) for the range
@@ -281,7 +281,8 @@ class ProtoZstWriterFactory(dir: String, buckets: Option[Int] = None,
             }
             // drop a checkpoint landing exactly at EOF (nothing after
             // it to slice); write the split sidecar before the data
-            // rename, same visibility order as the range sidecar
+            // rename, same visibility order as the range sidecar. The
+            // rename keeps the length, so this is the entry's too.
             val eof = fs.getFileStatus(st.tmpFile).getLen
             // also drop a trailing boundary no row ever followed (row
             // count an exact multiple of splitFrameRows): the zstd
@@ -301,8 +302,7 @@ class ProtoZstWriterFactory(dir: String, buckets: Option[Int] = None,
               Sidecars.delete(fs, st.finalFile)
               throw new java.io.IOException(s"rename failed: ${st.tmpFile}")
             }
-            GenManifest.Entry(st.name,
-              fs.getFileStatus(st.finalFile).getLen, st.n, st.sorted,
+            GenManifest.Entry(st.name, eof, st.n, st.sorted,
               if (st.minKey == null) "" else GenManifest.hex(st.minKey),
               if (st.minKey == null) "" else GenManifest.hex(st.maxKey),
               if (st.minT <= st.maxT) Some((st.minT, st.maxT)) else None)

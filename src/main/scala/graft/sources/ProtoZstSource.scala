@@ -128,7 +128,7 @@ class ProtoZstTable(paths: Seq[String], buckets: Option[Int] = None,
     def rollback(msgs: Array[WriterCommitMessage]): Unit = {
       val dirPath = new org.apache.hadoop.fs.Path(dir)
       val conf = ProtoZstFiles.hadoopConf()
-      val fs = dirPath.getFileSystem(conf)
+      val fs = ProtoZstFiles.fs(dirPath, conf)
       val published: Set[String] = GenManifest.read(dir, conf)
         .map(_.entries.iterator.map(_.name).toSet).getOrElse(Set.empty)
       msgs.foreach {
@@ -530,21 +530,59 @@ case class ProtoZstAggPartition(values: Array[Any]) extends InputPartition
   * `Writable` but not `Serializable`) — lets driver-built reader/writer
   * factories carry the session's fs.* settings to executors. The
   * standard connector pattern (Spark's own utility is `private[spark]`).
+  * Ships the raw (key, value) pairs of `Configuration.iterator()` and
+  * `set`s them back — what `readFields` does too, without
+  * `Configuration.write`'s per-property gzipped provenance, which made
+  * a session conf cost milliseconds per task to decode.
   */
 class SerializableHadoopConf(@transient var value: org.apache.hadoop.conf.Configuration)
     extends Serializable {
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
     out.defaultWriteObject()
-    value.write(out)
+    val pairs = value.iterator().asScala
+      .flatMap(e => Iterator(e.getKey, e.getValue)).toArray
+    out.writeObject(pairs)
   }
   private def readObject(in: java.io.ObjectInputStream): Unit = {
     in.defaultReadObject()
+    val pairs = in.readObject().asInstanceOf[Array[String]]
     value = new org.apache.hadoop.conf.Configuration(false)
-    value.readFields(in)
+    var i = 0
+    while (i < pairs.length) {
+      value.set(pairs(i), pairs(i + 1))
+      i += 2
+    }
   }
 }
 
-/** Sorted `.proto.zst` listing — the shared O1 source-discovery step.
+/** The local filesystem's raw layer with Hadoop's `setPermission`
+  * replaced for plain rwx modes: without libhadoop the stock one forks
+  * a `chmod` process, and every create and mkdir calls it (twice per
+  * checksummed file: data and `.crc`). The mode set is the same; a
+  * mode with the sticky bit still takes Hadoop's own path.
+  */
+private[sources] final class NioModeRawLocalFileSystem
+    extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import java.nio.file.attribute.PosixFilePermission._
+  // bit i of the octal mode, lowest first
+  private val bits = Array(OTHERS_EXECUTE, OTHERS_WRITE, OTHERS_READ,
+    GROUP_EXECUTE, GROUP_WRITE, GROUP_READ,
+    OWNER_EXECUTE, OWNER_WRITE, OWNER_READ)
+  override def setPermission(p: org.apache.hadoop.fs.Path,
+      perm: org.apache.hadoop.fs.permission.FsPermission): Unit = {
+    val mode = perm.toShort.toInt
+    if ((mode & ~0x1ff) != 0) super.setPermission(p, perm)
+    else {
+      val set = java.util.EnumSet.noneOf(
+        classOf[java.nio.file.attribute.PosixFilePermission])
+      for (i <- bits.indices if (mode & (1 << i)) != 0) set.add(bits(i))
+      java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath, set)
+    }
+  }
+}
+
+/** Sorted `.proto.zst` listing — the shared O1 source-discovery step —
+  * and the engine's filesystem resolver ([[ProtoZstFiles.fs]]).
   * Hadoop-FS based, so a proto-zst directory can live on any filesystem
   * the session can reach (local, HDFS, S3A); paths without a scheme
   * resolve against the session's `fs.defaultFS`.
@@ -561,6 +599,43 @@ object ProtoZstFiles {
       .map(org.apache.spark.sql.graft.Shim.hadoopConf)
       .getOrElse(new org.apache.hadoop.conf.Configuration())
 
+  /** Whether `uri` (a filesystem's, or a path's with its scheme
+    * resolved) names the local filesystem: the one test behind [[fs]]
+    * and the manifest's flock and hard-link publish.
+    */
+  def isLocal(uri: java.net.URI): Boolean = "file" == uri.getScheme
+
+  /** The engine's one way to a Hadoop `FileSystem`. A local path (a
+    * `file:` one, or a scheme-less one under a local `fs.defaultFS`)
+    * gets one per-JVM `LocalFileSystem` over
+    * [[NioModeRawLocalFileSystem]]: the same `.crc` checksums, modes
+    * and umask as stock, set without forking. It is built from the
+    * first caller's conf, as Hadoop's own cache would be. Every other
+    * scheme falls through to `path.getFileSystem(conf)`.
+    */
+  def fs(path: Path, conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.hadoop.fs.FileSystem = {
+    val uri = path.toUri
+    if (!isLocal(if (uri.getScheme != null) uri
+        else org.apache.hadoop.fs.FileSystem.getDefaultUri(conf)))
+      path.getFileSystem(conf)
+    else {
+      var l = localFs
+      if (l == null) synchronized {
+        l = localFs
+        if (l == null) {
+          l = new org.apache.hadoop.fs.LocalFileSystem(
+            new NioModeRawLocalFileSystem)
+          l.setConf(conf)
+          l.initialize(java.net.URI.create("file:///"), conf)
+          localFs = l
+        }
+      }
+      l
+    }
+  }
+  @volatile private var localFs: org.apache.hadoop.fs.LocalFileSystem = _
+
   def list(path: String, conf: org.apache.hadoop.conf.Configuration): Array[String] =
     listWithSizes(path, conf).map(_._1)
 
@@ -574,7 +649,7 @@ object ProtoZstFiles {
       conf: org.apache.hadoop.conf.Configuration): Array[(String, Long)] = {
     MetaIO.dataListings.incrementAndGet()
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
+    val fs = ProtoZstFiles.fs(p, conf)
     if (!fs.exists(p)) Array.empty
     else {
       val st = fs.getFileStatus(p)
@@ -836,7 +911,7 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
     pointKeys.fold(Map.empty[String, (Array[InputPartition], Int)]) { keys =>
       plannedMeta.iterator.flatMap { m =>
         val p = new org.apache.hadoop.fs.Path(m.path)
-        val fs = p.getFileSystem(conf.value)
+        val fs = ProtoZstFiles.fs(p, conf.value)
         val bloom = BloomSidecar.read(fs, p)
         bloom.foreach(_ => MetaIO.bloomProbes.incrementAndGet())
         if (bloom.exists(b => !keys.exists(BloomSidecar.mightContain(b, _)))) {
@@ -941,7 +1016,7 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
     */
   private def sliced(m: FileMeta): Array[InputPartition] = {
     val p = new org.apache.hadoop.fs.Path(m.path)
-    val cuts = SplitSidecar.read(p.getFileSystem(conf.value), p)
+    val cuts = SplitSidecar.read(ProtoZstFiles.fs(p, conf.value), p)
       .map(_.map(_._1).filter(o => o > 0 && o < m.bytes))
       .getOrElse(Array.empty[Long])
     if (cuts.isEmpty)
@@ -1234,7 +1309,7 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
     */
   private def frameRanges(meta: FileMeta): Iterator[(Long, Long)] = {
     val p = new org.apache.hadoop.fs.Path(meta.path)
-    val cuts = SplitSidecar.read(p.getFileSystem(conf.value), p)
+    val cuts = SplitSidecar.read(ProtoZstFiles.fs(p, conf.value), p)
       .fold(Array.empty[Long])(_.map(_._1).filter(_ > 0L))
     (0L +: cuts).iterator.zip(cuts.iterator ++ Iterator(-1L))
   }
@@ -1263,7 +1338,7 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
       expect: Long) extends Rows {
     private val in: java.io.InputStream = {
       val p = new org.apache.hadoop.fs.Path(file)
-      val raw = p.getFileSystem(conf.value).open(p)
+      val raw = ProtoZstFiles.fs(p, conf.value).open(p)
       try {
         if (start > 0) raw.seek(start)
         // a range reads exactly its bytes: the cut points are frame
