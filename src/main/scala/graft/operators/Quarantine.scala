@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ProtoWire
-import graft.sources.{GenManifest, ProtoZstFiles}
+import graft.sources.{FileIndex, GenManifest, ProtoZstFiles}
 
 /** CORRUPT-FILE QUARANTINE — the reference's `markSuspect` read path
   * (`SSTableReaderPatched.java:248-253`: a file the reader cannot
@@ -69,11 +69,11 @@ object Quarantine {
 
   /** The salvage task list: one (name, attested, slice idx, start,
     * end) per unit of work. Files at or under `sliceBytes` (and files
-    * without a usable `.split` sidecar) get ONE whole-file task
-    * (end = −1); oversized files fan into frame-aligned byte-range
-    * slices cut exactly like the scan's parallel read
-    * (`ProtoZstScan.sliced` — sidecar offsets accumulated to
-    * ~`sliceBytes` ranges). Sidecar reads happen at PLAN time on the
+    * without a usable index) get ONE whole-file task (end = −1);
+    * oversized files fan into frame-aligned byte-range slices cut by
+    * the scan's own rule ([[FileIndex.slices]]), whose final slice
+    * reads to physical EOF — the verdict must not depend on which path
+    * the planner picked. Index reads happen at PLAN time on the
     * driver, the same metadata-read budget the normal scan spends:
     * salvage must never hand one task (and one decode) a multi-GB
     * legacy file — those are exactly the files it exists to rescue.
@@ -82,38 +82,16 @@ object Quarantine {
       sliceBytes: Long): Seq[(String, Long, Int, Long, Long)] = {
     val conf = ProtoZstFiles.hadoopConf()
     snap.dataEntries.flatMap { e =>
-      val slices: Seq[(Long, Long)] =
-        if (e.bytes <= sliceBytes) Seq((0L, -1L))
-        else {
-          val p = new org.apache.hadoop.fs.Path(out, e.name)
-          val cuts = graft.sources.SplitSidecar
-            .read(ProtoZstFiles.fs(p, conf), p)
-            .map(_.map(_._1).filter(o => o > 0 && o < e.bytes))
-            .getOrElse(Array.empty[Long])
-          if (cuts.isEmpty) Seq((0L, -1L))
-          else {
-            val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-            var start = 0L
-            cuts.foreach { c =>
-              if (c - start >= sliceBytes) { acc += ((start, c)); start = c }
-            }
-            // the FINAL slice is unbounded (end = −1): it reads to
-            // physical EOF, not to the manifest's attested e.bytes, so
-            // bytes APPENDED past the attested length decode (and rot)
-            // exactly as the whole-file walk sees them — the verdict
-            // must not depend on which path the planner picked
-            acc += ((start, -1L))
-            if (acc.length == 1) Seq((0L, -1L)) else acc.toSeq
-          }
-        }
-      slices.zipWithIndex.map { case ((s, en), i) => (e.name, e.count, i, s, en) }
+      val p = new org.apache.hadoop.fs.Path(out, e.name)
+      FileIndex.slices(ProtoZstFiles.fs(p, conf), p, e.bytes, sliceBytes, -1L)
+        .zipWithIndex.map { case ((s, en), i) => (e.name, e.count, i, s, en) }
     }
   }
 
   /** File-grain salvage verdicts for a manifested generation: one row
     * per data file — (name, rows, cells, good_bytes, suspect).
     * Distributed one-task-per-file, EXCEPT files above `sliceBytes`
-    * with a `.split` sidecar, which fan into per-slice tasks
+    * with recorded frame boundaries, which fan into per-slice tasks
     * ([[salvageTasks]]) and merge back to file grain with the
     * whole-file walk's first-bad-byte semantics: slices strictly
     * before the first broken one count fully, the broken slice
@@ -121,7 +99,7 @@ object Quarantine {
     * after is not counted — bit-identical to a single-task walk of
     * the same bytes, proven by QuarantineSpec's slice-vs-whole cross
     * check. The driver touches only the manifest + oversized files'
-    * split sidecars (metadata); the file-grain merge is a window +
+    * indexes (metadata); the file-grain merge is a window +
     * aggregation over a file-count-sized frame (KBs per 100 TB).
     */
   def salvageVerdicts(spark: SparkSession, out: String,
@@ -139,7 +117,7 @@ object Quarantine {
         val conf = ProtoZstFiles.hadoopConf()
         it.map { case (name, attested, idx, start, end) =>
           // salvage NEVER throws: a file that cannot even be opened or
-          // seeked (vanished bytes, a file shrunk past its sidecar's
+          // seeked (vanished bytes, a file shrunk past its index's
           // recorded offsets — exactly the damage salvage exists for)
           // is a maximally-suspect verdict, not a task failure
           val (rows, cells, good, broken) =
@@ -189,7 +167,7 @@ object Quarantine {
   /** q251 fixture: the corpus written PREFIX-SPLIT (one file per
     * leading key byte, content-keyed so file membership is a pure
     * function of the data), then the [[RotPrefix]] file overwritten
-    * with non-zstd garbage in place — manifest, sidecars and every
+    * with non-zstd garbage in place — manifest, indexes and every
     * other file untouched.
     */
   private val quarantineFixture = SessionFixture("quarantine") {

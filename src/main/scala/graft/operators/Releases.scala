@@ -47,7 +47,7 @@ object Releases {
     * commit in ONE manifest version bump, so a release is visible
     * atomically or not at all (the reference's one-file-per-unit
     * contract, `Runner.java:75-82,147-156`, at training-release
-    * granularity). Each file is key-sorted, so its range sidecar
+    * granularity). Each file is key-sorted, so its index
     * attests the order and a loader streams positions 1..n without
     * sorting; ManifestSpec pins file count, per-file ordering,
     * range/group agreement, and the single version bump.
@@ -412,7 +412,7 @@ object Releases {
 
   /** Sequence rows in sink schema, keyed `tSS:qNNNNNNNN` — key order
     * IS loader order, so each release file streams sequences without
-    * sorting and its range sidecar attests it.
+    * sorting and its index attests it.
     */
   private[graft] def packRelKeyed(seqs: DataFrame): DataFrame =
     seqs.select(

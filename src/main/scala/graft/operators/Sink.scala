@@ -164,8 +164,8 @@ object Sink {
 
   /** Range-partitioned sink fixture: nested rows written through
     * `repartitionByRange(8, key)`, so each task's file covers a
-    * contiguous, near-disjoint key range and the writer's `.range`
-    * sidecars become maximally selective. This is the layout a real
+    * contiguous, near-disjoint key range and the writer's recorded
+    * ranges become maximally selective. This is the layout a real
     * key-range workload would write (the reference's files are
     * key-sorted for the same reason).
     */
@@ -180,7 +180,7 @@ object Sink {
   /** q60: the file-SKIPPING key-range scan — q46 proves frames are
     * dropped cheaply at decode time; this proves whole FILES are
     * dropped at plan time. The sink records each file's key min/max at
-    * commit (manifest entry and `.range` sidecar); the scan plans from
+    * commit (manifest entry and per-file index); the scan plans from
     * those [[graft.sources.FileMeta]] and drops files whose range
     * provably misses the pushed predicate, so
     * a selective scan over a range-partitioned corpus never lists,
@@ -224,10 +224,10 @@ object Sink {
   /** q230: BLOOM POINT-GET — Cassandra's per-SSTable bloom-filter read
     * path (Filter.db: probe the bloom before touching the file) on the
     * engine's own format: a single-key lookup in a content-addressed
-    * multi-epoch corpus. Every sink file carries a `.bloom` sidecar
+    * multi-epoch corpus. Every sink file's index carries a bloom
     * (fixed 2^17-bit, 3-probe, filled for free at write); a pushed
     * `key =` predicate probes it on the driver while planning, so the
-    * epochs that provably lack the key cost one ~16 KB sidecar read
+    * epochs that provably lack the key cost one ~16 KB index read
     * instead of a task and a file decode. Hash keys make every file's range cover
     * the whole keyspace — the regime where the manifest's range skip
     * cannot prune and the bloom is the only thing standing between a
@@ -259,7 +259,7 @@ object Sink {
   /** q239 fixture: the WHOLE corpus as ONE key-sorted file with small
     * (64-row) zstd frames — the regime complementary to q230's: range
     * skip is powerless (one file spans everything), the bloom passes
-    * (the key IS present), and only the `.split` v2 frame-key index
+    * (the key IS present), and only the index's frame keys
     * stands between a point-get and decoding the entire file.
     */
   private val seekFixture = SessionFixture("frameseek") {
@@ -466,7 +466,7 @@ object Sink {
     * completely pushed into the proto-zst source
     * ([[graft.sources.ProtoZstScanBuilder]] `pushAggregation`), which
     * answers it from the per-file stats at plan time (the manifest, or
-    * the `.range` sidecars of a directory without one): the
+    * the per-file indexes of a directory without one): the
     * whole query collapses to one precomputed row; zero files opened,
     * zero frames decompressed, zero aggregation executed. The analog
     * of parquet-footer `count()` and of the reference keeping row
@@ -759,7 +759,7 @@ object Sink {
 
   /** q223: SLICED PARALLEL READ of one oversized file — the writer
     * ends its zstd frame every `splitFrameRows` rows and records the
-    * frame offsets in a `.split` sidecar; the scan (here forced with
+    * frame offsets in the file's index; the scan (here forced with
     * `splitFileBytes=1` — production uses the 128 MB default) turns
     * ONE file into many frame-aligned byte-range partitions, each
     * decoding independently. This removes the engine's last

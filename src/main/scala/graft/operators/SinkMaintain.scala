@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{GenManifest, ProtoZstFiles, Sidecars}
+import graft.sources.{FileIndex, GenManifest, ProtoZstFiles}
 
 /** MANIFEST-LIFECYCLE MAINTENANCE for the proto-zst sink — the
   * operations that rewrite or retire committed files behind ONE atomic
@@ -102,7 +102,7 @@ object SinkMaintain {
           s"maintenance aborted: rename refused for $src -> $dst; table " +
             "unchanged (manifest not committed), staged files retained " +
             s"under $staging")
-      Sidecars.move(fs, src, dst)
+      FileIndex.move(fs, src, dst)
       e.copy(name = dst.getName)
     }
     retire(dir, conf, retired, adopted)
@@ -125,7 +125,7 @@ object SinkMaintain {
     retired.foreach { e =>
       val p = new Path(dirPath, e.name)
       fs.delete(p, false)
-      Sidecars.delete(fs, p)
+      FileIndex.delete(fs, p)
     }
   }
 
@@ -142,7 +142,7 @@ object SinkMaintain {
     * explicit multi-path proto-zst scan (one partition per file, never
     * touching the already-packed files), `repartitionByRange(bins,
     * key)` re-clusters them — each output file covers a contiguous key
-    * range, so the rewritten `.range` sidecars stay maximally
+    * range, so the rewritten files' key ranges stay maximally
     * selective for q60's plan-time skipping — and the [[stagedSwap]]
     * commits them under `packed-` names. Tombstone entries are small
     * by nature but never packed (their rows are deleted KEYS).
@@ -326,7 +326,7 @@ object SinkMaintain {
             !committed(n) && s.getModificationTime < cutoff
           if (orphanData) {
             fs.delete(s.getPath, false)
-            Sidecars.delete(fs, s.getPath)
+            FileIndex.delete(fs, s.getPath)
           }
           // every maintenance op stages under one of the ENGINE'S
           // dot-prefixes below and every writer task under a `._tmp`
@@ -451,8 +451,8 @@ object SinkMaintain {
     * is lossless: the flattened cells from the packed files must
     * hash-match the exact same oracle as q30's round trip over the
     * unpacked fixture. The spec additionally asserts the file count
-    * dropped and every packed file still carries a selective `.range`
-    * sidecar (so q60-style plan-time skipping keeps working after
+    * dropped and every packed file still carries a selective index
+    * (so q60-style plan-time skipping keeps working after
     * maintenance).
     */
   def optimizedRead(spark: SparkSession, dir: String): DataFrame = {

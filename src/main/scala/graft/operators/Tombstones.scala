@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ProtoWire
-import graft.sources.{BloomSidecar, GenManifest, ProtoZstFiles}
+import graft.sources.{FileIndex, GenManifest, ProtoZstFiles}
 
 /** EQUALITY-DELETE TOMBSTONES — the reference domain's deletion model
   * (Cassandra writes a tombstone cell and lets compaction purge it
@@ -28,7 +28,7 @@ import graft.sources.{BloomSidecar, GenManifest, ProtoZstFiles}
   *     metadata COUNT can never overcount.
   *   - [[purge]] — PHYSICAL erasure, the gc_grace compaction: rewrite
   *     ONLY the data files whose attested key range (refined by their
-  *     `.bloom` sidecars) can hold a deleted key, drop every tombstone
+  *     index's bloom) can hold a deleted key, drop every tombstone
   *     entry, ONE atomic manifest swap. Bytes are gone after purge;
   *     the q148 copy-on-write discipline (staged unreferenced names,
   *     commit last, originals deleted after) keeps readers on the old
@@ -96,10 +96,10 @@ object Tombstones {
   /** PHYSICAL purge of ripe tombstones: rewrite the data files that
     * can hold a deleted key, drop the purged tombstone entries, one
     * atomic swap. File selection is two-stage and reads no data —
-    * attested key-range intersection first, then a `.bloom` sidecar
-    * probe per surviving candidate (blooms have no false negatives, so
-    * a file every key misses is provably clean and spared the
-    * rewrite). Returns (data files rewritten, tombstone files
+    * attested key-range intersection first, then a bloom probe of the
+    * index of each surviving candidate (blooms have no false
+    * negatives, so a file every key misses is provably clean and
+    * spared the rewrite). Returns (data files rewritten, tombstone files
     * dropped); (0, 0) when nothing is ripe.
     *
     * `olderThanUs` is the gc_grace cutoff: only tombstones stamped
@@ -137,10 +137,8 @@ object Tombstones {
         compareUnsigned(k, e.min) >= 0 && compareUnsigned(k, e.max) <= 0)
     }
     val touched = ranged.filter { e =>
-      val bloom =
-        try BloomSidecar.read(fs, new Path(dirPath, e.name))
-        catch { case _: Exception => None }
-      bloom.forall(b => deleted.exists(BloomSidecar.mightContain(b, _)))
+      FileIndex.read(fs, new Path(dirPath, e.name))
+        .forall(i => deleted.exists(i.mightContain))
     }
     // the rewritten originals AND the tombstone files retire in one
     // commit: after it, neither the erased rows' bytes nor the erased

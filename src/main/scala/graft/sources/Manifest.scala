@@ -14,9 +14,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 object MetaIO {
   /** `ProtoZstFiles.list` calls (one per data-directory listStatus). */
   val dataListings = new AtomicLong
-  /** `.range` sidecar opens: the listing view's one read per listed
-    * file that no manifest commits ([[ManifestIndex.fromSidecars]]).
-    * A governed read opens none.
+  /** [[FileIndex]] reads by the listing view: one per listed file
+    * that no manifest commits ([[ManifestIndex.fromSidecars]]). A
+    * governed read makes none.
     */
   val sidecarReads = new AtomicLong
   /** `GenManifest.read` calls (one tiny-dir listing + O(1) small opens). */
@@ -30,16 +30,16 @@ object MetaIO {
     * [[GenManifest.CheckpointEvery]] commits, zstd-compressed).
     */
   val checkpointBytes = new AtomicLong
-  /** `.bloom` sidecar probes on point-lookup scans — made on the
-    * DRIVER while planning, one per range- and time-surviving file
-    * (never on a range scan, never by a manifest-only plan) — and how
-    * many of those probes proved the file key-free and dropped it from
-    * the plan.
+  /** Bloom probes on point-lookup scans — made on the DRIVER while
+    * planning, one per range- and time-surviving file with a readable
+    * [[FileIndex]] (never on a range scan, never by a manifest-only
+    * plan) — and how many of those probes proved the file key-free and
+    * dropped it from the plan.
     */
   val bloomProbes = new AtomicLong
   val bloomSkips = new AtomicLong
-  /** Files a point lookup's plan seeked via the `.split` v2 frame-key
-    * index instead of decoding them whole (counted on the driver, once
+  /** Files a point lookup's plan seeked via the index's frame keys
+    * instead of decoding them whole (counted on the driver, once
     * per planned file), and the compressed bytes those seeks name for
     * reading — the spec's witness that a point read of an N-frame file
     * costs O(matching frames), not O(file).
@@ -104,7 +104,7 @@ object MetaIO {
   * publishing the next delta LAST. Directories WITHOUT a manifest
   * (foreign or legacy writers, explicit-file loads) plan from the
   * listing view, which rebuilds the same [[FileMeta]] from one listing
-  * and the per-file `.range` sidecars — absence degrades, never lies.
+  * and the per-file [[FileIndex]] — absence degrades, never lies.
   */
 object GenManifest {
   val DirName = "_graft_manifest"
@@ -239,8 +239,7 @@ object GenManifest {
   // trailing fields are ADDITIVE: readers split with an unbounded
   // limit and index only the fields they know, so an older engine
   // reads a timed manifest correctly (and a newer engine reads an
-  // old six-field line as times = None) — same vintage discipline
-  // as the sidecar's `normalized` flag
+  // old six-field line as times = None)
   private def renderEntry(sb: StringBuilder, e: Entry): Unit = {
     sb.append(e.name).append('\t').append(e.bytes).append('\t')
       .append(e.count).append('\t').append(if (e.sorted) 1 else 0)
@@ -971,23 +970,21 @@ object ManifestIndex {
   }
 
   /** The entry the writer would have committed for each listed
-    * `(path, bytes)`, from one `.range` sidecar read per file. No
-    * sidecar: count −1. A key range and `sorted` come only from a
-    * NORMALIZED sidecar with a non-empty min — the manifest's
-    * [[GenManifest.Entry.hasRange]] convention; a v1 range may exclude
-    * null-key rows that read back as empty keys (see
-    * [[RangeSidecar.Range]]), so only its count is trusted. No times,
-    * no tombstones.
+    * `(path, bytes)`, from one [[FileIndex]] read per file. No readable
+    * index: count −1, unsorted, no range. An empty min is no range —
+    * the manifest's [[GenManifest.Entry.hasRange]] convention. No
+    * times, no tombstones.
     */
   def fromSidecars(files: Seq[(String, Long)],
       conf: org.apache.hadoop.conf.Configuration): Array[FileMeta] =
     files.map { case (f, bytes) =>
       val p = new Path(f)
-      RangeSidecar.read(ProtoZstFiles.fs(p, conf), p) match {
-        case Some(r) =>
-          val ranged = r.normalized && r.min.nonEmpty
-          FileMeta(f, bytes, r.count, ranged && r.sorted,
-            Option.when(ranged)(r.min), Option.when(ranged)(r.max))
+      MetaIO.sidecarReads.incrementAndGet()
+      FileIndex.read(ProtoZstFiles.fs(p, conf), p) match {
+        case Some(i) =>
+          val ranged = i.min.nonEmpty
+          FileMeta(f, bytes, i.count, i.sorted,
+            Option.when(ranged)(i.min), Option.when(ranged)(i.max))
         case None => FileMeta(f, bytes, -1L, sorted = false, None, None)
       }
     }.toArray

@@ -22,7 +22,7 @@ import graft.functions.ProtoWire
 
 /** The proto-zst WRITE path: per-task zstd encoders with tmp+rename
   * task commit, key-prefix file rolling (`splitKeyPrefix`), per-file
-  * range sidecars and observed write-time ranges, and the job-level
+  * indexes ([[FileIndex]]) and observed write-time ranges, and the job-level
   * atomic manifest commit (batch append + streaming epochs). Split
   * from `ProtoZstSource.scala` along the read/write seam.
   */
@@ -40,7 +40,7 @@ case object ProtoZstEmptyCommit extends WriterCommitMessage
 object ProtoZstWriterFactory {
   /** Rows per zstd frame: the writer ends the frame and records a
     * checkpoint this often, making files splittable at read time (see
-    * [[SplitSidecar]]). 4096 rows keeps frames large enough that the
+    * [[FileIndex]]). 4096 rows keeps frames large enough that the
     * restart costs ~nothing in compression ratio, while a multi-GB
     * file still yields thousands of slice points. Writer option
     * `splitFrameRows` overrides (specs use tiny values to exercise
@@ -58,7 +58,7 @@ object ProtoZstWriterFactory {
   *   write: cluster rows by their group upstream (any partitioning
   *   that co-locates a group works, hash collisions included — the
   *   writer splits by CONTENT, not by task), sort within partitions by
-  *   key, and every group becomes exactly one key-sorted, sidecar-
+  *   key, and every group becomes exactly one key-sorted, index-
   *   attested file, all committed in ONE manifest version bump. This
   *   is how a training release ships one file per (epoch, shard)
   *   without a task-per-group partitioner. Mutually exclusive with
@@ -75,7 +75,7 @@ class ProtoZstWriterFactory(dir: String, buckets: Option[Int] = None,
   // Per-JOB unique token baked into every file name: (epochId,
   // partitionId, taskId) all RESTART across applications, so a second
   // app appending to the same directory would otherwise regenerate
-  // identical names and clobber previously committed files + sidecars
+  // identical names and clobber previously committed files + indexes
   // (posix rename silently replaces). Generated once on the driver at
   // factory construction and serialized to every task — the same
   // reason FileStreamSink/parquet embed a job UUID.
@@ -94,8 +94,8 @@ class ProtoZstWriterFactory(dir: String, buckets: Option[Int] = None,
       private lazy val fs = ProtoZstFiles.fs(dirPath, conf.value)
 
       /** One output file: lazily opened stream + running key min/max
-        * (unsigned lexicographic — BinaryType's order) for the range
-        * sidecar; robust to unsorted input. Unbucketed writes use a
+        * (unsigned lexicographic — BinaryType's order) for the
+        * index; robust to unsorted input. Unbucketed writes use a
         * single state; bucketed writes one per bucket this task sees
         * (the planner-clustered write sends each task whole buckets, so
         * this map stays tiny).
@@ -114,23 +114,25 @@ class ProtoZstWriterFactory(dir: String, buckets: Option[Int] = None,
         var minT = Long.MaxValue
         var maxT = Long.MinValue
         // zstd FRAME checkpoints (compressed byte offset, rows before
-        // it): the writer ends the frame every `splitFrameRows` rows,
-        // so a reader can start decoding at any recorded offset — what
-        // makes a big file SPLITTABLE into parallel slices instead of
-        // a single-partition straggler. Written as a `.split` sidecar
-        // at commit; observed free (one getPos per checkpoint).
+        // it, first key): the writer ends the frame every
+        // `splitFrameRows` rows, so a reader can start decoding at any
+        // recorded offset — what makes a big file SPLITTABLE into
+        // parallel slices instead of a single-partition straggler, and
+        // a sorted one SEEKABLE. Written into the index at commit;
+        // observed free (one getPos per checkpoint).
         var rowsInFrame = 0
-        val frames =
-          scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
+        val frames = scala.collection.mutable.ArrayBuffer.empty[FileIndex.Frame]
         // true between a frame end and the next row: that row's key is
         // the new frame's FIRST key, recorded into the pending boundary
         // (the Index.db `(key, position)` pair, one per frame)
         var needFirstKey = false
         // per-file key bloom (the Filter.db analog) — fixed 16 KB,
-        // filled for free as keys stream through; written as a
-        // `.bloom` sidecar at commit so point lookups skip whole
-        // files without decompressing them
+        // filled for free as keys stream through, so point lookups
+        // skip whole files without decompressing them
         val bloom = new Array[Long](BloomSidecar.Words)
+        // set once the data file is renamed into place: close() leaves
+        // committed files alone
+        var committed = false
         def open(): ZstdOutputStream = {
           if (os == null) {
             fs.mkdirs(dirPath)
@@ -143,7 +145,7 @@ class ProtoZstWriterFactory(dir: String, buckets: Option[Int] = None,
           rowsInFrame += 1
           if (rowsInFrame >= splitFrameRows) {
             os.flush() // ends the current zstd frame
-            frames += ((raw.getPos, n, ""))
+            frames += FileIndex.Frame(raw.getPos, n, Array.emptyByteArray)
             needFirstKey = true
             rowsInFrame = 0
           }
@@ -151,10 +153,8 @@ class ProtoZstWriterFactory(dir: String, buckets: Option[Int] = None,
         def firstKey(key: Array[Byte]): Unit =
           if (needFirstKey) {
             needFirstKey = false
-            if (key != null && frames.nonEmpty) {
-              val (off, rows, _) = frames(frames.length - 1)
-              frames(frames.length - 1) = (off, rows, GenManifest.hex(key))
-            }
+            frames(frames.length - 1) =
+              frames(frames.length - 1).copy(firstKey = key.clone())
           }
       }
 
@@ -270,41 +270,27 @@ class ProtoZstWriterFactory(dir: String, buckets: Option[Int] = None,
           val entries = states.values.toSeq.map { st =>
             st.os.close()
             st.os = null
-            // sidecar first, data rename second: a listing that races
-            // the commit sees either no data file, or data + sidecar
-            // (sidecars stay written for foreign readers and for
-            // explicit-file loads that bypass the manifest)
-            if (st.minKey != null) {
-              RangeSidecar.write(fs, st.finalFile, st.minKey, st.maxKey,
-                st.sorted, st.n)
-              BloomSidecar.write(fs, st.finalFile, st.bloom)
-            }
-            // drop a checkpoint landing exactly at EOF (nothing after
-            // it to slice); write the split sidecar before the data
-            // rename, same visibility order as the range sidecar. The
-            // rename keeps the length, so this is the entry's too.
+            // the rename keeps the length, so this is the entry's too
             val eof = fs.getFileStatus(st.tmpFile).getLen
-            // also drop a trailing boundary no row ever followed (row
-            // count an exact multiple of splitFrameRows): the zstd
-            // close epilogue can leave eof past the flush offset, and
-            // that boundary's empty first-key hex would otherwise
-            // disable the whole file's frame-seek index (the reader
-            // requires every boundary keyed). Zero rows live past it,
-            // so dropping costs nothing for slicing either.
-            val trimmed =
-              if (st.needFirstKey && st.frames.nonEmpty &&
-                  st.frames.last._3.isEmpty) st.frames.dropRight(1)
-              else st.frames
-            val cuts = trimmed.filter(_._1 < eof)
-            if (cuts.nonEmpty)
-              SplitSidecar.write(fs, st.finalFile, cuts.toSeq)
+            // drop a trailing boundary no row ever followed (row count
+            // an exact multiple of splitFrameRows) and one landing at
+            // EOF: zero rows live past either, and a keyless boundary
+            // would disable the whole file's frame seek
+            val frames = (if (st.needFirstKey) st.frames.dropRight(1)
+              else st.frames).filter(_.offset < eof)
+            // index first, data rename second: a listing that races the
+            // commit sees either no data file, or data + index (the
+            // index stays written for foreign readers and for
+            // explicit-file loads that bypass the manifest)
+            FileIndex.write(fs, st.finalFile, FileIndex(st.n, st.sorted,
+              st.minKey, st.maxKey, frames.toArray, st.bloom))
             if (!fs.rename(st.tmpFile, st.finalFile)) {
-              Sidecars.delete(fs, st.finalFile)
+              FileIndex.delete(fs, st.finalFile)
               throw new java.io.IOException(s"rename failed: ${st.tmpFile}")
             }
+            st.committed = true
             GenManifest.Entry(st.name, eof, st.n, st.sorted,
-              if (st.minKey == null) "" else GenManifest.hex(st.minKey),
-              if (st.minKey == null) "" else GenManifest.hex(st.maxKey),
+              GenManifest.hex(st.minKey), GenManifest.hex(st.maxKey),
               if (st.minT <= st.maxT) Some((st.minT, st.maxT)) else None)
           }
           ProtoZstCommit(entries)
@@ -312,12 +298,12 @@ class ProtoZstWriterFactory(dir: String, buckets: Option[Int] = None,
 
       override def abort(): Unit = close()
 
-      override def close(): Unit = states.values.foreach { st =>
+      override def close(): Unit = states.values.filterNot(_.committed).foreach { st =>
         if (st.os != null) st.os.close()
         fs.delete(st.tmpFile, false)
-        // an orphan sidecar (commit failed between sidecar write and
+        // an orphan index (commit failed between index write and
         // rename) must not describe a future file of the same name
-        if (!fs.exists(st.finalFile)) Sidecars.delete(fs, st.finalFile)
+        if (!fs.exists(st.finalFile)) FileIndex.delete(fs, st.finalFile)
       }
     }
 }

@@ -135,7 +135,7 @@ class ProtoZstTable(paths: Seq[String], buckets: Option[Int] = None,
         case c: ProtoZstCommit => c.files.filterNot(published).foreach { f =>
           val data = new org.apache.hadoop.fs.Path(dirPath, f)
           fs.delete(data, false)
-          Sidecars.delete(fs, data)
+          FileIndex.delete(fs, data)
         }
         case _ => ()
       }
@@ -215,7 +215,7 @@ class ProtoZstTable(paths: Seq[String], buckets: Option[Int] = None,
         // rows by the V2 bucket function (ONE exchange of exactly
         // `buckets` partitions) and key-sort within each, so every task
         // writes whole buckets of key-sorted rows — the layout the
-        // scan's reported partitioning and range sidecars describe.
+        // scan's reported partitioning and indexes describe.
         // Resolving the transform needs the FunctionCatalog, hence
         // catalog path only; path-based writes still bucket per row in
         // the writer, just without the planner-enforced clustering.
@@ -278,7 +278,7 @@ class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
       n
     }
   // files larger than this split into parallel slices at recorded
-  // zstd-frame boundaries (see SplitSidecar), judged by the view's
+  // zstd-frame boundaries (see FileIndex.slices), judged by the view's
   // per-file bytes
   private val splitFileBytes: Long =
     Option(options.get("splitFileBytes")).map { v =>
@@ -380,9 +380,9 @@ class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
     * parquet footers, and of the reference's Statistics.db (row counts
     * and key bounds kept beside the data,
     * `SSTableReaderPatched.java:221-233`). Any file without a count
-    * (a listed file with no sidecar, or one predating the count line)
-    * vetoes the pushdown and the scan proceeds normally — metadata
-    * absence degrades, never lies.
+    * (a listed file with no readable index) vetoes the pushdown and
+    * the scan proceeds normally — metadata absence degrades, never
+    * lies.
     */
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
@@ -391,7 +391,7 @@ class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Boolean =
-    // a time-bounded scan must NOT collapse to whole-corpus sidecar
+    // a time-bounded scan must NOT collapse to whole-corpus file
     // stats: the pushed COUNT/MIN/MAX would cover pruned files' rows
     if (timeBounds.isDefined) false
     else translate(agg) match {
@@ -677,7 +677,7 @@ object ProtoZstScan {
   /** Files above this split into frame-boundary slices (scan option
     * `splitFileBytes` overrides). 128 MB ≈ one parquet row-group's
     * worth of work per task; toy-scale files never cross it, so
-    * default scans open no `.split` sidecar while planning.
+    * default scans open no index while planning.
     */
   val DefaultSplitFileBytes: Long = 128L << 20
 
@@ -881,14 +881,10 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
               Array(ProtoZstInputPartition(m): InputPartition))(_._1)), b): InputPartition
         }
       case None =>
-        // large files slice at recorded frame boundaries (one .split
-        // sidecar read per OVERSIZED file only — a straggler saved per
-        // RPC)
+        // large files slice at recorded frame boundaries (one index
+        // read per OVERSIZED file only — a straggler saved per RPC)
         ManifestIndex.skipByRange(plannedMeta, runtimeFilters).flatMap { m =>
-          seeks.get(m.path).fold(
-            if (m.bytes <= splitFileBytes)
-              Array(ProtoZstInputPartition(m): InputPartition)
-            else sliced(m))(_._1)
+          seeks.get(m.path).fold(sliced(m))(_._1)
         }
     }
 
@@ -900,24 +896,24 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
   /** A point lookup's read of each planned file, decided on the driver
     * once per scan: the reference's bloom → index → chunk path
     * (Filter.db, then the index summary's `(key, position)` seek,
-    * `SSTableReaderPatched.java:54-97`). A file whose `.bloom` misses
-    * every candidate reads nothing; a sorted file with a frame-key
-    * index reads the frame-aligned ranges [[seekPlan]] picks, as one
-    * partition. The value is those partitions and the number of frame
-    * segments they span. A file absent from the map (no bloom hit
-    * proof, no usable index) is read whole, as without a lookup.
+    * `SSTableReaderPatched.java:54-97`), from one [[FileIndex]] read
+    * per file. A file whose bloom misses every candidate reads nothing;
+    * a sorted file with a frame-key index reads the frame-aligned
+    * ranges [[seekPlan]] picks, as one partition. The value is those
+    * partitions and the number of frame segments they span. A file
+    * absent from the map (no readable index, no usable frame keys) is
+    * read whole, as without a lookup.
     */
   private lazy val seeks: Map[String, (Array[InputPartition], Int)] =
     pointKeys.fold(Map.empty[String, (Array[InputPartition], Int)]) { keys =>
       plannedMeta.iterator.flatMap { m =>
         val p = new org.apache.hadoop.fs.Path(m.path)
-        val fs = ProtoZstFiles.fs(p, conf.value)
-        val bloom = BloomSidecar.read(fs, p)
-        bloom.foreach(_ => MetaIO.bloomProbes.incrementAndGet())
-        if (bloom.exists(b => !keys.exists(BloomSidecar.mightContain(b, _)))) {
+        val idx = FileIndex.read(ProtoZstFiles.fs(p, conf.value), p)
+        idx.foreach(_ => MetaIO.bloomProbes.incrementAndGet())
+        if (idx.exists(i => !keys.exists(i.mightContain))) {
           MetaIO.bloomSkips.incrementAndGet()
           Some(m.path -> (Array.empty[InputPartition], 0))
-        } else seekPlan(m, keys, fs).map { case (ranges, segments) =>
+        } else idx.flatMap(seekPlan(m, keys, _)).map { case (ranges, segments) =>
           MetaIO.frameSeeks.incrementAndGet()
           MetaIO.seekBytes.addAndGet(ranges.map(r => r._2 - r._1).sum)
           m.path -> (
@@ -943,36 +939,22 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
 
   /** The Index.db seek plan for a point lookup over ONE whole sorted
     * file: the minimal set of frame-aligned byte ranges that can hold
-    * the candidate keys, from the `.split` v2 boundary index, and the
+    * the candidate keys, from the index's frame boundaries, and the
     * number of frame segments they span — the reference's two-level
     * read path completed at the granularity a zstd stream can restart
-    * at. None = no usable index (v1 split sidecar, a file its meta does
-    * not attest sorted, a null-key boundary) — degrade to the
+    * at. None = no usable frame keys (no boundaries, a file its meta
+    * does not attest sorted, an empty-key boundary) — degrade to the
     * full-file scan, never to a wrong subset. Segment arithmetic is
     * duplicate-safe: a key equal to a boundary's first key also
     * selects the PREVIOUS segment, because duplicates of that key can
     * straddle the boundary. EOF is the file's attested `bytes`.
     */
   private def seekPlan(meta: FileMeta, keys: Seq[Array[Byte]],
-      fs: org.apache.hadoop.fs.FileSystem): Option[(Seq[(Long, Long)], Int)] = {
-    if (!meta.sorted) return None
-    val cuts0 = SplitSidecar.readKeyed(fs, new org.apache.hadoop.fs.Path(meta.path))
-      .getOrElse(Array.empty)
-    // Files written before the sink learned to trim it may carry one
-    // trailing keyless boundary (row count an exact multiple of
-    // splitFrameRows: the frame flushed, the stream closed, no row
-    // followed). The meta's row count proves it is a zero-row tail
-    // (rows-before == file rows), so it can be dropped instead of
-    // disabling the whole file's seek index; a MID-file "" (null-key
-    // row) still falls through to the all-keyed check below and
-    // degrades to the full scan.
-    val cuts =
-      if (cuts0.nonEmpty && cuts0.last._3.isEmpty &&
-          meta.count >= 0 && meta.count == cuts0.last._2)
-        cuts0.dropRight(1)
-      else cuts0
-    if (cuts.isEmpty || cuts.exists(_._3.isEmpty)) return None
-    val firsts: Array[Array[Byte]] = cuts.map(c => GenManifest.unhex(c._3))
+      idx: FileIndex): Option[(Seq[(Long, Long)], Int)] = {
+    val cuts = idx.frames
+    if (!meta.sorted || cuts.isEmpty || cuts.exists(_.firstKey.isEmpty))
+      return None
+    val firsts: Array[Array[Byte]] = cuts.map(_.firstKey)
     val m = firsts.length
     // segment j ∈ [0, m] spans bytes [off(j-1), off(j)) and keys
     // [first(j-1), first(j)] — both ends inclusive (duplicates may
@@ -995,7 +977,7 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
       }
       (a to lo2).foreach(segs += _)
     }
-    def off(j: Int): Long = if (j < 0) 0L else if (j >= m) meta.bytes else cuts(j)._1
+    def off(j: Int): Long = if (j < 0) 0L else if (j >= m) meta.bytes else cuts(j).offset
     // merge adjacent segments into maximal byte ranges
     val ranges = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     var runStart = -2
@@ -1010,27 +992,16 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
     Some((ranges.toSeq.filter(r => r._2 > r._1), segs.size))
   }
 
-  /** Slice one oversized file into frame-aligned byte ranges of about
-    * `splitFileBytes` each; no/unreadable sidecar degrades to a single
-    * partition.
+  /** One file as frame-aligned slices of about `splitFileBytes` each
+    * ([[FileIndex.slices]]), or one whole-file partition.
     */
   private def sliced(m: FileMeta): Array[InputPartition] = {
     val p = new org.apache.hadoop.fs.Path(m.path)
-    val cuts = SplitSidecar.read(ProtoZstFiles.fs(p, conf.value), p)
-      .map(_.map(_._1).filter(o => o > 0 && o < m.bytes))
-      .getOrElse(Array.empty[Long])
-    if (cuts.isEmpty)
-      return Array(ProtoZstInputPartition(m))
-    val slices = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var start = 0L
-    cuts.foreach { c =>
-      if (c - start >= splitFileBytes) { slices += ((start, c)); start = c }
+    FileIndex.slices(ProtoZstFiles.fs(p, conf.value), p, m.bytes,
+        splitFileBytes, m.bytes) match {
+      case Seq(_) => Array(ProtoZstInputPartition(m))
+      case ranges => ranges.map(r => ProtoZstSlicePartition(m, Seq(r)): InputPartition).toArray
     }
-    slices += ((start, m.bytes))
-    if (slices.length == 1) Array(ProtoZstInputPartition(m))
-    else slices.map { r =>
-      ProtoZstSlicePartition(m, Seq(r)): InputPartition
-    }.toArray
   }
   /** The scan's ANTI-SET: every key named by a live tombstone file,
     * decoded once on the driver, deduped, and unsigned-sorted so task
@@ -1179,7 +1150,7 @@ object KeyPredicate {
 
 /** One whole file, with the [[FileMeta]] it was planned from: the
   * task reader arms its truncation guard with `count` and gates the
-  * frame seek on `sorted`, opening no `.range` sidecar.
+  * frame seek on `sorted`, opening no index.
   */
 case class ProtoZstInputPartition(meta: FileMeta) extends InputPartition {
   def file: String = meta.path
@@ -1304,14 +1275,13 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
       override def close(): Unit = if (cur != null) cur.close()
     }
 
-  /** The [start, end) frame ranges of a whole file from its `.split`
-    * index (the last range ends at EOF); one range when it has none.
+  /** The [start, end) frame ranges of a whole file from its index, one
+    * per frame (the last range ends at EOF); one range when it has none.
     */
   private def frameRanges(meta: FileMeta): Iterator[(Long, Long)] = {
     val p = new org.apache.hadoop.fs.Path(meta.path)
-    val cuts = SplitSidecar.read(ProtoZstFiles.fs(p, conf.value), p)
-      .fold(Array.empty[Long])(_.map(_._1).filter(_ > 0L))
-    (0L +: cuts).iterator.zip(cuts.iterator ++ Iterator(-1L))
+    FileIndex.slices(ProtoZstFiles.fs(p, conf.value), p, meta.bytes, 1L, -1L)
+      .iterator
   }
 
   // compiled once per reader factory; pruning decides whether Column

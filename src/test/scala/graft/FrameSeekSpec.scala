@@ -4,9 +4,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{MetaIO, ProtoZstFiles}
+import graft.sources.{FileIndex, MetaIO, ProtoZstFiles}
 
-/** The `.split` v2 frame-key index: point lookups over a key-sorted
+/** The index's frame keys: point lookups over a key-sorted
   * file seek to the frames that can hold the candidates instead of
   * decoding the file — the reference's Index.db `(key, position)` walk
   * at zstd-frame grain. Pins the seek counters, duplicate keys
@@ -129,41 +129,34 @@ class FrameSeekSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
     val data = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
       .map(_.getPath).filter(_.getName.endsWith(".proto.zst")).head
-    val cuts = graft.sources.SplitSidecar.readKeyed(fs, data).get
-    assert(cuts.forall(_._3.nonEmpty),
+    val frames = FileIndex.read(fs, data).get.frames
+    assert(frames.forall(_.firstKey.nonEmpty),
       "every written boundary must carry its first key — a trailing " +
         "keyless boundary means the writer failed to trim it")
     MetaIO.reset()
     assert(get(dir, "m050") === (0 until 10).map(_ => ("m050", 1)))
     assert(MetaIO.frameSeeks.get() === 1L,
       "exact-multiple files must keep their frame-seek index")
-    // a PRE-FIX sidecar (trailing keyless boundary) read back: the
-    // range sidecar's row count proves the tail is zero-row, so the
-    // reader drops it instead of degrading the file to a full scan
-    val rows = graft.sources.RangeSidecar.read(fs, data).get.count
-    graft.sources.SplitSidecar.write(fs, data,
-      cuts.toSeq :+ ((fs.getFileStatus(data).getLen - 1, rows, "")))
-    MetaIO.reset()
-    assert(get(dir, "m051") === (0 until 10).map(_ => ("m051", 1)))
-    assert(MetaIO.frameSeeks.get() === 1L,
-      "reader must tolerate a provably zero-row keyless tail boundary")
   }
 
-  test("a sidecar with no boundary keys writes the v1 header (old readers keep slicing)") {
-    val dir = freshDir("graft_split_v1")
+  test("keyless boundaries still slice but never seek") {
+    // a sorted file whose frames begin with empty keys: its boundaries
+    // carry no first key, so a get reads the whole file while a sliced
+    // read still cuts at every boundary
+    val dir = freshDir("graft_seek_keyless")
+    writeSorted(dir, 30, i => if (i < 21) "" else f"z$i%02d")
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    val data = new org.apache.hadoop.fs.Path(dir, "x.proto.zst")
-    graft.sources.SplitSidecar.write(fs, data,
-      Seq((100L, 10L, ""), (200L, 20L, "")))
-    val txt = {
-      val in = fs.open(graft.sources.SplitSidecar.sidecar(data))
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-    assert(txt.startsWith("v1\n"),
-      "keyless checkpoints encode nothing v1 cannot — stamp v1 so " +
-        "pre-v2 engines keep slicing")
-    assert(graft.sources.SplitSidecar.read(fs, data).get.toSeq ===
-      Seq((100L, 10L), (200L, 20L)))
+    val data = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(_.getPath).filter(_.getName.endsWith(".proto.zst")).head
+    val idx = FileIndex.read(fs, data).get
+    assert(idx.sorted && idx.frames.length === 4 &&
+      idx.frames.count(_.firstKey.isEmpty) === 2)
+    MetaIO.reset()
+    assert(get(dir, "z25") === Seq(("z25", 1)))
+    assert(MetaIO.frameSeeks.get() === 0L && MetaIO.bloomProbes.get() === 1L)
+    val sliced = spark.read.format("proto-zst").option("splitFileBytes", "1").load(dir)
+    assert(sliced.rdd.getNumPartitions === idx.frames.length + 1)
+    assert(sliced.count() === 30L)
   }
 
   test("seek composes with the tombstone anti-set: erased key invisible through the index") {
@@ -292,8 +285,8 @@ class FrameSeekSpec extends AnyFunSuite {
       .map(_.getPath).filter(_.getName.endsWith(".proto.zst")).head
     // u0100..u0149 is the frame after the boundary with 100 rows before
     // it; zero its zstd magic number
-    val off = graft.sources.SplitSidecar.readKeyed(fs, data).get
-      .find(_._2 == 100L).get._1
+    val off = FileIndex.read(fs, data).get.frames
+      .find(_.rowsBefore == 100L).get.offset
     val raf = new java.io.RandomAccessFile(data.toUri.getPath, "rw")
     try { raf.seek(off); raf.write(new Array[Byte](4)) } finally raf.close()
     def scanned(k: String) = rows(spark.read.format("proto-zst")

@@ -92,16 +92,15 @@ class NoForkSpec extends AnyFunSuite {
     assert(fileMode === Integer.parseInt("644", 8))
     assert(dirMode === Integer.parseInt("755", 8))
 
+    // exactly four files per data file (data, its index, their .crc
+    // files), two per tombstone file, and the manifest directory
     val root = Paths.get(dir)
-    val names = Files.list(root).iterator().asScala.map(_.getFileName.toString).toSeq
-    val data = names.filter(_.endsWith(".proto.zst"))
-    assert(data.nonEmpty)
-    for (d <- data; suffix <- Seq("", ".range", ".bloom", ".split")
-         if names.contains(d + suffix)) {
-      assert(names.contains("." + d + suffix + ".crc"), s"no .crc for $d$suffix")
-    }
-    assert(data.exists(d => names.contains(d + ".range")) &&
-      data.exists(d => names.contains(d + ".bloom")))
+    val names = Files.list(root).iterator().asScala.map(_.getFileName.toString).toSet
+    val (tombs, data) = names.filter(_.endsWith(".proto.zst")).partition(_.startsWith("tomb-"))
+    assert(data.nonEmpty && tombs.nonEmpty)
+    def withCrc(f: String) = Set(f, "." + f + ".crc")
+    assert(names === data.flatMap(d => withCrc(d) ++ withCrc(d + ".idx")) ++
+      tombs.flatMap(withCrc) + GenManifest.DirName)
     val manifest = root.resolve(GenManifest.DirName)
     assert(mode(manifest) === dirMode)
     val written = Files.list(root).iterator().asScala.filter(Files.isRegularFile(_)) ++

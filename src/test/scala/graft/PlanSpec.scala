@@ -245,7 +245,7 @@ class PlanSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(conf)
     assert(files.nonEmpty)
     files.foreach { f =>
-      val r = graft.sources.RangeSidecar
+      val r = graft.sources.FileIndex
         .read(fs, new org.apache.hadoop.fs.Path(f))
       assert(r.nonEmpty && r.get.sorted, f)
     }

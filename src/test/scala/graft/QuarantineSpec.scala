@@ -276,7 +276,7 @@ class QuarantineSpec extends AnyFunSuite {
   }
 
   test("a frame-aligned truncation of a sidecar-less governed file fails a strict read") {
-    import graft.sources.{RangeSidecar, SplitSidecar}
+    import graft.sources.{FileIndex, SplitSidecar}
     val dir = java.nio.file.Files.createTempDirectory("graft_quar_cut")
       .toFile.getAbsolutePath
     writeOneFile(dir, 1000)
@@ -293,8 +293,8 @@ class QuarantineSpec extends AnyFunSuite {
     try in.readFully(keep) finally in.close()
     val os = fs.create(data, true)
     try os.write(keep) finally os.close()
-    // the .range sidecar is lost: only the manifest attests the count
-    assert(fs.delete(RangeSidecar.sidecar(data), false))
+    // the index is lost: only the manifest attests the count
+    assert(fs.delete(FileIndex.path(data), false))
     val e = intercept[Exception] {
       spark.read.format("proto-zst").load(dir)
         .agg(sum(size(col("columns")))).collect()

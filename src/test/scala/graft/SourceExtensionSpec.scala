@@ -269,8 +269,8 @@ class SourceExtensionSpec extends AnyFunSuite {
     import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
     val dir = java.nio.file.Files.createTempDirectory("graft_mbskip")
       .toFile.getAbsolutePath
-    // DSv2 write → files carry .range sidecars; range-partitioned so
-    // the sidecars are selective
+    // DSv2 write → files carry indexes; range-partitioned so their
+    // ranges are selective
     Sink.writeNested(CellModel.nestRows(spark, sf0001)
       .repartitionByRange(4, col("key")), dir)
     val nFiles = new java.io.File(dir)
@@ -417,7 +417,7 @@ class SourceExtensionSpec extends AnyFunSuite {
   }
 
   test("legacy empty-min sidecar vetoes MIN/MAX pushdown; COUNT(*) survives") {
-    import graft.sources.RangeSidecar
+    import graft.sources.FileIndex
     val dir = java.nio.file.Files.createTempDirectory("graft_sideveto")
       .toFile.getAbsolutePath
     Sink.writeNested(CellModel.nestRows(spark, sf0001)
@@ -428,24 +428,23 @@ class SourceExtensionSpec extends AnyFunSuite {
     val mp = new org.apache.hadoop.fs.Path(dir, graft.sources.GenManifest.DirName)
     mp.getFileSystem(conf).delete(mp, true)
     val trueCount = spark.read.format("proto-zst").load(dir).count()
-    // rewrite one sidecar to the empty-min sentinel — the shape a
-    // pre-normalization writer left when it excluded null-key rows
-    // from min/max while still counting them
+    // rewrite one index to the empty-min sentinel — what the writer
+    // records for a file holding an empty (or null) key
     val f = new java.io.File(dir).listFiles((_, n) => n.endsWith(".proto.zst"))
       .map(_.getAbsolutePath).sorted.head
     val fp = new org.apache.hadoop.fs.Path(f)
     val fs = fp.getFileSystem(conf)
-    val old = RangeSidecar.read(fs, fp).getOrElse(fail("no sidecar"))
-    RangeSidecar.write(fs, fp, Array.emptyByteArray, Array.emptyByteArray,
-      sorted = false, old.count)
-    // MIN/MAX over an empty-sentinel sidecar cannot be trusted (the
-    // recorded range may exclude rows that read back as empty keys):
-    // the pushdown is vetoed and the query falls back to a real scan
+    val old = FileIndex.read(fs, fp).getOrElse(fail("no index"))
+    FileIndex.write(fs, fp, old.copy(sorted = false,
+      min = Array.emptyByteArray, max = Array.emptyByteArray))
+    // MIN/MAX over an empty-sentinel index cannot be answered from
+    // metadata (the empty min is no range): the pushdown is vetoed
+    // and the query falls back to a real scan
     val mmPlan = spark.read.format("proto-zst").load(dir)
       .agg(min(col("key")), max(col("key")))
       .queryExecution.executedPlan.toString
     assert(!mmPlan.contains("PushedAggregation"), mmPlan.take(2000))
-    // COUNT(*) needs only the counts, which the sentinel sidecar still
+    // COUNT(*) needs only the counts, which the sentinel index still
     // carries — it keeps planning from metadata and stays correct
     val cFrame = spark.read.format("proto-zst").load(dir).agg(count("*"))
     assert(cFrame.queryExecution.executedPlan.toString
@@ -481,57 +480,6 @@ class SourceExtensionSpec extends AnyFunSuite {
       "part-task.proto.zst", 10L, 1L, sorted = true, "6b31", "6b31")))
     assert(spark.read.format("proto-zst").load(dir).count() === 1L)
     assert(stream.latestOffset().json().toInt === 1)
-  }
-
-  test("v1 (pre-normalization) sidecars answer counts but never ranges") {
-    import graft.sources.RangeSidecar
-    val dir = java.nio.file.Files.createTempDirectory("graft_v1side")
-      .toFile.getAbsolutePath
-    Sink.writeNested(CellModel.nestRows(spark, sf0001)
-      .repartitionByRange(3, col("key")), dir)
-    val conf = graft.sources.ProtoZstFiles.hadoopConf()
-    val mp = new org.apache.hadoop.fs.Path(dir, graft.sources.GenManifest.DirName)
-    mp.getFileSystem(conf).delete(mp, true)
-    val trueCount = spark.read.format("proto-zst").load(dir).count()
-    // rewrite one sidecar AS a v1 vintage, keeping its (correct)
-    // range and count: a pre-normalization writer may have excluded
-    // null-key rows from the range while counting them, and the bytes
-    // alone can't prove this file didn't — so the version is the gate
-    val f = new java.io.File(dir).listFiles((_, n) => n.endsWith(".proto.zst"))
-      .map(_.getAbsolutePath).sorted.head
-    val fp = new org.apache.hadoop.fs.Path(f)
-    val fs = fp.getFileSystem(conf)
-    val old = RangeSidecar.read(fs, fp).getOrElse(fail("no sidecar"))
-    assert(old.normalized) // current writer attests normalization
-    def hex(b: Array[Byte]) = b.map(x => f"${x & 0xff}%02x").mkString
-    val osc = fs.create(RangeSidecar.sidecar(fp), true)
-    osc.write((s"v1\n${hex(old.min)}\n${hex(old.max)}\n1\n${old.count}\n")
-      .getBytes("UTF-8")); osc.close()
-    assert(!RangeSidecar.read(fs, fp).get.normalized)
-    // MIN/MAX pushdown is vetoed by the v1 vintage...
-    val mmPlan = spark.read.format("proto-zst").load(dir)
-      .agg(min(col("key")), max(col("key")))
-      .queryExecution.executedPlan.toString
-    assert(!mmPlan.contains("PushedAggregation"), mmPlan.take(2000))
-    // ...COUNT(*) still answers from metadata, correctly
-    val cFrame = spark.read.format("proto-zst").load(dir).agg(count("*"))
-    assert(cFrame.queryExecution.executedPlan.toString
-      .contains("PushedAggregation"))
-    assert(cFrame.collect()(0).getLong(0) === trueCount)
-    // ...and range SKIPPING never trusts the v1 file: a predicate that
-    // provably misses the v1 file's recorded range still scans it
-    // (normalized siblings keep skipping, so planned < total only
-    // through them; the v1 file is always planned)
-    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
-    val probe = Array[org.apache.spark.sql.sources.Filter](
-      GreaterThanOrEqual("key", old.max :+ 0xff.toByte),
-      LessThan("key", old.max :+ 0xff.toByte :+ 0xff.toByte))
-    import graft.sources.ManifestIndex
-    val kept = ManifestIndex.skipByRange(ManifestIndex.fromSidecars(
-      new java.io.File(dir).listFiles((_, n) => n.endsWith(".proto.zst"))
-        .map(x => (x.getAbsolutePath, x.length)).sorted.toSeq, conf),
-      probe).map(_.path)
-    assert(kept.contains(f), "a v1 sidecar was trusted for range skip")
   }
 
   test("runtime In-filter drops whole files by sidecar range, keeps matches") {
@@ -593,14 +541,14 @@ class SourceExtensionSpec extends AnyFunSuite {
     // and a strictly smaller file count coming out
     assert(nBefore >= 8 && nAfter < nBefore,
       s"optimize did not pack: $nBefore -> $nAfter")
-    // every packed file keeps a .range sidecar (plan-time skipping
-    // survives maintenance) and attests key-sorted rows
+    // every packed file keeps an index (plan-time skipping survives
+    // maintenance) and attests key-sorted rows
     val conf = graft.sources.ProtoZstFiles.hadoopConf()
     val files = graft.sources.ProtoZstFiles.list(optDir, conf)
     val fs = new org.apache.hadoop.fs.Path(optDir).getFileSystem(conf)
     assert(files.length === nAfter)
     files.foreach { f =>
-      val r = graft.sources.RangeSidecar
+      val r = graft.sources.FileIndex
         .read(fs, new org.apache.hadoop.fs.Path(f))
       assert(r.nonEmpty && r.get.sorted, f)
     }
@@ -746,7 +694,7 @@ class SourceExtensionSpec extends AnyFunSuite {
     assert(dataFiles.length === 1, "fixture must be ONE oversized file")
     // the writer recorded real frame checkpoints
     val cuts = SplitSidecar.read(fs, dataFiles.head)
-      .getOrElse(fail("no .split sidecar written"))
+      .getOrElse(fail("no frame boundaries indexed"))
     assert(cuts.length >= 2, s"need several checkpoints, got ${cuts.length}")
     // forced slicing actually fans out: many partitions for one file
     val slicedDf = spark.read.format("proto-zst")
@@ -769,7 +717,7 @@ class SourceExtensionSpec extends AnyFunSuite {
   }
 
   test("bloom kernel: no false negatives, bounded false positives, fs roundtrip, foreign bytes degrade") {
-    import graft.sources.BloomSidecar
+    import graft.sources.{BloomSidecar, FileIndex}
     val words = new Array[Long](BloomSidecar.Words)
     val keys = (0 until 5000).map(i => s"key:$i".getBytes("UTF-8"))
     keys.foreach(BloomSidecar.add(words, _))
@@ -784,23 +732,29 @@ class SourceExtensionSpec extends AnyFunSuite {
     val fp = (0 until 1000).count(i =>
       BloomSidecar.mightContain(words, s"other:$i".getBytes("UTF-8")))
     assert(fp <= 20, s"false-positive burst: $fp/1000")
-    // filesystem roundtrip is bit-exact
+    // the index round-trips the bloom bit-exactly
     val dir = java.nio.file.Files.createTempDirectory("graft_bloomrt")
       .toFile.getAbsolutePath
     val conf = graft.sources.ProtoZstFiles.hadoopConf()
     val data = new org.apache.hadoop.fs.Path(dir, "x.proto.zst")
     val fs = data.getFileSystem(conf)
-    BloomSidecar.write(fs, data, words)
-    assert(BloomSidecar.read(fs, data).exists(_.sameElements(words)))
+    FileIndex.write(fs, data, FileIndex(5000L, sorted = false,
+      "key:0".getBytes("UTF-8"), "key:999".getBytes("UTF-8"),
+      Array(FileIndex.Frame(100L, 10L, "key:5".getBytes("UTF-8"))), words))
+    val back = FileIndex.read(fs, data).getOrElse(fail("no index"))
+    assert(back.bloom.sameElements(words) && back.count === 5000L &&
+      new String(back.max, "UTF-8") === "key:999" &&
+      back.frames.map(f => (f.offset, f.rowsBefore, new String(f.firstKey, "UTF-8")))
+        .toSeq === Seq((100L, 10L, "key:5")))
     // foreign/truncated bytes read as None — the probe degrades to a
     // scan, never misreads garbage as a filter
-    val os = fs.create(BloomSidecar.sidecar(data), true)
+    val os = fs.create(FileIndex.path(data), true)
     os.write("v1 999 9\njunk".getBytes("UTF-8")); os.close()
-    assert(BloomSidecar.read(fs, data).isEmpty)
+    assert(FileIndex.read(fs, data).isEmpty)
   }
 
   test("bloom point-get skips key-free files driver-side; absence degrades; ranges never probe") {
-    import graft.sources.{BloomSidecar, MetaIO, ProtoZstFiles}
+    import graft.sources.{FileIndex, MetaIO, ProtoZstFiles}
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_bloom")
       .toFile.getAbsolutePath
@@ -833,8 +787,8 @@ class SourceExtensionSpec extends AnyFunSuite {
       s"every planned file must probe (${MetaIO.bloomProbes.get()})")
     assert(MetaIO.bloomSkips.get() === 3,
       s"the three key-free epochs must skip (${MetaIO.bloomSkips.get()})")
-    // governed scans still list nothing and open no `.range` sidecar
-    // — the driver-side probe reads only the `.bloom` sidecars
+    // governed scans still list nothing and make no listing-view
+    // index read — the driver-side probe reads each planned index once
     assert(MetaIO.dataListings.get() === 0L)
     assert(MetaIO.sidecarReads.get() === 0L)
     // an absent key: zero rows, every file skipped without a decode
@@ -853,12 +807,12 @@ class SourceExtensionSpec extends AnyFunSuite {
         col("key") <= lit("k07".getBytes("UTF-8"))).count() === 8L)
     assert(MetaIO.bloomProbes.get() === 0L)
     // absence degrades to scanning, never to dropping: delete one
-    // file's bloom sidecar — the sidecar-less file decodes normally,
-    // answers stay exact, the other three still skip
+    // file's index — the index-less file decodes normally, answers
+    // stay exact, the other three still skip
     val victim = new org.apache.hadoop.fs.Path(
       ProtoZstFiles.list(dir, conf).min)
     victim.getFileSystem(conf)
-      .delete(BloomSidecar.sidecar(victim), false)
+      .delete(FileIndex.path(victim), false)
     MetaIO.reset()
     assert(get("nope2").isEmpty)
     assert(MetaIO.bloomProbes.get() === 3 && MetaIO.bloomSkips.get() === 3)
