@@ -2,16 +2,21 @@
 """Interleaved parent/change A/B of one convbench workload.
 
     python3 scripts/convbench_ab.py --parent REV --workload export \
-        --seeds 201-210 [--seconds 10] [--parent-dir DIR] [--json OUT]
+        --seeds 201-210 [--seconds 10] [--parent-dir DIR] [--workdir DIR] \
+        [--json OUT]
 
-Run from the repository root. The change arm is this checkout (its
-working tree, uncommitted edits included); the parent arm is REV,
-checked out as a detached `git worktree` in a temporary directory that
-is removed afterwards, or an existing checkout named with --parent-dir.
-For every seed the two arms run `convbench/run.py` back to back, the
-arm order alternating by seed (even seeds run the parent first), so a
-drift in machine load lands on both arms alike. Each checkout builds
-its own engine on its first run.
+Run from the repository root. Both arms run from fresh copies made in a
+temporary directory (under --workdir when given) and removed afterwards:
+the change arm is a copy of this checkout's working tree (tracked and
+untracked files, uncommitted edits included, nothing git ignores — so
+no `target/` and no `convbench/.runs/`); the parent arm is REV exported
+with `git archive`, or a copy of the checkout named with --parent-dir,
+made the same way as the change arm's. Naming this checkout as
+--parent-dir runs one tree on both arms: an A/A run. For every seed the
+two arms run `convbench/run.py` back to back, the arm order alternating
+by seed (even seeds run the parent first), so a drift in machine load
+lands on both arms alike. Each copy builds its own engine on its first
+run.
 
 For each end-to-end metric of BENCHMARK.json the script prints both
 arms' medians, the change in the median, the parent's IQR / median, the
@@ -24,6 +29,7 @@ and failed runs.
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -46,6 +52,25 @@ def seeds_of(spec):
         else:
             out.append(int(part))
     return out
+
+
+def copy_checkout(src, dst):
+    """Copy the files of checkout `src` that git does not ignore."""
+    listed = subprocess.run(
+        ["git", "ls-files", "-z", "--cached", "--others", "--exclude-standard"],
+        cwd=src, check=True, stdout=subprocess.PIPE).stdout.decode()
+    for rel in filter(None, listed.split("\0")):
+        path = os.path.join(src, rel)
+        if os.path.isfile(path):  # a tracked file may be deleted in the tree
+            os.makedirs(os.path.dirname(os.path.join(dst, rel)), exist_ok=True)
+            shutil.copy2(path, os.path.join(dst, rel))
+
+
+def export_rev(rev, dst):
+    """Write the tree of revision `rev` into `dst`."""
+    archive = subprocess.run(["git", "archive", rev], cwd=ROOT, check=True,
+                             stdout=subprocess.PIPE).stdout
+    subprocess.run(["tar", "-x", "-C", dst], input=archive, check=True)
 
 
 def run_arm(root, workload, seed, seconds):
@@ -118,8 +143,9 @@ def table(metrics, results, value=metric_value):
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--parent", help="parent revision, checked out as a worktree")
-    ap.add_argument("--parent-dir", help="an existing checkout of the parent")
+    ap.add_argument("--parent", help="parent revision, exported with git archive")
+    ap.add_argument("--parent-dir", help="a checkout of the parent, copied")
+    ap.add_argument("--workdir", help="where the two arms' copies are made")
     ap.add_argument("--workload", required=True, choices=("export", "read", "ingest"))
     ap.add_argument("--seeds", required=True, help="e.g. 201-210 or 1,2,5")
     ap.add_argument("--seconds", type=int)
@@ -132,29 +158,29 @@ def main():
         bench = json.load(fh)
     seconds = args.seconds or bench["run_seconds"]
 
-    worktree = None
-    if args.parent:
-        worktree = tempfile.mkdtemp(prefix="convbench-parent-")
-        os.rmdir(worktree)
-        subprocess.run(["git", "worktree", "add", "--detach", worktree, args.parent],
-                       cwd=ROOT, check=True, stdout=subprocess.DEVNULL)
-    parent = worktree or os.path.abspath(args.parent_dir)
+    tmp = tempfile.mkdtemp(prefix="convbench-ab-", dir=args.workdir)
+    arms_dir = {"parent": os.path.join(tmp, "parent"),
+                "change": os.path.join(tmp, "change")}
     results = []
     try:
+        for d in arms_dir.values():
+            os.mkdir(d)
+        if args.parent:
+            export_rev(args.parent, arms_dir["parent"])
+        else:
+            copy_checkout(os.path.abspath(args.parent_dir), arms_dir["parent"])
+        copy_checkout(ROOT, arms_dir["change"])
         for seed in seeds_of(args.seeds):
             arms = {}
             order = ("parent", "change") if seed % 2 == 0 else ("change", "parent")
             for arm in order:
-                arms[arm] = run_arm(parent if arm == "parent" else ROOT,
-                                    args.workload, seed, seconds)
+                arms[arm] = run_arm(arms_dir[arm], args.workload, seed, seconds)
                 status = "crashed" if arms[arm] is None else \
                     f"correct={arms[arm]['correct']} failed={arms[arm]['failed']}"
                 print(f"seed {seed} {arm}: {status}", file=sys.stderr, flush=True)
             results.append((arms["parent"], arms["change"]))
     finally:
-        if worktree:
-            subprocess.run(["git", "worktree", "remove", "--force", worktree],
-                           cwd=ROOT, check=False)
+        shutil.rmtree(tmp, ignore_errors=True)
 
     rows = table(bench["end_to_end"], results)
     detail_rows = table(DETAIL, results, detail_value)

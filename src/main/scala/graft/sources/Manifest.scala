@@ -861,11 +861,8 @@ object TombstoneKeys {
     val keys = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
     files.foreach { case (f, _) =>
       val p = new Path(f)
-      val in = new java.io.BufferedInputStream(new ZstdInputStream(
-        ProtoZstFiles.fs(p, conf).open(p)), 64 << 10)
-      try graft.functions.ProtoWire
-        .decodeStream(in, wantColumns = false, _ => true)
-        .foreach(r => keys += r.key)
+      val in = new ZstdInputStream(ProtoZstFiles.fs(p, conf).open(p))
+      try keys ++= graft.functions.ProtoWire.keys(in)
       finally in.close()
     }
     keys.distinctBy(_.toSeq).toArray

@@ -1,14 +1,12 @@
 package graft.sources
 
-import java.io.{ByteArrayInputStream, File, FileInputStream, FileOutputStream}
 import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import com.github.luben.zstd.{ZstdInputStream, ZstdOutputStream}
+import com.github.luben.zstd.ZstdInputStream
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -530,28 +528,59 @@ case class ProtoZstAggPartition(values: Array[Any]) extends InputPartition
   * `Writable` but not `Serializable`) — lets driver-built reader/writer
   * factories carry the session's fs.* settings to executors. The
   * standard connector pattern (Spark's own utility is `private[spark]`).
-  * Ships the raw (key, value) pairs of `Configuration.iterator()` and
-  * `set`s them back — what `readFields` does too, without
-  * `Configuration.write`'s per-property gzipped provenance, which made
-  * a session conf cost milliseconds per task to decode.
+  * Ships the raw (key, value) pairs of `Configuration.iterator()` as one
+  * byte blob and `set`s them back — what `readFields` does too, without
+  * `Configuration.write`'s per-property gzipped provenance. Every task
+  * deserializes its reader factory, so a JVM builds the conf of one blob
+  * once ([[SerializableHadoopConf.built]]) and its tasks share it: a
+  * task reads one array and looks it up (0.12 ms for a 1094-pair
+  * session conf) where it read ~2000 strings and set ~1000 properties
+  * (1.2 ms).
   */
 class SerializableHadoopConf(@transient var value: org.apache.hadoop.conf.Configuration)
     extends Serializable {
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
     out.defaultWriteObject()
-    val pairs = value.iterator().asScala
-      .flatMap(e => Iterator(e.getKey, e.getValue)).toArray
-    out.writeObject(pairs)
+    val blob = new java.io.ByteArrayOutputStream()
+    val data = new java.io.DataOutputStream(blob)
+    value.iterator().asScala.foreach { e =>
+      Seq(e.getKey, e.getValue).foreach { v =>
+        val b = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        data.writeInt(b.length)
+        data.write(b)
+      }
+    }
+    out.writeObject(blob.toByteArray)
   }
   private def readObject(in: java.io.ObjectInputStream): Unit = {
     in.defaultReadObject()
-    val pairs = in.readObject().asInstanceOf[Array[String]]
-    value = new org.apache.hadoop.conf.Configuration(false)
-    var i = 0
-    while (i < pairs.length) {
-      value.set(pairs(i), pairs(i + 1))
-      i += 2
-    }
+    value = SerializableHadoopConf.built(in.readObject().asInstanceOf[Array[Byte]])
+  }
+}
+
+object SerializableHadoopConf {
+  // blob → conf; a handful of distinct session confs per JVM at most,
+  // so dropping everything past the bound costs nothing in practice
+  private val cache = new java.util.concurrent.ConcurrentHashMap[
+    java.nio.ByteBuffer, org.apache.hadoop.conf.Configuration]
+  private val MaxConfs = 16
+
+  /** The conf of `blob`'s pairs, built once per JVM. It is shared, so
+    * nothing may `set` on it.
+    */
+  private def built(blob: Array[Byte]): org.apache.hadoop.conf.Configuration = {
+    if (cache.size >= MaxConfs) cache.clear()
+    cache.computeIfAbsent(java.nio.ByteBuffer.wrap(blob), _ => {
+      val c = new org.apache.hadoop.conf.Configuration(false)
+      val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(blob))
+      def str(): String = {
+        val b = new Array[Byte](in.readInt())
+        in.readFully(b)
+        new String(b, java.nio.charset.StandardCharsets.UTF_8)
+      }
+      while (in.available() > 0) c.set(str(), str())
+      c
+    })
   }
 }
 
@@ -668,9 +697,10 @@ object ProtoZstFiles {
   * most once, on first use, and shared by the scan builder's aggregate
   * pushdown and the scan it builds.
   */
-final class FileView(val paths: Seq[String], val version: Option[Long]) {
-  lazy val metas: Array[FileMeta] =
-    ManifestIndex.plan(paths, ProtoZstFiles.hadoopConf(), version)
+final class FileView(val paths: Seq[String], val version: Option[Long],
+    val conf: SerializableHadoopConf =
+      new SerializableHadoopConf(ProtoZstFiles.hadoopConf())) {
+  lazy val metas: Array[FileMeta] = ManifestIndex.plan(paths, conf.value, version)
 }
 
 object ProtoZstScan {
@@ -714,9 +744,9 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
     with org.apache.spark.sql.connector.read.SupportsReportOrdering
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
-  // captured on the driver at scan-build time; ships to executors with
-  // the reader factory
-  private val conf = new SerializableHadoopConf(ProtoZstFiles.hadoopConf())
+  // the builder's one conf, captured on the driver; ships to executors
+  // with the reader factory
+  private val conf = view.conf
 
   /** Runtime (DPP-style) file pruning: the scan advertises `key` as
     * runtime-filterable, so a selective join against a small dimension
@@ -1030,7 +1060,7 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
           "commits; use a batch read for a pinned version, or " +
           "startingWriteTimeUs to start a stream at an instant")
     new ProtoZstMicroBatchStream(view.paths.head, ignoreCorrupt, readSchema,
-      filters, maxFilesPerTrigger, startingWriteTimeUs, maxBytesPerTrigger)
+      filters, maxFilesPerTrigger, startingWriteTimeUs, maxBytesPerTrigger, conf)
   }
 }
 
@@ -1059,13 +1089,24 @@ object KeyPredicate {
     case _ => false
   }
 
-  def compile(fs: Array[Filter]): Array[Byte] => Boolean = {
+  /** The conjunction as a test of the key bytes in place: what the
+    * reader's keep gate runs on every frame, before any column is read.
+    */
+  def compile(fs: Array[Filter]): graft.functions.ProtoWire.KeyGate = {
     val ps = fs.map(one)
-    k => ps.forall(_(k))
+    if (ps.isEmpty) graft.functions.ProtoWire.KeepAll
+    else (k, off, len) => {
+      var i = 0
+      while (i < ps.length && ps(i)(k, off, len)) i += 1
+      i == ps.length
+    }
   }
 
   private def cmp(k: Array[Byte], v: Array[Byte]): Int =
     java.util.Arrays.compareUnsigned(k, v)
+
+  private def cmpAt(k: Array[Byte], off: Int, len: Int, v: Array[Byte]): Int =
+    java.util.Arrays.compareUnsigned(k, off, off + len, v, 0, v.length)
 
   /** Interval version for file skipping: "COULD any key in [min, max]
     * satisfy the conjunction?" — an over-approximation (true = must
@@ -1130,19 +1171,20 @@ object KeyPredicate {
       a.filter(x => b.exists(java.util.Arrays.equals(x, _)))))
   }
 
-  private def one(f: Filter): Array[Byte] => Boolean = f match {
-    case EqualTo("key", v) => k => java.util.Arrays.equals(k, bin(v).get)
-    case GreaterThan("key", v) => val b = bin(v).get; k => cmp(k, b) > 0
-    case GreaterThanOrEqual("key", v) => val b = bin(v).get; k => cmp(k, b) >= 0
-    case LessThan("key", v) => val b = bin(v).get; k => cmp(k, b) < 0
-    case LessThanOrEqual("key", v) => val b = bin(v).get; k => cmp(k, b) <= 0
+  private def one(f: Filter): graft.functions.ProtoWire.KeyGate = f match {
+    case EqualTo("key", v) =>
+      val b = bin(v).get; (k, o, n) => java.util.Arrays.equals(k, o, o + n, b, 0, b.length)
+    case GreaterThan("key", v) => val b = bin(v).get; (k, o, n) => cmpAt(k, o, n, b) > 0
+    case GreaterThanOrEqual("key", v) => val b = bin(v).get; (k, o, n) => cmpAt(k, o, n, b) >= 0
+    case LessThan("key", v) => val b = bin(v).get; (k, o, n) => cmpAt(k, o, n, b) < 0
+    case LessThanOrEqual("key", v) => val b = bin(v).get; (k, o, n) => cmpAt(k, o, n, b) <= 0
     case In("key", vs) =>
       val bs = vs.map(bin(_).get)
-      k => bs.exists(java.util.Arrays.equals(k, _))
-    case IsNotNull("key") => _ => true // keys are never null on the wire
-    case And(l, r) => val (a, b) = (one(l), one(r)); k => a(k) && b(k)
-    case Or(l, r) => val (a, b) = (one(l), one(r)); k => a(k) || b(k)
-    case Not(c) => val a = one(c); k => !a(k)
+      (k, o, n) => bs.exists(b => java.util.Arrays.equals(k, o, o + n, b, 0, b.length))
+    case IsNotNull("key") => (_, _, _) => true // keys are never null on the wire
+    case And(l, r) => val (a, b) = (one(l), one(r)); (k, o, n) => a(k, o, n) && b(k, o, n)
+    case Or(l, r) => val (a, b) = (one(l), one(r)); (k, o, n) => a(k, o, n) || b(k, o, n)
+    case Not(c) => val a = one(c); (k, o, n) => !a(k, o, n)
     case other =>
       throw new IllegalArgumentException(s"unsupported pushed filter: $other")
   }
@@ -1203,6 +1245,15 @@ private[graft] final class BoundedIn(in: java.io.InputStream,
   override def close(): Unit = in.close()
 }
 
+/** The task-side reader of every proto-zst partition: whole files,
+  * frame-aligned slices, bucket groups, the driver-side
+  * [[ProtoZstLocalScan]] and the micro-batch stream all decode through
+  * one [[ProtoWire.RowDecoder]] per byte range, which writes each kept
+  * row straight into a reused `UnsafeRow` of the read schema. The read
+  * shape, the keep gate (pushed key filters and the tombstone anti-set,
+  * evaluated on the key bytes in place) and a point lookup's largest
+  * candidate key are compiled once per factory.
+  */
 class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
     readSchema: StructType,
     filters: Array[org.apache.spark.sql.sources.Filter],
@@ -1210,24 +1261,40 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
     deletedKeys: Array[Array[Byte]] = Array.empty)
     extends PartitionReaderFactory {
 
-  /** Equality-delete probe against the scan's unsigned-sorted anti-set.
-    * Runs inside the decoder's keep gate, so a deleted row's Column
-    * messages are never even decoded; empty anti-set short-circuits to
-    * a constant-false branch the JIT removes.
-    */
-  private def isDeleted(k: Array[Byte]): Boolean =
-    deletedKeys.length > 0 && {
-      var lo = 0
-      var hi = deletedKeys.length - 1
-      while (lo <= hi) {
-        val mid = (lo + hi) >>> 1
-        val c = java.util.Arrays.compareUnsigned(deletedKeys(mid), k)
-        if (c == 0) return true
-        else if (c < 0) lo = mid + 1
-        else hi = mid - 1
-      }
-      false
+  /** Equality-delete probe against the scan's unsigned-sorted anti-set. */
+  private def isDeleted(k: Array[Byte], off: Int, len: Int): Boolean = {
+    var lo = 0
+    var hi = deletedKeys.length - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val d = deletedKeys(mid)
+      val c = java.util.Arrays.compareUnsigned(d, 0, d.length, k, off, off + len)
+      if (c == 0) return true
+      else if (c < 0) lo = mid + 1
+      else hi = mid - 1
     }
+    false
+  }
+
+  @transient private lazy val shape = ProtoWire.ReadShape(readSchema)
+
+  // the tombstone anti-set composes into the pushed-filter gate: a
+  // deleted row is dropped before its columns decode, exactly like a
+  // pushed-filter miss
+  @transient private lazy val keep: ProtoWire.KeyGate = {
+    val pushed = KeyPredicate.compile(filters)
+    if (deletedKeys.isEmpty) pushed
+    else (k, off, len) => pushed(k, off, len) && !isDeleted(k, off, len)
+  }
+
+  /** The largest candidate key of a pushed point lookup: past it, a
+    * key-sorted range holds no kept row.
+    */
+  @transient private lazy val lastKey: Array[Byte] =
+    KeyPredicate.pointKeys(filters).filter(_.nonEmpty)
+      .map(_.max(Ordering.comparatorToOrdering(
+        java.util.Arrays.compareUnsigned(_: Array[Byte], _: Array[Byte]))))
+      .orNull
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
@@ -1239,12 +1306,14 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
       // frame range, so damage in one frame cannot cost the frames
       // before it.
       case ProtoZstInputPartition(meta) =>
-        if (ignoreCorrupt) reader(salvaged(meta.path, frameRanges(meta)))
-        else reader(new Decoded(meta.path, 0L, -1L, meta.count))
+        if (ignoreCorrupt) salvaged(meta.path, frameRanges(meta), null)
+        else new Decoded(meta.path, 0L, -1L, meta.count, null)
+      // a point lookup over a key-sorted file stops at its last key
       case ProtoZstSlicePartition(meta, ranges) =>
+        val stop = if (meta.sorted) lastKey else null
         chain(ranges.iterator.map { case (s, e) =>
-          reader(if (ignoreCorrupt) salvaged(meta.path, Iterator((s, e)))
-            else new Decoded(meta.path, s, e, -1L))
+          if (ignoreCorrupt) salvaged(meta.path, Iterator((s, e)), stop)
+          else new Decoded(meta.path, s, e, -1L, stop)
         })
       case ProtoZstBucketPartition(parts, _) =>
         chain(parts.iterator.map(createReader))
@@ -1284,126 +1353,56 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
       .iterator
   }
 
-  // compiled once per reader factory; pruning decides whether Column
-  // messages are decoded at all. The tombstone anti-set composes into
-  // the same gate: a deleted row is dropped before its columns decode,
-  // exactly like a pushed-filter miss.
-  @transient private lazy val keep: Array[Byte] => Boolean = {
-    val pushedKeep = KeyPredicate.compile(filters)
-    if (deletedKeys.isEmpty) pushedKeep
-    else k => pushedKeep(k) && !isDeleted(k)
-  }
-
-  /** Rows decoded from one stream, and how to close it. */
-  private trait Rows extends Iterator[ProtoWire.DecodedRow] with java.io.Closeable
-
   /** Rows of [start, end) of `file` (end = -1 ⇒ EOF) off their own
     * decompressor; `expect ≥ 0` is the truncation guard's attested row
-    * count. Frames stream straight off the decompressor: memory is
-    * bounded by one message, never the decompressed file (the
-    * reference reads partitions lazily the same way,
-    * `SSTableIdentityIteratorPatched.java:88-109`).
+    * count, and `stop` (or null) the key past which the range ends. A
+    * range reads exactly its bytes: the cut points are frame
+    * boundaries, so EOF of the bounded stream is a clean frame end.
     */
   private final class Decoded(file: String, start: Long, end: Long,
-      expect: Long) extends Rows {
+      expect: Long, stop: Array[Byte]) extends PartitionReader[InternalRow] {
     private val in: java.io.InputStream = {
       val p = new org.apache.hadoop.fs.Path(file)
       val raw = ProtoZstFiles.fs(p, conf.value).open(p)
       try {
         if (start > 0) raw.seek(start)
-        // a range reads exactly its bytes: the cut points are frame
-        // boundaries, so EOF of the bounded stream is a clean frame end
-        // and the decoder stops naturally
-        val src: java.io.InputStream =
-          if (end >= 0) new BoundedIn(raw, end - start) else raw
-        new java.io.BufferedInputStream(new ZstdInputStream(src), 64 << 10)
+        new ZstdInputStream(if (end >= 0) new BoundedIn(raw, end - start) else raw)
       } catch { case e: Exception => raw.close(); throw e }
     }
-    private val rows = ProtoWire.decodeStream(in,
-      readSchema.fieldNames.contains("columns"), keep, expect)
-    override def hasNext: Boolean = rows.hasNext
-    override def next(): ProtoWire.DecodedRow = rows.next()
+    private val rows = new ProtoWire.RowDecoder(in, shape, keep, expect, stop)
+    override def next(): Boolean = rows.next()
+    override def get(): InternalRow = rows.row
     override def close(): Unit = in.close()
   }
 
   /** Salvage read of `ranges` in order, each off its own decompressor:
     * the first range that fails to open or decode ends the read, and
     * every row before the failure is kept (the per-record analog of the
-    * reference's per-file suspect marking). A file gone by read time
-    * yields no rows.
+    * reference's per-file suspect marking). A row is emitted only after
+    * its whole message validated. A file gone by read time yields no
+    * rows.
     */
-  private def salvaged(file: String, ranges: Iterator[(Long, Long)]): Rows =
-    new Rows {
-      private var cur: Rows = _
-      private var pending: ProtoWire.DecodedRow = _
+  private def salvaged(file: String, ranges: Iterator[(Long, Long)],
+      stop: Array[Byte]): PartitionReader[InternalRow] =
+    new PartitionReader[InternalRow] {
+      private var cur: Decoded = _
       private var failed = false
-      private def fetch(): Unit =
-        while (pending == null && !failed)
+      override def next(): Boolean = {
+        while (!failed)
           try {
-            if (cur != null && cur.hasNext) pending = cur.next()
-            else if (ranges.hasNext) {
-              close()
-              val (s, e) = ranges.next()
-              cur = new Decoded(file, s, e, -1L)
-            } else return
+            if (cur != null && cur.next()) return true
+            close()
+            if (!ranges.hasNext) return false
+            val (s, e) = ranges.next()
+            cur = new Decoded(file, s, e, -1L, stop)
           } catch { case _: Exception => failed = true; close() }
-      override def hasNext: Boolean = { fetch(); pending != null }
-      override def next(): ProtoWire.DecodedRow = {
-        if (!hasNext) throw new NoSuchElementException("end of rows")
-        val r = pending
-        pending = null
-        r
+        false
       }
+      override def get(): InternalRow = cur.get()
       override def close(): Unit =
         if (cur != null) {
           try cur.close() catch { case _: Exception => () }
           cur = null
         }
     }
-
-  /** Projects decoded rows onto the pruned read schema. */
-  private def reader(rows: => Rows): PartitionReader[InternalRow] = {
-    // Spark prunes NESTED fields too (e.g. count() asks for
-    // array<struct<>>): emit exactly the struct shape the read schema
-    // declares, in its field order
-    val innerFields: Array[String] = readSchema.fields
-      .find(_.name == "columns")
-      .map(_.dataType.asInstanceOf[ArrayType]
-        .elementType.asInstanceOf[StructType].fieldNames)
-      .getOrElse(Array.empty)
-    // index-compiled projectors — the per-row path must not string-match
-    // field names (billions of rows cross this loop on a large scan)
-    val innerProj: Array[ProtoWire.DecodedColumn => Any] =
-      innerFields.map {
-        case "name" => (c: ProtoWire.DecodedColumn) => c.name
-        case "value" => (c: ProtoWire.DecodedColumn) => c.value
-        case "write_time" => (c: ProtoWire.DecodedColumn) => c.writeTime
-      }
-    val topProj: Array[ProtoWire.DecodedRow => Any] =
-      readSchema.fieldNames.map {
-        case "key" => (r: ProtoWire.DecodedRow) => r.key: Any
-        case "columns" => (r: ProtoWire.DecodedRow) =>
-          new GenericArrayData(r.columns.map { c =>
-            val vals = new Array[Any](innerProj.length)
-            var i = 0
-            while (i < innerProj.length) { vals(i) = innerProj(i)(c); i += 1 }
-            new GenericInternalRow(vals)
-          }.toArray[Any]): Any
-      }
-    new PartitionReader[InternalRow] {
-      private val it = rows
-      private var cur: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) {
-          val r = it.next()
-          val vals = new Array[Any](topProj.length)
-          var i = 0
-          while (i < topProj.length) { vals(i) = topProj(i)(r); i += 1 }
-          cur = new GenericInternalRow(vals)
-          true
-        } else false
-      override def get(): InternalRow = cur
-      override def close(): Unit = it.close()
-    }
-  }
 }

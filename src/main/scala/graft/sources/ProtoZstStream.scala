@@ -61,13 +61,12 @@ class ProtoZstMicroBatchStream(path: String, ignoreCorrupt: Boolean,
     filters: Array[org.apache.spark.sql.sources.Filter],
     maxFilesPerTrigger: Option[Int] = None,
     startingWriteTimeUs: Option[Long] = None,
-    maxBytesPerTrigger: Option[Long] = None)
+    maxBytesPerTrigger: Option[Long] = None,
+    conf: SerializableHadoopConf =
+      new SerializableHadoopConf(ProtoZstFiles.hadoopConf()))
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit, ReadMaxFiles}
-
-  // the stream object lives on the driver; only the reader factory ships
-  private val conf = new SerializableHadoopConf(ProtoZstFiles.hadoopConf())
 
   // Offset MODE: manifest-ordered when the directory is manifest-
   // GOVERNED (a committed snapshot, or the bare marker the writer

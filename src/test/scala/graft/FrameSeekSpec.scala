@@ -320,6 +320,32 @@ class FrameSeekSpec extends AnyFunSuite {
     assert(salvagedAll === (0 until 100).map(i => (f"u$i%04d", i.toLong)))
   }
 
+  test("a get on a segment's first key stops decoding at the next key") {
+    // u0950 opens the file's last segment; its duplicates could end the
+    // previous one, so the get reads both. Rewrite the last zstd frame
+    // as u0950, u0951 and then a torn frame: a read that decoded the
+    // segment to its end would fail on the tear
+    val dir = uniqDir("graft_seek_stop")
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    val data = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(_.getPath).filter(_.getName.endsWith(".proto.zst")).head
+    val off = FileIndex.read(fs, data).get.frames.last.offset
+    def row(i: Int) = graft.functions.ProtoWire.encodeDelimited(f"u$i%04d".getBytes("UTF-8"),
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(Array[Any](
+        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
+          s"c$i".getBytes("UTF-8"), s"v$i".getBytes("UTF-8"), i.toLong)))))
+    val head = { val in = fs.open(data); try in.readNBytes(off.toInt) finally in.close() }
+    val tail = new java.io.ByteArrayOutputStream()
+    val z = new com.github.luben.zstd.ZstdOutputStream(tail)
+    z.write(row(950) ++ row(951) ++ Array[Byte](5, 10))
+    z.close()
+    val out = fs.create(data, true)
+    try { out.write(head); tail.writeTo(out) } finally out.close()
+    intercept[org.apache.spark.SparkException](rows(spark.read.format("proto-zst").load(dir)))
+    val (got, jobs, _) = counted(rows(point(dir)("u0950")))
+    assert(got === Seq(("u0950", 950L)) && jobs === 1)
+  }
+
   test("a key-filtered stream never takes the local path and returns the batch rows") {
     val dir = uniq
     val name = s"seek_stream_${System.nanoTime()}"

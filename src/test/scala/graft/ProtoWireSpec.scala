@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.ProtoWire
+import graft.sources.ProtoZstTable
 
 /** Golden-byte tests for the hand-rolled proto3 encoder against the wire
   * format of `/root/reference/src/main/proto/sstable.proto:1-16` —
@@ -155,25 +156,18 @@ class ProtoWireSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("overrun"), ex.getMessage)
   }
 
-  test("decodeStream equals buffer decode, frame-at-a-time") {
+  test("RowDecoder equals buffer decode, frame-at-a-time") {
     val frames = (1 to 50).map { i =>
       ProtoWire.delimit(ProtoWire.encodeRow(s"key$i".getBytes,
         cols((s"n$i", "v" * (i % 7), i.toLong))))
     }
     val buf = frames.reduce(_ ++ _)
     val fromBuf = ProtoWire.decodeRowsPruned(buf, true, _ => true).toSeq
-    val fromStream = ProtoWire.decodeStream(
-      new java.io.ByteArrayInputStream(buf), true, _ => true).toSeq
+      .map(RowDecoding.plain(_, ProtoZstTable.Schema))
+    val (fromStream, err) = RowDecoding.decode(buf)
+    assert(err.isEmpty)
     assert(fromStream.size === fromBuf.size)
-    fromStream.zip(fromBuf).foreach { case (s, b) =>
-      assert(s.key.sameElements(b.key))
-      assert(s.columns.size === b.columns.size)
-      s.columns.zip(b.columns).foreach { case (x, y) =>
-        assert(x.name.sameElements(y.name))
-        assert(x.value.sameElements(y.value))
-        assert(x.writeTime === y.writeTime)
-      }
-    }
+    assert(fromStream === fromBuf)
   }
 
   test("decoders skip unknown fields (forward compatibility)") {
@@ -191,41 +185,38 @@ class ProtoWireSpec extends AnyFunSuite {
       b(0x12, col.length) ++ col ++ // field 2 = the Column
       b(0x31, 9, 9, 9, 9, 9, 9, 9, 9) // field 6 I64 (unknown)
     val framed = ProtoWire.delimit(row)
-    for (decoded <- Seq(
-        ProtoWire.decodeRowsPruned(framed, true, _ => true).toSeq,
-        ProtoWire.decodeStream(
-          new java.io.ByteArrayInputStream(framed), true, _ => true).toSeq)) {
-      assert(decoded.size === 1)
-      assert(decoded.head.key.sameElements("k1".getBytes))
-      assert(decoded.head.columns.size === 1)
-      val c = decoded.head.columns.head
-      assert(c.name.sameElements("a".getBytes))
-      assert(c.value.sameElements("b".getBytes))
-      assert(c.writeTime === 7L)
-    }
+    val want = Seq(Seq[Any]("k1".getBytes.toSeq,
+      Seq(Seq[Any]("a".getBytes.toSeq, "b".getBytes.toSeq, 7L))))
+    assert(ProtoWire.decodeRowsPruned(framed, true, _ => true).toSeq
+      .map(RowDecoding.plain(_, ProtoZstTable.Schema)) === want)
+    assert(RowDecoding.decode(framed) === ((want, None)))
   }
 
-  test("decodeStream: truncated tail throws after the valid prefix") {
+  test("RowDecoder: truncated tail throws after the valid prefix") {
     val good = ProtoWire.delimit(ProtoWire.encodeRow("k1".getBytes,
       cols(("a", "b", 7L))))
     val cut = ProtoWire.delimit(ProtoWire.encodeRow("k2".getBytes,
       cols(("c", "d", 8L)))).dropRight(3)
-    val it = ProtoWire.decodeStream(
-      new java.io.ByteArrayInputStream(good ++ cut), true, _ => true)
-    assert(it.next().key.sameElements("k1".getBytes))
-    intercept[IllegalArgumentException](it.hasNext)
+    val d = new ProtoWire.RowDecoder(new java.io.ByteArrayInputStream(good ++ cut),
+      ProtoWire.ReadShape(ProtoZstTable.Schema))
+    assert(d.next())
+    assert(d.row.getBinary(0).sameElements("k1".getBytes))
+    intercept[IllegalArgumentException](d.next())
   }
 
-  test("decodeStream: pushed key predicate skips frames") {
+  test("RowDecoder: pushed key predicate skips frames") {
     val buf = (1 to 9).map { i =>
       ProtoWire.delimit(ProtoWire.encodeRow(s"k$i".getBytes,
         cols((s"n$i", "v", i.toLong))))
     }.reduce(_ ++ _)
-    val kept = ProtoWire.decodeStream(
-      new java.io.ByteArrayInputStream(buf), false,
-      k => new String(k) >= "k3" && new String(k) < "k6").toSeq
-    assert(kept.map(r => new String(r.key)) === Seq("k3", "k4", "k5"))
-    assert(kept.forall(_.columns.isEmpty)) // pruned: never decoded
+    val keyOnly = ProtoZstTable.Schema.copy(fields = ProtoZstTable.Schema.fields.take(1))
+    val (kept, err) = RowDecoding.decode(buf, keyOnly, (b, off, len) => {
+      val k = new String(b, off, len)
+      k >= "k3" && k < "k6"
+    })
+    assert(err.isEmpty)
+    // pruned: each row is its key alone, no column ever decoded
+    assert(kept === Seq("k3", "k4", "k5").map(k => Seq(k.getBytes.toSeq)))
   }
 
   test("delimit round-trip: varint prefix decodes back to message length") {

@@ -109,11 +109,9 @@ class TombstoneSpec extends AnyFunSuite {
     val victimSet = victims.map(_.toSeq).toSet
     post.dataEntries.foreach { e =>
       val p = new org.apache.hadoop.fs.Path(dir, e.name)
-      val in = new java.io.BufferedInputStream(
-        new com.github.luben.zstd.ZstdInputStream(fs.open(p)), 64 << 10)
-      try graft.functions.ProtoWire.decodeStream(in, wantColumns = false,
-        _ => true).foreach(r => assert(!victimSet.contains(r.key.toSeq),
-          s"victim key survived purge in ${e.name}"))
+      val in = new com.github.luben.zstd.ZstdInputStream(fs.open(p))
+      try graft.functions.ProtoWire.keys(in).foreach(k => assert(
+        !victimSet.contains(k.toSeq), s"victim key survived purge in ${e.name}"))
       finally in.close()
     }
     // no tomb-* file remains on disk either (the keys are personal data)
@@ -156,12 +154,10 @@ class TombstoneSpec extends AnyFunSuite {
     var newSeen = false
     snap.dataEntries.foreach { e =>
       val p = new org.apache.hadoop.fs.Path(dir, e.name)
-      val in = new java.io.BufferedInputStream(
-        new com.github.luben.zstd.ZstdInputStream(fs.open(p)), 64 << 10)
-      try graft.functions.ProtoWire.decodeStream(in, wantColumns = false,
-        _ => true).foreach { r =>
-          assert(!oldSet.contains(r.key.toSeq), s"ripe victim in ${e.name}")
-          if (newSet.contains(r.key.toSeq)) newSeen = true
+      val in = new com.github.luben.zstd.ZstdInputStream(fs.open(p))
+      try graft.functions.ProtoWire.keys(in).foreach { k =>
+          assert(!oldSet.contains(k.toSeq), s"ripe victim in ${e.name}")
+          if (newSet.contains(k.toSeq)) newSeen = true
         }
       finally in.close()
     }
