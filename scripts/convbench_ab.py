@@ -2,8 +2,8 @@
 """Interleaved parent/change A/B of one convbench workload.
 
     python3 scripts/convbench_ab.py --parent REV --workload export \
-        --seeds 201-210 [--seconds 10] [--parent-dir DIR] [--workdir DIR] \
-        [--json OUT]
+        --seeds 201-210 [--seconds 10] [--trace 0|1] [--parent-dir DIR] \
+        [--workdir DIR] [--json OUT]
 
 Run from the repository root. Both arms run from fresh copies made in a
 temporary directory (under --workdir when given) and removed afterwards:
@@ -21,7 +21,9 @@ run.
 For each end-to-end metric of BENCHMARK.json the script prints both
 arms' medians, the change in the median, the parent's IQR / median, the
 pairs the change won, and whether the median moved by more than the
-parent's IQR; then the same for the numeric latencies and rates of
+parent's IQR; with --trace 1 the runs are traced and the same columns
+are given for each per-layer metric instead (a traced run reports no
+end-to-end metric); then the same for the numeric latencies and rates of
 run.py's `detail` line that the workload reports (erase, get and range
 latencies have no end-to-end metric); then each arm's failed operations
 and failed runs.
@@ -73,12 +75,12 @@ def export_rev(rev, dst):
     subprocess.run(["tar", "-x", "-C", dst], input=archive, check=True)
 
 
-def run_arm(root, workload, seed, seconds):
+def run_arm(root, workload, seed, seconds, trace):
     """One convbench run in checkout `root`: its result object, with the
     `detail` line's fields under "detail", or None."""
     cmd = [sys.executable, os.path.join("convbench", "run.py"),
            "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=root, stdout=subprocess.PIPE,
                           stderr=subprocess.PIPE, text=True)
     lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
@@ -149,6 +151,8 @@ def main():
     ap.add_argument("--workload", required=True, choices=("export", "read", "ingest"))
     ap.add_argument("--seeds", required=True, help="e.g. 201-210 or 1,2,5")
     ap.add_argument("--seconds", type=int)
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0,
+                    help="1: traced runs, tabulating the per-layer metrics")
     ap.add_argument("--json", help="also write every run's result here")
     args = ap.parse_args()
     if bool(args.parent) == bool(args.parent_dir):
@@ -174,7 +178,8 @@ def main():
             arms = {}
             order = ("parent", "change") if seed % 2 == 0 else ("change", "parent")
             for arm in order:
-                arms[arm] = run_arm(arms_dir[arm], args.workload, seed, seconds)
+                arms[arm] = run_arm(arms_dir[arm], args.workload, seed,
+                                    seconds, args.trace)
                 status = "crashed" if arms[arm] is None else \
                     f"correct={arms[arm]['correct']} failed={arms[arm]['failed']}"
                 print(f"seed {seed} {arm}: {status}", file=sys.stderr, flush=True)
@@ -182,14 +187,15 @@ def main():
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
-    rows = table(bench["end_to_end"], results)
+    rows = table(bench["per_layer" if args.trace else "end_to_end"], results)
     detail_rows = table(DETAIL, results, detail_value)
-    print(f"{args.workload}: {len(results)} pairs, seeds {args.seeds}, {seconds} s per run")
-    print(f"{'metric':26} {'parent':>12} {'change':>12} {'delta':>8} "
+    print(f"{args.workload}: {len(results)} pairs, seeds {args.seeds}, "
+          f"{seconds} s per run{', traced' if args.trace else ''}")
+    print(f"{'metric':38} {'parent':>12} {'change':>12} {'delta':>8} "
           f"{'p.IQR/med':>9} {'won':>6} {'bound':>6}  >IQR")
     for r in rows + detail_rows:
         bound = f"{r['bound']:6.2f}" if r["bound"] is not None else f"{'-':>6}"
-        print(f"{r['metric']:26} {r['parent']:12.4g} {r['change']:12.4g} "
+        print(f"{r['metric']:38} {r['parent']:12.4g} {r['change']:12.4g} "
               f"{r['delta']:+8.1%} {r['parent_iqr_over_median']:9.1%} "
               f"{r['won']:>3}/{r['pairs']:<2} {bound}  "
               f"{'yes' if r['beyond_parent_iqr'] else 'no'}")
@@ -204,6 +210,7 @@ def main():
     if args.json:
         with open(args.json, "w") as fh:
             json.dump({"workload": args.workload, "seeds": seeds_of(args.seeds),
+                       "trace": args.trace,
                        "pairs": [{"parent": p, "change": c} for p, c in results],
                        "summary": rows, "detail_summary": detail_rows}, fh, indent=1)
 

@@ -515,9 +515,14 @@ object Sink {
         size(col("columns")).cast("long").as("n_cells"))
   }
 
-  /** Pack-target for [[optimizeSink]] — tiny at test scale so the
-    * fixture genuinely fragments; production sizes this like any file
-    * target (hundreds of MB to 1 GB).
+  /** Pack-target for [[SinkMaintain.optimizeSink]]: files under it are
+    * small and get packed, into `max(1, floor(Σ small bytes / target))`
+    * files, so each pack holds at least the target whenever the small
+    * set does and is left alone afterwards. A single pack is written by
+    * one task without a shuffle; a pack that stays (or compresses)
+    * under the target is packed once more, with the newer small files.
+    * Tiny at test scale so the fixture genuinely fragments; production
+    * sizes this like any file target (hundreds of MB to 1 GB).
     */
   val OptTargetBytes: Long = 64L * 1024
 

@@ -73,8 +73,10 @@ object SinkMaintain {
     * directory governed but without a snapshot: that reads as "no
     * survivors" and the commit just drops `retired`. A replace that
     * lost to a concurrent maintenance commit throws
-    * [[graft.sources.GenManifest.ConcurrentMaintenanceException]];
-    * re-running the operation re-plans it. Returns the adopted entries.
+    * [[graft.sources.GenManifest.ConcurrentMaintenanceException]], and
+    * so does a `write` that failed after such a commit retired some of
+    * `retired` (the files it reads); re-running the operation re-plans
+    * it. Returns the adopted entries.
     */
   private[graft] def stagedSwap(dir: String, conf: Configuration,
       stagingPrefix: String, namePrefix: String,
@@ -87,7 +89,21 @@ object SinkMaintain {
     val fs = ProtoZstFiles.fs(dirPath, conf)
     val runId = java.util.UUID.randomUUID().toString.replace("-", "")
     val staging = new Path(dirPath, stagingPrefix + runId)
-    write(staging.toString)
+    try write(staging.toString)
+    catch {
+      // a concurrent maintenance commit retired (and deleted) files this
+      // rewrite was reading: the same lost race the conditional replace
+      // refuses, surfaced as a failed read instead
+      case e: Exception if GenManifest.read(dir, conf).exists { s =>
+          val live = s.entries.iterator.map(_.name).toSet
+          !retired.forall(r => live(r.name)) } =>
+        val lost = new GenManifest.ConcurrentMaintenanceException(
+          s"maintenance aborted: a concurrent commit retired files this " +
+            s"rewrite of $dir was reading; table unchanged, staged files " +
+            s"retained under $staging")
+        lost.initCause(e)
+        throw lost
+    }
     val staged = GenManifest.read(staging.toString, conf) match {
       case Some(snap) => snap.entries
       case None if GenManifest.governed(staging.toString, conf) => Vector.empty
@@ -130,22 +146,34 @@ object SinkMaintain {
   }
 
   /** OPTIMIZE for the proto-zst format: bin-pack the directory's SMALL
-    * files (< `targetBytes`) into ~`targetBytes` files, preserving the
-    * key-clustered layout — the small-files compaction every streaming
-    * ingest (q37 writes one file per micro-batch task) eventually
-    * needs, and what Delta/Iceberg `OPTIMIZE` does for their formats.
+    * files (< `targetBytes`) into files of at least `targetBytes`,
+    * preserving the key-clustered layout — the small-files compaction
+    * every streaming ingest (q37 writes one file per micro-batch task)
+    * eventually needs, and what Delta/Iceberg `OPTIMIZE` does for their
+    * formats.
     *
     * The PLAN reads no filesystem metadata at all: the manifest
     * snapshot carries every file's size, so one driver pass picks the
-    * rewrite set and sizes the output (`ceil(Σsize/target)` bins). The
-    * MOVE is one distributed job: the small files are read as an
-    * explicit multi-path proto-zst scan (one partition per file, never
-    * touching the already-packed files), `repartitionByRange(bins,
-    * key)` re-clusters them — each output file covers a contiguous key
-    * range, so the rewritten files' key ranges stay maximally
-    * selective for q60's plan-time skipping — and the [[stagedSwap]]
-    * commits them under `packed-` names. Tombstone entries are small
-    * by nature but never packed (their rows are deleted KEYS).
+    * rewrite set and sizes the output as `max(1, floor(Σsize/target))`
+    * bins. Rounding DOWN gives each bin, on average, at least the
+    * target whenever the small set holds it, so a pack is not small and
+    * later OPTIMIZEs leave it alone — Cassandra's size-tiered compaction
+    * likewise merges only similar-sized SSTables and never rewrites a
+    * full-size one. A small set below the target packs into one file
+    * that is still small, and so is a pack whose compressed output
+    * shrinks under the target: the next OPTIMIZE selects it once more,
+    * together with the files written since.
+    *
+    * The MOVE is one job: the small files are read as an explicit
+    * multi-path proto-zst scan (one partition per file, never touching
+    * the already-packed files). One bin is `coalesce(1)` into a single
+    * task, no exchange; two or more are `repartitionByRange(bins, key)`
+    * — each output file covers a contiguous key range, so the
+    * rewritten files' key ranges stay maximally selective for q60's
+    * plan-time skipping. Either way rows are key-sorted within the
+    * file, and the [[stagedSwap]] commits the files under `packed-`
+    * names. Tombstone entries are small by nature but never packed
+    * (their rows are deleted KEYS).
     *
     * Only manifest-governed directories are optimized: a directory
     * without a manifest is refused, like every other maintenance op —
@@ -162,13 +190,12 @@ object SinkMaintain {
     val nBefore = snap.dataEntries.length
     val small = snap.dataEntries.filter(_.bytes < targetBytes)
     if (small.length < 2) return (nBefore, nBefore)
-    val bins = math.max(1,
-      math.ceil(small.map(_.bytes).sum.toDouble / targetBytes).toInt)
+    val bins = math.max(1L, small.map(_.bytes).sum / targetBytes).toInt
     val packed = stagedSwap(outDir, conf, ".optimize-", "packed-", small) {
       staging =>
-        spark.read.format("proto-zst")
+        val in = spark.read.format("proto-zst")
           .load(small.map(e => new Path(outDir, e.name).toString): _*)
-          .repartitionByRange(bins, col("key"))
+        (if (bins == 1) in.coalesce(1) else in.repartitionByRange(bins, col("key")))
           .sortWithinPartitions(col("key"))
           .write.format("proto-zst").mode("append").save(staging)
     }

@@ -49,13 +49,15 @@ class ProtoZstDataSource extends TableProvider with DataSourceRegister {
     // API (writes keep bucketing); only the CATALOG path may also
     // REPORT the partitioning, because only it carries the
     // FunctionCatalog that lets Catalyst resolve the bucket transform.
-    // A multi-path read never reports a joint layout.
-    new ProtoZstTable(paths,
+    // A multi-path read never reports a joint layout. The spec is read
+    // with the conf the scan or write builder builds anyway, so a
+    // `load()` builds no conf of its own.
+    val bucketsIn: org.apache.hadoop.conf.Configuration => Option[Int] =
       paths match {
-        case Seq(only) => GraftBucket.readSpec(only, ProtoZstFiles.hadoopConf())
-        case _ => None
-      },
-      viaCatalog = false)
+        case Seq(only) => GraftBucket.readSpec(only, _)
+        case _ => _ => None
+      }
+    new ProtoZstTable(paths, bucketsIn, viaCatalog = false)
   }
 }
 
@@ -83,16 +85,21 @@ object ProtoZstTable {
       StructField("write_time", LongType)))))))
 }
 
-class ProtoZstTable(paths: Seq[String], buckets: Option[Int] = None,
+/** `bucketsIn` resolves the directory's bucket count (None =
+  * unbucketed) with a Hadoop conf the caller already holds.
+  */
+class ProtoZstTable(paths: Seq[String],
+    bucketsIn: org.apache.hadoop.conf.Configuration => Option[Int] = _ => None,
     viaCatalog: Boolean = false) extends Table
     with SupportsRead with SupportsWrite {
   def this(path: String, buckets: Option[Int], viaCatalog: Boolean) =
-    this(Seq(path), buckets, viaCatalog)
+    this(Seq(path), _ => buckets, viaCatalog)
   override def name(): String = s"proto-zst(${paths.mkString(",")})"
   override def schema(): StructType = ProtoZstTable.Schema
   override def partitioning(): Array[Transform] =
-    buckets.map(n => org.apache.spark.sql.connector.expressions.Expressions
-      .bucket(n, "key")).toArray
+    bucketsIn(ProtoZstFiles.hadoopConf()).map(n =>
+      org.apache.spark.sql.connector.expressions.Expressions.bucket(n, "key"))
+      .toArray
   override def capabilities(): java.util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.STREAMING_WRITE,
@@ -113,6 +120,9 @@ class ProtoZstTable(paths: Seq[String], buckets: Option[Int] = None,
       throw new UnsupportedOperationException(
         s"proto-zst write needs exactly one target directory, got $paths")
     val dir = paths.head
+    // the builder's one conf: the bucket spec, the manifest commits and
+    // the rollback all run on the driver
+    val conf = ProtoZstFiles.hadoopConf()
     // a job-level abort rolls back the tasks that DID commit (their
     // tmp→final renames) so a retried job can't double-count rows;
     // runs on the driver, where the session conf is at hand.
@@ -125,7 +135,6 @@ class ProtoZstTable(paths: Seq[String], buckets: Option[Int] = None,
     // fresh job-UUID names the manifest has never seen, so they go.
     def rollback(msgs: Array[WriterCommitMessage]): Unit = {
       val dirPath = new org.apache.hadoop.fs.Path(dir)
-      val conf = ProtoZstFiles.hadoopConf()
       val fs = ProtoZstFiles.fs(dirPath, conf)
       val published: Set[String] = GenManifest.read(dir, conf)
         .map(_.entries.iterator.map(_.name).toSet).getOrElse(Set.empty)
@@ -147,7 +156,7 @@ class ProtoZstTable(paths: Seq[String], buckets: Option[Int] = None,
         case _ => Seq.empty
       }
       if (entries.nonEmpty) {
-        GenManifest.append(dir, ProtoZstFiles.hadoopConf(),
+        GenManifest.append(dir, conf,
           entries.toIndexedSeq)
         ()
       }
@@ -168,18 +177,18 @@ class ProtoZstTable(paths: Seq[String], buckets: Option[Int] = None,
       }
       if (entries.nonEmpty) {
         EpochCommitHooks.beforeCommit(epochId)
-        if (GenManifest.appendEpoch(dir, ProtoZstFiles.hadoopConf(),
+        if (GenManifest.appendEpoch(dir, conf,
             s"$streamQueryId/$epochId", entries.toIndexedSeq).isEmpty)
           rollback(msgs)
         else EpochCommitHooks.afterCommit(epochId)
       }
     }
-    val bucketSpec = buckets
+    val bucketSpec = bucketsIn(conf)
     // partitioned-export mode: roll a new file per key-prefix group
     // (see ProtoZstWriterFactory.splitPrefix); a bucketed directory's
     // layout wins if both are somehow set
     val splitPrefix = Option(info.options.get("splitKeyPrefix")).map(_.toInt)
-      .filter(_ => buckets.isEmpty)
+      .filter(_ => bucketSpec.isEmpty)
     val frameRows = Option(info.options.get("splitFrameRows")).map(_.toInt)
       .getOrElse(ProtoZstWriterFactory.DefaultSplitFrameRows)
     new WriteBuilder {
@@ -190,7 +199,7 @@ class ProtoZstTable(paths: Seq[String], buckets: Option[Int] = None,
       // listing not-yet-published task files.
       private def batchWrite: BatchWrite = new BatchWrite {
         override def createBatchWriterFactory(p: PhysicalWriteInfo): DataWriterFactory = {
-          GenManifest.mark(dir, ProtoZstFiles.hadoopConf())
+          GenManifest.mark(dir, conf)
           new ProtoZstWriterFactory(dir, bucketSpec, splitPrefix, frameRows)
         }
         override def commit(msgs: Array[WriterCommitMessage]): Unit =
@@ -200,7 +209,7 @@ class ProtoZstTable(paths: Seq[String], buckets: Option[Int] = None,
       }
       private def streamingWrite: StreamingWrite = new StreamingWrite {
         override def createStreamingWriterFactory(p: PhysicalWriteInfo): StreamingDataWriterFactory = {
-          GenManifest.mark(dir, ProtoZstFiles.hadoopConf())
+          GenManifest.mark(dir, conf)
           new ProtoZstWriterFactory(dir, bucketSpec, splitPrefix, frameRows)
         }
         override def commit(epochId: Long, msgs: Array[WriterCommitMessage]): Unit =
@@ -239,7 +248,7 @@ class ProtoZstTable(paths: Seq[String], buckets: Option[Int] = None,
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ProtoZstScanBuilder(paths, options, buckets, viaCatalog)
+    new ProtoZstScanBuilder(paths, options, bucketsIn, viaCatalog)
 }
 
 /** Scan builder with the two §4.3 optimizations the reference gets from
@@ -249,7 +258,8 @@ class ProtoZstTable(paths: Seq[String], buckets: Option[Int] = None,
   * column pruning (a key-only projection skips Column decode entirely).
   */
 class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
-    buckets: Option[Int] = None, viaCatalog: Boolean = false)
+    bucketsIn: org.apache.hadoop.conf.Configuration => Option[Int] = _ => None,
+    viaCatalog: Boolean = false)
     extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
@@ -462,7 +472,7 @@ class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
       new ProtoZstAggScan(paths.mkString(","), schema, values, desc)
     case None =>
       val scan = new ProtoZstScan(view, ignoreCorrupt, required, pushed,
-        buckets, viaCatalog, maxFilesPerTrigger, timeBounds,
+        bucketsIn(view.conf.value), viaCatalog, maxFilesPerTrigger, timeBounds,
         startingWriteTimeUs, maxBytesPerTrigger, splitFileBytes,
         maxTombstoneBytes)
       // a point lookup that reads at most one frame is answered on the

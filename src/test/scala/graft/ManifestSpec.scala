@@ -125,6 +125,86 @@ class ManifestSpec extends AnyFunSuite {
     assert(spark.read.format("proto-zst").load(dir).count().toInt === beforeRows)
   }
 
+  /** A fresh directory of 8 small range-partitioned files, with their
+    * manifest snapshot and the row count.
+    */
+  private def fragmented(prefix: String): (String, GenManifest.Snapshot, Long) = {
+    val dir = freshDir(prefix)
+    Sink.writeNested(CellModel.nestRows(spark, sf0001)
+      .repartitionByRange(8, col("key")), dir)
+    (dir, GenManifest.read(dir, conf).get,
+      spark.read.format("proto-zst").load(dir).count())
+  }
+
+  test("a one-bin optimize runs no exchange and writes one key-sorted file") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val (dir, s0, n) = fragmented("graft_man_opt_1bin")
+    // the whole directory is one bin however the bin count rounds
+    val target = s0.dataEntries.map(_.bytes).sum + 1
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(SinkMaintain.optimizeSink(spark, dir, target) ===
+        (s0.dataEntries.length, 1))
+      org.apache.spark.GraftBusAccess.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val walk = new AdaptiveSparkPlanHelper {}
+    val executed = plans.asScala.toSeq.map(_.executedPlan)
+    assert(executed.nonEmpty, "the pack's write was not captured")
+    executed.foreach { p =>
+      assert(walk.collect(p) { case e: Exchange => e }.isEmpty,
+        s"a one-bin pack planned an exchange:\n$p")
+    }
+    val pack = GenManifest.read(dir, conf).get.dataEntries.head
+    val fs = ProtoZstFiles.fs(new org.apache.hadoop.fs.Path(dir), conf)
+    assert(graft.sources.FileIndex.read(fs,
+      new org.apache.hadoop.fs.Path(dir, pack.name)).exists(_.sorted),
+      "the one-bin pack must attest key-sorted rows")
+    assert(spark.read.format("proto-zst").load(dir).count() === n)
+  }
+
+  test("optimize leaves its own pack alone and packs only the newer smalls") {
+    val (dir, s0, n) = fragmented("graft_man_opt_floor")
+    // every file is small and the small set holds the target: the
+    // pack must hold it too (rounding the bin count up would split
+    // the set into two packs, each under the target)
+    val target = s0.dataEntries.map(_.bytes).sum * 3 / 5
+    assert(s0.dataEntries.length >= 2 && s0.dataEntries.forall(_.bytes < target),
+      s"fixture must be all small files: ${s0.dataEntries.map(_.bytes)}")
+    SinkMaintain.optimizeSink(spark, dir, target)
+    val pack = GenManifest.read(dir, conf).get.dataEntries.toSeq match {
+      case Seq(e) => e
+      case es => fail(s"expected one pack, got ${es.map(e => e.name -> e.bytes)}")
+    }
+    assert(pack.bytes >= target, s"the pack is small: ${pack.bytes} < $target")
+    // two small appends: the next OPTIMIZE packs exactly those two and
+    // leaves the first pack's entry as it was
+    (1 to 2).foreach { _ =>
+      Sink.writeNested(CellModel.nestRows(spark, sf0001).limit(3)
+        .repartition(1), dir)
+    }
+    val appended = GenManifest.read(dir, conf).get.dataEntries.map(_.name).toSet -
+      pack.name
+    assert(appended.size === 2)
+    assert(SinkMaintain.optimizeSink(spark, dir, target) === (3, 2))
+    val s2 = GenManifest.read(dir, conf).get.dataEntries
+    assert(s2.map(_.name).toSet.intersect(appended).isEmpty,
+      "the appends were not packed")
+    assert(s2.count(e => e.name == pack.name && e.bytes == pack.bytes) === 1,
+      s"the first pack was rewritten: ${s2.map(e => e.name -> e.bytes)}")
+    assert(spark.read.format("proto-zst").load(dir).count() === n + 6)
+  }
+
   test("uncommitted packed files are invisible to manifest readers") {
     val dir = freshDir("graft_man_crash")
     Sink.writeNested(CellModel.nestRows(spark, sf0001)
@@ -1512,8 +1592,10 @@ class ManifestSpec extends AnyFunSuite {
     // loser's pack on top of the winner's — every row doubled). But a
     // scheduler stall CAN delay one thread past the other's full
     // stage+commit, in which case its plan post-dates the first commit
-    // and a second commit is legitimately valid (it re-packs the
-    // winner's pack) — so: every loss must be the typed refusal, at
+    // and sees the winner's output: it is a no-op when that output is
+    // one pack, and otherwise re-packs only the winner's packs that
+    // came out under the target, which is legitimately valid — so:
+    // every loss must be the typed refusal, at
     // least one must win, and the table-level invariants below hold in
     // EITHER interleaving
     assert(wins.nonEmpty, s"no OPTIMIZE committed: $results")
