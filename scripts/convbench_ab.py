@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
-"""Interleaved parent/change A/B of one convbench workload.
+"""Interleaved parent/change A/B of one or more convbench workloads.
 
-    python3 scripts/convbench_ab.py --parent REV --workload export \
+    python3 scripts/convbench_ab.py --parent REV --workload export,read \
         --seeds 201-210 [--seconds 10] [--trace 0|1] [--parent-dir DIR] \
         [--workdir DIR] [--json OUT]
 
@@ -12,13 +12,14 @@ untracked files, uncommitted edits included, nothing git ignores — so
 no `target/` and no `convbench/.runs/`); the parent arm is REV exported
 with `git archive`, or a copy of the checkout named with --parent-dir,
 made the same way as the change arm's. Naming this checkout as
---parent-dir runs one tree on both arms: an A/A run. For every seed the
-two arms run `convbench/run.py` back to back, the arm order alternating
-by seed (even seeds run the parent first), so a drift in machine load
-lands on both arms alike. Each copy builds its own engine on its first
-run.
+--parent-dir runs one tree on both arms: an A/A run. For every seed and
+every listed workload the two arms run `convbench/run.py` back to back,
+the arm order alternating by seed (even seeds run the parent first), so
+a drift in machine load lands on both arms alike. Each copy builds its
+own engine on its first run.
 
-For each end-to-end metric of BENCHMARK.json the script prints both
+For each workload, and each end-to-end metric of BENCHMARK.json, the
+script prints both
 arms' medians, the change in the median, the parent's IQR / median, the
 pairs the change won, and whether the median moved by more than the
 parent's IQR; with --trace 1 the runs are traced and the same columns
@@ -148,7 +149,8 @@ def main():
     ap.add_argument("--parent", help="parent revision, exported with git archive")
     ap.add_argument("--parent-dir", help="a checkout of the parent, copied")
     ap.add_argument("--workdir", help="where the two arms' copies are made")
-    ap.add_argument("--workload", required=True, choices=("export", "read", "ingest"))
+    ap.add_argument("--workload", required=True,
+                    help="comma-separated, of export, read and ingest")
     ap.add_argument("--seeds", required=True, help="e.g. 201-210 or 1,2,5")
     ap.add_argument("--seconds", type=int)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0,
@@ -157,6 +159,10 @@ def main():
     args = ap.parse_args()
     if bool(args.parent) == bool(args.parent_dir):
         ap.error("name exactly one of --parent and --parent-dir")
+    workloads = args.workload.split(",")
+    unknown = set(workloads) - {"export", "read", "ingest"}
+    if unknown:
+        ap.error(f"unknown workload(s): {', '.join(sorted(unknown))}")
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
@@ -165,7 +171,7 @@ def main():
     tmp = tempfile.mkdtemp(prefix="convbench-ab-", dir=args.workdir)
     arms_dir = {"parent": os.path.join(tmp, "parent"),
                 "change": os.path.join(tmp, "change")}
-    results = []
+    results = {w: [] for w in workloads}
     try:
         for d in arms_dir.values():
             os.mkdir(d)
@@ -175,44 +181,50 @@ def main():
             copy_checkout(os.path.abspath(args.parent_dir), arms_dir["parent"])
         copy_checkout(ROOT, arms_dir["change"])
         for seed in seeds_of(args.seeds):
-            arms = {}
             order = ("parent", "change") if seed % 2 == 0 else ("change", "parent")
-            for arm in order:
-                arms[arm] = run_arm(arms_dir[arm], args.workload, seed,
-                                    seconds, args.trace)
-                status = "crashed" if arms[arm] is None else \
-                    f"correct={arms[arm]['correct']} failed={arms[arm]['failed']}"
-                print(f"seed {seed} {arm}: {status}", file=sys.stderr, flush=True)
-            results.append((arms["parent"], arms["change"]))
+            for workload in workloads:
+                arms = {}
+                for arm in order:
+                    arms[arm] = run_arm(arms_dir[arm], workload, seed,
+                                        seconds, args.trace)
+                    status = "crashed" if arms[arm] is None else \
+                        f"correct={arms[arm]['correct']} failed={arms[arm]['failed']}"
+                    print(f"seed {seed} {workload} {arm}: {status}",
+                          file=sys.stderr, flush=True)
+                results[workload].append((arms["parent"], arms["change"]))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
-    rows = table(bench["per_layer" if args.trace else "end_to_end"], results)
-    detail_rows = table(DETAIL, results, detail_value)
-    print(f"{args.workload}: {len(results)} pairs, seeds {args.seeds}, "
-          f"{seconds} s per run{', traced' if args.trace else ''}")
-    print(f"{'metric':38} {'parent':>12} {'change':>12} {'delta':>8} "
-          f"{'p.IQR/med':>9} {'won':>6} {'bound':>6}  >IQR")
-    for r in rows + detail_rows:
-        bound = f"{r['bound']:6.2f}" if r["bound"] is not None else f"{'-':>6}"
-        print(f"{r['metric']:38} {r['parent']:12.4g} {r['change']:12.4g} "
-              f"{r['delta']:+8.1%} {r['parent_iqr_over_median']:9.1%} "
-              f"{r['won']:>3}/{r['pairs']:<2} {bound}  "
-              f"{'yes' if r['beyond_parent_iqr'] else 'no'}")
-    for i, arm in enumerate(("parent", "change")):
-        runs = [pair[i] for pair in results]
-        crashed = sum(1 for r in runs if r is None)
-        wrong = sum(1 for r in runs if r is not None and not r["correct"])
-        failed = sum(r["failed"] for r in runs if r is not None)
-        attempted = sum(r["attempted"] for r in runs if r is not None)
-        print(f"{arm}: failed {failed} of {attempted} operations, "
-              f"{wrong} incorrect runs, {crashed} crashed runs")
+    summaries = {}
+    for workload, pairs in results.items():
+        rows = table(bench["per_layer" if args.trace else "end_to_end"], pairs)
+        detail_rows = table(DETAIL, pairs, detail_value)
+        summaries[workload] = {
+            "pairs": [{"parent": p, "change": c} for p, c in pairs],
+            "summary": rows, "detail_summary": detail_rows}
+        print(f"{workload}: {len(pairs)} pairs, seeds {args.seeds}, "
+              f"{seconds} s per run{', traced' if args.trace else ''}")
+        print(f"{'metric':38} {'parent':>12} {'change':>12} {'delta':>8} "
+              f"{'p.IQR/med':>9} {'won':>6} {'bound':>6}  >IQR")
+        for r in rows + detail_rows:
+            bound = f"{r['bound']:6.2f}" if r["bound"] is not None else f"{'-':>6}"
+            print(f"{r['metric']:38} {r['parent']:12.4g} {r['change']:12.4g} "
+                  f"{r['delta']:+8.1%} {r['parent_iqr_over_median']:9.1%} "
+                  f"{r['won']:>3}/{r['pairs']:<2} {bound}  "
+                  f"{'yes' if r['beyond_parent_iqr'] else 'no'}")
+        for i, arm in enumerate(("parent", "change")):
+            runs = [pair[i] for pair in pairs]
+            crashed = sum(1 for r in runs if r is None)
+            wrong = sum(1 for r in runs if r is not None and not r["correct"])
+            failed = sum(r["failed"] for r in runs if r is not None)
+            attempted = sum(r["attempted"] for r in runs if r is not None)
+            print(f"{arm}: failed {failed} of {attempted} operations, "
+                  f"{wrong} incorrect runs, {crashed} crashed runs")
+        print()
     if args.json:
         with open(args.json, "w") as fh:
-            json.dump({"workload": args.workload, "seeds": seeds_of(args.seeds),
-                       "trace": args.trace,
-                       "pairs": [{"parent": p, "change": c} for p, c in results],
-                       "summary": rows, "detail_summary": detail_rows}, fh, indent=1)
+            json.dump({"seeds": seeds_of(args.seeds), "trace": args.trace,
+                       "workloads": summaries}, fh, indent=1)
 
 
 if __name__ == "__main__":

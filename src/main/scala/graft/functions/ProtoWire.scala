@@ -205,48 +205,14 @@ object ProtoWire {
   final case class DecodedRow(key: Array[Byte], columns: Seq[DecodedColumn])
 
   /** Full decode of a varint-framed Row stream (inverse of
-    * `proto_delimited(proto_row(...))`) — the read side of the sink
-    * format, used by the proto-zst DSv2 source.
+    * `proto_delimited(proto_row(...))`): the reference decoder the
+    * tests compare [[RowDecoder]] against, and the benchmark's decode
+    * floor. Frames decode lazily, so corruption in frame N+1 surfaces
+    * after frame N was delivered.
     */
   def decodeRows(buf: Array[Byte]): Iterator[DecodedRow] =
-    decodeRowsPruned(buf, wantColumns = true, _ => true)
-
-  /** Pruned + filtered decode for the DSv2 source — the engine analog of
-    * the reference's index-assisted key seek
-    * (`SSTableScannerPatched.java:56-93`): each frame's key is parsed
-    * first and `keep` evaluated on the raw key bytes; Column messages
-    * are decoded ONLY for kept frames, and only when `wantColumns` —
-    * dropped or key-only frames are skipped by advancing the cursor,
-    * never allocating a cell. Field order inside a frame is arbitrary
-    * (protobuf allows it): column spans are recorded as offsets during
-    * the single pass and materialised after the keep decision.
-    */
-  def decodeRowsPruned(buf: Array[Byte], wantColumns: Boolean,
-      keep: Array[Byte] => Boolean): Iterator[DecodedRow] =
-    new Iterator[DecodedRow] {
-      private val full = decodeSpans(buf)
-      private var pending: DecodedRow = _
-      // scan happens lazily in hasNext, so corruption in frame N+1
-      // surfaces AFTER frame N was delivered — the salvage wrapper then
-      // keeps the whole valid prefix
-      override def hasNext: Boolean = {
-        while (pending == null && full.hasNext) {
-          val (key, spans) = full.next()
-          if (keep(key)) {
-            val cols =
-              if (wantColumns) spans.map { case (s, e) => decodeColumnAt(buf, s, e) }
-              else Seq.empty
-            pending = DecodedRow(key, cols)
-          }
-        }
-        pending != null
-      }
-      override def next(): DecodedRow = {
-        if (!hasNext) throw new NoSuchElementException("end of frames")
-        val r = pending
-        pending = null
-        r
-      }
+    decodeSpans(buf).map { case (key, spans) =>
+      DecodedRow(key, spans.map { case (s, e) => decodeColumnAt(buf, s, e) })
     }
 
   /** Upper bound on a single frame (one Row message). The writer frames
@@ -304,7 +270,7 @@ object ProtoWire {
     *   - `keep` is evaluated on the key bytes in place before any
     *     Column message is read: a dropped row copies nothing. Column
     *     messages are parsed only for kept rows of a shape with
-    *     `columns` (the [[decodeRowsPruned]] discipline).
+    *     `columns`.
     *   - `expectFrames ≥ 0` arms the TRUNCATION GUARD: a zstd stream
     *     cut at a frame boundary ends CLEANLY (the decompressor reports
     *     plain EOF, and if the decoded prefix also ends at a wire-frame

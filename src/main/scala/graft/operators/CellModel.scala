@@ -80,9 +80,14 @@ object CellModel {
     cellsOf(cellStrings(spark, dir))
 
   def liveCells(spark: SparkSession, dir: String): DataFrame =
-    cells(spark, dir)
-      .filter(!col("partition_deleted") && col("kind") === "live")
-      .drop("kind", "partition_deleted")
+    liveNestInput(spark, dir).drop("kind", "partition_deleted")
+
+  /** The live cells of the binary model as [[nestCells]] input — `kind`
+    * and `partition_deleted` kept — so a nest of any subset of them
+    * yields no key-only row for a key without live cells.
+    */
+  def liveNestInput(spark: SparkSession, dir: String): DataFrame =
+    cells(spark, dir).filter(!col("partition_deleted") && col("kind") === "live")
 
   /** O10: per-key ordered nest — the signature aggregation of the
     * reference (`rowMapper`, `service/SSTableReader.java:87-109`): one
@@ -126,6 +131,17 @@ object CellModel {
       .agg(count(lit(1)).as("n_cells"),
         min(col("name")).as("first_name"),
         max(col("name")).as("last_name"))
+
+  /** The read-back of nested (key, columns) rows: one row per cell,
+    * with key, name and value decoded from UTF-8 — the shape the
+    * oracle compares every sink round trip in.
+    */
+  def flatCells(nested: DataFrame): DataFrame =
+    nested.select(col("key"), explode(col("columns")).as("c"))
+      .select(decode(col("key"), "UTF-8").as("key"),
+        decode(col("c.name"), "UTF-8").as("name"),
+        decode(col("c.value"), "UTF-8").as("value"),
+        col("c.write_time").as("write_time"))
 
   /** Inverse of nestRows (flatten) — validates the round trip. */
   def explodeCells(spark: SparkSession, dir: String): DataFrame =

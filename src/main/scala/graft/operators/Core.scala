@@ -69,12 +69,7 @@ object Core {
 
   /** O10 inverse: nest then flatten — must round-trip to filterLive. */
   def explodeCells(spark: SparkSession, dir: String): DataFrame =
-    CellModel.nestRows(spark, dir)
-      .select(col("key"), explode(col("columns")).as("c"))
-      .select(decode(col("key"), "UTF-8").as("key"),
-        decode(col("c.name"), "UTF-8").as("name"),
-        decode(col("c.value"), "UTF-8").as("value"),
-        col("c.write_time").as("write_time"))
+    CellModel.flatCells(CellModel.nestRows(spark, dir))
 
   /** O11: proto3 Row encode + varint framing. The DuckDB oracle
     * reproduces `proto_len`/`framed_len` ANALYTICALLY from the wire

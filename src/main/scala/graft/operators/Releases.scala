@@ -174,18 +174,15 @@ object Releases {
     (spark, dir) =>
       val out = Scratch.dir("graft_vpin")
       val conf = graft.sources.ProtoZstFiles.hadoopConf()
-      val cells = CellModel.liveCells(spark, dir)
+      val cells = CellModel.liveNestInput(spark, dir)
       val b = cells.agg(min(col("write_time")), max(col("write_time"))).head()
       val t = b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 2
-      def nest(df: DataFrame) = df.groupBy(col("key"))
-        .agg(sort_array(collect_list(struct(col("name"), col("value"),
-          col("write_time")))).as("columns"))
       def version() = graft.sources.GenManifest.read(out, conf)
         .getOrElse(throw new IllegalStateException(
           s"export left no manifest under $out")).version
-      Sink.writeNested(nest(cells.filter(col("write_time") < t)), out)
+      Sink.writeNested(CellModel.nestCells(cells.filter(col("write_time") < t)), out)
       val v1 = version()
-      Sink.writeNested(nest(cells.filter(col("write_time") >= t)), out)
+      Sink.writeNested(CellModel.nestCells(cells.filter(col("write_time") >= t)), out)
       (out, v1, version())
   }
 
@@ -242,12 +239,7 @@ object Releases {
       .dataEntries.map(_.name).filterNot(before)
     val paths = added.map(n =>
       new org.apache.hadoop.fs.Path(out, n).toString)
-    spark.read.format("proto-zst").load(paths: _*)
-      .select(col("key"), explode(col("columns")).as("c"))
-      .select(decode(col("key"), "UTF-8").as("key"),
-        decode(col("c.name"), "UTF-8").as("name"),
-        decode(col("c.value"), "UTF-8").as("value"),
-        col("c.write_time").as("write_time"))
+    CellModel.flatCells(spark.read.format("proto-zst").load(paths: _*))
   }
 
   /** q171 oracle: replay export (q169's SQL) + epoch-keyed sharding +

@@ -113,14 +113,8 @@ object Sink {
     * each other end-to-end through the actual on-disk format.
     */
   def protoSourceRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{decode, explode}
     val outDir = nestedFixture(spark, dir)
-    spark.read.format("proto-zst").load(outDir)
-      .select(col("key"), explode(col("columns")).as("c"))
-      .select(decode(col("key"), "UTF-8").as("key"),
-        decode(col("c.name"), "UTF-8").as("name"),
-        decode(col("c.value"), "UTF-8").as("value"),
-        col("c.write_time").as("write_time"))
+    CellModel.flatCells(spark.read.format("proto-zst").load(outDir))
   }
 
   /** q36: SHUFFLE-FREE per-key aggregation by reusing the sink's
@@ -430,12 +424,8 @@ object Sink {
     * value) drop out here.
     */
   private[operators] def decodeLiveCells(merged: DataFrame): DataFrame =
-    merged.select(col("key"), explode(col("cols")).as("c"))
-      .filter(length(col("c.value")) > 0)
-      .select(decode(col("key"), "UTF-8").as("key"),
-        decode(col("c.name"), "UTF-8").as("name"),
-        decode(col("c.value"), "UTF-8").as("value"),
-        col("c.write_time").as("write_time"))
+    CellModel.flatCells(merged.select(col("key"), col("cols").as("columns")))
+      .filter(length(col("value")) > 0)
 
   /** q62: per-key AGGREGATION over the bucketed sink files planning
     * ZERO exchanges — the planner-visible upgrade of q36's projection
@@ -569,12 +559,7 @@ object Sink {
 
   def orderedReexport(spark: SparkSession, dir: String): DataFrame = {
     val out = reexportFixture(spark, dir)
-    spark.read.format("proto-zst").load(out)
-      .select(col("key"), explode(col("columns")).as("c"))
-      .select(decode(col("key"), "UTF-8").as("key"),
-        decode(col("c.name"), "UTF-8").as("name"),
-        decode(col("c.value"), "UTF-8").as("value"),
-        col("c.write_time").as("write_time"))
+    CellModel.flatCells(spark.read.format("proto-zst").load(out))
   }
 
   /** q80's time-travel instant: 2024-01-16T00:00:00Z in µs — mid-way
@@ -762,23 +747,21 @@ object Sink {
       out
   }
 
-  /** q223: SLICED PARALLEL READ of one oversized file — the writer
-    * ends its zstd frame every `splitFrameRows` rows and records the
-    * frame offsets in the file's index; the scan (here forced with
-    * `splitFileBytes=1` — production uses the 128 MB default) turns
-    * ONE file into many frame-aligned byte-range partitions, each
-    * decoding independently. This removes the engine's last
-    * straggler shape: before this, "read-back fans out one partition
-    * per file" meant a skewed 10 GB file was a single task at any
-    * cluster size. The oracle replays the nest from raw rows, so hash
+  /** q223: SLICED PARALLEL READ of one file — the writer ends its
+    * zstd frame every `splitFrameRows` rows and records the frame
+    * offsets in the file's index; the scan cuts a file larger than its
+    * share of the cores (`ProtoZstScan.sliceBytes`: here one file over
+    * the session's default parallelism) into frame-aligned byte-range
+    * partitions, each decoding independently. This removes the
+    * engine's last straggler shape: before this, "read-back fans out
+    * one partition per file" meant a skewed 10 GB file was a single
+    * task at any cluster size. The oracle replays the nest from raw rows, so hash
     * equality proves slices partition the rows exactly — nothing
     * lost, nothing doubled at the cut points.
     */
   def slicedRead(spark: SparkSession, dir: String): DataFrame = {
     val out = slicedFixture(spark, dir)
-    spark.read.format("proto-zst")
-      .option("splitFileBytes", "1")
-      .load(out)
+    spark.read.format("proto-zst").load(out)
       .select(decode(col("key"), "UTF-8").as("key"),
         size(col("columns")).cast("long").as("n_cells"))
   }

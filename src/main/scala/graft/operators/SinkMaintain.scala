@@ -484,12 +484,7 @@ object SinkMaintain {
     */
   def optimizedRead(spark: SparkSession, dir: String): DataFrame = {
     val (outDir, _) = optimizedFixture(spark, dir)
-    spark.read.format("proto-zst").load(outDir)
-      .select(col("key"), explode(col("columns")).as("c"))
-      .select(decode(col("key"), "UTF-8").as("key"),
-        decode(col("c.name"), "UTF-8").as("name"),
-        decode(col("c.value"), "UTF-8").as("value"),
-        col("c.write_time").as("write_time"))
+    CellModel.flatCells(spark.read.format("proto-zst").load(outDir))
   }
 
   /** Marker file a vacuum leaves in the surviving compacted
@@ -640,14 +635,11 @@ object SinkMaintain {
   private[graft] val ttlExpireFixture = SessionFixture("ttl") {
     (spark, dir) =>
       val out = Scratch.dir("graft_ttl")
-      val cells = CellModel.liveCells(spark, dir)
+      val cells = CellModel.liveNestInput(spark, dir)
       val b = cells.agg(min(col("write_time")), max(col("write_time"))).head()
       val t = b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 2
-      def nest(df: DataFrame) = df.groupBy(col("key"))
-        .agg(sort_array(collect_list(struct(col("name"), col("value"),
-          col("write_time")))).as("columns"))
-      Sink.writeNested(nest(cells.filter(col("write_time") < t)), out)
-      Sink.writeNested(nest(cells.filter(col("write_time") >= t)), out)
+      Sink.writeNested(CellModel.nestCells(cells.filter(col("write_time") < t)), out)
+      Sink.writeNested(CellModel.nestCells(cells.filter(col("write_time") >= t)), out)
       val n = expireByTime(out, t)
       require(n > 0, s"TTL fixture expired no files under $out")
       out
@@ -655,12 +647,7 @@ object SinkMaintain {
 
   def ttlExpiredRead(spark: SparkSession, dir: String): DataFrame = {
     val out = ttlExpireFixture(spark, dir)
-    spark.read.format("proto-zst").load(out)
-      .select(col("key"), explode(col("columns")).as("c"))
-      .select(decode(col("key"), "UTF-8").as("key"),
-        decode(col("c.name"), "UTF-8").as("name"),
-        decode(col("c.value"), "UTF-8").as("value"),
-        col("c.write_time").as("write_time"))
+    CellModel.flatCells(spark.read.format("proto-zst").load(out))
   }
 
   /** q207: TIME-WINDOW MAJOR COMPACTION — executing q181's `major`
@@ -735,19 +722,16 @@ object SinkMaintain {
   private[graft] val wmajorFixture = SessionFixture("wmajor") {
     (spark, dir) =>
       val out = Scratch.dir("graft_wmajor")
-      val cells = CellModel.liveCells(spark, dir)
+      val cells = CellModel.liveNestInput(spark, dir)
       val b = cells.agg(min(col("write_time")), max(col("write_time"))).head()
       val windowUs = (b.getLong(1) - b.getLong(0)) / 3 + 1
-      def nest(df: DataFrame) = df.groupBy(col("key"))
-        .agg(sort_array(collect_list(struct(col("name"), col("value"),
-          col("write_time")))).as("columns"))
       val winOf = expr(s"write_time DIV $windowUs")
       val wins = cells.select(winOf.as("w")).distinct()
         .collect().map(_.getLong(0)).sorted
       require(wins.length >= 3, s"wmajor fixture: ${wins.length} windows")
       wins.foreach { w =>
         (0 to 1).foreach { s =>
-          Sink.writeNested(nest(cells.filter(winOf === w &&
+          Sink.writeNested(CellModel.nestCells(cells.filter(winOf === w &&
             crc32(col("name")) % 2 === s)).coalesce(1), out)
         }
       }
@@ -761,12 +745,7 @@ object SinkMaintain {
 
   def windowCompactedRead(spark: SparkSession, dir: String): DataFrame = {
     val out = wmajorFixture(spark, dir)
-    spark.read.format("proto-zst").load(out)
-      .select(col("key"), explode(col("columns")).as("c"))
-      .select(decode(col("key"), "UTF-8").as("key"),
-        decode(col("c.name"), "UTF-8").as("name"),
-        decode(col("c.value"), "UTF-8").as("value"),
-        col("c.write_time").as("write_time"))
+    CellModel.flatCells(spark.read.format("proto-zst").load(out))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -240,12 +240,7 @@ object Streaming extends Serializable {
       .trigger(Trigger.AvailableNow())
       .start(outDir)
     runToCompletion("q37", q)
-    spark.read.format("proto-zst").load(outDir)
-      .select(col("key"), explode(col("columns")).as("c"))
-      .select(decode(col("key"), "UTF-8").as("key"),
-        decode(col("c.name"), "UTF-8").as("name"),
-        decode(col("c.value"), "UTF-8").as("value"),
-        col("c.write_time").as("write_time"))
+    CellModel.flatCells(spark.read.format("proto-zst").load(outDir))
   }
 
   // toy default; the operator takes shards as an ARGUMENT (loader
@@ -372,12 +367,7 @@ object Streaming extends Serializable {
     val outDir = Sink.nestedFixture(spark, dir)
     val name = "q48_sink_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    val flat = spark.readStream.format("proto-zst").load(outDir)
-      .select(col("key"), explode(col("columns")).as("c"))
-      .select(decode(col("key"), "UTF-8").as("key"),
-        decode(col("c.name"), "UTF-8").as("name"),
-        decode(col("c.value"), "UTF-8").as("value"),
-        col("c.write_time").as("write_time"))
+    val flat = CellModel.flatCells(spark.readStream.format("proto-zst").load(outDir))
     val q = flat.writeStream.format("memory").queryName(name)
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     runToCompletion("q48", q)

@@ -19,6 +19,10 @@ object MetaIO {
     * governed read makes none.
     */
   val sidecarReads = new AtomicLong
+  /** Every [[FileIndex]] read, by any reader (the listing view, a
+    * point lookup's probe, slicing, salvage).
+    */
+  val indexReads = new AtomicLong
   /** `GenManifest.read` calls (one tiny-dir listing + O(1) small opens). */
   val manifestReads = new AtomicLong
   /** Bytes of per-commit DELTA records published (the steady-state
@@ -47,7 +51,8 @@ object MetaIO {
   val frameSeeks = new AtomicLong
   val seekBytes = new AtomicLong
   def reset(): Unit = {
-    dataListings.set(0); sidecarReads.set(0); manifestReads.set(0)
+    dataListings.set(0); sidecarReads.set(0); indexReads.set(0)
+    manifestReads.set(0)
     commitBytes.set(0); checkpointBytes.set(0)
     bloomProbes.set(0); bloomSkips.set(0)
     frameSeeks.set(0); seekBytes.set(0)

@@ -25,7 +25,8 @@ import graft.functions.ProtoWire
   * "custom source" path: one input partition PER FILE — reproducing the
   * reference's per-file unit of work (O1) and preserving within-file
   * row order, so a downstream per-key nest over a key-sorted file needs
-  * no shuffle.
+  * no shuffle — except that a file larger than its share of the cores
+  * reads as frame-aligned slices, each in file order.
   *
   * Usage: `spark.read.format("proto-zst").load(dir)`.
   */
@@ -256,6 +257,11 @@ class ProtoZstTable(paths: Seq[String],
   * `SSTableScannerPatched.java:56-93` — here: a kept/dropped decision on
   * the key bytes alone, columns never decoded for dropped frames) and
   * column pruning (a key-only projection skips Column decode entirely).
+  * Partition sizing takes no option of its own: a file the scan reads
+  * whole is cut at its recorded frame boundaries when it is larger
+  * than [[ProtoZstScan.sliceBytes]] of the bytes the scan reads whole,
+  * the rule Spark's file sources apply under
+  * `spark.sql.files.maxPartitionBytes`.
   */
 class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
     bucketsIn: org.apache.hadoop.conf.Configuration => Option[Int] = _ => None,
@@ -285,15 +291,6 @@ class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
       require(n > 0, s"maxBytesPerTrigger must be positive, got $n")
       n
     }
-  // files larger than this split into parallel slices at recorded
-  // zstd-frame boundaries (see FileIndex.slices), judged by the view's
-  // per-file bytes
-  private val splitFileBytes: Long =
-    Option(options.get("splitFileBytes")).map { v =>
-      val n = v.toLong
-      require(n > 0, s"splitFileBytes must be positive, got $n")
-      n
-    }.getOrElse(ProtoZstScan.DefaultSplitFileBytes)
   /** Temporal file skip, opt-in: a CLOSED µs window over CELL write
     * times. A manifest-governed scan drops whole files whose recorded
     * time range provably misses the window ([[ManifestIndex
@@ -473,8 +470,7 @@ class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
     case None =>
       val scan = new ProtoZstScan(view, ignoreCorrupt, required, pushed,
         bucketsIn(view.conf.value), viaCatalog, maxFilesPerTrigger, timeBounds,
-        startingWriteTimeUs, maxBytesPerTrigger, splitFileBytes,
-        maxTombstoneBytes)
+        startingWriteTimeUs, maxBytesPerTrigger, maxTombstoneBytes)
       // a point lookup that reads at most one frame is answered on the
       // driver: Catalyst plans a LocalTableScanExec and runs no job
       scan.localRead.fold[Scan](scan)(new ProtoZstLocalScan(scan, _))
@@ -714,12 +710,21 @@ final class FileView(val paths: Seq[String], val version: Option[Long],
 }
 
 object ProtoZstScan {
-  /** Files above this split into frame-boundary slices (scan option
-    * `splitFileBytes` overrides). 128 MB ≈ one parquet row-group's
-    * worth of work per task; toy-scale files never cross it, so
-    * default scans open no index while planning.
+  /** The slice size ([[FileIndex.slices]]) for a read of `bytes` bytes
+    * of whole files: Spark's own `FilePartition.maxSplitBytes` rule —
+    * `spark.sql.files.maxPartitionBytes`, or the bytes spread over the
+    * session's default parallelism when that is less — without its
+    * open-cost floor, since every cut is a recorded frame boundary and
+    * no slice can be smaller than one frame. Only a file larger than
+    * the bytes' share of one core is cut, so at most that many files
+    * have their index read for it.
     */
-  val DefaultSplitFileBytes: Long = 128L << 20
+  def sliceBytes(bytes: Long): Long = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    val cores = spark.sparkContext.defaultParallelism
+    math.max(1L, math.min(spark.sessionState.conf.filesMaxPartitionBytes,
+      (bytes + cores - 1) / cores))
+  }
 
   /** Default ceiling on live tombstone bytes a scan will carry (scan
     * option `maxTombstoneBytes` overrides). 64 MB of keys is far past
@@ -746,7 +751,6 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
     timeBounds: Option[(Long, Long)] = None,
     startingWriteTimeUs: Option[Long] = None,
     maxBytesPerTrigger: Option[Long] = None,
-    splitFileBytes: Long = ProtoZstScan.DefaultSplitFileBytes,
     maxTombstoneBytes: Long = ProtoZstScan.DefaultMaxTombstoneBytes)
     extends Scan
     with Batch
@@ -905,9 +909,11 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
   // `SSTableReaderPatched.java:221-233`, at the granularity that
   // matters on a 1000-executor cluster: whole files). A point lookup
   // reads only what [[seeks]] planned of each file. Runtime
-  // (DPP-style) filters prune the same way here. When bucket-grouping
-  // is active, the unit is one BUCKET (all its files), keyed for the
-  // planner via HasPartitionKey.
+  // (DPP-style) filters prune the same way here. A file read whole
+  // that is larger than its share of the cores is cut into
+  // frame-aligned slices ([[sliced]]). When bucket-grouping is active,
+  // the unit is one BUCKET (all its files), keyed for the planner via
+  // HasPartitionKey.
   override def planInputPartitions(): Array[InputPartition] =
     grouped match {
       case Some(g) =>
@@ -921,11 +927,14 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
               Array(ProtoZstInputPartition(m): InputPartition))(_._1)), b): InputPartition
         }
       case None =>
-        // large files slice at recorded frame boundaries (one index
-        // read per OVERSIZED file only — a straggler saved per RPC)
-        ManifestIndex.skipByRange(plannedMeta, runtimeFilters).flatMap { m =>
-          seeks.get(m.path).fold(sliced(m))(_._1)
-        }
+        val metas = ManifestIndex.skipByRange(plannedMeta, runtimeFilters)
+        // a salvage read keeps a file's intact prefix, which only one
+        // reader walking the file in order can know: it never slices
+        val target =
+          if (ignoreCorrupt) Long.MaxValue
+          else ProtoZstScan.sliceBytes(
+            metas.filterNot(m => seeks.contains(m.path)).map(_.bytes).sum)
+        metas.flatMap(m => seeks.get(m.path).fold(sliced(m, target))(_._1))
     }
 
   /** The candidate keys of a pushed point lookup (`key =`/`IN`), if the
@@ -933,13 +942,24 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
     */
   private val pointKeys: Option[Seq[Array[Byte]]] = KeyPredicate.pointKeys(filters)
 
+  /** Each planned file's index, read on the driver at most once per
+    * scan: a point lookup's bloom probe and the slicing of a file it
+    * then reads whole share one read.
+    */
+  private val indexes = scala.collection.mutable.Map.empty[String, Option[FileIndex]]
+  private def index(m: FileMeta): Option[FileIndex] =
+    indexes.getOrElseUpdate(m.path, {
+      val p = new org.apache.hadoop.fs.Path(m.path)
+      FileIndex.read(ProtoZstFiles.fs(p, conf.value), p)
+    })
+
   /** A point lookup's read of each planned file, decided on the driver
     * once per scan: the reference's bloom → index → chunk path
     * (Filter.db, then the index summary's `(key, position)` seek,
-    * `SSTableReaderPatched.java:54-97`), from one [[FileIndex]] read
-    * per file. A file whose bloom misses every candidate reads nothing;
-    * a sorted file with a frame-key index reads the frame-aligned
-    * ranges [[seekPlan]] picks, as one partition. The value is those
+    * `SSTableReaderPatched.java:54-97`), from the file's [[FileIndex]].
+    * A file whose bloom misses every candidate reads nothing; a sorted
+    * file with a frame-key index reads the frame-aligned ranges
+    * [[seekPlan]] picks, as one partition. The value is those
     * partitions and the number of frame segments they span. A file
     * absent from the map (no readable index, no usable frame keys) is
     * read whole, as without a lookup.
@@ -947,18 +967,17 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
   private lazy val seeks: Map[String, (Array[InputPartition], Int)] =
     pointKeys.fold(Map.empty[String, (Array[InputPartition], Int)]) { keys =>
       plannedMeta.iterator.flatMap { m =>
-        val p = new org.apache.hadoop.fs.Path(m.path)
-        val idx = FileIndex.read(ProtoZstFiles.fs(p, conf.value), p)
+        val idx = index(m)
         idx.foreach(_ => MetaIO.bloomProbes.incrementAndGet())
         if (idx.exists(i => !keys.exists(i.mightContain))) {
           MetaIO.bloomSkips.incrementAndGet()
           Some(m.path -> (Array.empty[InputPartition], 0))
         } else idx.flatMap(seekPlan(m, keys, _)).map { case (ranges, segments) =>
           MetaIO.frameSeeks.incrementAndGet()
-          MetaIO.seekBytes.addAndGet(ranges.map(r => r._2 - r._1).sum)
+          MetaIO.seekBytes.addAndGet(ranges.map(_.bytes(m.bytes)).sum)
           m.path -> (
             if (ranges.isEmpty) Array.empty[InputPartition]
-            else Array(ProtoZstSlicePartition(m, ranges): InputPartition),
+            else Array(ProtoZstInputPartition(m, ranges): InputPartition),
             segments)
         }
       }.toMap
@@ -978,19 +997,20 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
     else None
 
   /** The Index.db seek plan for a point lookup over ONE whole sorted
-    * file: the minimal set of frame-aligned byte ranges that can hold
-    * the candidate keys, from the index's frame boundaries, and the
-    * number of frame segments they span — the reference's two-level
-    * read path completed at the granularity a zstd stream can restart
-    * at. None = no usable frame keys (no boundaries, a file its meta
-    * does not attest sorted, an empty-key boundary) — degrade to the
-    * full-file scan, never to a wrong subset. Segment arithmetic is
+    * file: the minimal set of frame-aligned ranges that can hold the
+    * candidate keys, from the index's frame boundaries, and the number
+    * of frame segments they span — the reference's two-level read path
+    * completed at the granularity a zstd stream can restart at. None =
+    * no usable frame keys (no boundaries, a file its meta does not
+    * attest sorted, an empty-key boundary) — degrade to the full-file
+    * scan, never to a wrong subset. Segment arithmetic is
     * duplicate-safe: a key equal to a boundary's first key also
     * selects the PREVIOUS segment, because duplicates of that key can
-    * straddle the boundary. EOF is the file's attested `bytes`.
+    * straddle the boundary. The last segment reads to EOF; each
+    * range's rows come from the boundaries' rows-before counts.
     */
   private def seekPlan(meta: FileMeta, keys: Seq[Array[Byte]],
-      idx: FileIndex): Option[(Seq[(Long, Long)], Int)] = {
+      idx: FileIndex): Option[(Seq[FrameRange], Int)] = {
     val cuts = idx.frames
     if (!meta.sorted || cuts.isEmpty || cuts.exists(_.firstKey.isEmpty))
       return None
@@ -1017,32 +1037,35 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
       }
       (a to lo2).foreach(segs += _)
     }
-    def off(j: Int): Long = if (j < 0) 0L else if (j >= m) meta.bytes else cuts(j).offset
-    // merge adjacent segments into maximal byte ranges
-    val ranges = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    // segments a..b as one range
+    def range(a: Int, b: Int): FrameRange = {
+      val (start, before) =
+        if (a == 0) (0L, 0L) else (cuts(a - 1).offset, cuts(a - 1).rowsBefore)
+      if (b < m) FrameRange(start, cuts(b).offset, cuts(b).rowsBefore - before)
+      else FrameRange(start, -1L, if (meta.count < 0L) -1L else meta.count - before)
+    }
+    // merge adjacent segments into maximal ranges
+    val ranges = scala.collection.mutable.ArrayBuffer.empty[FrameRange]
     var runStart = -2
     var prev = -2
     (segs.toSeq :+ Int.MinValue).foreach { j =>
       if (j != prev + 1) {
-        if (runStart >= -1) ranges += ((off(runStart - 1), off(prev)))
+        if (runStart >= 0) ranges += range(runStart, prev)
         runStart = j
       }
       prev = j
     }
-    Some((ranges.toSeq.filter(r => r._2 > r._1), segs.size))
+    Some((ranges.toSeq.filter(_.bytes(meta.bytes) > 0), segs.size))
   }
 
-  /** One file as frame-aligned slices of about `splitFileBytes` each
-    * ([[FileIndex.slices]]), or one whole-file partition.
+  /** One file read whole, as frame-aligned slices of at least `target`
+    * bytes each ([[FileIndex.slices]]); a file no larger than `target`
+    * is one whole-file range and opens no index.
     */
-  private def sliced(m: FileMeta): Array[InputPartition] = {
-    val p = new org.apache.hadoop.fs.Path(m.path)
-    FileIndex.slices(ProtoZstFiles.fs(p, conf.value), p, m.bytes,
-        splitFileBytes, m.bytes) match {
-      case Seq(_) => Array(ProtoZstInputPartition(m))
-      case ranges => ranges.map(r => ProtoZstSlicePartition(m, Seq(r)): InputPartition).toArray
-    }
-  }
+  private def sliced(m: FileMeta, target: Long): Array[InputPartition] =
+    FileIndex.slices(m.bytes, m.count, target, index(m))
+      .map(r => ProtoZstInputPartition(m, Seq(r)): InputPartition).toArray
+
   /** The scan's ANTI-SET: every key named by a live tombstone file,
     * decoded once on the driver, deduped, and unsigned-sorted so task
     * readers drop matches with a binary search. Bounded by
@@ -1200,25 +1223,26 @@ object KeyPredicate {
   }
 }
 
-/** One whole file, with the [[FileMeta]] it was planned from: the
-  * task reader arms its truncation guard with `count` and gates the
-  * frame seek on `sorted`, opening no index.
+/** The one unit of every proto-zst read: frame-aligned byte ranges of
+  * one file, read in order, each with the rows the writer attested for
+  * it. A whole file is the one range from 0 to EOF with the file's
+  * count; a slice of a file larger than its share of the cores is one
+  * range between two recorded frame boundaries; a point lookup's seek
+  * is the ranges that can hold its keys. Every range decodes on its
+  * own, the slices of a file partition its rows exactly, and a slice
+  * of a key-sorted file is itself key-sorted. The [[FileMeta]] gates
+  * the point-lookup stop on `sorted`.
   */
-case class ProtoZstInputPartition(meta: FileMeta) extends InputPartition {
+case class ProtoZstInputPartition(meta: FileMeta, ranges: Seq[FrameRange])
+    extends InputPartition {
   def file: String = meta.path
 }
 
-/** Frame-aligned byte ranges [start, end) of one file, read in order:
-  * one range per slice of an oversized file (the parallel-read unit for
-  * files a single task shouldn't own), or the ranges a point lookup
-  * seeked to. The boundaries come from the writer's recorded frame
-  * checkpoints, so every range decodes independently and the slices of
-  * a file partition its rows exactly; a slice of a key-sorted file is
-  * itself key-sorted, so per-partition ordering attestation survives
-  * slicing.
-  */
-case class ProtoZstSlicePartition(meta: FileMeta, ranges: Seq[(Long, Long)])
-    extends InputPartition
+object ProtoZstInputPartition {
+  /** The whole file: one range to EOF, its attested count. */
+  def apply(meta: FileMeta): ProtoZstInputPartition =
+    ProtoZstInputPartition(meta, Seq(FrameRange(0L, -1L, meta.count)))
+}
 
 /** One BUCKET of a bucketed directory: all its files' reads (whole
   * files, or a point lookup's seeks), plus the bucket id as the split's
@@ -1308,23 +1332,23 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
-      // strict whole-file reads arm the truncation guard with the
-      // planned row count: a frame-aligned truncation ends the zstd
-      // stream cleanly and would otherwise LOSE rows silently. Ranges
-      // skip it (their byte range is the contract). Salvage mode keeps
-      // every recoverable row, and reads a whole file frame range by
-      // frame range, so damage in one frame cannot cost the frames
-      // before it.
-      case ProtoZstInputPartition(meta) =>
-        if (ignoreCorrupt) salvaged(meta.path, frameRanges(meta), null)
-        else new Decoded(meta.path, 0L, -1L, meta.count, null)
-      // a point lookup over a key-sorted file stops at its last key
-      case ProtoZstSlicePartition(meta, ranges) =>
+      // a strict read arms every range's truncation guard with its
+      // attested row count: a frame-aligned truncation ends the zstd
+      // stream cleanly and would otherwise LOSE rows silently. A point
+      // lookup over a key-sorted file stops at its last key, and a
+      // stopped range is not checked. Salvage mode keeps every
+      // recoverable row, and reads each range frame by frame, so damage
+      // in one frame cannot cost the frames before it.
+      case ProtoZstInputPartition(meta, ranges) =>
         val stop = if (meta.sorted) lastKey else null
-        chain(ranges.iterator.map { case (s, e) =>
-          if (ignoreCorrupt) salvaged(meta.path, Iterator((s, e)), stop)
-          else new Decoded(meta.path, s, e, -1L, stop)
-        })
+        if (ignoreCorrupt) {
+          lazy val cuts = frameOffsets(meta)
+          chain(ranges.iterator.map { r =>
+            val inner = cuts.filter(o => o > r.start && (r.end < 0L || o < r.end))
+            salvaged(meta.path, ((r.start +: inner) zip (inner :+ r.end)).iterator, stop)
+          })
+        } else chain(ranges.iterator.map(r =>
+          new Decoded(meta.path, r.start, r.end, r.rows, stop)))
       case ProtoZstBucketPartition(parts, _) =>
         chain(parts.iterator.map(createReader))
       case other =>
@@ -1354,13 +1378,13 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
       override def close(): Unit = if (cur != null) cur.close()
     }
 
-  /** The [start, end) frame ranges of a whole file from its index, one
-    * per frame (the last range ends at EOF); one range when it has none.
+  /** The recorded frame boundaries of a file, from its index; none when
+    * it has no readable index.
     */
-  private def frameRanges(meta: FileMeta): Iterator[(Long, Long)] = {
+  private def frameOffsets(meta: FileMeta): Array[Long] = {
     val p = new org.apache.hadoop.fs.Path(meta.path)
-    FileIndex.slices(ProtoZstFiles.fs(p, conf.value), p, meta.bytes, 1L, -1L)
-      .iterator
+    FileIndex.read(ProtoZstFiles.fs(p, conf.value), p)
+      .fold(Array.empty[Long])(_.frames.map(_.offset))
   }
 
   /** Rows of [start, end) of `file` (end = -1 ⇒ EOF) off their own

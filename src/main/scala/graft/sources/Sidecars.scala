@@ -15,7 +15,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     a point lookup over a key-sorted file SEEK to the frames that
   *     can hold its keys (`ProtoZstScan.seekPlan`) — the reference's
   *     Index.db `(key, position)` walk (`SSTableReaderPatched.java:54-97`)
-  *     at the grain a zstd stream can restart at;
+  *     at the grain a zstd stream can restart at — each range carrying
+  *     the row count its boundaries attest ([[FrameRange]]);
   *   - the key bloom ([[BloomSidecar]]) a point lookup probes on the
   *     driver before planning any read of the file.
   *
@@ -78,6 +79,7 @@ object FileIndex {
     */
   def read(fs: FileSystem, data: Path): Option[FileIndex] =
     try {
+      MetaIO.indexReads.incrementAndGet()
       val in = fs.open(path(data))
       decode(try in.readAllBytes() finally in.close())
     } catch { case _: Exception => None }
@@ -121,30 +123,47 @@ object FileIndex {
 
   def delete(fs: FileSystem, data: Path): Unit = fs.delete(path(data), false)
 
-  /** The one slicing rule: the [start, end) byte ranges of a `bytes`
-    * long file, cut greedily at its recorded frame boundaries into
-    * ranges of at least `sliceBytes` each; the last range ends at
-    * `end`. A file no larger than `sliceBytes`, or without a readable
-    * index, is one range. A slice boundary is always a frame boundary,
-    * so ranges decode independently and partition the rows exactly.
-    * The scan passes `end = bytes`; salvage passes −1 (physical EOF),
-    * so bytes appended past the attested length decode as a whole-file
-    * walk sees them.
+  /** The one slicing rule: a file of `bytes` attested bytes and
+    * `count` attested rows as ranges cut greedily at its recorded frame
+    * boundaries, each at least `sliceBytes` long. The last range reads
+    * to EOF, so bytes appended past the attested length decode as a
+    * whole-file read sees them. A file no larger than `sliceBytes`, or
+    * without a readable index, is one range; `idx` is read only for a
+    * larger file. A slice boundary is always a frame boundary, so
+    * ranges decode independently and partition the rows exactly, and
+    * each range's row count is the difference of the writer's
+    * rows-before counts (the last one's is `count` minus its start's).
     */
-  def slices(fs: FileSystem, data: Path, bytes: Long, sliceBytes: Long,
-      end: Long): Seq[(Long, Long)] = {
+  def slices(bytes: Long, count: Long, sliceBytes: Long,
+      idx: => Option[FileIndex]): Seq[FrameRange] = {
     val cuts =
-      if (bytes <= sliceBytes) Array.empty[Long]
-      else read(fs, data).fold(Array.empty[Long])(
-        _.frames.map(_.offset).filter(o => o > 0 && o < bytes))
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var start = 0L
+      if (bytes <= sliceBytes) Array.empty[Frame]
+      else idx.fold(Array.empty[Frame])(
+        _.frames.filter(f => f.offset > 0 && f.offset < bytes))
+    val out = scala.collection.mutable.ArrayBuffer.empty[FrameRange]
+    var start = Frame(0L, 0L, Array.emptyByteArray)
     cuts.foreach { c =>
-      if (c - start >= sliceBytes) { out += ((start, c)); start = c }
+      if (c.offset - start.offset >= sliceBytes) {
+        out += FrameRange(start.offset, c.offset, c.rowsBefore - start.rowsBefore)
+        start = c
+      }
     }
-    out += ((start, end))
+    out += FrameRange(start.offset, -1L,
+      if (count < 0L) -1L else count - start.rowsBefore)
     out.toSeq
   }
+}
+
+/** Bytes [start, end) of one data file (`end` −1: to EOF), cut at
+  * recorded zstd frame boundaries so the range decodes on its own, and
+  * the rows the writer attested for it (−1: unknown). A strict read
+  * refuses a range that decodes to another count: a truncation at a
+  * frame boundary ends the zstd stream cleanly, so only the count can
+  * see it.
+  */
+final case class FrameRange(start: Long, end: Long, rows: Long) {
+  /** The range's length in a file of `fileBytes` attested bytes. */
+  def bytes(fileBytes: Long): Long = (if (end < 0L) fileBytes else end) - start
 }
 
 /** The frame boundaries of a file as (offset, rows before it), from its

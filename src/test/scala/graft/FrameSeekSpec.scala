@@ -154,8 +154,9 @@ class FrameSeekSpec extends AnyFunSuite {
     MetaIO.reset()
     assert(get(dir, "z25") === Seq(("z25", 1)))
     assert(MetaIO.frameSeeks.get() === 0L && MetaIO.bloomProbes.get() === 1L)
-    val sliced = spark.read.format("proto-zst").option("splitFileBytes", "1").load(dir)
-    assert(sliced.rdd.getNumPartitions === idx.frames.length + 1)
+    val sliced = spark.read.format("proto-zst").load(dir)
+    assert(SparkTestSession.frameSliced(sliced.rdd.getNumPartitions) ===
+      idx.frames.length + 1)
     assert(sliced.count() === 30L)
   }
 
@@ -344,6 +345,50 @@ class FrameSeekSpec extends AnyFunSuite {
     intercept[org.apache.spark.SparkException](rows(spark.read.format("proto-zst").load(dir)))
     val (got, jobs, _) = counted(rows(point(dir)("u0950")))
     assert(got === Seq(("u0950", 950L)) && jobs === 1)
+  }
+
+  test("a get whose seeked frame was cut off fails loudly") {
+    // cut the file at the recorded offset of the frame holding u0123:
+    // the zstd stream then ends cleanly at a frame boundary, so only
+    // the seeked range's attested row count can see the frame is gone
+    val dir = uniqDir("graft_seek_cut")
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    val data = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(_.getPath).filter(_.getName.endsWith(".proto.zst")).head
+    val off = FileIndex.read(fs, data).get.frames
+      .find(_.rowsBefore == 100L).get.offset
+    val head = { val in = fs.open(data); try in.readNBytes(off.toInt) finally in.close() }
+    val out = fs.create(data, true)
+    try out.write(head) finally out.close()
+    // a frame before the cut still answers
+    assert(rows(point(dir)("u0042")) === Seq(("u0042", 42L)))
+    val e = intercept[Exception](rows(point(dir)("u0123")))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("truncated stream")),
+      s"the get must refuse the cut frame: $e")
+  }
+
+  test("a get over bloom-positive unsorted files opens each index once") {
+    // two files hold every key in descending order: both blooms say
+    // maybe and neither attests sorted, so the get reads both whole,
+    // cutting each into slices from the index its bloom probe read
+    import spark.implicits._
+    val dir = freshDir("graft_seek_unsorted")
+    (1 to 2).foreach { _ =>
+      (0 until 1000).map(i => (f"u${999 - i}%04d", i.toLong)).toDF("k", "i")
+        .select(encode(col("k"), "UTF-8").as("key"),
+          array(struct(encode(lit("c"), "UTF-8").as("name"),
+            encode(lit("v"), "UTF-8").as("value"),
+            col("i").as("write_time"))).as("columns"))
+        .coalesce(1).write.format("proto-zst").option("splitFrameRows", "50")
+        .mode("append").save(dir)
+    }
+    MetaIO.reset()
+    val parts = point(dir)("u0123").rdd.getNumPartitions
+    assert(parts > 2, s"$parts partitions: each file must read as slices")
+    assert(MetaIO.bloomProbes.get() === 2L && MetaIO.frameSeeks.get() === 0L)
+    assert(MetaIO.indexReads.get() === 2L)
+    assert(rows(point(dir)("u0123")) === Seq(("u0123", 876L), ("u0123", 876L)))
   }
 
   test("a key-filtered stream never takes the local path and returns the batch rows") {

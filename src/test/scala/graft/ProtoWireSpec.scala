@@ -140,8 +140,7 @@ class ProtoWireSpec extends AnyFunSuite {
     val buf = corrupt ++ good
     Seq[Array[Byte] => Any](
       ProtoWire.decodeRows(_).toList,
-      ProtoWire.decodeStats(_),
-      ProtoWire.decodeRowsPruned(_, wantColumns = true, _ => true).toList)
+      ProtoWire.decodeStats(_))
       .foreach { dec =>
         val ex = intercept[IllegalArgumentException](dec(buf))
         assert(ex.getMessage.contains("overrun"), ex.getMessage)
@@ -162,7 +161,7 @@ class ProtoWireSpec extends AnyFunSuite {
         cols((s"n$i", "v" * (i % 7), i.toLong))))
     }
     val buf = frames.reduce(_ ++ _)
-    val fromBuf = ProtoWire.decodeRowsPruned(buf, true, _ => true).toSeq
+    val fromBuf = ProtoWire.decodeRows(buf).toSeq
       .map(RowDecoding.plain(_, ProtoZstTable.Schema))
     val (fromStream, err) = RowDecoding.decode(buf)
     assert(err.isEmpty)
@@ -187,7 +186,7 @@ class ProtoWireSpec extends AnyFunSuite {
     val framed = ProtoWire.delimit(row)
     val want = Seq(Seq[Any]("k1".getBytes.toSeq,
       Seq(Seq[Any]("a".getBytes.toSeq, "b".getBytes.toSeq, 7L))))
-    assert(ProtoWire.decodeRowsPruned(framed, true, _ => true).toSeq
+    assert(ProtoWire.decodeRows(framed).toSeq
       .map(RowDecoding.plain(_, ProtoZstTable.Schema)) === want)
     assert(RowDecoding.decode(framed) === ((want, None)))
   }

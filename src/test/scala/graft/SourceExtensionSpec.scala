@@ -94,22 +94,6 @@ class SourceExtensionSpec extends AnyFunSuite {
     assert(keysOnly.collect().map(_.getString(0)).sorted.toSeq === full.toSeq)
   }
 
-  test("decodeRowsPruned skips dropped frames and never decodes pruned columns") {
-    import graft.functions.ProtoWire
-    val arr = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array[Any](org.apache.spark.sql.catalyst.InternalRow(
-        "n".getBytes, "v".getBytes, 7L)))
-    val buf = (1 to 5).flatMap(i =>
-      ProtoWire.delimit(ProtoWire.encodeRow(s"k$i".getBytes, arr))).toArray
-    val kept = ProtoWire.decodeRowsPruned(buf, wantColumns = true,
-      keep = k => new String(k) >= "k3").toSeq
-    assert(kept.map(r => new String(r.key)) === Seq("k3", "k4", "k5"))
-    assert(kept.forall(_.columns.map(c => new String(c.name)) == Seq("n")))
-    val keyOnly = ProtoWire.decodeRowsPruned(buf, wantColumns = false,
-      keep = _ => true).toSeq
-    assert(keyOnly.size === 5 && keyOnly.forall(_.columns.isEmpty))
-  }
-
   test("nested pruning: count() and single-field projections stay correct") {
     val outDir = java.nio.file.Files.createTempDirectory("graft_nprune_t")
       .toFile.getAbsolutePath
@@ -294,8 +278,8 @@ class SourceExtensionSpec extends AnyFunSuite {
     import graft.functions.ProtoWire
     val dir = java.nio.file.Files.createTempDirectory("graft_aggpush")
       .toFile.getAbsolutePath
-    // small frames: a splitFileBytes=1 read slices every file at its
-    // recorded frame boundaries
+    // small frames: a read at maxPartitionBytes=1 slices every file at
+    // its recorded frame boundaries
     CellModel.nestRows(spark, sf0001).repartitionByRange(4, col("key"))
       .write.format("proto-zst").option("splitFrameRows", "2")
       .mode("append").save(dir)
@@ -319,18 +303,15 @@ class SourceExtensionSpec extends AnyFunSuite {
     // range), its reported row count and its rows
     val sortedKeys = keys.sorted
     val (lo, hi) = (sortedKeys(keys.length / 4), sortedKeys(keys.length * 3 / 4))
-    def slicedPlan() = {
-      val df = spark.read.format("proto-zst").option("splitFileBytes", "1")
-        .load(dir)
+    def slicedPlan() = SparkTestSession.frameSliced {
+      val df = spark.read.format("proto-zst").load(dir)
         .filter(col("key") >= lit(lo.getBytes) && col("key") < lit(hi.getBytes))
       val scan = df.queryExecution.executedPlan.collectFirst {
         case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
       }.get
       val parts = scan.inputPartitions.map {
-        case graft.sources.ProtoZstInputPartition(m) =>
-          (new org.apache.hadoop.fs.Path(m.path).getName, 0L, -1L)
-        case graft.sources.ProtoZstSlicePartition(m, Seq((s, e))) =>
-          (new org.apache.hadoop.fs.Path(m.path).getName, s, e)
+        case graft.sources.ProtoZstInputPartition(m, Seq(r)) =>
+          (new org.apache.hadoop.fs.Path(m.path).getName, r.start, r.end, r.rows)
       }
       val numRows = scan.scan.asInstanceOf[
         org.apache.spark.sql.connector.read.SupportsReportStatistics]
@@ -340,7 +321,7 @@ class SourceExtensionSpec extends AnyFunSuite {
       (parts, numRows, rows)
     }
     val governed = slicedPlan()
-    assert(governed._1.exists(_._3 >= 0L),
+    assert(governed._1.exists(_._3 >= 0L) && governed._1.forall(_._4 > 0L),
       s"no file sliced among ${keys.length} keys: ${governed._1}")
     assert(governed._2.isPresent && governed._3.nonEmpty)
     // 2) a legacy directory (no manifest) still pushes down, now from
@@ -501,9 +482,8 @@ class SourceExtensionSpec extends AnyFunSuite {
       val in = new com.github.luben.zstd.ZstdInputStream(
         new org.apache.hadoop.fs.Path(f).getFileSystem(conf)
           .open(new org.apache.hadoop.fs.Path(f)))
-      val bytes = try in.readAllBytes() finally in.close()
-      graft.functions.ProtoWire.decodeRowsPruned(bytes, wantColumns = false,
-        keep = _ => true).map(r => new String(r.key)).toSeq
+      try graft.functions.ProtoWire.keys(in).map(new String(_)).toList
+      finally in.close()
     }
     assert(keys.contains("12") && keys.contains("13"))
   }
@@ -697,23 +677,38 @@ class SourceExtensionSpec extends AnyFunSuite {
       .getOrElse(fail("no frame boundaries indexed"))
     assert(cuts.length >= 2, s"need several checkpoints, got ${cuts.length}")
     // forced slicing actually fans out: many partitions for one file
-    val slicedDf = spark.read.format("proto-zst")
-      .option("splitFileBytes", "1").load(out)
-    assert(slicedDf.rdd.getNumPartitions === cuts.length + 1,
+    val slicedDf = spark.read.format("proto-zst").load(out)
+    assert(SparkTestSession.frameSliced(slicedDf.rdd.getNumPartitions) ===
+      cuts.length + 1,
       "every frame range must become its own partition at threshold 1")
-    // and the DEFAULT read of the same dir stays one partition per file
+    // and the DEFAULT read of the same dir cuts its one file into slices
+    // of at least a quarter of its bytes on the 4 cores, greedily at the
+    // recorded boundaries
     val plain = spark.read.format("proto-zst").load(out)
-    assert(plain.rdd.getNumPartitions === 1)
+    val quarter = (fs.getFileStatus(dataFiles.head).getLen + 3) / 4
+    val want = cuts.map(_._1).foldLeft((0L, 1)) { case ((start, n), c) =>
+      if (c - start >= quarter) (c, n + 1) else (start, n)
+    }._2
+    assert(want > 1 && want <= 4)
+    assert(plain.rdd.getNumPartitions === want)
     // slices partition the rows exactly: nothing lost or doubled
-    val a = slicedDf.select(decode(col("key"), "UTF-8"),
-      size(col("columns"))).collect().map(_.toString).sorted
-    val b = plain.select(decode(col("key"), "UTF-8"),
-      size(col("columns"))).collect().map(_.toString).sorted
-    assert(a.toSeq === b.toSeq)
-    // every slice carries real work (frame cut every 64 rows)
+    // against the reference decode of the whole file
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select(
+      decode(col("key"), "UTF-8"), size(col("columns")))
+      .collect().map(_.toString).sorted.toSeq
+    val whole = {
+      val in = new com.github.luben.zstd.ZstdInputStream(fs.open(dataFiles.head))
+      val bytes = try in.readAllBytes() finally in.close()
+      graft.functions.ProtoWire.decodeRows(bytes)
+        .map(r => s"[${new String(r.key, "UTF-8")},${r.columns.size}]")
+        .toSeq.sorted
+    }
+    assert(SparkTestSession.frameSliced(rows(slicedDf)) === whole)
+    assert(rows(plain) === whole)
+    // every slice carries real work (frame cut every 4 rows)
     val perPart = slicedDf.rdd
       .mapPartitions(it => Iterator.single(it.size)).collect()
-    assert(perPart.forall(_ > 0) && perPart.sum === b.length)
+    assert(perPart.forall(_ > 0) && perPart.sum === whole.length)
   }
 
   test("bloom kernel: no false negatives, bounded false positives, fs roundtrip, foreign bytes degrade") {
