@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ProtoWire
-import graft.sources.{FileIndex, GenManifest, ProtoZstFiles, ProtoZstScan}
+import graft.sources.{FileIndex, GenManifest, ProtoZstFiles}
 
 /** CORRUPT-FILE QUARANTINE — the reference's `markSuspect` read path
   * (`SSTableReaderPatched.java:248-253`: a file the reader cannot
@@ -84,7 +84,7 @@ object Quarantine {
     snap.dataEntries.flatMap { e =>
       val p = new org.apache.hadoop.fs.Path(out, e.name)
       FileIndex.slices(e.bytes, e.count, sliceBytes,
-          FileIndex.read(ProtoZstFiles.fs(p, conf), p))
+          FileIndex.frames(ProtoZstFiles.fs(p, conf), p))
         .zipWithIndex.map { case (r, i) => (e.name, e.count, i, r.start, r.end) }
     }
   }
@@ -92,8 +92,8 @@ object Quarantine {
   /** File-grain salvage verdicts for a manifested generation: one row
     * per data file — (name, rows, cells, good_bytes, suspect).
     * Distributed one-task-per-file, EXCEPT files above the scan's
-    * slice size over the snapshot's bytes ([[ProtoZstScan.sliceBytes]])
-    * with recorded frame boundaries, which fan into per-slice tasks
+    * slice size (`spark.sql.files.maxPartitionBytes`) with recorded
+    * frame boundaries, which fan into per-slice tasks
     * ([[salvageTasks]]) and merge back to file grain with the
     * whole-file walk's first-bad-byte semantics: slices strictly
     * before the first broken one count fully, the broken slice
@@ -105,20 +105,17 @@ object Quarantine {
     * aggregation over a file-count-sized frame (KBs per 100 TB).
     */
   def salvageVerdicts(spark: SparkSession, out: String): DataFrame =
-    salvageVerdicts(spark, out, ProtoZstScan.sliceBytes(
-      snapshot(out).dataEntries.map(_.bytes).sum))
-
-  private def snapshot(out: String): GenManifest.Snapshot =
-    GenManifest.read(out, ProtoZstFiles.hadoopConf()).getOrElse(
-      throw new IllegalStateException(
-        s"salvage requires a manifested directory: $out"))
+    salvageVerdicts(spark, out, spark.sessionState.conf.filesMaxPartitionBytes)
 
   /** [[salvageVerdicts]] with files sliced at `sliceBytes`. */
   private[graft] def salvageVerdicts(spark: SparkSession, out: String,
       sliceBytes: Long): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val tasks = salvageTasks(out, snapshot(out), sliceBytes)
+    val snap = GenManifest.read(out, ProtoZstFiles.hadoopConf()).getOrElse(
+      throw new IllegalStateException(
+        s"salvage requires a manifested directory: $out"))
+    val tasks = salvageTasks(out, snap, sliceBytes)
     val sliced = spark.createDataset(tasks)
       .repartition(math.max(tasks.length, 1))
       .mapPartitions { it =>

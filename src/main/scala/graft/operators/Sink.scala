@@ -749,19 +749,23 @@ object Sink {
 
   /** q223: SLICED PARALLEL READ of one file — the writer ends its
     * zstd frame every `splitFrameRows` rows and records the frame
-    * offsets in the file's index; the scan cuts a file larger than its
-    * share of the cores (`ProtoZstScan.sliceBytes`: here one file over
-    * the session's default parallelism) into frame-aligned byte-range
-    * partitions, each decoding independently. This removes the
-    * engine's last straggler shape: before this, "read-back fans out
-    * one partition per file" meant a skewed 10 GB file was a single
-    * task at any cluster size. The oracle replays the nest from raw rows, so hash
-    * equality proves slices partition the rows exactly — nothing
-    * lost, nothing doubled at the cut points.
+    * offsets in the file's index; the scan cuts a file larger than
+    * `spark.sql.files.maxPartitionBytes` into frame-aligned byte-range
+    * partitions, each decoding independently. Production keeps the
+    * 128 MB default; this read runs in a session of its own with the
+    * setting at 1 byte, so it cuts at every recorded frame boundary.
+    * This removes the engine's last straggler shape: before this,
+    * "read-back fans out one partition per file" meant a skewed 10 GB
+    * file was a single task at any cluster size. The oracle replays
+    * the nest from raw rows, so hash equality proves slices partition
+    * the rows exactly — nothing lost, nothing doubled at the cut
+    * points.
     */
   def slicedRead(spark: SparkSession, dir: String): DataFrame = {
     val out = slicedFixture(spark, dir)
-    spark.read.format("proto-zst").load(out)
+    val sliced = spark.newSession()
+    sliced.conf.set("spark.sql.files.maxPartitionBytes", "1")
+    sliced.read.format("proto-zst").load(out)
       .select(decode(col("key"), "UTF-8").as("key"),
         size(col("columns")).cast("long").as("n_cells"))
   }

@@ -25,8 +25,9 @@ import graft.functions.ProtoWire
   * "custom source" path: one input partition PER FILE — reproducing the
   * reference's per-file unit of work (O1) and preserving within-file
   * row order, so a downstream per-key nest over a key-sorted file needs
-  * no shuffle — except that a file larger than its share of the cores
-  * reads as frame-aligned slices, each in file order.
+  * no shuffle — except that a file larger than
+  * `spark.sql.files.maxPartitionBytes` reads as frame-aligned slices,
+  * each in file order.
   *
   * Usage: `spark.read.format("proto-zst").load(dir)`.
   */
@@ -258,10 +259,9 @@ class ProtoZstTable(paths: Seq[String],
   * the key bytes alone, columns never decoded for dropped frames) and
   * column pruning (a key-only projection skips Column decode entirely).
   * Partition sizing takes no option of its own: a file the scan reads
-  * whole is cut at its recorded frame boundaries when it is larger
-  * than [[ProtoZstScan.sliceBytes]] of the bytes the scan reads whole,
-  * the rule Spark's file sources apply under
-  * `spark.sql.files.maxPartitionBytes`.
+  * whole is cut at its recorded frame boundaries into slices of at
+  * least `spark.sql.files.maxPartitionBytes`, the setting Spark's file
+  * sources split by.
   */
 class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
     bucketsIn: org.apache.hadoop.conf.Configuration => Option[Int] = _ => None,
@@ -710,22 +710,6 @@ final class FileView(val paths: Seq[String], val version: Option[Long],
 }
 
 object ProtoZstScan {
-  /** The slice size ([[FileIndex.slices]]) for a read of `bytes` bytes
-    * of whole files: Spark's own `FilePartition.maxSplitBytes` rule —
-    * `spark.sql.files.maxPartitionBytes`, or the bytes spread over the
-    * session's default parallelism when that is less — without its
-    * open-cost floor, since every cut is a recorded frame boundary and
-    * no slice can be smaller than one frame. Only a file larger than
-    * the bytes' share of one core is cut, so at most that many files
-    * have their index read for it.
-    */
-  def sliceBytes(bytes: Long): Long = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val cores = spark.sparkContext.defaultParallelism
-    math.max(1L, math.min(spark.sessionState.conf.filesMaxPartitionBytes,
-      (bytes + cores - 1) / cores))
-  }
-
   /** Default ceiling on live tombstone bytes a scan will carry (scan
     * option `maxTombstoneBytes` overrides). 64 MB of keys is far past
     * any sane purge cadence — the cap exists to turn "someone forgot
@@ -761,6 +745,10 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
   // the builder's one conf, captured on the driver; ships to executors
   // with the reader factory
   private val conf = view.conf
+  // the slice size of a file read whole ([[FileIndex.slices]]), from
+  // the session that plans the scan
+  private val sliceBytes =
+    org.apache.spark.sql.SparkSession.active.sessionState.conf.filesMaxPartitionBytes
 
   /** Runtime (DPP-style) file pruning: the scan advertises `key` as
     * runtime-filterable, so a selective join against a small dimension
@@ -910,7 +898,7 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
   // matters on a 1000-executor cluster: whole files). A point lookup
   // reads only what [[seeks]] planned of each file. Runtime
   // (DPP-style) filters prune the same way here. A file read whole
-  // that is larger than its share of the cores is cut into
+  // that is larger than `spark.sql.files.maxPartitionBytes` is cut into
   // frame-aligned slices ([[sliced]]). When bucket-grouping is active,
   // the unit is one BUCKET (all its files), keyed for the planner via
   // HasPartitionKey.
@@ -927,14 +915,11 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
               Array(ProtoZstInputPartition(m): InputPartition))(_._1)), b): InputPartition
         }
       case None =>
-        val metas = ManifestIndex.skipByRange(plannedMeta, runtimeFilters)
         // a salvage read keeps a file's intact prefix, which only one
         // reader walking the file in order can know: it never slices
-        val target =
-          if (ignoreCorrupt) Long.MaxValue
-          else ProtoZstScan.sliceBytes(
-            metas.filterNot(m => seeks.contains(m.path)).map(_.bytes).sum)
-        metas.flatMap(m => seeks.get(m.path).fold(sliced(m, target))(_._1))
+        val target = if (ignoreCorrupt) Long.MaxValue else sliceBytes
+        ManifestIndex.skipByRange(plannedMeta, runtimeFilters)
+          .flatMap(m => seeks.get(m.path).fold(sliced(m, target))(_._1))
     }
 
   /** The candidate keys of a pushed point lookup (`key =`/`IN`), if the
@@ -942,16 +927,13 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
     */
   private val pointKeys: Option[Seq[Array[Byte]]] = KeyPredicate.pointKeys(filters)
 
-  /** Each planned file's index, read on the driver at most once per
-    * scan: a point lookup's bloom probe and the slicing of a file it
-    * then reads whole share one read.
+  /** The frame boundaries of each file a point lookup's bloom probe
+    * could not rule out and [[seeks]] leaves to be read whole, so that
+    * slicing it reads its index no second time. Only these are kept:
+    * every other file's index is dropped once probed.
     */
-  private val indexes = scala.collection.mutable.Map.empty[String, Option[FileIndex]]
-  private def index(m: FileMeta): Option[FileIndex] =
-    indexes.getOrElseUpdate(m.path, {
-      val p = new org.apache.hadoop.fs.Path(m.path)
-      FileIndex.read(ProtoZstFiles.fs(p, conf.value), p)
-    })
+  private val probedFrames =
+    scala.collection.mutable.Map.empty[String, Array[FileIndex.Frame]]
 
   /** A point lookup's read of each planned file, decided on the driver
     * once per scan: the reference's bloom → index → chunk path
@@ -967,18 +949,24 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
   private lazy val seeks: Map[String, (Array[InputPartition], Int)] =
     pointKeys.fold(Map.empty[String, (Array[InputPartition], Int)]) { keys =>
       plannedMeta.iterator.flatMap { m =>
-        val idx = index(m)
+        val p = new org.apache.hadoop.fs.Path(m.path)
+        val idx = FileIndex.read(ProtoZstFiles.fs(p, conf.value), p)
         idx.foreach(_ => MetaIO.bloomProbes.incrementAndGet())
         if (idx.exists(i => !keys.exists(i.mightContain))) {
           MetaIO.bloomSkips.incrementAndGet()
           Some(m.path -> (Array.empty[InputPartition], 0))
-        } else idx.flatMap(seekPlan(m, keys, _)).map { case (ranges, segments) =>
-          MetaIO.frameSeeks.incrementAndGet()
-          MetaIO.seekBytes.addAndGet(ranges.map(_.bytes(m.bytes)).sum)
-          m.path -> (
-            if (ranges.isEmpty) Array.empty[InputPartition]
-            else Array(ProtoZstInputPartition(m, ranges): InputPartition),
-            segments)
+        } else {
+          val seek = idx.flatMap(seekPlan(m, keys, _)).map { case (ranges, segments) =>
+            MetaIO.frameSeeks.incrementAndGet()
+            MetaIO.seekBytes.addAndGet(ranges.map(_.bytes(m.bytes)).sum)
+            m.path -> (
+              if (ranges.isEmpty) Array.empty[InputPartition]
+              else Array(ProtoZstInputPartition(m, ranges): InputPartition),
+              segments)
+          }
+          if (seek.isEmpty)
+            probedFrames(m.path) = idx.fold(Array.empty[FileIndex.Frame])(_.frames)
+          seek
         }
       }.toMap
     }
@@ -1062,9 +1050,12 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
     * bytes each ([[FileIndex.slices]]); a file no larger than `target`
     * is one whole-file range and opens no index.
     */
-  private def sliced(m: FileMeta, target: Long): Array[InputPartition] =
-    FileIndex.slices(m.bytes, m.count, target, index(m))
+  private def sliced(m: FileMeta, target: Long): Array[InputPartition] = {
+    val p = new org.apache.hadoop.fs.Path(m.path)
+    FileIndex.slices(m.bytes, m.count, target, probedFrames.getOrElse(m.path,
+        FileIndex.frames(ProtoZstFiles.fs(p, conf.value), p)))
       .map(r => ProtoZstInputPartition(m, Seq(r)): InputPartition).toArray
+  }
 
   /** The scan's ANTI-SET: every key named by a live tombstone file,
     * decoded once on the driver, deduped, and unsigned-sorted so task
@@ -1226,8 +1217,9 @@ object KeyPredicate {
 /** The one unit of every proto-zst read: frame-aligned byte ranges of
   * one file, read in order, each with the rows the writer attested for
   * it. A whole file is the one range from 0 to EOF with the file's
-  * count; a slice of a file larger than its share of the cores is one
-  * range between two recorded frame boundaries; a point lookup's seek
+  * count; a slice of a file larger than
+  * `spark.sql.files.maxPartitionBytes` is one range between two
+  * recorded frame boundaries; a point lookup's seek
   * is the ranges that can hold its keys. Every range decodes on its
   * own, the slices of a file partition its rows exactly, and a slice
   * of a key-sorted file is itself key-sorted. The [[FileMeta]] gates
@@ -1337,16 +1329,17 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
       // stream cleanly and would otherwise LOSE rows silently. A point
       // lookup over a key-sorted file stops at its last key, and a
       // stopped range is not checked. Salvage mode keeps every
-      // recoverable row, and reads each range frame by frame, so damage
-      // in one frame cannot cost the frames before it.
+      // recoverable row of the file's intact prefix: it reads the
+      // ranges frame by frame, so damage in one frame cannot cost the
+      // frames before it, and the first failed frame ends the read.
       case ProtoZstInputPartition(meta, ranges) =>
         val stop = if (meta.sorted) lastKey else null
         if (ignoreCorrupt) {
           lazy val cuts = frameOffsets(meta)
-          chain(ranges.iterator.map { r =>
+          salvaged(meta.path, ranges.iterator.flatMap { r =>
             val inner = cuts.filter(o => o > r.start && (r.end < 0L || o < r.end))
-            salvaged(meta.path, ((r.start +: inner) zip (inner :+ r.end)).iterator, stop)
-          })
+            (r.start +: inner) zip (inner :+ r.end)
+          }, stop)
         } else chain(ranges.iterator.map(r =>
           new Decoded(meta.path, r.start, r.end, r.rows, stop)))
       case ProtoZstBucketPartition(parts, _) =>
@@ -1383,8 +1376,7 @@ class ProtoZstReaderFactory(ignoreCorrupt: Boolean,
     */
   private def frameOffsets(meta: FileMeta): Array[Long] = {
     val p = new org.apache.hadoop.fs.Path(meta.path)
-    FileIndex.read(ProtoZstFiles.fs(p, conf.value), p)
-      .fold(Array.empty[Long])(_.frames.map(_.offset))
+    FileIndex.frames(ProtoZstFiles.fs(p, conf.value), p).map(_.offset)
   }
 
   /** Rows of [start, end) of `file` (end = -1 ⇒ EOF) off their own

@@ -84,6 +84,12 @@ object FileIndex {
       decode(try in.readAllBytes() finally in.close())
     } catch { case _: Exception => None }
 
+  /** The recorded frame boundaries from [[read]]; none when the index
+    * is unreadable.
+    */
+  def frames(fs: FileSystem, data: Path): Array[Frame] =
+    read(fs, data).fold(Array.empty[Frame])(_.frames)
+
   private def decode(b: Array[Byte]): Option[FileIndex] = {
     val n = b.length - 4
     if (n < 5) return None
@@ -128,18 +134,17 @@ object FileIndex {
     * boundaries, each at least `sliceBytes` long. The last range reads
     * to EOF, so bytes appended past the attested length decode as a
     * whole-file read sees them. A file no larger than `sliceBytes`, or
-    * without a readable index, is one range; `idx` is read only for a
-    * larger file. A slice boundary is always a frame boundary, so
+    * without recorded boundaries, is one range; `frames` is read only
+    * for a larger file. A slice boundary is always a frame boundary, so
     * ranges decode independently and partition the rows exactly, and
     * each range's row count is the difference of the writer's
     * rows-before counts (the last one's is `count` minus its start's).
     */
   def slices(bytes: Long, count: Long, sliceBytes: Long,
-      idx: => Option[FileIndex]): Seq[FrameRange] = {
+      frames: => Array[Frame]): Seq[FrameRange] = {
     val cuts =
       if (bytes <= sliceBytes) Array.empty[Frame]
-      else idx.fold(Array.empty[Frame])(
-        _.frames.filter(f => f.offset > 0 && f.offset < bytes))
+      else frames.filter(f => f.offset > 0 && f.offset < bytes)
     val out = scala.collection.mutable.ArrayBuffer.empty[FrameRange]
     var start = Frame(0L, 0L, Array.emptyByteArray)
     cuts.foreach { c =>

@@ -299,6 +299,12 @@ class FrameSeekSpec extends AnyFunSuite {
       .load(bad).filter(col("key") >= lit("u0123".getBytes("UTF-8")))))
     assert(counted(rows(point(bad, salvage)("u0123"))) === ((Seq.empty, 0, 0)))
     assert(scanned("u0123").isEmpty)
+    // a salvaging get that seeks several ranges keeps their intact
+    // prefix, as a whole-file read does: the damaged first range ends
+    // it, though the later range is intact
+    assert(rows(point(bad, salvage)("u0123", "u0900")).isEmpty)
+    assert(rows(point(bad, salvage)("u0900")) === Seq(("u0900", 900L)))
+    assert(scanned("u0900").isEmpty)
     // a salvaging whole-file read decodes frame range by frame range:
     // it keeps every frame whose bytes still verify. The local
     // filesystem checksums 512-byte chunks, so a frame sharing the
@@ -370,8 +376,9 @@ class FrameSeekSpec extends AnyFunSuite {
 
   test("a get over bloom-positive unsorted files opens each index once") {
     // two files hold every key in descending order: both blooms say
-    // maybe and neither attests sorted, so the get reads both whole,
-    // cutting each into slices from the index its bloom probe read
+    // maybe and neither attests sorted, so the get reads both whole;
+    // cut at every frame, each is sliced from the index its bloom
+    // probe read
     import spark.implicits._
     val dir = freshDir("graft_seek_unsorted")
     (1 to 2).foreach { _ =>
@@ -384,7 +391,7 @@ class FrameSeekSpec extends AnyFunSuite {
         .mode("append").save(dir)
     }
     MetaIO.reset()
-    val parts = point(dir)("u0123").rdd.getNumPartitions
+    val parts = SparkTestSession.frameSliced(point(dir)("u0123").rdd.getNumPartitions)
     assert(parts > 2, s"$parts partitions: each file must read as slices")
     assert(MetaIO.bloomProbes.get() === 2L && MetaIO.frameSeeks.get() === 0L)
     assert(MetaIO.indexReads.get() === 2L)

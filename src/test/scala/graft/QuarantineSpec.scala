@@ -316,9 +316,9 @@ class QuarantineSpec extends AnyFunSuite {
     val fs = dirPath.getFileSystem(conf)
     val data = fs.listStatus(dirPath).map(_.getPath)
       .filter(_.getName.endsWith(".proto.zst")).head
-    // one file on 4 cores reads as slices; cut the file at its last
-    // recorded frame boundary, which the last slice holds, and keep
-    // the index, so the strict read still plans those slices
+    // a read cut at every frame reads the file as slices; cut the file
+    // at its last recorded frame boundary, which the last slice holds,
+    // and keep the index, so the strict read still plans those slices
     val (cutAt, rowsBefore) = SplitSidecar.read(fs, data).get.last
     val keep = new Array[Byte](cutAt.toInt)
     val in = fs.open(data)
@@ -326,15 +326,16 @@ class QuarantineSpec extends AnyFunSuite {
     val os = fs.create(data, true)
     try os.write(keep) finally os.close()
     val strict = spark.read.format("proto-zst").load(dir)
-    assert(strict.rdd.getNumPartitions > 1, "the file must read as slices")
-    val e = intercept[Exception] {
-      strict.agg(sum(size(col("columns")))).collect()
+    val e = SparkTestSession.frameSliced {
+      assert(strict.rdd.getNumPartitions > 1, "the file must read as slices")
+      intercept[Exception](strict.agg(sum(size(col("columns")))).collect())
     }
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(x => String.valueOf(x.getMessage).contains("truncated stream")),
       s"strict read must refuse the cut file: $e")
-    val salvaged = spark.read.format("proto-zst")
-      .option("ignoreCorrupt", "true").load(dir).select(col("key")).collect()
+    // a salvage read never slices, so it keeps the file's intact prefix
+    val salvaged = SparkTestSession.frameSliced(spark.read.format("proto-zst")
+      .option("ignoreCorrupt", "true").load(dir).select(col("key")).collect())
       .map(r => new String(r.getAs[Array[Byte]](0), "UTF-8")).sorted.toSeq
     assert(salvaged === (0L until rowsBefore).map(i => f"t$i%04d"))
   }

@@ -681,16 +681,10 @@ class SourceExtensionSpec extends AnyFunSuite {
     assert(SparkTestSession.frameSliced(slicedDf.rdd.getNumPartitions) ===
       cuts.length + 1,
       "every frame range must become its own partition at threshold 1")
-    // and the DEFAULT read of the same dir cuts its one file into slices
-    // of at least a quarter of its bytes on the 4 cores, greedily at the
-    // recorded boundaries
+    // and the DEFAULT read of the same dir stays one partition: its file
+    // is far below spark.sql.files.maxPartitionBytes
     val plain = spark.read.format("proto-zst").load(out)
-    val quarter = (fs.getFileStatus(dataFiles.head).getLen + 3) / 4
-    val want = cuts.map(_._1).foldLeft((0L, 1)) { case ((start, n), c) =>
-      if (c - start >= quarter) (c, n + 1) else (start, n)
-    }._2
-    assert(want > 1 && want <= 4)
-    assert(plain.rdd.getNumPartitions === want)
+    assert(plain.rdd.getNumPartitions === 1)
     // slices partition the rows exactly: nothing lost or doubled
     // against the reference decode of the whole file
     def rows(df: org.apache.spark.sql.DataFrame) = df.select(
