@@ -681,6 +681,8 @@ class SourceExtensionSpec extends AnyFunSuite {
     assert(SparkTestSession.frameSliced(slicedDf.rdd.getNumPartitions) ===
       cuts.length + 1,
       "every frame range must become its own partition at threshold 1")
+    // q223 itself reads in a session of its own at that setting
+    assert(Sink.slicedRead(spark, sf0001).rdd.getNumPartitions === cuts.length + 1)
     // and the DEFAULT read of the same dir stays one partition: its file
     // is far below spark.sql.files.maxPartitionBytes
     val plain = spark.read.format("proto-zst").load(out)
