@@ -168,6 +168,8 @@ def main():
         bench = json.load(fh)
     seconds = args.seconds or bench["run_seconds"]
 
+    if args.workdir:
+        os.makedirs(args.workdir, exist_ok=True)
     tmp = tempfile.mkdtemp(prefix="convbench-ab-", dir=args.workdir)
     arms_dir = {"parent": os.path.join(tmp, "parent"),
                 "change": os.path.join(tmp, "change")}

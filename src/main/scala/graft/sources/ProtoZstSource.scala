@@ -927,10 +927,11 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
     */
   private val pointKeys: Option[Seq[Array[Byte]]] = KeyPredicate.pointKeys(filters)
 
-  /** The frame boundaries of each file a point lookup's bloom probe
-    * could not rule out and [[seeks]] leaves to be read whole, so that
-    * slicing it reads its index no second time. Only these are kept:
-    * every other file's index is dropped once probed.
+  /** The frame boundaries of each file larger than the slice size that
+    * a point lookup's bloom probe could not rule out and [[seeks]]
+    * leaves to be read whole, so that slicing it reads its index no
+    * second time. Only these are kept: every other file's index is
+    * dropped once probed.
     */
   private val probedFrames =
     scala.collection.mutable.Map.empty[String, Array[FileIndex.Frame]]
@@ -964,7 +965,7 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
               else Array(ProtoZstInputPartition(m, ranges): InputPartition),
               segments)
           }
-          if (seek.isEmpty)
+          if (seek.isEmpty && m.bytes > sliceBytes)
             probedFrames(m.path) = idx.fold(Array.empty[FileIndex.Frame])(_.frames)
           seek
         }
