@@ -42,12 +42,9 @@ object Harness {
         .withColumn("h", graft.functions.HashOps.md5_prefix60(col("r_name")))
         .groupBy(col("r_regionkey")).agg(count(lit(1))).count()
       val schema = spark.read.parquet(s"$dir/region.parquet").schema
-      spark.readStream.schema(schema)
-        .option("pathGlobFilter", "region.parquet").parquet(dir)
-        .groupBy(col("r_regionkey")).agg(count(lit(1)))
-        .writeStream.format("memory").queryName("bench_warmup")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        .awaitTermination()
+      graft.operators.Streaming.drainToMemory(spark, "bench_warmup", "complete")(
+        spark.readStream.schema(schema)
+          .option("pathGlobFilter", "region.parquet").parquet(dir)
+          .groupBy(col("r_regionkey")).agg(count(lit(1))))
     } catch { case _: Throwable => () }
 }

@@ -808,7 +808,6 @@ object SimSearch {
     */
   private[graft] def streamIndexIngestTo(spark: SparkSession, dir: String,
       out: String, ckpt: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val cent = centroidFixture(spark, dir, NCells)
       .select(col("cell").cast("int"), col("cqv"), col("cn2")).collect()
     val centLit = array(cent.map { r =>
@@ -837,15 +836,15 @@ object SimSearch {
           encode(col("w.d2").cast("string"), "UTF-8").as("value"),
           col("vec_id").as("write_time"))).as("columns"),
         col("w.cell").as("cell"))
-    val q = assigned.repartition(col("cell"))
-      .select(col("key"), col("columns"))
-      .writeStream.format("proto-zst")
-      .option("checkpointLocation", ckpt)
-      .option("splitKeyPrefix", "3")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    Streaming.runToCompletion("q215", q)
+    Streaming.drain(spark) {
+      assigned.repartition(col("cell"))
+        .select(col("key"), col("columns"))
+        .writeStream.format("proto-zst")
+        .option("checkpointLocation", ckpt)
+        .option("splitKeyPrefix", "3")
+        .option("path", out)
+        .outputMode("append")
+    }
     spark.read.format("proto-zst").load(out)
       .select(decode(col("key"), "UTF-8").as("k"),
         decode(element_at(col("columns"), 1).getField("value"), "UTF-8")

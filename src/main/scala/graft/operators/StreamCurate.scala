@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.Tables
 
@@ -180,7 +179,8 @@ object StreamCurate {
       .withWatermark("event_time", "1 hour")
       .dropDuplicatesWithinWatermark("h", "lang", "shard", "n_tokens",
         "n_redactions", "boiler_milli")
-    // 4 state partitions, not the streaming family's default 8: this
+    // 4 state partitions, not the streaming family's
+    // Streaming.StatePartitions (8): this
     // query's per-batch cost is dominated by the dedup store's commit
     // fan-out plus the proto-zst sink's per-partition file handling,
     // and its md5 gate ladder parallelizes BEFORE the state exchange
@@ -189,8 +189,8 @@ object StreamCurate {
     // hit both): parts=4 median 2.78 s vs parts=8 median 3.65 s, 4
     // faster in 5 of 5 paired rounds; state rows/updates/drops
     // identical.
-    Streaming.withStatePartitions(spark, 4) {
-      val q = gated
+    Streaming.drain(spark, Some(4)) {
+      gated
         .select(
           encode(format_string("l%s-s%02d:%s", col("lang"), col("shard"),
             col("h")), "UTF-8").as("key"),
@@ -209,10 +209,8 @@ object StreamCurate {
         .writeStream.format("proto-zst")
         .option("checkpointLocation", ckpt)
         .option("splitKeyPrefix", CIngPrefixBytes.toString)
+        .option("path", outDir)
         .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start(outDir)
-      Streaming.runToCompletion("q208", q)
     }
     spark.read.format("proto-zst").load(outDir)
       .select(decode(col("key"), "UTF-8").as("k"),
@@ -509,8 +507,8 @@ object StreamCurate {
         concat_ws("|", col("lang"), col("shard"), col("n_tokens"),
           col("n_redactions"), col("boiler_milli")).as("payload"))
       .as[NdsIn]
-    Streaming.withRocksDb(spark) { Streaming.withStatePartitions(spark, 8) {
-      val q = gated.groupByKey(_.bkey)
+    Streaming.drain(spark, Some(Streaming.StatePartitions), rocksDb = true) {
+      gated.groupByKey(_.bkey)
         .transformWithState(
           new NearDupScreenProcessor(NdsHorizonUs, NdsSketchK),
           TimeMode.EventTime(), OutputMode.Append())
@@ -526,12 +524,9 @@ object StreamCurate {
         .writeStream.format("proto-zst")
         .option("checkpointLocation", ckpt)
         .option("splitKeyPrefix", "2")
+        .option("path", outDir)
         .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start(outDir)
-      Streaming.runToCompletion("q255", q)
-      q
-    } }
+    }
   }
 
   /** q255 read-back: exported tuples (DISTINCT — content is single-

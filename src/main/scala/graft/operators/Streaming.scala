@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, Trigger}
 
 import graft.sources.Tables
 
@@ -26,72 +26,66 @@ case class FunnelOut(user_id: Long, view_us: Option[Long],
   */
 object Streaming extends Serializable {
 
-  /** Run `f` with the RocksDB state-store provider (the
-    * transformWithState engine requirement), restoring the session
-    * conf after. NOTE: this mutates the SESSION-wide conf for the
-    * call's duration — fine while queries run sequentially (every
-    * harness here does), but a concurrent streaming query started on
-    * this session would silently inherit RocksDB and race the
-    * restore; an embedding that runs queries concurrently should
-    * scope the swap to a dedicated spark.newSession() instead.
+  /** State-store partitions of the stateful stream queries (q208 keeps
+    * its own measured 4). Stateful streaming cost on small/medium state
+    * is dominated by per-partition state store instances (delta file +
+    * commit PER partition PER batch) — 8 partitions cuts that fixed
+    * cost 4× vs the session's 32. On a real cluster with large state
+    * this knob goes the other way; it is per-query here precisely
+    * because state size is query-specific.
     */
-  private[operators] def withRocksDb[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  private[graft] val StatePartitions = 8
+
+  /** The one stream runner: start the writer `query` builds with
+    * `Trigger.AvailableNow`, wait until it has drained its source, and
+    * return the finished query (its `recentProgress` holds each
+    * batch's durations and state-operator counters). `statePartitions`
+    * sets `spark.sql.shuffle.partitions`, which fixes a stateful
+    * query's state layout; `rocksDb` sets the RocksDB state-store
+    * provider (the transformWithState engine requirement). Both are
+    * restored when the query ends or fails, and `query` is built inside
+    * that scope. NOTE: the scope is the SESSION-wide conf — fine while
+    * queries run sequentially (every harness here does), but a
+    * concurrent streaming query started on this session would silently
+    * inherit it and race the restore; an embedding that runs queries
+    * concurrently should drain on a dedicated spark.newSession().
+    */
+  private[graft] def drain(spark: SparkSession,
+      statePartitions: Option[Int] = None, rocksDb: Boolean = false)(
+      query: => DataStreamWriter[_]): StreamingQuery = {
+    val scoped = statePartitions.toSeq.map("spark.sql.shuffle.partitions" -> _.toString) ++
+      Option.when(rocksDb)("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val prev = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val q = query.trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
-  /** Run `f` with a reduced shuffle-partition count. Stateful streaming
-    * cost on small/medium state is dominated by per-partition state
-    * store instances (delta file + commit PER partition PER batch) —
-    * 8 partitions cuts that fixed cost 4× vs the session's 32. On a
-    * real cluster with large state this knob goes the other way; it is
-    * per-query here precisely because state size is query-specific.
+  /** [[drain]] `result` into a memory sink in `outputMode`, under a
+    * query name of its own derived from `label`, and read the sink back.
     */
-  private[operators] def withStatePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, prev)
-  }
-
-  /** Drive a streaming query to completion; under `GRAFT_STREAM_DEBUG`
-    * dump every micro-batch's phase timings and state-operator counters
-    * to stderr — the evidence that separates plan/codegen cost from
-    * state-store commit cost from extra watermark-advancing batches
-    * whenever a streaming bench line moves (the round-3 q31 and round-4
-    * q84 triages both needed exactly this breakdown).
-    */
-  private[operators] def runToCompletion(label: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    q.awaitTermination()
-    if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach { p =>
-        val st = p.stateOperators.map { s =>
-          val cm = s.customMetrics.asScala.toSeq.sortBy(_._1)
-            .filter(_._2 != 0).map { case (k, v) => s"$k=$v" }
-            .mkString(",")
-          s"${s.operatorName}: rows=${s.numRowsTotal} upd=${s.numRowsUpdated} " +
-            s"rem=${s.numRowsRemoved} commitMs=${s.commitTimeMs} custom[$cm]"
-        }
-          .mkString("; ")
-        System.err.println(
-          s"[$label] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs} state={$st}")
-      }
+  private[graft] def drainToMemory(spark: SparkSession, label: String,
+      outputMode: String, statePartitions: Option[Int] = None,
+      rocksDb: Boolean = false)(result: => Dataset[_]): DataFrame = {
+    val name = s"${label}_sink_" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
+    drain(spark, statePartitions, rocksDb) {
+      result.writeStream.format("memory").queryName(name).outputMode(outputMode)
+    }
+    spark.table(name)
   }
 
   /** q28: streaming twin of [[Events.windowAgg]]. */
   def streamWindowAgg(spark: SparkSession, dir: String): DataFrame = {
     // Tables.eventsStream resolves the on-disk schema via the batch
     // reader and normalizes ts to nano longs (see Tables scaladoc)
-    val name = "q28_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     // the file-stream source wants a directory: stream the testdata dir
     // with a glob filter selecting the events table
     val src = Tables.eventsStream(spark, dir)
@@ -106,16 +100,7 @@ object Streaming extends Serializable {
       .agg(count(lit(1)).as("n_events"),
         size(collect_set(col("user_id"))).as("n_users"),
         (sum(col("vc")).cast("double") / 100.0).as("sum_value"))
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      runToCompletion("q28", q)
-    }
-    spark.table(name)
+    drainToMemory(spark, "q28", "complete", Some(StatePartitions))(agg)
   }
 
   private val SessionGapUs = 43200000000L // 12 h, matches Events.sessionize
@@ -140,8 +125,6 @@ object Streaming extends Serializable {
     */
   def streamSessionize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = "q31_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     val src = Tables.eventsStream(spark, dir)
     val evs = src
       .select(col("user_id"), col("event_id"), expr("ts DIV 1000").as("us"),
@@ -201,15 +184,11 @@ object Streaming extends Serializable {
       }
     }
 
-    withStatePartitions(spark, 8) {
-      val q = evs.groupByKey(_.user_id)
+    drainToMemory(spark, "q31", "append", Some(StatePartitions)) {
+      evs.groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Append(),
           GroupStateTimeout.EventTimeTimeout())(fold)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q31", q)
     }
-    spark.table(name)
       .select(col("user_id"), col("session_no"), col("n_events"),
         col("start_us"), col("end_us"), col("duration_us"))
   }
@@ -234,12 +213,12 @@ object Streaming extends Serializable {
       .select(col("key"),
         array(struct(col("name"), col("value"), col("write_time")))
           .as("columns"))
-    val q = nested.writeStream.format("proto-zst")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(outDir)
-    runToCompletion("q37", q)
+    drain(spark) {
+      nested.writeStream.format("proto-zst")
+        .option("checkpointLocation", ckpt)
+        .option("path", outDir)
+        .outputMode("append")
+    }
     CellModel.flatCells(spark.read.format("proto-zst").load(outDir))
   }
 
@@ -306,16 +285,16 @@ object Streaming extends Serializable {
             col("event_type"), col("wt")), "UTF-8").as("value"),
           col("wt").as("write_time"))).as("columns"),
         col("hour"), col("shard"))
-    val q = keyed
-      .repartition(col("hour"), col("shard"))
-      .select(col("key"), col("columns"))
-      .writeStream.format("proto-zst")
-      .option("checkpointLocation", ckpt)
-      .option("splitKeyPrefix", SExpPrefixBytes.toString)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(outDir)
-    runToCompletion("q174", q)
+    drain(spark) {
+      keyed
+        .repartition(col("hour"), col("shard"))
+        .select(col("key"), col("columns"))
+        .writeStream.format("proto-zst")
+        .option("checkpointLocation", ckpt)
+        .option("splitKeyPrefix", SExpPrefixBytes.toString)
+        .option("path", outDir)
+        .outputMode("append")
+    }
     spark.read.format("proto-zst").load(outDir)
       .select(decode(col("key"), "UTF-8").as("k"),
         decode(element_at(col("columns"), 1).getField("value"), "UTF-8")
@@ -336,8 +315,6 @@ object Streaming extends Serializable {
     * so state ages out; the bounded testdata doesn't need one).
     */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val name = "q43_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     def src = Tables.eventsStream(spark, dir)
     // dedup on FULL row identity: keying on event_id alone would make
     // the survivor arbitrary if ids ever repeated with different
@@ -346,12 +323,7 @@ object Streaming extends Serializable {
       .dropDuplicates()
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q43", q)
-    }
-    spark.table(name)
+    drainToMemory(spark, "q43", "complete", Some(StatePartitions))(agg)
   }
 
   /** q48: streaming READ of the proto-zst format — the ingest loop's
@@ -365,13 +337,8 @@ object Streaming extends Serializable {
     */
   def streamProtoSource(spark: SparkSession, dir: String): DataFrame = {
     val outDir = Sink.nestedFixture(spark, dir)
-    val name = "q48_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     val flat = CellModel.flatCells(spark.readStream.format("proto-zst").load(outDir))
-    val q = flat.writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    runToCompletion("q48", q)
-    spark.table(name)
+    drainToMemory(spark, "q48", "append")(flat)
   }
 
   /** q84: streaming dedup with BOUNDED state — q43's exactly-once
@@ -386,8 +353,6 @@ object Streaming extends Serializable {
     * DISTINCT oracle — same gate as q43, different state lifecycle.
     */
   def streamDedupTtl(spark: SparkSession, dir: String): DataFrame = {
-    val name = "q84_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     def src = Tables.eventsStream(spark, dir)
       .withColumn("event_time", timestamp_micros(expr("ts DIV 1000")))
     // event ids are unique in the fixture, so keying the TTL state on
@@ -397,12 +362,7 @@ object Streaming extends Serializable {
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q84", q)
-    }
-    spark.table(name)
+    drainToMemory(spark, "q84", "complete", Some(StatePartitions))(agg)
   }
 
   /** q98: ONLINE FEATURE STATE via `transformWithState` — Spark 4's
@@ -424,22 +384,16 @@ object Streaming extends Serializable {
   def streamUserFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.TimeMode
-    val name = "q98_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     val evs = Tables.eventsStream(spark, dir)
       .select(col("user_id"),
         round(col("value") * 100, 0).cast("long").as("vc"),
         expr("ts DIV 1000").as("us"))
       .as[(Long, Long, Long)]
-    withRocksDb(spark) { withStatePartitions(spark, 8) {
-      val q = evs.groupByKey(_._1)
+    drainToMemory(spark, "q98", "update", Some(StatePartitions), rocksDb = true) {
+      evs.groupByKey(_._1)
         .transformWithState(new UserFeatureProcessor,
           TimeMode.None(), OutputMode.Update())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q98", q)
-    } }
-    spark.table(name)
+    }
   }
 
   /** q101 retirement horizon: 12 h of EVENT time without activity. */
@@ -466,8 +420,6 @@ object Streaming extends Serializable {
   def streamFeatureRetire(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.TimeMode
-    val name = "q101_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     val evs = Tables.eventsStream(spark, dir)
       .select(col("user_id"),
         round(col("value") * 100, 0).cast("long").as("vc"),
@@ -475,15 +427,11 @@ object Streaming extends Serializable {
       .withColumn("ets", timestamp_micros(col("us")))
       .withWatermark("ets", "0 seconds")
       .select(col("user_id"), col("vc"), col("us")).as[(Long, Long, Long)]
-    withRocksDb(spark) { withStatePartitions(spark, 8) {
-      val q = evs.groupByKey(_._1)
+    drainToMemory(spark, "q101", "update", Some(StatePartitions), rocksDb = true) {
+      evs.groupByKey(_._1)
         .transformWithState(new RetiringFeatureProcessor(RetireTtlMs),
           TimeMode.EventTime(), OutputMode.Update())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q101", q)
-    } }
-    spark.table(name)
+    }
   }
 
   /** q104: STREAM-STATIC JOIN — purchase events streaming in, enriched
@@ -516,8 +464,6 @@ object Streaming extends Serializable {
         (sum(col("vc")).cast("double") / 100.0).as("sum_value"))
 
   def streamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
-    val name = "q104_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     val dim = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
     val purchases = Tables.eventsStream(spark, dir)
@@ -525,12 +471,7 @@ object Streaming extends Serializable {
       .select(col("user_id"),
         round(col("value") * 100, 0).cast("long").as("vc"))
     val agg = staticEnrichOf(purchases, dim)
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q104", q)
-    }
-    spark.table(name)
+    drainToMemory(spark, "q104", "complete", Some(StatePartitions))(agg)
   }
 
   private val DayUs = 86400000000L // µs per day, matches Events
@@ -583,8 +524,6 @@ object Streaming extends Serializable {
     * tumbling twin taken to the overlapping case.
     */
   def streamSlidingFinal(spark: SparkSession, dir: String): DataFrame = {
-    val name = "q117_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     val src = Tables.eventsStream(spark, dir)
     val agg = typedCents(src)
       .withColumn("event_time", timestamp_micros(col("us")))
@@ -595,12 +534,7 @@ object Streaming extends Serializable {
         (sum(col("vc")).cast("double") / 100.0).as("sum_value"))
       .select(expr(s"unix_micros(window.start) DIV $DayUs").as("start_day"),
         col("event_type"), col("n_events"), col("sum_value"))
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q117", q)
-    }
-    spark.table(name)
+    drainToMemory(spark, "q117", "append", Some(StatePartitions))(agg)
   }
 
   /** q141: CHAINED STATEFUL OPERATORS — two event-time window
@@ -642,16 +576,9 @@ object Streaming extends Serializable {
         col("sum_value"))
 
   def streamChainedAgg(spark: SparkSession, dir: String): DataFrame = {
-    val name = "q141_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     val src = Tables.eventsStream(spark, dir)
     val agg = chainedAggOf(typedCents(src))
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q141", q)
-    }
-    spark.table(name)
+    drainToMemory(spark, "q141", "append", Some(StatePartitions))(agg)
   }
 
   /** The (event_type, µs, value-cents) projection the watermark-
@@ -664,16 +591,9 @@ object Streaming extends Serializable {
       round(col("value") * 100, 0).cast("long").as("vc"))
 
   def streamWindowFinal(spark: SparkSession, dir: String): DataFrame = {
-    val name = "q107_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     val src = Tables.eventsStream(spark, dir)
     val agg = windowFinalOf(typedCents(src))
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q107", q)
-    }
-    spark.table(name)
+    drainToMemory(spark, "q107", "append", Some(StatePartitions))(agg)
   }
 
   /** q113's MERGE: fold one micro-batch of per-key rows into a keyed
@@ -738,13 +658,11 @@ object Streaming extends Serializable {
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"), sum(col("vc")).as("sum_vc"),
         max(col("us")).as("last_us"))
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream
+    drain(spark, Some(StatePartitions)) {
+      agg.writeStream
         .outputMode("update")
         .option("checkpointLocation", Scratch.dir("graft_upsert_ckpt"))
         .foreachBatch(mergeIntoKeyed(target) _)
-        .trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q113", q)
     }
     spark.read.parquet(s"$target/g${latestGen(target).get}")
   }
@@ -806,12 +724,10 @@ object Streaming extends Serializable {
     val target = Scratch.dir("graft_sketch_ledger")
     val src = Tables.eventsStream(spark, dir)
       .select(col("event_type"), col("user_id"))
-    withStatePartitions(spark, 8) {
-      val q = src.writeStream
+    drain(spark, Some(StatePartitions)) {
+      src.writeStream
         .option("checkpointLocation", Scratch.dir("graft_ledger_ckpt"))
         .foreachBatch(mergeSketchInto(target) _)
-        .trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q163", q)
     }
     val ledger = spark.read.parquet(s"$target/g${latestGen(target).get}")
       .select(col("event_type"),
@@ -849,8 +765,6 @@ object Streaming extends Serializable {
     * micro-batch (watermark 0 during it), so no row is late.
     */
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val name = "q69_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     def src = Tables.eventsStream(spark, dir)
     val views = src.filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("view_id"),
@@ -869,12 +783,7 @@ object Streaming extends Serializable {
       .select(col("user_id"), col("view_id"), col("purchase_id"),
         col("view_us"), col("purchase_us"),
         (col("purchase_us") - col("view_us")).as("gap_us"))
-    withStatePartitions(spark, 8) {
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q69", q)
-    }
-    spark.table(name)
+    drainToMemory(spark, "q69", "append", Some(StatePartitions))(joined)
   }
 
   private val HourUs = 3600000000L // µs per hour
@@ -909,8 +818,6 @@ object Streaming extends Serializable {
         .as("hour_bucket"), col("n_conversions"), col("sum_gap_us"))
 
   def streamJoinWindow(spark: SparkSession, dir: String): DataFrame = {
-    val name = "q162_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     def src = Tables.eventsStream(spark, dir)
     val views = src.filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("view_id"),
@@ -921,12 +828,7 @@ object Streaming extends Serializable {
         expr("ts DIV 1000").as("purchase_us"),
         timestamp_micros(expr("ts DIV 1000")).as("purchase_time"))
     val agg = joinWindowOf(views, purchases)
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q162", q)
-    }
-    spark.table(name)
+    drainToMemory(spark, "q162", "append", Some(StatePartitions))(agg)
   }
 
   /** The q102 join kernel over any pair of streaming frames with the
@@ -977,8 +879,6 @@ object Streaming extends Serializable {
     * set.
     */
   def streamStreamLeftJoin(spark: SparkSession, dir: String): DataFrame = {
-    val name = "q102_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     def src = Tables.eventsStream(spark, dir)
     val views = src.filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("view_id"),
@@ -988,13 +888,8 @@ object Streaming extends Serializable {
       .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
         expr("ts DIV 1000").as("purchase_us"),
         timestamp_micros(expr("ts DIV 1000")).as("purchase_time"))
-    withStatePartitions(spark, 8) {
-      val q = outerAttributionOf(views, purchases)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q102", q)
-    }
-    spark.table(name)
+    drainToMemory(spark, "q102", "append", Some(StatePartitions))(
+      outerAttributionOf(views, purchases))
   }
 
   /** q76: STREAMING FUNNEL — the q75 conversion funnel as live per-user
@@ -1032,8 +927,6 @@ object Streaming extends Serializable {
   private[graft] def streamFunnelOf(spark: SparkSession,
       src: DataFrame): DataFrame = {
     import spark.implicits._
-    val name = "q76_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     val evs = src
       .select(col("user_id"), col("event_id"),
         col("event_type").as("etype"), expr("ts DIV 1000").as("us"))
@@ -1063,15 +956,11 @@ object Streaming extends Serializable {
       Iterator.single(FunnelOut(userId, s.t1, s.t2, s.t3, depth))
     }
 
-    withStatePartitions(spark, 8) {
-      val q = evs.groupByKey(_._1)
+    drainToMemory(spark, "q76", "update", Some(StatePartitions)) {
+      evs.groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Update(),
           GroupStateTimeout.NoTimeout())(fold)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q76", q)
     }
-    spark.table(name)
   }
 
   /** q130: STREAMING TOP-K via `transformWithState` MAP STATE — the
@@ -1118,8 +1007,6 @@ object Streaming extends Serializable {
     import spark.implicits._
     import org.apache.spark.sql.streaming.TimeMode
     val outDir = fixtureDir.getOrElse(Sink.nestedFixture(spark, dir))
-    val name = "q130_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     val cells = spark.readStream.format("proto-zst")
       .option("maxFilesPerTrigger", "1").load(outDir)
       .select(decode(col("key"), "UTF-8").cast("long").as("user_id"),
@@ -1127,15 +1014,11 @@ object Streaming extends Serializable {
       .select(substring_index(decode(col("c.name"), "UTF-8"), ":", -1)
         .as("event_type"), col("user_id"))
       .as[(String, Long)]
-    withRocksDb(spark) { withStatePartitions(spark, 8) {
-      val q = cells.groupByKey(_._1)
+    drainToMemory(spark, "q130", "update", Some(StatePartitions), rocksDb = true) {
+      cells.groupByKey(_._1)
         .transformWithState(new TypeTopUsersProcessor(3),
           TimeMode.None(), OutputMode.Update())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q130", q)
-    } }
-    spark.table(name)
+    }
   }
 
   private val RecentN = 5 // q131 buffer depth
@@ -1173,8 +1056,6 @@ object Streaming extends Serializable {
     import spark.implicits._
     import org.apache.spark.sql.streaming.TimeMode
     val outDir = fixtureDir.getOrElse(Sink.nestedFixture(spark, dir))
-    val name = "q131_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     val cells = spark.readStream.format("proto-zst")
       .option("maxFilesPerTrigger", "1").load(outDir)
       .select(decode(col("key"), "UTF-8").cast("long").as("user_id"),
@@ -1183,15 +1064,11 @@ object Streaming extends Serializable {
         decode(col("c.name"), "UTF-8").as("name"),
         length(col("c.value")).cast("long").as("vbytes"))
       .as[(Long, Long, String, Long)]
-    withRocksDb(spark) { withStatePartitions(spark, 8) {
-      val q = cells.groupByKey(_._1)
+    drainToMemory(spark, "q131", "update", Some(StatePartitions), rocksDb = true) {
+      cells.groupByKey(_._1)
         .transformWithState(new RecentBufferProcessor(RecentN),
           TimeMode.None(), OutputMode.Update())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      runToCompletion("q131", q)
-    } }
-    spark.table(name)
+    }
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

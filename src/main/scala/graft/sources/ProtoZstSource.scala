@@ -478,7 +478,7 @@ class ProtoZstScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap,
 }
 
 /** A point lookup small enough to answer without a Spark job: the
-  * scan's planned partitions (nothing, or one frame of a sorted file)
+  * scan's planned partitions (nothing, or one frame segment)
   * decoded on the driver by the same reader a task would run — same
   * tombstone anti-set, pinned snapshot, write-time window and
   * `ignoreCorrupt` handling.
@@ -490,15 +490,19 @@ final class ProtoZstLocalScan(scan: ProtoZstScan, parts: Array[InputPartition])
   override def description(): String = s"${scan.description()}, Local"
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = scan.estimateStatistics()
-  override def rows(): Array[InternalRow] = {
-    val factory = scan.createReaderFactory()
-    parts.flatMap { p =>
-      val r = factory.createReader(p)
-      try Iterator.continually(r.next()).takeWhile(identity)
-        .map(_ => r.get().copy()).toArray
-      finally r.close()
+  override def rows(): Array[InternalRow] =
+    // nothing planned reads nothing: the factory would decode every live
+    // tombstone file into the anti-set first
+    if (parts.isEmpty) Array.empty
+    else {
+      val factory = scan.createReaderFactory()
+      parts.flatMap { p =>
+        val r = factory.createReader(p)
+        try Iterator.continually(r.next()).takeWhile(identity)
+          .map(_ => r.get().copy()).toArray
+        finally r.close()
+      }
     }
-  }
 }
 
 /** The collapsed scan a completely-pushed aggregation builds: one
@@ -940,9 +944,10 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
     * once per scan: the reference's bloom → index → chunk path
     * (Filter.db, then the index summary's `(key, position)` seek,
     * `SSTableReaderPatched.java:54-97`), from the file's [[FileIndex]].
-    * A file whose bloom misses every candidate reads nothing; a sorted
-    * file with a frame-key index reads the frame-aligned ranges
-    * [[seekPlan]] picks, as one partition. The value is those
+    * A file whose bloom misses every candidate reads nothing; a file
+    * with no frame boundary is one frame segment, read whole, sorted or
+    * not; a sorted file with a frame-key index reads the frame-aligned
+    * ranges [[seekPlan]] picks, as one partition. The value is those
     * partitions and the number of frame segments they span. A file
     * absent from the map (no readable index, no usable frame keys) is
     * read whole, as without a lookup.
@@ -956,6 +961,8 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
         if (idx.exists(i => !keys.exists(i.mightContain))) {
           MetaIO.bloomSkips.incrementAndGet()
           Some(m.path -> (Array.empty[InputPartition], 0))
+        } else if (idx.exists(_.frames.isEmpty)) {
+          Some(m.path -> (Array(ProtoZstInputPartition(m): InputPartition), 1))
         } else {
           val seek = idx.flatMap(seekPlan(m, keys, _)).map { case (ranges, segments) =>
             MetaIO.frameSeeks.incrementAndGet()
@@ -973,10 +980,10 @@ class ProtoZstScan(view: FileView, ignoreCorrupt: Boolean,
     }
 
   /** The partitions of a point lookup small enough to decode on the
-    * driver: every planned file was either proven key-free or seeked,
-    * and together they read nothing or one frame segment. None for
-    * every other scan, and for bucket-grouped scans, whose reported
-    * partitioning only a batch scan can carry.
+    * driver: every planned file was proven key-free, seeked or found to
+    * be one frame, and together they read nothing or one frame segment.
+    * None for every other scan, and for bucket-grouped scans, whose
+    * reported partitioning only a batch scan can carry.
     */
   def localRead: Option[Array[InputPartition]] =
     if (pointKeys.isEmpty || grouped.isDefined) None

@@ -353,6 +353,48 @@ class FrameSeekSpec extends AnyFunSuite {
     assert(got === Seq(("u0950", 950L)) && jobs === 1)
   }
 
+  test("a present-key get on an unsorted single-frame file runs no job") {
+    // the shape of one small append: unsorted keys, one zstd frame, so
+    // the index has no boundary to seek by but the whole file is the
+    // one segment a seek would pick
+    import spark.implicits._
+    val dir = freshDir("graft_seek_one_frame")
+    (0 until 500).map(i => (f"u${(i * 7919) % 500}%04d", ((i * 7919) % 500).toLong))
+      .toDF("k", "i")
+      .select(encode(col("k"), "UTF-8").as("key"),
+        array(struct(encode(lit("c"), "UTF-8").as("name"),
+          encode(lit("v"), "UTF-8").as("value"),
+          col("i").as("write_time"))).as("columns"))
+      .coalesce(1).write.format("proto-zst").mode("append").save(dir)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    val data = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(_.getPath).filter(_.getName.endsWith(".proto.zst")).head
+    val idx = FileIndex.read(fs, data).get
+    assert(!idx.sorted && idx.frames.isEmpty)
+    MetaIO.reset()
+    assert(counted(rows(point(dir)("u0123"))) === ((Seq(("u0123", 123L)), 0, 0)))
+    assert(MetaIO.bloomProbes.get() === 1L && MetaIO.frameSeeks.get() === 0L)
+    assert(plan(point(dir)("u0123")).contains("LocalTableScan"))
+  }
+
+  test("a get that plans no partition never reads the tombstones") {
+    // every bloom rules the key out, so the get reads nothing — and
+    // must not decode the live tombstone files into its anti-set: make
+    // one undecodable (its .crc removed so only zstd could notice)
+    val dir = uniqDir("graft_seek_tomb_skip")
+    graft.operators.Tombstones.eraseKeys(dir, Seq("u0123".getBytes("UTF-8")))
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    val tomb = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(_.getPath).filter(_.getName.startsWith("tomb-")).head
+    val len = fs.getFileStatus(tomb).getLen.toInt
+    val raf = new java.io.RandomAccessFile(tomb.toUri.getPath, "rw")
+    try raf.write(Array.fill[Byte](len)(0x5a)) finally raf.close()
+    assert(fs.delete(new org.apache.hadoop.fs.Path(tomb.getParent, s".${tomb.getName}.crc"), false))
+    assert(counted(rows(point(dir)("u0123x"))) === ((Seq.empty, 0, 0)))
+    // a get that reads a frame still needs the anti-set, and refuses it
+    intercept[Exception](rows(point(dir)("u0124")))
+  }
+
   test("a get whose seeked frame was cut off fails loudly") {
     // cut the file at the recorded offset of the frame holding u0123:
     // the zstd stream then ends cleanly at a frame boundary, so only
